@@ -1,5 +1,5 @@
 """The benchmark's own tests. The Spark-backed ones run the benchmark at
---scale tiny and take about three minutes in all:
+--scale tiny and take about six minutes in all:
 
     python3 -m pytest perfbench/test_perfbench.py -q
 """
