@@ -41,9 +41,9 @@ HEADLINE = HEADLINE_SPATIAL + HEADLINE_PIPELINE
 
 
 def main() -> None:
+    from kdtree_spark.session import host_defaults
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=host_defaults()[0])
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))

@@ -16,9 +16,9 @@ inside a cell, new rows append to the extra log / tombstone set and
 rebuild only past the INBALANCE_RATIO=30 threshold (`tree_node.hpp:
 127-131` analogue); across the index, each batch produces a
 checkpointed touched-cell DELTA fragment layered over the inherited
-fragments with broadcast anti-joins, compacted every COMPACT_EVERY
-generations — untouched cells are never shuffled, deserialized, or
-rewritten. Deletes are partial-cover tolerant (`batch_delete.hpp:
+fragments, each filtered by the batch's touched-cell list, compacted
+every COMPACT_EVERY generations — untouched cells are never shuffled,
+deserialized, or rewritten. Deletes are partial-cover tolerant (`batch_delete.hpp:
 95-107`).
 
 Persistence is write-audit-publish: parquet + JSON manifest written to a
@@ -38,6 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, BinaryType, BooleanType
 
 from .grid import Grid
 from .localtree import LocalKDTree
@@ -57,9 +58,9 @@ INDEX_SCHEMA_F64 = INDEX_SCHEMA.replace(
 PYRAMID_FACTOR = 4  # per-dim coarsening per stats-pyramid level
 
 SUPER_MAX_CELLS = 4096  # super-cell stats table row cap: small enough
-# to broadcast for the sparse-query kNN fallback at ANY scale (1.2e8
-# fine cells at the 1e12-row projection coarsen to these 4096). The
-# per-dim cap follows from the grid's dims: 64 for 2-D, 16 for 3-D.
+# to ship with every kNN candidate kernel at ANY scale (1.2e8 fine
+# cells at the 1e12-row projection coarsen to these 4096). The per-dim
+# cap follows from the grid's dims: 64 for 2-D, 16 for 3-D.
 
 
 def _super_max_g(dims: int) -> int:
@@ -68,7 +69,30 @@ def _super_max_g(dims: int) -> int:
 STATS_COLS = ["cell", "salt", "cnt", "nextra", "ntomb", "depth",
               "xmin", "ymin", "xmax", "ymax"]
 
+
+def bbox_cols(d: int) -> tuple[list, list]:
+    """(lo, hi) data-bbox column names of the stats tables (cell_stats,
+    stats_pyramid, super_table) for a d-dim index."""
+    return (["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)],
+            ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)])
+
 HOT_CELL_CAP = 131_072  # rows per index blob before salting splits it
+
+# a cell is "hot" (its query work fans out per (cell, salt) blob,
+# queries/skew.py) once it has at least this many non-empty blobs: a
+# 2-3-blob "warm" cell is handled fine by one cell-keyed task looping
+# its blobs (with cross-blob bound tightening), while fanning it out
+# costs query replication, a second blob pass and an extra merge
+# shuffle — pure overhead unless the cell dominates the workload.
+# Genuinely hot cells (varden-style clusters, many blobs) still fan out
+# to one task per blob.
+FANOUT_MIN_BLOBS = 4
+
+
+def _hot_pred():
+    """Blob-row predicate: a non-empty blob whose salt makes its cell
+    hot (the cell's highest non-empty salt + 1 >= FANOUT_MIN_BLOBS)."""
+    return (F.col("cnt") > 0) & (F.col("salt") >= FANOUT_MIN_BLOBS - 1)
 
 COMPACT_EVERY = int(os.environ.get("KDS_COMPACT_EVERY", "8"))
 # delta-update generations before a full compaction checkpoint
@@ -133,6 +157,42 @@ def _build_group(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame([_tree_row(cell, salt, tree)])
 
 
+def _filler(dtype):
+    """A non-NULL placeholder literal of `dtype`."""
+    if isinstance(dtype, BooleanType):
+        return F.lit(False)
+    if isinstance(dtype, BinaryType):
+        return F.lit(bytearray())
+    if isinstance(dtype, ArrayType):
+        return F.array().cast(dtype)
+    return F.lit(0).cast(dtype)
+
+
+def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
+            schema: str) -> DataFrame:
+    """fn(key, left_pdf, right_pdf) per group of `keys`, like
+    left.groupby(keys).cogroup(right.groupby(keys)), but as ONE grouped
+    map over the union of both sides: one exchange and one Spark job
+    instead of two. Each side's rows fill the other side's columns with
+    non-NULL placeholders (a NULL would turn an int64 pandas column into
+    float64); a flag column tells them apart again."""
+    flag = "_right"
+    cols = list(dict.fromkeys(left.columns + right.columns))
+
+    def rows(df, other, is_right):
+        fill = {f.name: _filler(f.dataType) for f in other.schema
+                if f.name not in df.columns}
+        return (df.withColumns(fill).withColumn(flag, F.lit(is_right))
+                .select(*cols, flag))
+
+    def kernel(key, pdf):
+        r = pdf[flag].to_numpy(bool)
+        return fn(key, pdf[~r], pdf[r])
+
+    return (rows(left, right, False).unionByName(rows(right, left, True))
+            .groupBy(*keys).applyInPandas(kernel, schema))
+
+
 class SpatialIndex:
     def __init__(self, spark: SparkSession, grid: Grid, df: DataFrame,
                  manifest: dict | None = None,
@@ -149,11 +209,11 @@ class SpatialIndex:
                                        DoubleType)
         self._stats_pd: pd.DataFrame | None = None
         self._cell_stats: DataFrame | None = None
-        self._super_stats: DataFrame | None = None
+        self._super_pd: pd.DataFrame | None = None
         self._pyramid: list | None = None
         # delta versioning (update()): df == union of fragments; each
-        # update checkpoints ONLY its touched-cell delta and layers a
-        # broadcast anti-join over inherited fragments. _ckpt_handles
+        # update checkpoints ONLY its touched-cell delta and filters the
+        # inherited fragments to their untouched cells. _ckpt_handles
         # maps fragment key -> materialized-RDD handle (for freeing
         # checkpoint blocks); _cached_frames lists cache()d frames this
         # version's plan still references (for successor-aware release).
@@ -212,13 +272,20 @@ class SpatialIndex:
 
         built = pts.groupBy("cell", "salt").applyInPandas(
             _build_group, INDEX_SCHEMA_F64 if fmode else INDEX_SCHEMA)
-        # cache pre-clustered by cell: every query cogroups on "cell", and
-        # a cached HashPartitioning(cell) lets the planner skip re-shuffling
-        # the blob side on each query (exchange reuse across jobs)
-        df = built.repartition("cell").cache()
-        ncells = df.count()  # materialize
+        # cached as built, not re-clustered by cell: reads prune the
+        # blob side to their cells first and shuffle only the survivors,
+        # which AQE coalesces into few Python tasks; a cell-partitioned
+        # cache pins every read's Python stage to all its partitions
+        df = built.cache()
+        # materialize, collecting the hot-cell set in the same job:
+        # update() never adds salts, so the set is fixed from here on
+        # and query operators plan their fan-out from this literal
+        row = df.agg(F.count("*").alias("n"),
+                     F.collect_set(F.when(_hot_pred(), F.col("cell")))
+                     .alias("hot")).collect()[0]
         manifest = dict(kind="build", n=n, grid_g=grid.g,
-                        grid_dims=grid.dims, cells=ncells,
+                        grid_dims=grid.dims, cells=int(row["n"]),
+                        hot_cells=sorted(int(c) for c in row["hot"]),
                         wall_sec=time.time() - t0,
                         coord_cols=list(coord_cols),
                         version=str(uuid.uuid4())[:8])
@@ -274,6 +341,49 @@ class SpatialIndex:
             self._cell_stats = agg.select(
                 *[F.col(c).alias(c) for c in agg.columns]).cache()
         return self._cell_stats
+
+    def hot_cells(self) -> list:
+        """Sorted ids of the cells whose query work fans out per blob
+        (>= FANOUT_MIN_BLOBS non-empty blobs). Fixed at build time —
+        update() keeps each cell's blob count and gives new cells salt
+        0 — and carried through update/save/load by the manifest; a
+        manifest without it (legacy snapshots, catalog loads) collects
+        it once here. Hot cells are rare by construction, so query
+        operators use the set as a literal instead of a broadcast."""
+        hot = self.manifest.get("hot_cells")
+        if hot is None:
+            hot = sorted(int(r["cell"]) for r in self.df.filter(_hot_pred())
+                         .select("cell").distinct().collect())
+            self.manifest["hot_cells"] = hot
+        return hot
+
+    def super_table(self) -> pd.DataFrame:
+        """Coarse-level stats: cell_stats re-aggregated onto the super
+        grid — (scell, ccnt, xmin, ymin, xmax, ymax[, mn{j}, mx{j}]) —
+        collected to the driver once per index version. At most
+        SUPER_MAX_CELLS rows at ANY index size, so every sparse kNN
+        query can bound its radius against the whole table inside the
+        candidate kernel (queries/knn.py) instead of against the
+        O(cells) stats table (the reference analogue: the top levels of
+        one global tree, build_tree.hpp:49-70, which every query can
+        afford to descend)."""
+        if self._super_pd is None:
+            d = len(self.coord_cols)
+            S, sg = self.super_grid()
+            cs = self.cell_stats()
+            lo, hi = bbox_cols(d)
+            if S == 1:  # the super grid is the fine grid
+                sup = cs.select(F.col("cell").alias("scell"), "ccnt",
+                                *lo, *hi)
+            else:
+                scell = F.expr(self.grid.parent_cell_sql(
+                    "cell", self.grid.g, S, sg))
+                sup = cs.groupBy(scell.alias("scell")).agg(
+                    F.sum("ccnt").alias("ccnt"),
+                    *[F.min(c).alias(c) for c in lo],
+                    *[F.max(c).alias(c) for c in hi])
+            self._super_pd = sup.toPandas()
+        return self._super_pd
 
     def probes(self) -> DataFrame:
         """(cell, probe): per-blob live-point samples (localtree.
@@ -342,32 +452,6 @@ class SpatialIndex:
         sg = (g + S - 1) // S
         return S, sg
 
-    def super_stats(self) -> DataFrame:
-        """Coarse-level stats: cell_stats re-aggregated onto the super
-        grid — (scell, ccnt, xmin, ymin, xmax, ymax[, mn{j}, mx{j}]).
-        At most 4096 rows at ANY index size (SUPER_MAX_G), so sparse
-        kNN queries can bound their radius against it with a broadcast
-        join instead of a crossJoin against the full O(cells) stats
-        table (the reference analogue: the top levels of one global
-        tree, build_tree.hpp:49-70, which every query can afford to
-        descend)."""
-        if self._super_stats is None:
-            d = len(self.coord_cols)
-            g = self.grid.g
-            S, sg = self.super_grid()
-            cs = self.cell_stats()
-            scell = F.expr(self.grid.parent_cell_sql("cell", g, S, sg))
-            aggs = [F.sum("ccnt").alias("ccnt"),
-                    F.min("xmin").alias("xmin"), F.min("ymin").alias("ymin"),
-                    F.max("xmax").alias("xmax"), F.max("ymax").alias("ymax")]
-            for j in range(2, d):
-                aggs.append(F.min(f"mn{j}").alias(f"mn{j}"))
-                aggs.append(F.max(f"mx{j}").alias(f"mx{j}"))
-            agg = cs.groupBy(scell.alias("scell")).agg(*aggs)
-            self._super_stats = agg.select(
-                *[F.col(c).alias(c) for c in agg.columns]).cache()
-        return self._super_stats
-
     # ---------------------------------------------------------------- updates
     def update(self, inserts: DataFrame | None = None,
                deletes: DataFrame | None = None) -> "SpatialIndex":
@@ -375,19 +459,19 @@ class SpatialIndex:
 
         Physical plan (the reference rebuilds only tagged subtrees,
         `inner_tree.hpp:78-95`; the distributed analogue is touching only
-        updated cells): the distinct touched cells are broadcast; a
-        broadcast semi-join feeds ONLY touched blobs into the Python
-        cogroup, and the new version is the checkpointed touched-cell
-        DELTA unioned with the inherited fragments behind broadcast
-        anti-joins — untouched blobs are neither shuffled, deserialized,
-        nor rewritten to storage, so a 0.01% batch pays O(batch), not
-        O(index), in both compute AND materialized bytes. Every
-        COMPACT_EVERY generations a full compaction checkpoint bounds
-        the fragment count. Touched cells go log-structured with
-        threshold rebuild. (For batches touching a large fraction of a
-        huge grid, the broadcast of touched-cell ids grows with the
-        batch, never with the index — at that ratio a rebuild is the
-        honest competitor anyway.)
+        updated cells): the distinct touched cells are collected to the
+        driver; a literal filter on them feeds ONLY touched blobs into
+        the Python cogroup, and the new version is the checkpointed
+        touched-cell DELTA unioned with the inherited fragments, each
+        filtered to its untouched cells — untouched blobs are neither
+        shuffled, deserialized, nor rewritten to storage, so a 0.01%
+        batch pays O(batch), not O(index), in both compute AND
+        materialized bytes. Every COMPACT_EVERY generations a full
+        compaction checkpoint bounds the fragment count. Touched cells
+        go log-structured with threshold rebuild. (For batches touching
+        a large fraction of a huge grid, the touched-cell list grows
+        with the batch, never with the index — at that ratio a rebuild
+        is the honest competitor anyway.)
 
         Dimension-generic: works for any d = len(coord_cols) >= 2, same
         as the reference's dim-templated batch ops (`batch_insert.hpp:
@@ -420,11 +504,11 @@ class SpatialIndex:
         for p in parts[1:]:
             ups = ups.unionByName(p)
 
+        out_cols = [f.split()[0] for f in schema.split(", ")]
+
         def apply_updates(key, updf: pd.DataFrame, idxdf: pd.DataFrame
                           ) -> pd.DataFrame:
             cell = int(key[0])
-            if len(updf) == 0:
-                return idxdf  # passthrough (unreachable post-semi-join)
             ins = updf[updf["op"] == 1]
             del_ = updf[updf["op"] == 0]
             out = []
@@ -435,7 +519,7 @@ class SpatialIndex:
                         ins[cc].to_numpy(cdt),
                         ins["pid"].to_numpy(np.int64))
                     out.append(_tree_row(cell, 0, tree))
-                return pd.DataFrame(out) if out else idxdf.iloc[0:0]
+                return pd.DataFrame(out, columns=out_cols)
             nsalt = len(idxdf)
             ins_pts = ins[cc].to_numpy(cdt)
             ins_ids = ins["pid"].to_numpy(np.int64)
@@ -455,32 +539,25 @@ class SpatialIndex:
                 out.append(_tree_row(cell, int(row["salt"]), t2))
             return pd.DataFrame(out)
 
-        # the touched-cell set outlives this call: the anti-join layer
-        # keeps it in every descendant version's plan until compaction,
-        # so its lineage must not reference the caller's input frames
-        # (a streaming caller deletes evicted slice files) — checkpoint
-        # truncates it to an O(batch) materialized list of cell ids
-        # lazy: materializes inside the delta's checkpoint job below
-        # (one fewer Spark job per update)
-        touched = (ups.select("cell").distinct()
-                   .localCheckpoint(eager=False))
-        try:
-            touched_rdd = touched._jdf.queryExecution().logical().rdd()
-        except Exception:
-            touched_rdd = None
-        touched_blobs = self.df.join(F.broadcast(touched), "cell", "semi")
-        new_blobs = (ups.groupby("cell")
-                     .cogroup(touched_blobs.groupby("cell"))
-                     .applyInPandas(apply_updates, schema))
+        # the touched-cell set (O(batch), never O(index)) is collected
+        # once: every fragment filter below, in this version and its
+        # descendants until compaction, is a literal predicate on it —
+        # no broadcast per read, and no lineage back to the caller's
+        # input frames (a streaming caller deletes evicted slice files)
+        touched = sorted(int(r["cell"])
+                         for r in ups.select("cell").distinct().collect())
+        in_touched = F.col("cell").isin(touched)
+        new_blobs = cogroup(
+            ups, self.df.filter(in_touched).select("cell", "salt", "blob"),
+            ["cell"], apply_updates, schema)
         # DELTA versioning: checkpoint ONLY the rebuilt touched-cell
         # blobs — O(batch) materialization, never O(index). The new
-        # version's df is the inherited fragments each filtered by a
-        # broadcast anti-join on the touched cells (untouched blobs are
-        # neither shuffled, deserialized, NOR rewritten to storage),
-        # unioned with the delta. localCheckpoint truncates the delta's
-        # lineage (which references the parent via the semi-join), so
-        # chained updates grow the plan by one anti-join per fragment —
-        # linear, not exponential.
+        # version's df is the inherited fragments each filtered by the
+        # touched-cell predicate (untouched blobs are neither shuffled,
+        # deserialized, NOR rewritten to storage), unioned with the
+        # delta. localCheckpoint truncates the delta's lineage (which
+        # references the parent), so chained updates grow the plan by
+        # one filter per fragment — linear, not exponential.
         delta = new_blobs.localCheckpoint(eager=True)
         # handle to the checkpoint's materialized RDD (the LogicalRDD
         # the checkpointed frame wraps — queryExecution().toRdd() is
@@ -492,11 +569,9 @@ class SpatialIndex:
             delta_rdd = delta._jdf.queryExecution().logical().rdd()
         except Exception:
             delta_rdd = None
-        frags = [f.join(F.broadcast(touched), "cell", "left_anti")
-                 for f in self._frags] + [delta]
+        frags = [f.filter(~in_touched) for f in self._frags] + [delta]
         handles = dict(self._ckpt_handles)
         handles[str(uuid.uuid4())[:8]] = delta_rdd
-        handles[str(uuid.uuid4())[:8]] = touched_rdd
         cached = list(self._cached_frames)
         compacted = False
         if len(frags) > COMPACT_EVERY:
@@ -525,6 +600,7 @@ class SpatialIndex:
         # per chained update
         manifest = dict(kind="update", base_version=self.manifest.get("version"),
                         frags=len(frags), compacted=compacted,
+                        hot_cells=self.hot_cells(),
                         wall_sec=time.time() - t0,
                         coord_cols=cc, version=str(uuid.uuid4())[:8])
         new = SpatialIndex(self.spark, grid, new_df, manifest,
@@ -532,10 +608,12 @@ class SpatialIndex:
         new._frags = frags
         new._ckpt_handles = handles
         new._cached_frames = cached
-        # the touched-cell set (O(batch), never O(index)) lets an
-        # incremental snapshot commit (catalog.SnapshotStore) rewrite
-        # only the buckets this update changed
-        new.touched_cells_df = touched
+        # the touched-cell set lets an incremental snapshot commit
+        # (catalog.SnapshotStore) rewrite only the buckets this update
+        # changed
+        new.touched_cells_df = self.spark.createDataFrame(
+            pd.DataFrame({"cell": np.asarray(touched, np.int64)}),
+            "cell long")
         return new
 
     def cache(self) -> "SpatialIndex":
@@ -556,7 +634,7 @@ class SpatialIndex:
         truncated lineage. After a compaction the child inherits
         nothing, and the superseded version's whole storage is freed."""
         pyramid = [s for _, _, s in (getattr(self, "_pyramid", None) or [])]
-        for st in (self._cell_stats, self._super_stats, *pyramid):
+        for st in (self._cell_stats, *pyramid):
             try:
                 if st is not None:
                     st.unpersist()
@@ -587,6 +665,7 @@ class SpatialIndex:
         row = self.df.agg(F.sum("cnt").alias("t"), F.count("*").alias("c"),
                           F.max("depth").alias("d")).collect()[0]
         audit = dict(self.manifest)
+        audit["hot_cells"] = self.hot_cells()
         audit["total_rows"] = int(row["t"] or 0)
         audit["cells"] = int(row["c"])
         audit["max_depth"] = int(row["d"] or 0)

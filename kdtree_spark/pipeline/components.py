@@ -63,7 +63,8 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
     is detected EXACTLY (count + exceptAll on the canonical edge set,
     both cheap at converged size), not via a hash fingerprint.
     Every phase materializes through an eager localCheckpoint and
-    unpersists the previous round (flat lineage AND flat storage)."""
+    unpersists the previous round (flat lineage AND flat storage).
+    Raises RuntimeError when max_rounds pass without the fixpoint."""
     e = (edges.selectExpr(f"{a_col} AS u", f"{b_col} AS v")
          .filter("u != v")
          .selectExpr("GREATEST(u, v) AS u", "LEAST(u, v) AS v")
@@ -100,6 +101,10 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
             e = nxt
             if same:
                 break
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixpoint after {max_rounds} "
+                f"rounds; the labels would not be components")
     # fixpoint: stars (member, comp_min) with member > comp_min
     lbl = (e.selectExpr("u AS id", "v AS comp")
            .groupBy("id").agg(F.min("comp").alias("comp")))

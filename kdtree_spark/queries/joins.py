@@ -79,6 +79,11 @@ def distance_join(left: DataFrame, right: DataFrame, r: int,
     second full-table join.
     """
     assert r >= 0
+    if left_id == right_id:
+        # both become output columns: the result would hold two columns
+        # of one name, and a later select of it fails or picks one side
+        raise ValueError(f"left_id and right_id are both {left_id!r}; "
+                         f"rename one side's id column")
     if grid is None:
         # default: cell width ~ r, capped at a 4096-per-dim grid. The
         # cell is the candidate-blocking unit: with cw >> r every left

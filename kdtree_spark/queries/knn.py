@@ -5,41 +5,43 @@ visiting the sibling subtree only when its bounding-box min-distance
 beats the current kth-best (`query_op/nn_search.hpp:83-126`). Across a
 cluster that sibling-pruning becomes *cell* pruning:
 
-  phase 1  PROBE-SAMPLE seed bound: each index blob carries a ~1024-pt
-           deterministic live sample (localtree.probe_sample); queries
-           cogroup with ONLY their distinct home cells' samples
-           (broadcast semi-join) and take the kth smallest distance² to
-           the pooled sample — a VALID upper bound ub on the kth
-           distance, tight within a (cell/sample)^(1/d) radius factor
-           in any d. Sample bytes are ~1-10% of blob bytes and scale
-           with the batch's home-cell set, never with index size; full
-           blobs never cross Arrow for bound-seeding. Queries the
-           samples cannot bound (empty home cell, k above the pooled
-           sample) fall back to a prefix-sum window over the <= 4096-
-           row broadcast super-cell stats (index.super_stats): blocks
-           ordered by farthest-corner distance², cumulative live count
-           >= k -> bound. Only an index with < k live points total
-           leaves ub = inf.
-  phase 2  candidate (query, cell) pairs, fully Spark-side: each query
-           geometrically enumerates the grid cells inside its ub-radius
-           square (pure numpy on the regular grid — no stats broadcast,
-           work proportional to output), then an equi-join on `cell`
-           against the cluster-resident cell-stats table refines with
-           the data-bbox min-distance² <= ub test
-           (p2b_min_distance analogue, nn_search.hpp:22-35) and drops
-           empty cells. Queries whose radius covers > ENUM_CAP cells
-           (or ub = inf) instead broadcast-join the super-cell stats,
-           keep super cells within ub, and explode only those into
-           their fine children — never an O(#queries x #cells) plan.
+  phase 1+2  ONE candidate kernel (a pandas cogroup of the queries,
+           grouped by home cell, with only those cells' probe samples —
+           broadcast semi-join) turns every query into candidate cells:
+           - bound: each index blob carries a ~1024-pt deterministic
+             live sample (localtree.probe_sample); the kth smallest
+             distance² to the home cell's pooled sample is a VALID
+             upper bound ub on the kth distance, tight within a
+             (cell/sample)^(1/d) radius factor in any d. Sample bytes
+             are ~1-10% of blob bytes and scale with the batch's
+             home-cell set, never with index size.
+           - needy queries (empty home cell, or k above the pooled
+             sample) bound by a prefix sum over the <= 4096-row
+             super-cell table (index.super_table, a driver-side numpy
+             copy of the super-grid stats shipped with the kernel): super
+             cells ordered by farthest-corner distance², the first
+             prefix whose live count reaches k gives ub. Only an index
+             with < k live points total leaves ub = inf.
+           - near queries enumerate the grid cells inside their
+             ub-radius cube (pure numpy on the regular grid, work
+             proportional to output).
+           - far queries (cube over ENUM_CAP cells, or ub = inf) keep
+             the super cells within ub and expand only those into their
+             fine children — never an O(#queries x #cells) plan.
+           One equi-join on `cell` against the cluster-resident
+           cell-stats table then keeps cells whose data-bbox min-dist²
+           <= ub (p2b_min_distance analogue, nn_search.hpp:22-35) and
+           drops empty cells.
   phase 3  candidates shuffle to their cells; the blob side is PRUNED
-           FIRST by a broadcast semi-join on the distinct candidate
-           cells (the same pattern update() uses for touched cells), so
+           FIRST by a broadcast semi-join on the candidate cells, so
            the bytes crossing the Arrow hop scale with candidate cells,
            not index size; then per-blob batched tree search with ub as
-           the prune bound -> local top-k per cell
+           the prune bound -> local top-k per cell. Hot (salted) cells
+           fan out per blob (queries/skew.py).
   phase 4  global top-k: min-k over per-cell top-k's via a window on
            (dist², nid) — deterministic tie-break identical to the
-           DuckDB oracle's ORDER BY
+           DuckDB oracle's ORDER BY. Queries whose enumeration had
+           exactly one cell skip it (their kernel ranks are final).
 
 Exactness: any true neighbour at distance d <= true-kth <= ub lies in a
 cell whose bbox min-dist <= ub, so phase 2 never drops it; phase 3's
@@ -51,18 +53,14 @@ emitted as BIGINT so oracle hashes match bit-for-bit.
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..index import SpatialIndex
+from ..index import SpatialIndex, bbox_cols, cogroup
 from ..localtree import LocalKDTree
-from .skew import hot_blobs as _hot_blobs
-from .skew import split_by_salt as _split_by_salt
+from .skew import hot_blobs, pruned_blobs, scan_blobs, split_by_salt
 
 
 def _group_knn(qpts: np.ndarray, blobs, k: int, ub: np.ndarray | None,
@@ -97,30 +95,26 @@ def _group_knn(qpts: np.ndarray, blobs, k: int, ub: np.ndarray | None,
 ENUM_CAP = 4096  # max geometrically-enumerated cells per query; beyond
                  # this (or ub = inf) the query takes the super-cell path
 
+PROBE_POOL_CAP = 65536       # max pooled probe points per cell group
+# (a backstop for extreme salted cells: per-query bound cost is one
+# descent + one block scan regardless of pool size; only the one-off
+# pool-tree build grows with it)
 
-def _bbox_exprs(cc: list, lo_cols: list, hi_cols: list):
-    """(mind2, maxd2) Spark expressions: squared L2 from the point in
-    columns `cc` to the nearest / farthest corner of the bbox in
-    (lo_cols, hi_cols). Exact in float64 for int64 coords < 2^20 per
-    dim (diffs < 2^21, squares < 2^42, d <= 16 sums < 2^46) — identical
-    to the numpy kernels bit-for-bit, whole-stage-codegen JVM-side."""
-    mind2 = maxd2 = None
+SUPER_CHUNK = 512  # queries per (queries x super cells) distance block
+
+
+def _mind2_expr(cc: list, lo_cols: list, hi_cols: list):
+    """Spark expression: squared L2 from the point in columns `cc` to
+    the nearest corner of the bbox in (lo_cols, hi_cols). Exact in
+    float64 for int64 coords < 2^20 per dim (diffs < 2^21, squares <
+    2^42, d <= 16 sums < 2^46) — identical to the numpy kernels
+    bit-for-bit, whole-stage-codegen JVM-side."""
+    mind2 = None
     for c, lo, hi in zip(cc, lo_cols, hi_cols):
         mn = F.pow(F.greatest(F.col(lo) - F.col(c),
                               F.col(c) - F.col(hi), F.lit(0)), 2)
-        # farthest corner: per-dim max(q - lo, hi - q) is >= 0 when lo <= hi
-        mx = F.pow(F.greatest(F.col(c) - F.col(lo),
-                              F.col(hi) - F.col(c)), 2)
         mind2 = mn if mind2 is None else mind2 + mn
-        maxd2 = mx if maxd2 is None else maxd2 + mx
-    return mind2, maxd2
-
-
-def _super_cols(cc: list):
-    d = len(cc)
-    lo = ["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)]
-    hi = ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)]
-    return lo, hi
+    return mind2
 
 
 def _cdt(index: SpatialIndex):
@@ -132,33 +126,38 @@ def _coord_schema(index: SpatialIndex, cc: list) -> str:
     return ", ".join(f"{c} {t}" for c in cc)
 
 
-_BYPASS = os.environ.get("KDS_KNN_BYPASS", "1") != "0"
-# single-cell phase-4 bypass toggle (A/B instrument; on by default)
-
-_TIGHTEN_COLD = os.environ.get("KDS_KNN_TIGHTEN_COLD", "1") != "0"
-# cold-cogroup per-blob bound tighten toggle (A/B instrument; on by
-# default — see make_cell_knn)
-
-PROBE_POOL_CAP = 65536       # max pooled probe points per cell group
-# (a backstop for extreme salted cells: per-query bound cost is one
-# descent + one block scan regardless of pool size; only the one-off
-# pool-tree build grows with it)
+def _block_cells(c0: list, nper: list, g: int):
+    """Row-major ids of every grid cell in per-row blocks (per dim j:
+    [c0[j], c0[j] + nper[j])) -> (rep, cells, counts): the source row
+    of each output cell, the cell ids, and the cells per row."""
+    gd = len(c0)
+    counts = nper[0].copy()
+    for nj in nper[1:]:
+        counts *= nj
+    rep = np.repeat(np.arange(len(counts)), counts)
+    starts = np.cumsum(counts) - counts
+    rem = np.arange(len(rep), dtype=np.int64) - starts[rep]
+    # mixed-radix decode, last dim fastest (row-major id)
+    cells = np.zeros(len(rep), np.int64)
+    for j in range(gd - 1, -1, -1):
+        nj = nper[j][rep]
+        cells += (rem % nj + c0[j][rep]) * (g ** (gd - 1 - j))
+        rem = rem // nj
+    return rep, cells, counts
 
 
 def _enum_rows(q: list, ub: np.ndarray, grid, fmode: bool):
     """Vectorized candidate-cell enumeration on the regular grid: for
     each query row i with finite ub[i], every grid cell in the cube of
-    half-width floor(sqrt(ub))+1 around the query point; rows whose
-    cube exceeds ENUM_CAP cells (or ub = inf) get one sentinel row with
-    cell = -1 (the super-cell path). Returns (rows_i, cells, fin0):
-    int indices into the input rows, the cell id per output row, and a
-    single-candidate flag — True iff the query enumerated EXACTLY one
-    cell, in which case that cell's kernel ranks are globally final
-    (the cell is the query's non-empty home cell, distance 0 <= ub, so
-    it always survives the stats join) and the merge window can be
-    bypassed without ever counting candidates per query. Pure
-    arithmetic — no metadata needed; work proportional to output."""
-    g, cw, gd = grid.g, grid.cw, grid.dims
+    half-width floor(sqrt(ub))+1 around the query point. Returns
+    (rows_i, cells, fin0, far): int indices into the input rows, the
+    cell id per output row, a single-candidate flag — True iff the
+    query enumerated EXACTLY one cell, in which case that cell's kernel
+    ranks are globally final (the cell is the query's non-empty home
+    cell, distance 0 <= ub, so it always survives the stats join) and
+    the merge window can be bypassed — and the rows left for the
+    super-cell path (cube over ENUM_CAP cells, or ub = inf)."""
+    g, cw = grid.g, grid.cw
     n = len(ub)
     finite = np.isfinite(ub)
     if fmode:
@@ -183,65 +182,108 @@ def _enum_rows(q: list, ub: np.ndarray, grid, fmode: bool):
         ncand *= nj
     small = finite & (ncand <= ENUM_CAP)
     idx = np.flatnonzero(small)
-    counts = ncand[idx]
-    total = int(counts.sum())
-    # flat row-major enumeration of each query's per-dim block
-    qrep = np.repeat(idx, counts)
-    starts = np.zeros(len(idx), np.int64)
-    if len(idx):
-        starts[1:] = np.cumsum(counts)[:-1]
-    within = np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
-    # mixed-radix decode, last dim fastest (row-major id)
-    cells = np.zeros(total, np.int64)
-    rem = within
-    for j in range(gd - 1, -1, -1):
-        nj = np.repeat(nper[j][idx], counts)
-        cj = rem % nj + np.repeat(c0[j][idx], counts)
-        rem = rem // nj
-        cells += cj * (g ** (gd - 1 - j))
-    big = np.flatnonzero(~small)
-    rows_i = np.concatenate([qrep, big])
-    cellcol = np.concatenate([cells, np.full(len(big), -1, np.int64)])
-    fin0 = np.concatenate([np.repeat(counts == 1, counts),
-                           np.zeros(len(big), bool)])
-    return rows_i, cellcol, fin0
+    rep, cells, counts = _block_cells([c[idx] for c in c0],
+                                      [nj[idx] for nj in nper], g)
+    return idx[rep], cells, (counts == 1)[rep], np.flatnonzero(~small)
+
+
+def _super_d2(q: np.ndarray, lo: np.ndarray, hi: np.ndarray,
+              farthest: bool) -> np.ndarray:
+    """(queries x super cells) squared L2 from each query point to the
+    nearest (or farthest) corner of each super cell's data bbox, over
+    all d dims — the same arithmetic, in the same order, as
+    _mind2_expr."""
+    out = np.zeros((len(q), len(lo)))
+    for j in range(q.shape[1]):
+        a = lo[None, :, j] - q[:, j, None]
+        b = q[:, j, None] - hi[None, :, j]
+        diff = (np.maximum(-a, -b) if farthest
+                else np.maximum(np.maximum(a, b), 0))
+        out += diff.astype(np.float64) ** 2
+    return out
+
+
+def _prefix_ub(q: np.ndarray, sup: dict, k: int) -> np.ndarray:
+    """Bound for queries the probe samples cannot bound: super cells
+    ordered by farthest-corner distance²; the first prefix whose live
+    counts reach k holds k points all within that distance² -> valid
+    bound. Enumeration is TOTAL (every super cell), so ub = inf only
+    when the index has < k live points."""
+    ub = np.full(len(q), np.inf)
+    if not len(sup["ccnt"]):
+        return ub
+    for s in range(0, len(q), SUPER_CHUNK):
+        maxd2 = _super_d2(q[s:s + SUPER_CHUNK], sup["lo"], sup["hi"], True)
+        order = np.argsort(maxd2, axis=1, kind="stable")
+        cum = np.cumsum(sup["ccnt"][order], axis=1)
+        first = np.argmax(cum >= k, axis=1)
+        rows = np.arange(len(maxd2))
+        hit = cum[:, -1] >= k
+        ub[s:s + SUPER_CHUNK] = np.where(
+            hit, maxd2[rows, order[rows, first]], np.inf)
+    return ub
+
+
+def _far_cells(q: np.ndarray, ub: np.ndarray, sup: dict, grid, S: int,
+               sg: int):
+    """Super-cell path: super cells whose data bbox is within ub expand
+    into their S^dims fine children -> (rows_i, cells). Work scales
+    with the query's true candidate region, never with total cell
+    count; the fine stats join prunes the children."""
+    g, gd = grid.g, grid.dims
+    rows, scells = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for s in range(0, len(q), SUPER_CHUNK):
+        mind2 = _super_d2(q[s:s + SUPER_CHUNK], sup["lo"], sup["hi"], False)
+        qi, si = np.nonzero(mind2 <= ub[s:s + SUPER_CHUNK, None])
+        rows.append(qi + s)
+        scells.append(sup["scell"][si])
+    qi = np.concatenate(rows)
+    scell = np.concatenate(scells)
+    c0, nper = [], []
+    for j in range(gd):
+        p = (scell // sg ** (gd - 1 - j)) % sg
+        c0.append(p * S)
+        nper.append(np.minimum(p * S + S - 1, g - 1) - p * S + 1)
+    rep, cells, _ = _block_cells(c0, nper, g)
+    return qi[rep], cells
+
+
+def _super_arrays(index: SpatialIndex) -> dict:
+    """index.super_table() as the numpy arrays the kernel reads: scell,
+    ccnt, and the (rows x d) data-bbox corners lo / hi."""
+    d = len(index.coord_cols)
+    cdt = _cdt(index)
+    spd = index.super_table()
+    lo, hi = bbox_cols(d)
+    return {"scell": spd["scell"].to_numpy(np.int64),
+            "ccnt": spd["ccnt"].to_numpy(np.int64),
+            "lo": spd[lo].to_numpy(cdt).reshape(-1, d),
+            "hi": spd[hi].to_numpy(cdt).reshape(-1, d)}
 
 
 def _seed_enum(index: SpatialIndex, queries: DataFrame, cc: list, k: int
                ) -> DataFrame:
-    """Fused phases 1+2 (kernel side): (qid, coords, ub, cell) rows out
-    of ONE probe cogroup.
+    """Phases 1+2 (kernel side): (qid, coords, ub, cell, fin0)
+    candidate rows out of ONE probe cogroup, before the stats join.
 
-    Phase 1 — a VALID kth-distance² upper bound per query from the home
-    cell's probe samples (index.probes): the kth smallest distance² to
-    the pooled live sample upper-bounds the true kth for any d, within
-    a (cell/sample)^(1/d) radius factor. Only the probe arrays of the
-    batch's distinct home cells cross Arrow (broadcast semi-join) —
-    ~1-10% of blob bytes, once per job.
-
-    Phase 2 is fused into the same pandas kernel: bounded queries
-    enumerate their candidate cells (_enum_rows) before leaving the
-    cogroup, so the bounded hot path pays no second Python/Arrow hop
-    (the round-4 phase profile measured the seed cogroup and the
-    separate enumeration pass at ~1 s of stage floor each at gate
-    scale). Sentinels: cell = -1 -> enum cube exceeded ENUM_CAP (super-
-    cell path refines it); cell = -2 -> the samples could not bound the
-    query (home cell empty, or k above the pooled sample) — the
-    prefix-sum fallback over the broadcast super-cell stats computes ub
-    and a mapInPandas pass enumerates (rare: only empty-home or
-    k > pool queries)."""
+    Only the probe arrays of the batch's home cells cross Arrow
+    (broadcast semi-join). The super-cell table rides in the
+    kernel's closure (<= SUPER_MAX_CELLS rows, collected once per
+    index version), so the rare needy and far queries are bounded and
+    expanded in the same pass as the common near ones — no extra
+    Spark job for legs that usually carry no rows."""
     d = len(cc)
     cdt = _cdt(index)
-    coord_schema = _coord_schema(index, cc)
     grid = index.grid
     gd = grid.dims
     fmode = index.float_coords
+    S, sg = index.super_grid()
+    sup = _super_arrays(index)
     home = queries.selectExpr(
         "qid", *cc, f"{index.cell_sql_nd(cc)} AS cell")
-    probes = index.probes().join(
-        F.broadcast(home.select("cell").distinct()), "cell", "semi")
-    out_schema = (f"qid long, {coord_schema}, ub double, cell long, "
-                  f"fin0 boolean")
+    probes = pruned_blobs(index.probes(), home)
+    out_schema = (f"qid long, {_coord_schema(index, cc)}, ub double, "
+                  f"cell long, fin0 boolean")
     # guard columns derived from the declared schema so they cannot
     # drift apart (the r5 fusion once widened the schema but not the
     # guard, crashing the probes-only-key branch)
@@ -251,9 +293,8 @@ def _seed_enum(index: SpatialIndex, queries: DataFrame, cc: list, k: int
                    ) -> pd.DataFrame:
         if len(qpdf) == 0:
             return pd.DataFrame(columns=out_cols)
-        # -1.0 = unbounded (NOT NaN: pandas NaN becomes SQL NULL
-        # through the Arrow hop and would slip every filter on ub)
-        ub = np.full(len(qpdf), -1.0)
+        qd = qpdf[cc].to_numpy(cdt)
+        ub = np.full(len(qpdf), np.nan)
         if len(ppdf):
             pool = np.concatenate([
                 np.asarray(a, cdt).reshape(-1, d) for a in ppdf["probe"]])
@@ -269,180 +310,53 @@ def _seed_enum(index: SpatialIndex, queries: DataFrame, cc: list, k: int
                 # query's nearest sample points)
                 ptree = LocalKDTree.build(
                     pool, np.arange(P, dtype=np.int64))
-                b = ptree.knn_bound(qpdf[cc].to_numpy(cdt), k)
-                ub = np.where(np.isfinite(b), b, -1.0)
-        bounded = ub >= 0
-        bidx = np.flatnonzero(bounded)
-        q = [qpdf[cc[j]].to_numpy(cdt)[bidx] for j in range(gd)]
-        rows_b, cells_b, fin_b = _enum_rows(q, ub[bidx], grid, fmode)
-        needy = np.flatnonzero(~bounded)
-        rows_i = np.concatenate([bidx[rows_b], needy])
-        cellcol = np.concatenate(
-            [cells_b, np.full(len(needy), -2, np.int64)])
+                b = ptree.knn_bound(qd, k)
+                ub = np.where(np.isfinite(b), b, np.nan)
+        needy = np.isnan(ub)
+        ub[needy] = _prefix_ub(qd[needy], sup, k)
+        rows_i, cells, fin0, far = _enum_rows(
+            [qd[:, j] for j in range(gd)], ub, grid, fmode)
+        # a needy query's bound does not come from its home cell's
+        # samples (the home cell may be empty), so its one enumerated
+        # cell is not guaranteed to survive the stats join: it always
+        # merges through the window
+        fin0 &= ~needy[rows_i]
+        far_i, far_cells = _far_cells(qd[far], ub[far], sup, grid, S, sg)
+        rows_i = np.concatenate([rows_i, far[far_i]])
         out = {"qid": qpdf["qid"].to_numpy(np.int64)[rows_i]}
-        for c in cc:
-            out[c] = qpdf[c].to_numpy(cdt)[rows_i]
+        for j, c in enumerate(cc):
+            out[c] = qd[rows_i, j]
         out["ub"] = ub[rows_i]
-        out["cell"] = cellcol
-        out["fin0"] = np.concatenate([fin_b, np.zeros(len(needy), bool)])
+        out["cell"] = np.concatenate([cells, far_cells])
+        out["fin0"] = np.concatenate([fin0, np.zeros(len(far_i), bool)])
         return pd.DataFrame(out)
 
-    # the bounded rows and the needy fallback below both re-read this;
-    # a lazy checkpoint runs the probe cogroup exactly once
-    return (home.groupby("cell")
-            .cogroup(probes.groupby("cell"))
-            .applyInPandas(probe_enum, out_schema)
-            .localCheckpoint(eager=False))
-
-
-def _super_prefix_ub(index: SpatialIndex, needy: DataFrame, cc: list,
-                     k: int) -> DataFrame:
-    """Fallback bound for queries the probe samples cannot bound:
-    super-cell prefix-sum — blocks ordered by farthest-corner dist²;
-    the first prefix whose live counts reach k holds k points all
-    within that maxd2 -> valid bound. Enumeration is TOTAL (every super
-    cell), so ub = inf only when the index has < k live points."""
-    sup = index.super_stats()
-    slo, shi = _super_cols(cc)
-    _, maxd2_s = _bbox_exprs(cc, slo, shi)
-    wq = Window.partitionBy("qid")
-    wcum = (wq.orderBy(F.col("maxd2").asc(), F.col("scell").asc())
-            .rowsBetween(Window.unboundedPreceding, 0))
-    return (needy.crossJoin(F.broadcast(sup))
-            .withColumn("maxd2", maxd2_s)
-            .withColumn("cum", F.sum("ccnt").over(wcum))
-            .groupBy("qid", *cc)
-            .agg(F.coalesce(
-                F.min(F.when(F.col("cum") >= k, F.col("maxd2"))),
-                F.lit(float("inf"))).alias("ub")))
-
-
-def _candidate_cells(index: SpatialIndex, enum: DataFrame, cc: list,
-                     coord_schema: str, k: int) -> DataFrame:
-    """Phase 2 (refinement side): (qid, coords, ub, cell, maxsalt)
-    candidate pairs from the fused enumeration rows.
-
-    Enumerated rows (cell >= 0) equi-join on `cell` with the cell-stats
-    table to (a) drop empty cells and (b) keep only cells whose
-    data-bbox min-dist² <= ub — the same <= test the reference's
-    p2b_min_distance makes, so equal-distance candidates survive for
-    the (dist, id) tie-break. Sentinel rows (cell = -1: cube exceeded
-    ENUM_CAP, or ub = inf) broadcast-join the <= 4096-row super-cell
-    stats instead: super cells within ub explode into their S^dims
-    fine children, which the fine stats join then prunes — work scales
-    with the query's true candidate region, never with total cell
-    count."""
-    grid = index.grid
-    g = grid.g
-    stats = index.cell_stats()
-    slo, shi = _super_cols(cc)
-    mind2, _ = _bbox_exprs(cc, slo, shi)  # fine stats share these names
-    # mind2 rides along so phase 3 can re-prune sibling cells against
-    # the exact kth distance of the home-cell scan (home-first order);
-    # fin0 is the enumeration-time single-candidate flag (see
-    # _enum_rows) consumed by knn_join's merge bypass
-    keep = ["qid", *cc, "ub", "cell", "maxsalt", "fin0",
-            mind2.alias("mind2")]
-
-    near_out = (enum.filter(F.col("cell") >= 0).join(stats, "cell")
-                .filter(mind2 <= F.col("ub")).select(*keep))
-
-    # super-cell path: bounded by 4096 broadcast rows per query, then
-    # exploded only where the data-bbox can reach the query's bound
-    far = enum.filter(F.col("cell") < 0).drop("cell")
-    sup = index.super_stats()
-    S, sg = index.super_grid()
-    mind2_s, _ = _bbox_exprs(cc, slo, shi)
-    fsup = (far.crossJoin(F.broadcast(sup))
-            .filter(mind2_s <= F.col("ub"))
-            .select("qid", *cc, "ub", "fin0", "scell"))
-    children = fsup
-    child_cols = []
-    for j, (lo, hi) in enumerate(
-            index.grid.child_ranges_sql("scell", sg, S, g)):
-        children = children.selectExpr(
-            "*", f"explode(sequence({lo}, {hi})) AS _c{j}")
-        child_cols.append(f"_c{j}")
-    children = children.selectExpr(
-        "qid", *cc, "ub", "fin0",
-        f"{index.grid.compose_sql(child_cols)} AS cell")
-    far_out = (children.join(stats, "cell")
-               .filter(mind2 <= F.col("ub")).select(*keep))
-    return near_out.unionByName(far_out)
+    return cogroup(home, probes, ["cell"], probe_enum, out_schema)
 
 
 def knn_candidates(index: SpatialIndex, queries: DataFrame, k: int
                    ) -> DataFrame:
-    """Phases 1+2: (qid, coords, ub, cell, maxsalt) candidate pairs.
+    """Phases 1+2: (qid, coords, ub, cell, maxsalt, fin0) candidate
+    pairs — the kernel's rows equi-joined on `cell` with the cell-stats
+    table, keeping only cells whose data-bbox min-dist² <= ub (the same
+    <= test the reference's p2b_min_distance makes, so equal-distance
+    candidates survive for the (dist, id) tie-break); empty cells drop.
     Exposed separately so bench can audit pruning quality (candidate
     cells per query — the reference's visited-node counters analogue,
     testFramework.h:505-517)."""
     cc = list(index.coord_cols)
-    coord_schema = _coord_schema(index, cc)
-    fused = _seed_enum(index, queries, cc, k)
-    enum = fused.filter(F.col("cell") >= -1)
-    needy = fused.filter(F.col("cell") == -2).drop("ub", "cell")
-    needy_ub = _super_prefix_ub(index, needy, cc, k)
-
-    # rare leg (empty home cell / k above the pooled sample): enumerate
-    # with the shared numpy kernel in a mapInPandas pass
-    grid = index.grid
-    gd = grid.dims
-    fmode = index.float_coords
-    cdt = _cdt(index)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            q = [pdf[cc[j]].to_numpy(cdt) for j in range(gd)]
-            ub = pdf["ub"].to_numpy(np.float64)
-            rows_i, cells, fin0 = _enum_rows(q, ub, grid, fmode)
-            out = {"qid": pdf["qid"].to_numpy(np.int64)[rows_i]}
-            for c in cc:
-                out[c] = pdf[c].to_numpy(cdt)[rows_i]
-            out["ub"] = ub[rows_i]
-            out["cell"] = cells
-            # needy queries had an EMPTY home cell: their one enumerated
-            # cell is not guaranteed to survive the stats join, so they
-            # always merge through the window
-            out["fin0"] = np.zeros(len(rows_i), bool)
-            yield pd.DataFrame(out)
-
-    needy_enum = needy_ub.mapInPandas(
-        gen,
-        f"qid long, {coord_schema}, ub double, cell long, fin0 boolean")
-    return _candidate_cells(index, enum.unionByName(needy_enum), cc,
-                            coord_schema, k)
-
-
-def _pruned_blob_sides(index: SpatialIndex, cand: DataFrame):
-    """(cold, hot, cold_blobs, hot_blobs): split the checkpointed
-    candidate set by salt and semi-join the blob table down to the
-    distinct candidate cells of each side BEFORE the cogroup — the
-    update() touched-cells pattern (index.py) applied to reads. The
-    broadcast semi-join preserves the cached blob table's
-    hash-partitioning on `cell`, so the cogroup reuses the existing
-    exchange AND only candidate-cell blobs are serialized through
-    Arrow (bytes shipped scale with the query's candidate set, not
-    with index size)."""
-    cold, hot = _split_by_salt(cand)
-    cold_blobs = index.df.join(
-        F.broadcast(cold.select("cell").distinct()), "cell", "semi")
-    hblobs = _hot_blobs(index).join(
-        F.broadcast(hot.select("cell").distinct()), "cell", "semi")
-    return cold, hot, cold_blobs, hblobs
+    mind2 = _mind2_expr(cc, *bbox_cols(len(cc)))
+    return (_seed_enum(index, queries, cc, k).join(index.cell_stats(), "cell")
+            .filter(mind2 <= F.col("ub"))
+            .select("qid", *cc, "ub", "cell", "maxsalt", "fin0"))
 
 
 def _cell_knn_maker(cc: list, cdt, k: int):
-    """Phase-3 kernel factory shared by knn_join / knn_scan_stats.
-
-    allow_fin=True on cold (one group per cell) cogroups: their kernel
-    ranks are exact within the group, so rows are bypass-eligible when
-    the optional per-row `_fin` input column agrees (absent = True).
-    Hot (per-blob) groups never emit fin rows. Cold groups also force
-    the per-blob block-scan bound tighten (see knn_join comments)."""
-    def make_cell_knn(allow_fin: bool):
+    """Phase-3 kernel factory: cold (one group per cell) kernels rank
+    exactly within the group, so their rows are bypass-eligible when
+    the query's fin0 says so, and they force the per-blob block-scan
+    bound tighten; hot (per-blob) groups never emit fin rows."""
+    def make_cell_knn(cold: bool):
         def cell_knn(key, qpdf: pd.DataFrame, ipdf: pd.DataFrame
                      ) -> pd.DataFrame:
             if len(qpdf) == 0 or len(ipdf) == 0:
@@ -451,15 +365,12 @@ def _cell_knn_maker(cc: list, cdt, k: int):
             qpts = qpdf[cc].to_numpy(cdt)
             ub = qpdf["ub"].to_numpy(np.float64)
             d, i = _group_knn(qpts, ipdf["blob"], k, ub,
-                              tighten=(allow_fin and _TIGHTEN_COLD) or None)
+                              tighten=True if cold else None)
             m = len(qpdf)
             qid = np.repeat(qpdf["qid"].to_numpy(np.int64), k)
             rank = np.tile(np.arange(1, k + 1, dtype=np.int32), m)
-            if allow_fin and _BYPASS:
-                row_fin = (qpdf["_fin"].to_numpy(bool)
-                           if "_fin" in qpdf.columns else np.ones(m, bool))
-            else:
-                row_fin = np.zeros(m, bool)
+            row_fin = (qpdf["fin0"].to_numpy(bool) if cold
+                       else np.zeros(m, bool))
             fin = np.repeat(row_fin, k)
             dd = d.ravel()
             ii = i.ravel()
@@ -471,46 +382,6 @@ def _cell_knn_maker(cc: list, cdt, k: int):
     return make_cell_knn
 
 
-def _scan_local(index: SpatialIndex, pairs: DataFrame, kernel_maker,
-                out_schema: str) -> DataFrame:
-    """Run a phase-3 cogroup over candidate (query, cell) pairs: cold
-    cells one group each (kernel allow_fin=True), hot (salted) cells
-    one task per blob so varden-style clustering can't serialize a
-    cell's queries on one task — per-blob searches lose cross-blob
-    bound tightening, which the exact merge absorbs (hot rows are
-    always fin=false)."""
-    cold, hot, cold_blobs, hblobs = _pruned_blob_sides(index, pairs)
-    return (cold.groupby("cell")
-            .cogroup(cold_blobs.groupby("cell"))
-            .applyInPandas(kernel_maker(True), out_schema)
-            .unionByName(
-                hot.groupby("cell", "salt")
-                .cogroup(hblobs.groupby("cell", "salt"))
-                .applyInPandas(kernel_maker(False), out_schema)))
-
-
-_HOME_FIRST = os.environ.get("KDS_KNN_HOME_FIRST", "0") != "0"
-# Two-stage home-first scan order (A/B instrument; OFF by default).
-# Measured at sf0.1/Grid(8) d2, sf0.1/Grid(3,dims=4) d5 and 6M-row
-# Grid(28): scanned pts/query drops 13-27% (353->306 d2, 3731->2714
-# d5, 541->469 6M) but wall time RISES 15-25% every time — with ~8k-pt
-# blobs the numpy scan a sibling cell costs is cheaper than the extra
-# cogroup barrier + kth join the re-prune needs. The reference's
-# nearer-child-first order (nn_search.hpp:107-125) pays off in a
-# shared-memory pointer walk; in a distributed barrier model it only
-# wins when per-cell scan cost >> stage latency (huge blobs or very
-# expensive metrics) — flip on for those deployments.
-
-
-def _home_split(index: SpatialIndex, cand: DataFrame, cc: list):
-    """(home_pairs, sibling_pairs): a candidate pair is `home` when its
-    cell is the query's own grid cell — the distributed analogue of the
-    reference's nearer-child-first descent order (nn_search.hpp:107-125:
-    the child containing the query is searched before the sibling)."""
-    is_home = F.expr(f"cell = {index.cell_sql_nd(cc)}")
-    return cand.filter(is_home), cand.filter(~is_home)
-
-
 def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     """queries: (qid long, <coord cols> long) -> (qid, rank, nid, dist_sq).
 
@@ -518,90 +389,30 @@ def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     pruning (phase 2) uses only the grid dims — a lower bound on the
     full-d distance, so exactness is preserved for any d.
 
-    Phase 3 default: all candidate cells scan concurrently in ONE
-    cogroup round; queries with a single candidate cell (~85% on
+    All candidate cells scan concurrently in ONE cogroup round; queries
+    whose enumeration had exactly one candidate cell (fin0, ~85% on
     uniform data) take their kernel-emitted ranks and skip the merge
-    window. KDS_KNN_HOME_FIRST=1 switches to a two-stage home-first
-    order (reference parity with nn_search.hpp's nearer-child-first
-    descent): stage A scans only each query's home cell, the exact kth
-    distance² of that scan re-prunes sibling pairs (mind2 <=
-    least(ub, kth), `<=` so equal-distance candidates survive the
-    (dist, id) tie-break), stage B scans survivors only. Measured
-    (see _HOME_FIRST): scans/query drop 13-27% but the extra barrier
-    costs more wall than the scans it saves at the ~8k-pt blob sizing
-    — off unless per-cell scan cost dwarfs stage latency."""
+    window — no per-query candidate count is computed. Queries whose
+    extra enumerated cells drop in the stats join conservatively take
+    the merge window — same results."""
     cc = list(index.coord_cols)
-    # the cold/hot split and the blob semi-joins consume the candidate
-    # set several times; checkpoint the (small, O(queries x
-    # cells-per-query)) candidates so phases 1+2 run once, not once per
-    # consumer (blocks are freed by the ContextCleaner once the result
-    # is no longer referenced). LAZY: an eager checkpoint blocks the
-    # driver on a dedicated materialization job (~1 s of the round-4
-    # phase profile's stage floor); lazy folds the materialization into
-    # the first consumer job with identical plan-truncation semantics
-    # (the logical plan becomes a LogicalRDD either way, so the blob
-    # semi-joins never see index.df lineage).
+    # the candidate pairs feed the cold/hot split and the blob pruning,
+    # and the scan output feeds the bypass and the merge window: LAZY
+    # checkpoints are computed inside their first consumer's job and
+    # read back by the next (the logical plan becomes a LogicalRDD, so
+    # the blob semi-joins never see index.df lineage)
     cand = knn_candidates(index, queries, k).localCheckpoint(eager=False)
-    cdt = _cdt(index)
-    maker = _cell_knn_maker(cc, cdt, k)
+    maker = _cell_knn_maker(cc, _cdt(index), k)
     out_schema = "qid long, nid long, dist_sq double, rank int, fin boolean"
-
+    local = scan_blobs(index, cand, maker(True), maker(False), out_schema) \
+        .localCheckpoint(eager=False)
     w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(),
                                           F.col("nid").asc())
     dist = (F.col("dist_sq") if index.float_coords
             else F.col("dist_sq").cast("long"))
-
-    if not _HOME_FIRST:
-        # single-stage: all candidate cells scan concurrently; bypass
-        # queries whose ENUMERATION already had exactly one candidate
-        # cell (fin0, emitted by the fused kernel — their home cell's
-        # ranks are globally final, see _enum_rows). No per-query count
-        # is computed at all: the window/groupBy exchange over qid that
-        # previous rounds paid here is gone. Queries whose extra
-        # enumerated cells drop in the stats join (~15% at d=2)
-        # conservatively take the merge window — same results.
-        canded = cand.withColumn("_fin", F.col("fin0"))
-        local = _scan_local(index, canded, maker, out_schema) \
-            .localCheckpoint(eager=False)
-        done = local.filter(F.col("fin"))
-        merged = (local.filter(~F.col("fin"))
-                  .withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
-        return (done.unionByName(merged)
-                .select("qid", "rank", "nid", dist.alias("dist_sq")))
-
-    home, sibs = _home_split(index, cand, cc)
-    # ---- stage A: home cells only
-    localA = _scan_local(index, home, maker, out_schema) \
-        .localCheckpoint(eager=False)
-    # exact kth distance² from cold (single-group) home scans: the k-th
-    # row's dist IS the kth-best among the home cell's live points.
-    # Salted-home queries contribute no kth (their per-blob ranks
-    # overlap) and fall back to the phase-1 ub — they are the dense
-    # minority where sibling cells rarely survive mind2 <= ub anyway.
-    kth = (localA.filter(F.col("fin") & (F.col("rank") == k))
-           .select("qid", F.col("dist_sq").alias("kth")))
-    # ---- stage B: siblings that survive the tightened bound
-    sibs2 = (sibs.join(kth, "qid", "left")
-             .filter(F.col("mind2")
-                     <= F.least(F.col("ub"),
-                                F.coalesce(F.col("kth"),
-                                           F.lit(float("inf")))))
-             .withColumn("ub", F.least(F.col("ub"),
-                                       F.coalesce(F.col("kth"),
-                                                  F.lit(float("inf")))))
-             .drop("kth")
-             .withColumn("_fin", F.lit(False))
-             .localCheckpoint(eager=False))
-    localB = _scan_local(index, sibs2, maker, out_schema)
-    # queries with NO surviving sibling AND a single-group home scan
-    # keep their kernel ranks; everything else merges exactly
-    bq = sibs2.select("qid").distinct()
-    done = localA.filter(F.col("fin")).join(bq, "qid", "anti")
-    rest = (localA.filter(F.col("fin")).join(bq, "qid", "semi")
-            .unionByName(localA.filter(~F.col("fin")))
-            .unionByName(localB))
-    merged = (rest.withColumn("rank", F.row_number().over(w))
+    done = local.filter(F.col("fin"))
+    merged = (local.filter(~F.col("fin"))
+              .withColumn("rank", F.row_number().over(w))
               .filter(F.col("rank") <= k))
     return (done.unionByName(merged)
             .select("qid", "rank", "nid", dist.alias("dist_sq")))
@@ -613,8 +424,10 @@ def knn_shipped_blobs(index: SpatialIndex, queries: DataFrame, k: int
     ships through the Arrow cogroup vs the whole index — evidence that
     phase 3's semi-join prunes blob shipping to the candidate set."""
     cand = knn_candidates(index, queries, k).localCheckpoint(eager=True)
-    _, _, cold_blobs, hblobs = _pruned_blob_sides(index, cand)
-    shipped = cold_blobs.unionByName(hblobs)
+    cold, hot = split_by_salt(index, cand)
+    shipped = pruned_blobs(index.df, cold)
+    if hot is not None:
+        shipped = shipped.unionByName(pruned_blobs(hot_blobs(index), hot))
     srow = shipped.agg(
         F.count("*").alias("rows"),
         F.sum(F.length("blob")).alias("bytes")).collect()[0]
@@ -638,56 +451,28 @@ def knn_scan_stats(index: SpatialIndex, queries: DataFrame, k: int
     search with counting on, so it is for audits, not the hot path."""
     cc = list(index.coord_cols)
     cand = knn_candidates(index, queries, k).localCheckpoint(eager=True)
-
     cdt = _cdt(index)
 
-    def make_cell_count(allow_fin: bool):
+    def make_cell_count(cold: bool):
         # mirror knn_join's tighten flags (cold forces the block-scan
         # tighten; its scanned points are counted via knn_bound's stats
-        # hook, so the audit reflects ALL distance comparisons). Cold
-        # groups also emit the exact kth distance² (kth = -1 when
-        # unavailable: hot group, or < k finite results) so the
-        # home-first audit can re-prune stage B like knn_join does.
+        # hook, so the audit reflects ALL distance comparisons)
         def cell_count(key, qpdf: pd.DataFrame, ipdf: pd.DataFrame
                        ) -> pd.DataFrame:
             if len(qpdf) == 0 or len(ipdf) == 0:
-                return pd.DataFrame(
-                    columns=["qid", "scanned", "leaves", "kth"])
-            qpts = qpdf[cc].to_numpy(cdt)
-            ub = qpdf["ub"].to_numpy(np.float64)
+                return pd.DataFrame(columns=["qid", "scanned", "leaves"])
             st: dict = {}
-            d, _ = _group_knn(qpts, ipdf["blob"], k, ub, stats=st,
-                              tighten=(allow_fin and _TIGHTEN_COLD)
-                              or None)
-            kd = d[:, k - 1]
-            kth = (np.where(np.isfinite(kd), kd, -1.0) if allow_fin
-                   else np.full(len(qpdf), -1.0))
+            _group_knn(qpdf[cc].to_numpy(cdt), ipdf["blob"], k,
+                       qpdf["ub"].to_numpy(np.float64), stats=st,
+                       tighten=True if cold else None)
             return pd.DataFrame({"qid": qpdf["qid"].to_numpy(np.int64),
                                  "scanned": st["scanned"],
-                                 "leaves": st["leaves"],
-                                 "kth": kth})
+                                 "leaves": st["leaves"]})
         return cell_count
 
-    cnt_schema = "qid long, scanned long, leaves long, kth double"
-    if not _HOME_FIRST:
-        per_cell = _scan_local(index, cand, make_cell_count, cnt_schema)
-    else:
-        home, sibs = _home_split(index, cand, cc)
-        perA = _scan_local(index, home, make_cell_count, cnt_schema) \
-            .localCheckpoint(eager=False)
-        kth = (perA.filter(F.col("kth") >= 0)
-               .groupBy("qid").agg(F.min("kth").alias("kth2")))
-        sibs2 = (sibs.join(kth, "qid", "left")
-                 .filter(F.col("mind2")
-                         <= F.least(F.col("ub"),
-                                    F.coalesce(F.col("kth2"),
-                                               F.lit(float("inf")))))
-                 .withColumn("ub", F.least(F.col("ub"),
-                                           F.coalesce(F.col("kth2"),
-                                                      F.lit(float("inf")))))
-                 .drop("kth2"))
-        perB = _scan_local(index, sibs2, make_cell_count, cnt_schema)
-        per_cell = perA.unionByName(perB)
+    per_cell = scan_blobs(index, cand, make_cell_count(True),
+                          make_cell_count(False),
+                          "qid long, scanned long, leaves long")
     return (per_cell.groupBy("qid")
             .agg(F.sum("scanned").alias("scanned"),
                  F.sum("leaves").alias("leaves")))

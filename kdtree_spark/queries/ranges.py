@@ -25,40 +25,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import SpatialIndex
+from ..index import SpatialIndex, bbox_cols
 from ..localtree import LocalKDTree
-from .skew import hot_blobs, split_by_salt
-
-
-def _scan_counts(index: SpatialIndex, bnd: DataFrame, scan, schema: str
-                 ) -> DataFrame:
-    """Run the boundary-cell scan cogroup with the cold/hot split: cold
-    cells cogroup on `cell`; hot cells fan out per (cell, salt) blob.
-    Each blob side is first pruned by a broadcast semi-join on its
-    side's distinct boundary cells (the update() touched-cells pattern,
-    index.py) so only boundary-cell blobs are serialized through the
-    Arrow hop — contained and disjoint cells never ship, and bytes
-    scale with the query set's boundary, not with index size. The
-    broadcast semi-join preserves the cached blob table's hash-
-    partitioning on `cell`, keeping the cogroup's exchange reuse.
-    `bnd` must carry `maxsalt` (consumed by the split) and must be
-    checkpointed by the caller (its lineage must not reach index.df, or
-    the semi-join would trip the self-join analyzer); `scan` is
-    additive across a cell's blobs (counts sum / reported rows union),
-    so per-salt partial results compose in the caller's final
-    aggregation."""
-    cold, hot = split_by_salt(bnd)
-    cold_blobs = index.df.join(
-        F.broadcast(cold.select("cell").distinct()), "cell", "semi")
-    hblobs = hot_blobs(index).join(
-        F.broadcast(hot.select("cell").distinct()), "cell", "semi")
-    return (cold.groupby("cell")
-            .cogroup(cold_blobs.groupby("cell"))
-            .applyInPandas(scan, schema)
-            .unionByName(
-                hot.groupby("cell", "salt")
-                .cogroup(hblobs.groupby("cell", "salt"))
-                .applyInPandas(scan, schema)))
+from .skew import scan_blobs
 
 
 def _box_cols(d: int) -> tuple[list, list]:
@@ -70,18 +39,12 @@ def _box_cols(d: int) -> tuple[list, list]:
     return lo, hi
 
 
-def _stats_cols(d: int) -> tuple[list, list]:
-    lo = ["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)]
-    hi = ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)]
-    return lo, hi
-
-
 def _box_conds(d: int):
     """(overlap, contained) full-d Spark conditions between a box row
     and a stats row — the reference's 3-way box classification
     (range_count.hpp:9-96) as whole-stage-codegen'd SQL."""
     blo, bhi = _box_cols(d)
-    slo, shi = _stats_cols(d)
+    slo, shi = bbox_cols(d)
     overlap = contained = F.lit(True)
     for bl, bh, sl, sh in zip(blo, bhi, slo, shi):
         overlap = overlap & (F.col(sl) <= F.col(bh)) \
@@ -103,13 +66,6 @@ def _boxes_df(index: SpatialIndex, boxes) -> DataFrame:
     for j, c in enumerate(lo + hi):
         cols[c] = arr[:, 1 + j]
     return index.spark.createDataFrame(pd.DataFrame(cols))
-
-
-def _cell_stats_df(index: SpatialIndex) -> DataFrame:
-    """Per-cell union bbox + live count (no blobs touched) — the cached
-    Spark-side stats table (index.cell_stats); nothing is collected to
-    the driver, so pruning scales to arbitrary cell counts."""
-    return index.cell_stats()
 
 
 def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
@@ -168,7 +124,7 @@ def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
     levels = index.stats_pyramid()  # fine+1 .. coarsest
     if not levels:
         pairs = enum_top(qdf, grid.g, grid.cw)
-        return pairs.join(_cell_stats_df(index), "cell").filter(cond)
+        return pairs.join(index.cell_stats(), "cell").filter(cond)
 
     qcols = qdf.columns
     topg, topcw, _ = levels[-1]
@@ -193,7 +149,7 @@ def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
                     .selectExpr(
                         "*", f"{grid.compose_sql(ccols, childg)} AS cell")
                     .drop(*ccols))
-    out = frontier.join(_cell_stats_df(index), "cell").filter(cond)
+    out = frontier.join(index.cell_stats(), "cell").filter(cond)
     for e in emitted:
         out = out.unionByName(e.select(*out.columns))
     return out
@@ -236,7 +192,7 @@ def range_count(index: SpatialIndex, boxes) -> DataFrame:
         return pd.DataFrame({"box_id": bpdf["box_id"].to_numpy(np.int64),
                              "cnt": part})
 
-    all_counts = _scan_counts(index, bnd, scan, "box_id long, cnt long") \
+    all_counts = scan_blobs(index, bnd, scan, scan, "box_id long, cnt long") \
         .unionByName(full_counts)
 
     # boxes with zero matches must still appear with cnt=0; broadcast
@@ -286,8 +242,8 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
         return pd.concat(outs, ignore_index=True)
 
     coord_schema = ", ".join(f"{c} {ct}" for c in cc)
-    return _scan_counts(index, pairs, scan,
-                        f"box_id long, pid long, {coord_schema}")
+    return scan_blobs(index, pairs, scan, scan,
+                      f"box_id long, pid long, {coord_schema}")
 
 
 def circle_count(index: SpatialIndex, circles) -> DataFrame:
@@ -313,7 +269,7 @@ def circle_count(index: SpatialIndex, circles) -> DataFrame:
     cdf = cdf.selectExpr(
         "*", *[f"{ctr_c[j]} - r AS {blo[j]}" for j in range(gd)],
         *[f"{ctr_c[j]} + r AS {bhi[j]}" for j in range(gd)])
-    slo, shi = _stats_cols(d)
+    slo, shi = bbox_cols(d)
     mind2 = maxd2 = None
     for c, sl, sh in zip(ctr_c, slo, shi):
         nearc = F.greatest(F.col(sl) - F.col(c), F.col(c) - F.col(sh),
@@ -345,7 +301,8 @@ def circle_count(index: SpatialIndex, circles) -> DataFrame:
         return pd.DataFrame({"circle_id": cpdf["circle_id"].to_numpy(np.int64),
                              "cnt": part})
 
-    all_counts = _scan_counts(index, bnd, scan, "circle_id long, cnt long") \
+    all_counts = scan_blobs(index, bnd, scan, scan,
+                            "circle_id long, cnt long") \
         .unionByName(full_counts)
     return (cdf.select("circle_id")
             .join(F.broadcast(

@@ -26,10 +26,26 @@ def _package_zip() -> str:
     return out
 
 
+def host_defaults() -> tuple[int, str]:
+    """(cpus, driver memory) for a session on this host: the CPUs this
+    process may run on and half of physical memory (whole GiB, at
+    least 1) — in local mode the driver JVM also runs every task.
+    SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM override them."""
+    try:
+        cpus = len(os.sched_getaffinity(0))
+    except AttributeError:  # not on Linux
+        cpus = os.cpu_count() or 1
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return (int(os.environ.get("SPARK_GRAFT_CPUS", cpus)),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                           f"{max(1, phys // 2 // 2 ** 30)}g"))
+
+
 def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    host_cpus, driver_mem = host_defaults()
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = host_cpus
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     b = (
@@ -43,10 +59,16 @@ def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # an index version is a union of fragments, each filtered to the
+        # cells no later update touched; with constraint propagation on,
+        # those filters are copied onto the small side of every semi-join
+        # pushed into the union, so one broadcast becomes one per
+        # fragment (two more Spark jobs per kNN call per fragment)
+        .config("spark.sql.constraintPropagation.enabled", "false")
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -13,7 +13,7 @@ data. Prints one JSON line:
    "cells_per_query": ...}
 
 The kNN batch is intentionally large (1M queries by default): the
-per-job stage floor quantified in scripts/knn_phase_profile.py is
+per-job stage floor (BENCH.md, kNN latency composition) is
 fixed, so q/s keeps amortizing with batch size — this leg is the
 evidence point for that claim at the largest n the sandbox fits.
 """

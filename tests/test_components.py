@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from kdtree_spark.pipeline.components import connected_components
 
@@ -48,6 +49,14 @@ def test_components_long_path_exercises_jump(spark):
     edges = [(i, i + 1) for i in range(399)]
     got = dict(connected_components(_mk_edges(spark, edges)).collect())
     assert got == {i: 0 for i in range(400)}
+
+
+def test_components_round_cap_raises(spark):
+    """One contraction round cannot reach a path's fixpoint: the call
+    raises instead of returning labels that are not components."""
+    edges = [(i, i + 1) for i in range(20)]
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        connected_components(_mk_edges(spark, edges), max_rounds=1)
 
 
 def test_components_singletons_and_empty_edges(spark):

@@ -100,6 +100,15 @@ def test_distance_join_r0_and_default_grid(spark):
     assert got == [(0, 5, 0), (0, 6, 0), (2, 8, 0)]
 
 
+def test_distance_join_rejects_shared_id_name(spark):
+    """left_id == right_id would emit two columns of one name."""
+    L = np.array([[0, 10, 10]])
+    with pytest.raises(ValueError, match="left_id and right_id"):
+        distance_join(_mk(spark, L, "id", ("x", "y")),
+                      _mk(spark, L, "id", ("x", "y")), 5,
+                      left_id="id", right_id="id")
+
+
 def test_distance_join_count_zero_rows(spark):
     """Count variant: zero-neighbor lefts report cnt=0 (LEFT join)."""
     rng = np.random.default_rng(23)

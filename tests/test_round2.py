@@ -147,7 +147,8 @@ def test_rotate_split_rule():
 
 
 def test_point_insert_delete_batch_of_one(spark, sf_dir):
-    """I2/D3: pointInsert/pointDelete = batch of exactly one row."""
+    """I2/D3: pointInsert/pointDelete = batch of exactly one row (and
+    an empty batch)."""
     pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
     idx = SpatialIndex.build(spark, pts, grid=Grid(4))
     n = pts.count()
@@ -160,9 +161,13 @@ def test_point_insert_delete_batch_of_one(spark, sf_dir):
     assert got[0]["nid"] == 999_000_000_001 and got[0]["dist_sq"] == 0
     idx3 = idx2.update(deletes=one_new)
     assert idx3.validate()["total"] == n
+    # and a batch of none: a new version with the same live points
+    idx4 = idx3.update(inserts=one_new.limit(0))
+    assert idx4.validate()["total"] == n
+    assert idx4.touched_cells_df.count() == 0
 
 
-def test_knn_hot_cell_salted_exact(spark):
+def test_knn_hot_cell_salted_exact(spark, tmp_path):
     """A salted (hot) cell's kNN fans out per blob (cogroup on
     (cell, salt)) — results must equal brute force, including queries
     inside the cluster, in the sparse background, and in empty corners
@@ -181,6 +186,13 @@ def test_knn_hot_cell_salted_exact(spark):
                              hot_cell_cap=1024)
     # the cluster cell must actually be salted for this test to bite
     assert idx.df.groupBy("cell").count().filter("count > 1").count() >= 1
+    # the hot-cell set is collected at build time and is exactly the
+    # cells with >= FANOUT_MIN_BLOBS non-empty blobs
+    from kdtree_spark.index import FANOUT_MIN_BLOBS
+    hot = sorted(r["cell"] for r in idx.cell_stats()
+                 .filter(F.col("maxsalt") + 1 >= FANOUT_MIN_BLOBS)
+                 .collect())
+    assert hot and idx.hot_cells() == hot
     q = np.concatenate([
         rng.integers(0, 1000, size=(20, 2)),
         rng.integers(0, 1_000_000, size=(20, 2)),
@@ -197,6 +209,20 @@ def test_knn_hot_cell_salted_exact(spark):
         assert np.array_equal(
             got["dist_sq"].to_numpy(np.int64).reshape(len(q), k),
             exp_d.astype(np.int64))
+    # update() never adds salts, so the set carries over unchanged,
+    # and save/load keeps it in the manifest
+    up = idx.update(inserts=spark.createDataFrame(pd.DataFrame(
+        {"pid": [n], "x": [5], "y": [5]})))
+    assert up.manifest["hot_cells"] == hot
+    path = str(tmp_path / "hot")
+    back = SpatialIndex.load(spark, up.save(path))
+    assert back.manifest["hot_cells"] == hot
+    got = knn_join(back, qdf, 10).toPandas().sort_values(["qid", "rank"])
+    pts2 = np.concatenate([pts, [[5, 5]]])
+    ids2 = np.append(ids, n)
+    exp_d, exp_i = bf.knn(pts2, ids2, q, 10)
+    assert np.array_equal(
+        got["nid"].to_numpy(np.int64).reshape(len(q), 10), exp_i)
 
 
 def test_knn_fallback_window_bound(spark):

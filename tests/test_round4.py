@@ -74,8 +74,8 @@ def test_large_grid_pyramid_paths(spark, sf_dir):
     """Grid(128): exercises the stats pyramid (hierarchical _prune_join
     descent), super-cell kNN fallback and contained-coarse-cell
     shortcuts — code paths inactive at the driver gates' Grid(8)
-    (ADVICE r3). Includes a domain-sized box and k far above
-    points-per-cell."""
+    (ADVICE r3). Includes a domain-sized box, k far above
+    points-per-cell, and a k whose bound covers over ENUM_CAP cells."""
     pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
     idx = SpatialIndex.build(spark, pts, grid=Grid(128))
     assert idx.stats_pyramid(), "Grid(128) must build pyramid levels"
@@ -117,37 +117,21 @@ def test_large_grid_pyramid_paths(spark, sf_dir):
         order = np.lexsort((ids, d2))[:k]
         mine = out[out.qid == qi].sort_values("rank")
         assert list(mine["nid"]) == list(ids[order])
-    idx.unpersist()
 
-
-def test_home_first_knn_matches_default(spark, sf_dir):
-    """KDS_KNN_HOME_FIRST two-stage scan order (stage A home cell ->
-    exact-kth re-prune -> stage B survivors) must return exactly the
-    default single-stage plan's results, on uniform and varden (salted
-    home cells exercise the no-kth fallback) and at k above
-    points-per-cell (stage A emits < k rows -> kth = inf)."""
-    import kdtree_spark.queries.knn as K
-    from kdtree_spark import points
-    pts = points.load_points(spark, sf_dir, "varden").select("pid", "x", "y")
-    idx = SpatialIndex.build(spark, pts, grid=Grid(8))
-    pdf = pts.toPandas()
-    P = pdf[["x", "y"]].to_numpy(np.int64)
-    ids = pdf["pid"].to_numpy(np.int64)
-    q = spark.createDataFrame(
-        [(int(i), int(x), int(y)) for i, (x, y) in enumerate(P[:16])],
-        "qid long, x long, y long")
-    saved = K._HOME_FIRST
-    try:
-        for k in (1, 10, 200):
-            K._HOME_FIRST = True
-            hf = K.knn_join(idx, q, k).toPandas()
-            for qi in range(16):
-                d2 = ((P - P[qi]) ** 2).sum(axis=1)
-                order = np.lexsort((ids, d2))[:k]
-                mine = hf[hf.qid == qi].sort_values("rank")
-                assert list(mine["nid"]) == list(ids[order]), (k, qi)
-    finally:
-        K._HOME_FIRST = saved
+    # k = 2000: the prefix-sum bound's cube spans more than ENUM_CAP
+    # cells, so the kernel expands super cells into fine children
+    from kdtree_spark.queries import knn as K
+    k = 2000
+    ub = K._prefix_ub(P[:2], K._super_arrays(idx), k)
+    assert len(K._enum_rows([P[:2, 0], P[:2, 1]], ub, idx.grid,
+                            False)[3]) == 2
+    out = knn_join(idx, q.filter("qid < 2"), k).toPandas()
+    for qi in range(2):
+        d2 = ((P - P[qi]) ** 2).sum(axis=1)
+        order = np.lexsort((ids, d2))[:k]
+        mine = out[out.qid == qi].sort_values("rank")
+        assert list(mine["nid"]) == list(ids[order])
+        assert list(mine["dist_sq"]) == list(d2[order])
     idx.unpersist()
 
 

@@ -49,8 +49,10 @@ def test_fused_knn_clustered_queries(spark):
 
 
 def test_fused_knn_needy_path(spark):
-    """k above the probe pool forces the sentinel -2 super-stats
-    fallback; results must stay exact."""
+    """Queries the probe samples cannot bound take the super-cell
+    prefix-sum bound inside the candidate kernel: k above the probe
+    pool, and a query whose home cell is empty. Results must stay
+    exact."""
     from kdtree_spark.queries.knn import knn_join
     df, pdf = _pts(spark, n=3000)
     idx = SpatialIndex.build(spark, df, grid=Grid(4))
@@ -64,6 +66,20 @@ def test_fused_knn_needy_path(spark):
     ed, ei = _brute_knn(pdf, 11, 22, k)
     assert np.array_equal(out.nid.to_numpy(), ei)
     assert np.array_equal(out.dist_sq.to_numpy(np.int64), ed)
+
+    # empty home cell: no points in grid cell (0, 0), queries inside it
+    cw = Grid(4).cw
+    hole = pdf[(pdf.x >= cw) | (pdf.y >= cw)]
+    idx2 = SpatialIndex.build(spark, spark.createDataFrame(hole),
+                              grid=Grid(4))
+    qs = [(0, 5, 5), (1, cw - 1, cw // 2), (2, cw // 3, cw - 1)]
+    out = knn_join(idx2, spark.createDataFrame(
+        pd.DataFrame(qs, columns=["qid", "x", "y"])), 5).toPandas()
+    for qid, qx, qy in qs:
+        got = out[out.qid == qid].sort_values("rank")
+        ed, ei = _brute_knn(hole, qx, qy, 5)
+        assert np.array_equal(got.nid.to_numpy(), ei), qid
+        assert np.array_equal(got.dist_sq.to_numpy(np.int64), ed), qid
 
 
 def test_polygon_broadcast_guard(spark, monkeypatch):
