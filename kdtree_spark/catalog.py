@@ -110,9 +110,7 @@ class SnapshotStore:
         snapdir = os.path.join(self.path, "snapshots", f"snap-{sid}")
         datadir = os.path.join(snapdir, "data")
         if touched_cells is None and parent is not None:
-            tdf = getattr(index, "touched_cells_df", None)
-            if tdf is not None:
-                touched_cells = [r["cell"] for r in tdf.collect()]
+            touched_cells = getattr(index, "touched_cells", None)
         df = index.df.withColumn(
             "bucket", F.pmod(F.col("cell"), F.lit(self.nb)).cast("int"))
 

@@ -569,14 +569,20 @@ class SpatialIndex:
             delta_rdd = delta._jdf.queryExecution().logical().rdd()
         except Exception:
             delta_rdd = None
-        frags = [f.filter(~in_touched) for f in self._frags] + [delta]
+        # the fragment filter names `salt` (never negative) next to
+        # `cell`: a predicate on `cell` alone would be inferred through
+        # the join key onto the small side of every semi-join a read
+        # pushes into the fragment union, so one broadcast per read
+        # would become one per fragment
+        untouched = ~in_touched | (F.col("salt") < 0)
+        frags = [f.filter(untouched) for f in self._frags] + [delta]
         handles = dict(self._ckpt_handles)
         handles[str(uuid.uuid4())[:8]] = delta_rdd
         cached = list(self._cached_frames)
         compacted = False
         if len(frags) > COMPACT_EVERY:
             # compaction: one full materialization every COMPACT_EVERY
-            # generations bounds both fragment count and the anti-join
+            # generations bounds both fragment count and the filter
             # stack; the pre-compaction fragments' blocks are freed when
             # superseded versions call unpersist(successor=...) — they
             # are NOT inherited past this point.
@@ -608,12 +614,10 @@ class SpatialIndex:
         new._frags = frags
         new._ckpt_handles = handles
         new._cached_frames = cached
-        # the touched-cell set lets an incremental snapshot commit
+        # the sorted touched-cell ids let an incremental snapshot commit
         # (catalog.SnapshotStore) rewrite only the buckets this update
         # changed
-        new.touched_cells_df = self.spark.createDataFrame(
-            pd.DataFrame({"cell": np.asarray(touched, np.int64)}),
-            "cell long")
+        new.touched_cells = touched
         return new
 
     def cache(self) -> "SpatialIndex":

@@ -63,12 +63,6 @@ def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # an index version is a union of fragments, each filtered to the
-        # cells no later update touched; with constraint propagation on,
-        # those filters are copied onto the small side of every semi-join
-        # pushed into the union, so one broadcast becomes one per
-        # fragment (two more Spark jobs per kNN call per fragment)
-        .config("spark.sql.constraintPropagation.enabled", "false")
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -164,7 +164,7 @@ def test_point_insert_delete_batch_of_one(spark, sf_dir):
     # and a batch of none: a new version with the same live points
     idx4 = idx3.update(inserts=one_new.limit(0))
     assert idx4.validate()["total"] == n
-    assert idx4.touched_cells_df.count() == 0
+    assert idx4.touched_cells == []
 
 
 def test_knn_hot_cell_salted_exact(spark, tmp_path):
@@ -321,7 +321,7 @@ def test_delta_update_materializes_only_touched(spark):
     assert up.manifest["frags"] == 2 and not up.manifest["compacted"]
     # the delta fragment (last frag) holds only the touched cells
     delta_cells = up._frags[-1].count()
-    touched = up.touched_cells_df.count()
+    touched = len(up.touched_cells)
     assert delta_cells <= touched + 1 < ncells_total / 4
     # untouched fragment + delta reconstruct the full index exactly
     assert up.df.count() == ncells_total  # same cells (no new cells here
