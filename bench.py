@@ -200,10 +200,10 @@ def main() -> None:
         # best-of-2 for EVERY timed query (uniform protocol, ADVICE r4:
         # mixing best-of-2 kNN with single-trial others made the summed
         # headline internally inconsistent). Rationale: identical jobs
-        # measured 5.6-40 s across windows on this shared host
-        # (scripts/probe_tune.py); min() keeps one co-tenant spike from
-        # reading as an engine regression. Both trials are recorded
-        # (trials field) so single-trial rounds remain comparable.
+        # measured 5.6-40 s across windows on a shared host; min()
+        # keeps one co-tenant spike from reading as an engine
+        # regression. Both trials are recorded (trials field) so
+        # single-trial rounds remain comparable.
         t0 = time.time()
         cnt = queries[name](spark, sf_dir).count()
         t_first = time.time() - t0

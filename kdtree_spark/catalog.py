@@ -222,24 +222,18 @@ class SnapshotStore:
         sid = snapshot_id or self.current()
         man = self._manifest(sid)
         grid = Grid(int(man["grid_g"]), dims=int(man.get("grid_dims", 2)))
-        cw, g, d = grid.cw, grid.g, grid.dims
+        d, top = grid.dims, grid.g * grid.cw - 1
         buckets: set = set()
         for box in boxes:
-            lo, hi = box[1:1 + d], box[1 + d:1 + 2 * d]
-            ranges = []
-            for j in range(d):
-                a = max(int(lo[j]) // cw, 0)
-                b = min(int(hi[j]) // cw, g - 1)
-                if a > b:
-                    ranges = None
-                    break
-                ranges.append(range(a, b + 1))
-            if ranges is None:
-                continue
-            for coords in itertools.product(*ranges):
+            # box parts off the grid prune to nothing: a snapshot serves
+            # the index domain, so they are clipped away rather than
+            # folded onto the boundary cells as Grid.cover would
+            lo = [max(int(c), 0) for c in box[1:1 + d]]
+            hi = [min(int(c), top) for c in box[1 + d:1 + 2 * d]]
+            for coords in itertools.product(*grid.cover_ranges(lo, hi)):
                 cell = 0
                 for c in coords:
-                    cell = cell * g + c
+                    cell = cell * grid.g + c
                 buckets.add(cell % self.nb)
                 if len(buckets) == self.nb:
                     return sorted(buckets)

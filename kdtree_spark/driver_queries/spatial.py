@@ -65,7 +65,7 @@ def q_cell_assign(spark, sf_dir) -> DataFrame:
     """B4: vectorized cell-id assignment, aggregated per cell."""
     g = Grid(GRID_G)
     pts = points.load_points(spark, sf_dir, "uniform")
-    return (pts.selectExpr(f"{g.spark_cell_sql()} AS cell")
+    return (pts.selectExpr(f"{g.cell_sql(['x', 'y'], False)} AS cell")
             .groupBy("cell").agg(F.count("*").alias("cnt")))
 
 
@@ -1212,7 +1212,7 @@ GROUP BY q.qid"""
 
 def q_closest_pair(spark, sf_dir) -> DataFrame:
     """Bichromatic closest pair (queries/joins.py closest_pair):
-    query sample vs full point set, radius-doubling over the cell
+    query sample vs full point set, radius x4 per round over the cell
     join, deterministic (dist, qid, pid) tie-break."""
     from ..queries.joins import closest_pair
     q = points.load_query_points(spark, sf_dir, "uniform") \

@@ -17,7 +17,12 @@ computable in three places with bit-identical results:
 
 Domain: coordinates are int64 in [0, COORD_LIMIT) — matching the
 reference's `long` coords in [0, 1e6] (`tests/data_generate.cpp:19,33-42`,
-`README.md:125`).
+`README.md:125`). Coordinates outside it fold onto the boundary cells.
+
+`Grid.cover` is the one place an extent becomes the cells it meets:
+every cell-expand join, range enumeration and tile assignment goes
+through it (the reference's "visit a subtree only if its box meets the
+query", `query_op/range_count.hpp:9-96`, one grid level at a time).
 """
 
 from __future__ import annotations
@@ -79,17 +84,6 @@ class Grid:
                     f"+ ({self.coord_sql(cell, j, child_g)} DIV {fac}))")
         return expr
 
-    def child_ranges_sql(self, cell: str, parent_g: int, fac: int,
-                         child_g: int) -> list:
-        """Per-dim (lo, hi) SQL for the children of a coarse cell on the
-        child grid — plug into explode(sequence(lo, hi))."""
-        out = []
-        for j in range(self.dims):
-            p = self.coord_sql(cell, j, parent_g)
-            out.append((f"{p} * {fac}",
-                        f"LEAST({p} * {fac} + {fac - 1}, {child_g - 1})"))
-        return out
-
     def compose_sql(self, coords: list, g: int | None = None) -> str:
         """SQL: row-major cell id from per-dim coordinate exprs."""
         g = self.g if g is None else g
@@ -98,43 +92,75 @@ class Grid:
             expr = f"({expr} * {g} + {c})"
         return expr
 
-    # -- Spark SQL expression (string; plug into F.expr / selectExpr)
-    def spark_cell_sql(self, x: str = "x", y: str = "y") -> str:
-        return self.spark_cell_sql_nd([x, y] if self.dims == 2 else None)
+    # ---- the cell cover: where coordinates become cell ids ----------
+    # Every Spark SQL coordinate -> cell step (a point's home cell, an
+    # extent's covered cells, a pair's reference cell) clamps with
+    # _axis_sql, so a point's home cell lies inside the cover of every
+    # extent holding it, on the grid or off it. Without the clamp Spark
+    # goes wrong off the grid twice: sequence(lo, hi) runs DESCENDING
+    # when lo > hi, and an out-of-range coordinate aliases another cell
+    # (cx*g + cy with cy = -1 is cell (cx-1, g-1)). With it, Spark's
+    # truncating DIV, DuckDB's flooring // and Python's // agree: they
+    # differ only on (-cw, 0), which clamps to 0.
+    @property
+    def level(self) -> tuple:
+        """(g, cw): this grid as a `cover` level."""
+        return self.g, self.cw
 
-    def spark_cell_sql_nd(self, cols) -> str:
-        """Row-major cell id over the first `dims` coordinate columns."""
+    def cell_sql(self, cols, f64: bool) -> str:
+        """Spark SQL: the home cell of a point, keyed on its first
+        `dims` coordinate columns (f64: double coordinates)."""
         assert len(cols) >= self.dims, (cols, self.dims)
-        expr = f"({cols[0]} DIV {self.cw})"
-        for c in cols[1:self.dims]:
-            expr = f"({expr} * {self.g} + ({c} DIV {self.cw}))"
-        return expr
+        return self.compose_sql([_axis_sql(c, f64, self.level)
+                                 for c in cols[:self.dims]])
 
-    # -- DuckDB SQL (oracle side)
+    def ref_cell(self, a_lo, b_lo) -> str:
+        """Spark SQL: the cell holding the min corner of the
+        intersection of two integer extents, from each side's per-dim
+        lo exprs. It lies in both sides' covers, so a pair join that
+        keeps only this cell emits each overlapping pair once."""
+        return self.cell_sql([f"GREATEST({a}, {b})"
+                              for a, b in zip(a_lo, b_lo)], False)
+
+    def cover(self, df, extents, f64: bool, level: tuple):
+        """df + `_cell`: one row per (row, cell of `level` = (g, cw)
+        that the row's extent meets). extents: per-gridded-dim (lo, hi)
+        SQL over coordinates, inclusive. Rows whose extent is empty
+        (lo > hi on any dim) drop; the rest explode one sequence per
+        dim over clamped cell coordinates and compose the row-major id.
+        Off-grid parts of an extent fold onto the boundary cells, as
+        off-grid points do (cell_sql)."""
+        assert len(extents) == self.dims, (extents, self.dims)
+        df = df.filter(" AND ".join(f"({lo}) <= ({hi})"
+                                    for lo, hi in extents))
+        tmp = [f"_c{j}" for j in range(self.dims)]
+        for t, (lo, hi) in zip(tmp, extents):
+            df = df.selectExpr(
+                "*", f"explode(sequence({_axis_sql(lo, f64, level)}, "
+                     f"{_axis_sql(hi, f64, level)})) AS {t}")
+        return (df.selectExpr("*", f"{self.compose_sql(tmp, level[0])} "
+                                   f"AS _cell")
+                .drop(*tmp))
+
+    def cover_ranges(self, lo, hi) -> list:
+        """Driver-side twin of `cover` on this grid for one integer
+        extent: per-dim ranges of covered cell coordinates, all empty
+        when the extent is empty."""
+        if any(a > b for a, b in zip(lo, hi)):
+            return [range(0)] * self.dims
+        g, cw = self.level
+        return [range(min(max(int(a) // cw, 0), g - 1),
+                      min(max(int(b) // cw, 0), g - 1) + 1)
+                for a, b in zip(lo, hi)]
+
+    # -- DuckDB SQL (oracle side): the same clamp over integer coords
+    def duckdb_axis_sql(self, c: str) -> str:
+        return f"LEAST(GREATEST(({c}) // {self.cw}, 0), {self.g - 1})"
+
     def duckdb_cell_sql(self, x: str = "x", y: str = "y") -> str:
         assert self.dims == 2
-        return f"(({x} // {self.cw}) * {self.g} + ({y} // {self.cw}))"
-
-    # float-coordinate variants: FLOOR(x / cw) over an IEEE double
-    # divide — Spark, DuckDB and numpy floor the SAME correctly-rounded
-    # quotient, so the three agree bit-for-bit on every input (what
-    # matters is cross-engine consistency, not the exact boundary)
-    def spark_cell_sql_f64(self, x: str = "x", y: str = "y") -> str:
-        return self.spark_cell_sql_f64_nd([x, y] if self.dims == 2 else None)
-
-    def spark_cell_sql_f64_nd(self, cols) -> str:
-        assert len(cols) >= self.dims, (cols, self.dims)
-        def fl(c):
-            return (f"CAST(FLOOR({c} / CAST({self.cw} AS DOUBLE)) "
-                    f"AS BIGINT)")
-        expr = fl(cols[0])
-        for c in cols[1:self.dims]:
-            expr = f"(({expr}) * {self.g} + {fl(c)})"
-        return expr
-
-    def duckdb_cell_sql_f64(self, x: str = "x", y: str = "y") -> str:
-        return (f"(CAST(FLOOR({x} / {self.cw}.0) AS BIGINT) * {self.g}"
-                f" + CAST(FLOOR({y} / {self.cw}.0) AS BIGINT))")
+        return (f"({self.duckdb_axis_sql(x)} * {self.g} "
+                f"+ {self.duckdb_axis_sql(y)})")
 
     # -- numpy
     def cell_of(self, x: np.ndarray, y: np.ndarray) -> np.ndarray:
@@ -156,29 +182,13 @@ class Grid:
         ylo = self.cell_coord(cell, 1) * self.cw
         return xlo, ylo, xlo + self.cw - 1, ylo + self.cw - 1
 
-    def cells_overlapping_box(self, xlo, ylo, xhi, yhi) -> np.ndarray:
-        """All cell ids whose geometric extent intersects the box."""
-        cx0 = max(0, int(xlo) // self.cw)
-        cx1 = min(self.g - 1, int(xhi) // self.cw)
-        cy0 = max(0, int(ylo) // self.cw)
-        cy1 = min(self.g - 1, int(yhi) // self.cw)
-        if cx1 < cx0 or cy1 < cy0:
-            return np.empty(0, np.int64)
-        cxs = np.arange(cx0, cx1 + 1, dtype=np.int64)
-        cys = np.arange(cy0, cy1 + 1, dtype=np.int64)
-        return (cxs[:, None] * self.g + cys[None, :]).ravel()
 
-
-def box_min_dist2(qx: np.ndarray, qy: np.ndarray, boxes: np.ndarray
-                  ) -> np.ndarray:
-    """Squared L2 distance from each query to each box (m_q, m_box).
-
-    boxes: (m, 4) [xlo, ylo, xhi, yhi]. The distributed analogue of the
-    reference's `p2b_min_distance` (query_op/nn_search.hpp:22-35), used
-    to decide which cells a kNN query must visit.
-    """
-    dx = np.maximum(np.maximum(boxes[None, :, 0] - qx[:, None],
-                               qx[:, None] - boxes[None, :, 2]), 0).astype(np.float64)
-    dy = np.maximum(np.maximum(boxes[None, :, 1] - qy[:, None],
-                               qy[:, None] - boxes[None, :, 3]), 0).astype(np.float64)
-    return dx * dx + dy * dy
+def _axis_sql(c: str, f64: bool, level: tuple) -> str:
+    """Spark SQL: the clamped cell coordinate of coordinate expr `c` on
+    a (g, cw) level. f64 floors an IEEE double divide — Spark, DuckDB
+    and numpy floor the SAME correctly-rounded quotient, so the three
+    agree bit-for-bit; integer coordinates use exact DIV."""
+    g, cw = level
+    q = (f"CAST(FLOOR(({c}) / CAST({cw} AS DOUBLE)) AS BIGINT)" if f64
+         else f"(({c}) DIV {cw})")
+    return f"LEAST(GREATEST({q}, 0), {g - 1})"

@@ -97,8 +97,8 @@ def _hot_pred():
 COMPACT_EVERY = int(os.environ.get("KDS_COMPACT_EVERY", "8"))
 # delta-update generations before a full compaction checkpoint
 
-PROBE_CAP = int(os.environ.get("KDS_PROBE_CAP", "1024"))
-PROBE_FRACTION = int(os.environ.get("KDS_PROBE_FRACTION", "32"))
+PROBE_CAP = 1024
+PROBE_FRACTION = 32
 # sample at least 1/PROBE_FRACTION of the blob's live points
 # live-sample points per blob for kNN bound-seeding (localtree.
 # probe_sample). The seed bound tightens as (blob/cap)^(1/d) in radius;
@@ -243,18 +243,13 @@ class SpatialIndex:
         fmode = isinstance(points.schema[coord_cols[0]].dataType,
                            (DoubleType, FloatType))
         cols = list(coord_cols)
-        if fmode:
-            cexprs = [f"CAST({c} AS double) AS {c}" for c in coord_cols]
-            cell_sql = grid.spark_cell_sql_f64_nd(cols)
-        else:
-            # int32 coords/cell through the shuffle + Arrow hop (coords
-            # are < 1e6, cell < g^dims < 2^31): 1/3 fewer bytes on the
-            # hot path
-            cexprs = [f"CAST({c} AS int) AS {c}" for c in coord_cols]
-            cell_sql = grid.spark_cell_sql_nd(cols)
+        # int32 coords/cell through the shuffle + Arrow hop (coords are
+        # < 1e6, cell < g^dims < 2^31): 1/3 fewer bytes on the hot path
+        ct = "double" if fmode else "int"
         cell_t = "int" if grid.g ** grid.dims < 2 ** 31 else "long"
         pts = points.selectExpr(
-            "pid", *cexprs, f"CAST({cell_sql} AS {cell_t}) AS cell")
+            "pid", *[f"CAST({c} AS {ct}) AS {c}" for c in coord_cols],
+            f"CAST({grid.cell_sql(cols, fmode)} AS {cell_t}) AS cell")
 
         # salting plan from per-cell counts (the sampled-pivot round's
         # analogue: one cheap agg instead of a sample)
@@ -292,17 +287,6 @@ class SpatialIndex:
         idx = cls(spark, grid, df, manifest, coord_cols=coord_cols)
         idx._cached_frames = [df]
         return idx
-
-    def cell_sql(self, x: str, y: str) -> str:
-        """Grid-cell SQL matching this index's coordinate mode (2-D
-        grids; d>2 coord columns beyond the grid dims are ignored)."""
-        return self.cell_sql_nd([x, y])
-
-    def cell_sql_nd(self, cols) -> str:
-        """Grid-cell SQL over coordinate column names (first grid.dims
-        are keyed), matching this index's coordinate mode."""
-        return (self.grid.spark_cell_sql_f64_nd(cols) if self.float_coords
-                else self.grid.spark_cell_sql_nd(cols))
 
     # ------------------------------------------------------------------ stats
     def stats(self) -> pd.DataFrame:
@@ -490,7 +474,7 @@ class SpatialIndex:
         cc = list(self.coord_cols)
         cdt = np.float64 if self.float_coords else np.int64
         schema = INDEX_SCHEMA_F64 if self.float_coords else INDEX_SCHEMA
-        cell_sql = self.cell_sql_nd(cc)
+        cell_sql = self.grid.cell_sql(cc, self.float_coords)
         parts = []
         if inserts is not None:
             parts.append(inserts.selectExpr(

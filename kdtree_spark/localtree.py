@@ -55,7 +55,7 @@ INBALANCE_RATIO = int(os.environ.get("INBALANCE_RATIO", "30"))
 # percent; the reference reads the same env override
 # (tree_node.hpp:118-124) — its summary suite sweeps inba 3/10/30
 # (script/run_summary_3inba.sh)
-TIGHTEN_MIN = int(os.environ.get("KDS_TIGHTEN_MIN", "32768"))
+TIGHTEN_MIN = 32768
 # blobs at least this large tighten a caller-supplied kNN bound with
 # their own block-scan bound before searching (see knn())
 # NOTE: a whole-blob brute-scan "crossover" for small query batches was
@@ -77,7 +77,7 @@ TIGHTEN_MIN = int(os.environ.get("KDS_TIGHTEN_MIN", "32768"))
 # 31 ms vs 29 ms per 3k-query batch at n=150k: the per-block loop is
 # ~30 us/block all-in, NOT overhead-bound, and padding pays more in
 # gather/partition width than the loop costs.
-DENSE_SCAN_DIM = int(os.environ.get("KDS_KNN_DENSE_DIM", "6"))
+DENSE_SCAN_DIM = 6
 
 
 def _alive_mask(tomb_sorted: np.ndarray, ids: np.ndarray) -> np.ndarray:

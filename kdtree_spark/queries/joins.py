@@ -12,8 +12,8 @@ batched over the whole left table instead of a handed-in query list.
 Physical design (the 100 TB shape):
 - The RIGHT side keeps its single home grid cell (one row per point).
 - The LEFT side expands to every cell its radius-r box overlaps via
-  `sequence() x explode` per dimension — pure Spark SQL, clipped to
-  the grid, ((2r/cw) + 2)^d cells per row, so ~1-4 cells when the
+  `Grid.cover` — pure Spark SQL, clamped to the grid,
+  ((2r/cw) + 2)^d cells per row, so ~1-4 cells when the
   grid is sized with cell width >= r (Grid.for_count at the caller,
   or the default below).
 - One hash-partitioned equi-join on the composed cell id, then the
@@ -38,27 +38,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..grid import COORD_LIMIT, Grid
 
 
-def _expand_cells_sql(grid: Grid, cols, r, float_coords: bool = False
-                      ) -> list:
-    """Per-dimension cell-range bounds [(lo_expr, hi_expr), ...] for the
-    radius-r box around a point, clipped to the grid. Float mode uses
-    the same FLOOR-division arithmetic as Grid.spark_cell_sql_f64_nd,
-    so expansion and home cells agree bit-for-bit."""
-    cw, g = grid.cw, grid.g
-    out = []
-    for c in cols[:grid.dims]:
-        if float_coords:
-            lo = (f"GREATEST(CAST(FLOOR(({c} - {r}) / "
-                  f"CAST({cw} AS DOUBLE)) AS BIGINT), 0)")
-            hi = (f"LEAST(CAST(FLOOR(({c} + {r}) / "
-                  f"CAST({cw} AS DOUBLE)) AS BIGINT), {g - 1})")
-        else:
-            lo = f"GREATEST(({c} - {r}) DIV {cw}, 0)"
-            hi = f"LEAST(({c} + {r}) DIV {cw}, {g - 1})"
-        out.append((lo, hi))
-    return out
-
-
 def distance_join(left: DataFrame, right: DataFrame, r: int,
                   grid: Grid | None = None,
                   coord_cols=("x", "y"),
@@ -70,7 +49,8 @@ def distance_join(left: DataFrame, right: DataFrame, r: int,
     (left_id, right_id, dist_sq [, keep_left..., keep_right...]) for
     every pair with dist^2 <= r^2.
 
-    Coordinates are the repo's int64 domain [0, COORD_LIMIT)^d; d is
+    Coordinates are the repo's int64 domain [0, COORD_LIMIT)^d (points
+    off it fold onto the boundary cells and stay exact); d is
     len(coord_cols) and the grid keys cells on min(d, grid.dims) dims
     (the dims-keyed convention of grid.py) while the distance predicate
     is exact over all d dims. keep_left/keep_right carry payload
@@ -99,21 +79,13 @@ def distance_join(left: DataFrame, right: DataFrame, r: int,
     lt = left.select(F.col(left_id).alias("_lid"),
                      *[F.col(c).alias(a) for c, a in zip(cc, lcc)],
                      *keep_left)
-    cell_sql = (grid.spark_cell_sql_f64_nd(cc) if float_coords
-                else grid.spark_cell_sql_nd(cc))
     rt = right.select(F.col(right_id).alias("_rid"),
                       *cc, *keep_right,
-                      F.expr(cell_sql).alias("_cell"))
-    # left expansion: one explode per grid dim, then compose the cell id
-    bounds = _expand_cells_sql(grid, lcc, r, float_coords)
-    for j, (lo, hi) in enumerate(bounds):
-        lt = lt.withColumn(f"_g{j}",
-                           F.explode(F.sequence(F.expr(lo), F.expr(hi))))
-    cell = "_g0"
-    for j in range(1, grid.dims):
-        cell = f"(({cell}) * {grid.g} + _g{j})"
-    lt = lt.withColumn("_cell", F.expr(cell)).drop(
-        *[f"_g{j}" for j in range(grid.dims)])
+                      F.expr(grid.cell_sql(cc, float_coords)).alias("_cell"))
+    # left expansion: every cell the radius-r box meets
+    lt = grid.cover(lt, [(f"{c} - {r}", f"{c} + {r}")
+                         for c in lcc[:grid.dims]],
+                    float_coords, grid.level)
     d2 = None
     for c, a in zip(cc, lcc):
         t = F.col(a) - F.col(c)
@@ -138,8 +110,9 @@ def rect_join(left: DataFrame, right: DataFrame,
     Physical design: partition-based spatial merge (the PBSM family,
     Patel & DeWitt SIGMOD'96 — public literature) rendered as one Spark
     equi-join. BOTH sides expand to their covered grid cells
-    (sequence() x explode, clipped), join on the cell id, then the
-    exact overlap predicate. Duplicate avoidance is the standard
+    (`Grid.cover`), join on the cell id, then the exact overlap
+    predicate. An empty rectangle (x0 > x1 or y0 > y1) matches
+    nothing. Duplicate avoidance is the standard
     reference-point trick: a pair is emitted only by the single cell
     containing the intersection's min corner (GREATEST of the two min
     corners), so no distinct() pass is needed — the output is exact
@@ -148,37 +121,18 @@ def rect_join(left: DataFrame, right: DataFrame,
     """
     grid = grid or Grid(16)
     assert grid.dims == 2
-    cw, g = grid.cw, grid.g
-
-    def expand(df, idc):
-        b = dict(zip(("x0", "y0", "x1", "y1"), bounds))
-        out = df.select(
-            F.col(idc), *[F.col(b[c]).alias(f"_{idc}_{c}")
-                          for c in ("x0", "y0", "x1", "y1")])
-        for ax, c0, c1 in (("cx", f"_{idc}_x0", f"_{idc}_x1"),
-                           ("cy", f"_{idc}_y0", f"_{idc}_y1")):
-            out = out.withColumn(f"_{ax}", F.explode(F.sequence(
-                F.expr(f"GREATEST({c0} DIV {cw}, 0)"),
-                F.expr(f"LEAST({c1} DIV {cw}, {g - 1})"))))
-        return (out.withColumn("_cell",
-                               F.col("_cx") * g + F.col("_cy"))
-                .drop("_cx", "_cy"))
-
-    lt = expand(left, left_id)
-    rt = expand(right, right_id)
-    lx0, ly0, lx1, ly1 = [f"_{left_id}_{c}" for c in ("x0", "y0",
-                                                      "x1", "y1")]
-    rx0, ry0, rx1, ry1 = [f"_{right_id}_{c}" for c in ("x0", "y0",
-                                                       "x1", "y1")]
-    overlap = F.expr(f"{lx0} <= {rx1} AND {rx0} <= {lx1} AND "
-                     f"{ly0} <= {ry1} AND {ry0} <= {ly1}")
-    # intersection min corner must fall in THIS cell (clipped like the
-    # expansions, so fully off-grid corners still land on the owning
-    # boundary cell consistently with both expansions)
-    ref = F.expr(
-        f"LEAST(GREATEST(GREATEST({lx0}, {rx0}) DIV {cw}, 0), {g - 1})"
-        f" * {g} + "
-        f"LEAST(GREATEST(GREATEST({ly0}, {ry0}) DIV {cw}, 0), {g - 1})")
+    corners = ("x0", "y0", "x1", "y1")
+    lc = [f"_{left_id}_{c}" for c in corners]
+    rc = [f"_{right_id}_{c}" for c in corners]
+    lt, rt = [grid.cover(df.select(idc, *[F.col(b).alias(c)
+                                          for b, c in zip(bounds, cs)]),
+                         [(cs[0], cs[2]), (cs[1], cs[3])], False,
+                         grid.level)
+              for df, idc, cs in ((left, left_id, lc), (right, right_id, rc))]
+    overlap = F.expr(f"{lc[0]} <= {rc[2]} AND {rc[0]} <= {lc[2]} AND "
+                     f"{lc[1]} <= {rc[3]} AND {rc[1]} <= {lc[3]}")
+    # only the cell of the intersection's min corner emits the pair
+    ref = F.expr(grid.ref_cell(lc[:2], rc[:2]))
     return (lt.join(rt, "_cell")
             .filter(overlap)
             .filter(F.col("_cell") == ref)
@@ -216,7 +170,7 @@ def closest_pair(left: DataFrame, right: DataFrame,
     (dist_sq, left_id, right_id) so the answer is a pure function of
     the data.
 
-    Radius doubling over distance_join: run the cell-blocked join at
+    Radius growth over distance_join: run the cell-blocked join at
     radius r, quadrupling r until a pair appears (O(log domain)
     rounds, each one equi-join; an empty round costs only the join
     metadata since nothing matches), then take the lexicographic min

@@ -162,7 +162,7 @@ def _enum_rows(q: list, ub: np.ndarray, grid, fmode: bool):
     finite = np.isfinite(ub)
     if fmode:
         # float cells: floor(x / cw), mirroring the cell assignment
-        # formula (grid.spark_cell_sql_f64)
+        # formula (grid.cell_sql)
         r = np.zeros(n)
         r[finite] = np.sqrt(ub[finite]) + 1.0
         c0 = [np.clip(np.floor((qj - r) / cw), 0, g - 1)
@@ -280,7 +280,7 @@ def _seed_enum(index: SpatialIndex, queries: DataFrame, cc: list, k: int
     S, sg = index.super_grid()
     sup = _super_arrays(index)
     home = queries.selectExpr(
-        "qid", *cc, f"{index.cell_sql_nd(cc)} AS cell")
+        "qid", *cc, f"{grid.cell_sql(cc, fmode)} AS cell")
     probes = pruned_blobs(index.probes(), home)
     out_schema = (f"qid long, {_coord_schema(index, cc)}, ub double, "
                   f"cell long, fin0 boolean")

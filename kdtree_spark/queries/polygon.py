@@ -11,11 +11,13 @@ bbox also prunes cells. Small polygon sets broadcast naturally (they are
 literals in the plan).
 
 Raster assignment: a tile's covered cell ids are two integer ranges —
-`sequence() x explode` JVM-side, no UDF, identical arithmetic to the
-DuckDB oracle's generate_series/unnest.
+`Grid.cover` JVM-side, no UDF, the same clamp as the DuckDB oracle's
+generate_series/unnest.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +35,7 @@ def point_in_polygon(points: DataFrame, polygons,
 
     -> (poly_id, pid, x, y): every point inside each polygon (inclusive
     of edges). ONE scan, cell-indexed: each polygon's bbox expands to
-    its covered grid cells SPARK-SIDE (`sequence() x explode`, exactly
+    its covered grid cells SPARK-SIDE (`Grid.cover`, exactly
     like tile_cell_assign — the driver ships only one tiny row per
     polygon, never O(covered cells), so a domain-sized polygon over a
     1e8-cell grid costs the driver nothing); the join is an equi-join
@@ -66,39 +68,22 @@ def point_in_polygon(points: DataFrame, polygons,
         rows, "poly_id long, px0 long, py0 long, px1 long, "
               "py1 long, edges array<struct<ax:long, ay:long, dx:long, "
               "dy:long>>")
-    cw, g = grid.cw, grid.g
-    # A bbox entirely off-grid on one axis would clip to start > stop and
-    # sequence() would emit a DESCENDING range (spurious cells); such
-    # polygons contain no points, so drop them before enumerating.
-    on_grid = F.expr(f"px1 >= 0 AND px0 DIV {cw} <= {g - 1} "
-                     f"AND py1 >= 0 AND py0 DIV {cw} <= {g - 1}")
-    cells = (pdf.filter(on_grid)
-             .withColumn("_cx", F.explode(F.sequence(
-                 F.expr(f"GREATEST(px0 DIV {cw}, 0)"),
-                 F.expr(f"LEAST(px1 DIV {cw}, {g - 1})"))))
-             .withColumn("_cy", F.explode(F.sequence(
-                 F.expr(f"GREATEST(py0 DIV {cw}, 0)"),
-                 F.expr(f"LEAST(py1 DIV {cw}, {g - 1})"))))
-             .withColumn("cell", F.col("_cx") * g + F.col("_cy"))
-             .drop("_cx", "_cy"))
+    cells = grid.cover(pdf, [("px0", "px1"), ("py0", "py1")], False,
+                       grid.level)
     pts = points.selectExpr("pid", "x", "y",
-                            f"{grid.spark_cell_sql()} AS cell")
-    # exact enumerated (polygon, cell) row count, from the same clipped
-    # bbox arithmetic the explode performs — O(#polygons) driver work
-    n_cells = 0
-    for _, x0, y0, x1, y1, _e in rows:
-        if x1 < 0 or y1 < 0 or x0 // cw > g - 1 or y0 // cw > g - 1:
-            continue
-        ncx = min(x1 // cw, g - 1) - max(x0 // cw, 0) + 1
-        ncy = min(y1 // cw, g - 1) - max(y0 // cw, 0) + 1
-        n_cells += ncx * ncy
+                            f"{grid.cell_sql(['x', 'y'], False)} AS _cell")
+    # exact enumerated (polygon, cell) row count, from the driver-side
+    # twin of the cover — O(#polygons) driver work
+    n_cells = sum(math.prod(len(c) for c in
+                            grid.cover_ranges(row[1:3], row[3:5]))
+                  for row in rows)
     # pin the polygon-cell side as broadcast so the point table never
     # shuffles — but only while that side provably fits an executor
     # (~50 MB at ~48 B/row); beyond the cap, withhold the hint and let
     # AQE plan from observed sizes (see docstring)
     cells_side = (F.broadcast(cells) if n_cells <= BROADCAST_CELL_CAP
                   else cells)
-    j = (pts.join(cells_side, "cell")
+    j = (pts.join(cells_side, "_cell")
          .filter((F.col("x") >= F.col("px0")) & (F.col("x") <= F.col("px1"))
                  & (F.col("y") >= F.col("py0"))
                  & (F.col("y") <= F.col("py1"))))
@@ -123,33 +108,32 @@ def polygon_join_sql(table_points_sql: str, polygons) -> str:
 def tile_cell_assign(spark: SparkSession, grid: Grid, tiles) -> DataFrame:
     """tiles: [(tile_id, x0, y0, x1, y1)] -> (tile_id, cell).
 
-    Every grid cell whose geometric extent intersects the tile.
+    Every grid cell whose geometric extent intersects the tile (tile
+    parts off the grid fold onto the boundary cells; an empty tile,
+    x0 > x1 or y0 > y1, has no cells).
     """
     tdf = spark.createDataFrame(
         [(int(t), int(a), int(b), int(c), int(d)) for t, a, b, c, d in tiles],
         "tile_id long, tx0 long, ty0 long, tx1 long, ty1 long")
-    cw, g = grid.cw, grid.g
-    return (tdf
-            .withColumn("cx", F.explode(F.sequence(
-                F.expr(f"tx0 DIV {cw}"), F.expr(f"LEAST(tx1 DIV {cw}, {g - 1})"))))
-            .withColumn("cy", F.explode(F.sequence(
-                F.expr(f"ty0 DIV {cw}"), F.expr(f"LEAST(ty1 DIV {cw}, {g - 1})"))))
-            .select("tile_id",
-                    (F.col("cx") * g + F.col("cy")).alias("cell")))
+    return (grid.cover(tdf, [("tx0", "tx1"), ("ty0", "ty1")], False,
+                       grid.level)
+            .select("tile_id", F.col("_cell").alias("cell")))
 
 
 def tile_cell_assign_sql(grid: Grid, tiles_values_sql: str) -> str:
-    """DuckDB oracle for tile_cell_assign (generate_series + unnest)."""
-    cw, g = grid.cw, grid.g
+    """DuckDB oracle for tile_cell_assign (generate_series + unnest),
+    with the cover's clamp and empty-tile rule (grid.py)."""
+    g = grid.g
+    cx0, cx1, cy0, cy1 = [grid.duckdb_axis_sql(c)
+                          for c in ("tx0", "tx1", "ty0", "ty1")]
     return f"""
 SELECT tile_id, cx * {g} + cy AS cell
 FROM (
-  SELECT tile_id,
-         unnest(generate_series(tx0 // {cw}, LEAST(tx1 // {cw}, {g - 1}))) AS cx,
-         ty0, ty1
+  SELECT tile_id, unnest(generate_series({cx0}, {cx1})) AS cx, ty0, ty1
   FROM {tiles_values_sql}
+  WHERE tx0 <= tx1 AND ty0 <= ty1
 ) tt, LATERAL (
-  SELECT unnest(generate_series(ty0 // {cw}, LEAST(ty1 // {cw}, {g - 1}))) AS cy
+  SELECT unnest(generate_series({cy0}, {cy1})) AS cy
 ) yy
 """
 
@@ -194,7 +178,7 @@ def polygon_join(left: DataFrame, right: DataFrame,
 
     Physical plan (the 100 TB shape, same family as rect_join): each
     side expands its vertex-ring bbox to covered grid cells
-    (`sequence() x explode`), one hash equi-join on the cell id,
+    (`Grid.cover`), one hash equi-join on the cell id,
     reference-point duplicate avoidance on the bbox-intersection min
     corner, then the SAT predicate as nested `exists/forall`
     higher-order functions — zero Python, no broadcast requirement,
@@ -202,39 +186,20 @@ def polygon_join(left: DataFrame, right: DataFrame,
     """
     grid = grid or Grid(16)
     assert grid.dims == 2
-    cw, g = grid.cw, grid.g
-
-    def expand(df, idc):
-        out = df.select(
-            F.col(idc), F.col("verts").alias(f"_{idc}_verts"),
-            F.expr("array_min(transform(verts, v -> v.x))")
-            .alias(f"_{idc}_x0"),
-            F.expr("array_min(transform(verts, v -> v.y))")
-            .alias(f"_{idc}_y0"),
-            F.expr("array_max(transform(verts, v -> v.x))")
-            .alias(f"_{idc}_x1"),
-            F.expr("array_max(transform(verts, v -> v.y))")
-            .alias(f"_{idc}_y1"))
-        for ax, c0, c1 in (("cx", f"_{idc}_x0", f"_{idc}_x1"),
-                           ("cy", f"_{idc}_y0", f"_{idc}_y1")):
-            out = out.withColumn(f"_{ax}", F.explode(F.sequence(
-                F.expr(f"GREATEST({c0} DIV {cw}, 0)"),
-                F.expr(f"LEAST({c1} DIV {cw}, {g - 1})"))))
-        return (out.withColumn("_cell", F.col("_cx") * g + F.col("_cy"))
-                .drop("_cx", "_cy"))
-
-    lt = expand(left, left_id)
-    rt = expand(right, right_id)
-    lx0, ly0 = f"_{left_id}_x0", f"_{left_id}_y0"
-    lx1, ly1 = f"_{left_id}_x1", f"_{left_id}_y1"
-    rx0, ry0 = f"_{right_id}_x0", f"_{right_id}_y0"
-    rx1, ry1 = f"_{right_id}_x1", f"_{right_id}_y1"
-    bbox = F.expr(f"{lx0} <= {rx1} AND {rx0} <= {lx1} AND "
-                  f"{ly0} <= {ry1} AND {ry0} <= {ly1}")
-    ref = F.expr(
-        f"LEAST(GREATEST(GREATEST({lx0}, {rx0}) DIV {cw}, 0), {g - 1})"
-        f" * {g} + "
-        f"LEAST(GREATEST(GREATEST({ly0}, {ry0}) DIV {cw}, 0), {g - 1})")
+    bbox_sql = [f"array_{m}(transform(verts, v -> v.{a}))"
+                for m, a in (("min", "x"), ("min", "y"),
+                             ("max", "x"), ("max", "y"))]
+    lc = [f"_{left_id}_{c}" for c in ("x0", "y0", "x1", "y1")]
+    rc = [f"_{right_id}_{c}" for c in ("x0", "y0", "x1", "y1")]
+    lt, rt = [grid.cover(
+                  df.select(idc, F.col("verts").alias(f"_{idc}_verts"),
+                            *[F.expr(e).alias(c)
+                              for e, c in zip(bbox_sql, cs)]),
+                  [(cs[0], cs[2]), (cs[1], cs[3])], False, grid.level)
+              for df, idc, cs in ((left, left_id, lc), (right, right_id, rc))]
+    bbox = F.expr(f"{lc[0]} <= {rc[2]} AND {rc[0]} <= {lc[2]} AND "
+                  f"{lc[1]} <= {rc[3]} AND {rc[1]} <= {lc[3]}")
+    ref = F.expr(grid.ref_cell(lc[:2], rc[:2]))
     la, rb = f"_{left_id}_verts", f"_{right_id}_verts"
     intersects = F.expr(
         f"NOT ({_sep_sql(la, rb)} OR {_sep_sql(rb, la)})")

@@ -69,87 +69,57 @@ def _boxes_df(index: SpatialIndex, boxes) -> DataFrame:
 
 
 def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
-                cond, ext=None, contained=None) -> DataFrame:
+                cond, contained=None) -> DataFrame:
     """query-shapes ⋈ cell-stats, pruned hierarchically.
 
-    Small grids (g <= 64): each shape geometrically enumerates the fine
-    cells its extent `ext` spans (pure integer SQL on the regular grid
-    — the same trick as kNN phase 2), then an EQUI-join on `cell`
+    Small grids (g <= 64): each shape covers the fine cells its extent
+    spans (`Grid.cover` over the box columns of the grid dims — pure
+    integer SQL on the regular grid), then an EQUI-join on `cell`
     against the stats table applies the exact data-bbox condition
     `cond`. No nested-loop join anywhere: this is O(overlap pairs) and
     broadcasts whichever equi-join side is smaller (Catalyst/AQE).
 
     Large grids: the stats PYRAMID (index.stats_pyramid) makes the
-    enumeration O(perimeter), not O(area): shapes enumerate the
-    COARSEST level (<= 64 per dim, so <= 4096 cells even for a
-    domain-sized shape), and each level classifies its cells with the
-    same data-bbox exprs — disjoint cells drop (`cond`), cells passing
+    enumeration O(perimeter), not O(area): shapes cover the COARSEST
+    level (<= 64 per dim, so <= 4096 cells even for a domain-sized
+    shape), and each level classifies its cells with the same
+    data-bbox exprs — disjoint cells drop (`cond`), cells passing
     `contained` are emitted AS pairs immediately (their aggregated
     ccnt answers count queries metadata-only; maxsalt=0 and the
     caller's own contained test re-evaluates true on the coarse bbox,
-    so they never reach a blob cogroup), and only BOUNDARY cells
-    explode into their PYRAMID_FACTOR² children for the next level.
-    `contained=None` (range report needs actual points) descends every
-    overlapping cell instead. This is the reference's answer-from-high-
-    nodes recursion (range_count.hpp:9-96) over the distributed grid.
+    so they never reach a blob cogroup), and only BOUNDARY cells cover
+    their own geometric extent on the next level down: their
+    PYRAMID_FACTOR² children, since a level's cell width is exactly
+    PYRAMID_FACTOR times the width below it. `contained=None` (range
+    report needs actual points) descends every overlapping cell
+    instead. This is the reference's answer-from-high-nodes recursion
+    (range_count.hpp:9-96) over the distributed grid.
 
-    Assumes the index's domain contract: coords in [0, COORD_LIMIT)
-    (grid.py docstring), so every populated cell id lies in
-    [0, g^dims - 1] and clipped enumeration misses nothing.
-
-    ext: per-gridded-dim (lo_col, hi_col) column names of the query
-    shape's extent; defaults to the box columns of the grid's dims."""
-    from ..index import PYRAMID_FACTOR
+    A shape with an empty extent (lo > hi) pairs with no cell; shape
+    parts off the grid fold onto the boundary cells, where off-grid
+    points live too."""
     grid = index.grid
-    gd = grid.dims
-    if ext is None:
-        blo, bhi = _box_cols(gd)
-        ext = list(zip(blo, bhi))
+    blo, bhi = _box_cols(grid.dims)
     par = index.spark.sparkContext.defaultParallelism
     if n_queries > 4 * par:
         qdf = qdf.repartition(par)
-
-    def enum_top(df, g, cw):
-        def clip(c):  # monotone clip => lo<=hi survives, seq ascends
-            return f"LEAST(GREATEST({c} DIV {cw}, 0), {g - 1})"
-        cols = []
-        for j, (lo, hi) in enumerate(ext):
-            df = df.selectExpr(
-                "*",
-                f"explode(sequence({clip(lo)}, {clip(hi)})) AS _c{j}")
-            cols.append(f"_c{j}")
-        return (df.selectExpr("*", f"{grid.compose_sql(cols, g)} AS cell")
-                .drop(*cols))
-
-    levels = index.stats_pyramid()  # fine+1 .. coarsest
-    if not levels:
-        pairs = enum_top(qdf, grid.g, grid.cw)
-        return pairs.join(index.cell_stats(), "cell").filter(cond)
-
-    qcols = qdf.columns
-    topg, topcw, _ = levels[-1]
-    frontier = enum_top(qdf, topg, topcw)
+    pyramid = list(reversed(index.stats_pyramid()))  # coarsest .. fine+1
+    walk = [(lg, lcw) for lg, lcw, _ in pyramid] + [grid.level]
+    frontier = grid.cover(qdf, list(zip(blo, bhi)), False, walk[0])
     emitted = []
-    walk = list(reversed(levels))  # coarsest .. fine+1
-    for i, (lg, lcw, stats_l) in enumerate(walk):
-        j = frontier.join(stats_l, "cell").filter(cond)
+    for (lg, lcw, stats_l), child in zip(pyramid, walk[1:]):
+        j = frontier.withColumnRenamed("_cell", "cell") \
+            .join(stats_l, "cell").filter(cond)
         if contained is not None:
             emitted.append(j.filter(contained))
             j = j.filter(~contained)
-        childg = walk[i + 1][0] if i + 1 < len(walk) else grid.g
-        fac = PYRAMID_FACTOR
-        frontier = j.select(*qcols, "cell")
-        ccols = []
-        for cj, (lo, hi) in enumerate(
-                grid.child_ranges_sql("cell", lg, fac, childg)):
-            frontier = frontier.selectExpr(
-                "*", f"explode(sequence({lo}, {hi})) AS _c{cj}")
-            ccols.append(f"_c{cj}")
-        frontier = (frontier.drop("cell")
-                    .selectExpr(
-                        "*", f"{grid.compose_sql(ccols, childg)} AS cell")
-                    .drop(*ccols))
-    out = frontier.join(index.cell_stats(), "cell").filter(cond)
+        ext = [(f"{grid.coord_sql('cell', k, lg)} * {lcw}",
+                f"{grid.coord_sql('cell', k, lg)} * {lcw} + {lcw - 1}")
+               for k in range(grid.dims)]
+        frontier = grid.cover(j.select(*qdf.columns, "cell"), ext, False,
+                              child).drop("cell")
+    out = (frontier.withColumnRenamed("_cell", "cell")
+           .join(index.cell_stats(), "cell").filter(cond))
     for e in emitted:
         out = out.unionByName(e.select(*out.columns))
     return out

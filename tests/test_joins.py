@@ -33,11 +33,15 @@ def _collect(df):
 
 @pytest.mark.parametrize("g", [4, 16, 64])
 def test_distance_join_planar(spark, g):
+    """Includes a pair just past COORD_LIMIT: both points sit off the
+    grid and must meet in the boundary cell they fold onto."""
     rng = np.random.default_rng(7)
     L = np.column_stack([np.arange(120),
                          rng.integers(0, 1_000_000, (120, 2))])
     R = np.column_stack([np.arange(900),
                          rng.integers(0, 1_000_000, (900, 2))])
+    L = np.vstack([L, [120, 1_000_005, 500_000]])
+    R = np.vstack([R, [900, 1_000_010, 500_000]])
     r = 60_000
     got = _collect(distance_join(_mk(spark, L, "lid", ("x", "y")),
                                  _mk(spark, R, "rid", ("x", "y")),
@@ -165,19 +169,23 @@ def test_rect_join_random(spark, g):
 
 
 def test_rect_join_edge_touch_and_cell_straddle(spark):
-    """Inclusive edges; rects sharing only a boundary line count, and a
-    pair straddling many cells is emitted exactly once."""
+    """Inclusive edges; rects sharing only a boundary line count, a
+    pair straddling many cells is emitted exactly once, and so is a
+    pair below the grid (y < 0) that straddles two cells in x."""
     cw = Grid(16).cw
     A = [(0, 0, 0, 4 * cw, 4 * cw),          # covers 5x5 cells
-         (1, 10, 10, 20, 20)]
+         (1, 10, 10, 20, 20),
+         (2, 70_000, -1_100_000, 130_000, -1_000_001)]  # off-grid
     B = [(7, 4 * cw, 4 * cw, 999_999, 999_999),   # corner-touches A0
          (8, 21, 10, 30, 20),                      # edge-adjacent to A1? (21>20: no)
-         (9, 20, 20, 25, 25)]                      # corner-touches A1
+         (9, 20, 20, 25, 25),                      # corner-touches A1
+         (10, 70_000, -1_100_000, 130_000, -1_000_001)]  # equals A2
     got = sorted(tuple(r) for r in rect_join(
         _mk_rects(spark, A, "lid"), _mk_rects(spark, B, "rid"),
         grid=Grid(16)).collect())
     assert got == _brute_rects(A, B)
     assert (0, 7) in got and (1, 9) in got and (1, 8) not in got
+    assert got.count((2, 10)) == 1
 
 
 def test_distance_join_f64(spark):
@@ -229,9 +237,9 @@ def test_kernel_density(spark):
 
 
 def test_closest_pair(spark):
-    """Radius-doubling closest pair vs numpy argmin with the same
+    """Closest pair (radius x4 per round) vs numpy argmin with the same
     (dist, lid, rid) tie-break, incl. a far-apart config that needs
-    several doublings, duplicate-distance ties, and an empty side."""
+    several radius rounds, duplicate-distance ties, and an empty side."""
     from kdtree_spark.queries.joins import closest_pair
     rng = np.random.default_rng(71)
     L = np.column_stack([np.arange(40),
@@ -245,7 +253,7 @@ def test_closest_pair(spark):
     got = closest_pair(_mk(spark, L, "lid", ("x", "y")),
                        _mk(spark, R, "rid", ("x", "y"))).collect()
     assert [(r["dist_sq"], r["lid"], r["rid"]) for r in got] == [best]
-    # far corners: first rounds empty, needs doubling
+    # far corners: first rounds empty, needs several radius rounds
     L2 = np.array([[0, 0, 0]])
     R2 = np.array([[9, 999_999, 999_999], [7, 900_000, 900_000]])
     got2 = closest_pair(_mk(spark, L2, "lid", ("x", "y")),

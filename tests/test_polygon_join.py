@@ -72,14 +72,17 @@ def test_polygon_join_random(spark, g):
 
 def test_polygon_join_containment_and_diagonal_disjoint(spark):
     """Containment (no edge crossings) must match; bbox-overlapping but
-    diagonally-separated pairs must not."""
+    diagonally-separated pairs must not; a pair below the grid (y < 0)
+    straddling two cells in x is emitted once."""
     big = [(0, [(0, 0), (100_000, 0), (100_000, 100_000), (0, 100_000)])]
     inner = [(10, [(40_000, 40_000), (60_000, 40_000), (50_000, 60_000)])]
     # triangles whose bboxes overlap but a diagonal axis separates them
     t1 = [(20, [(0, 0), (50_000, 0), (0, 50_000)])]
     t2 = [(30, [(60_000, 60_000), (100_000, 30_000), (100_000, 100_000)])]
-    A = big + t1
-    B = inner + t2
+    below = [(70_000, -1_100_000), (130_000, -1_100_000),
+             (130_000, -1_000_001), (70_000, -1_000_001)]
+    A = big + t1 + [(40, below)]
+    B = inner + t2 + [(50, below)]
     got = sorted(tuple(r) for r in polygon_join(
         polygons_df(spark, A, "pa"), polygons_df(spark, B, "pb"),
         grid=Grid(16)).collect())
@@ -88,6 +91,7 @@ def test_polygon_join_containment_and_diagonal_disjoint(spark):
     assert got == exp
     assert (0, 10) in got          # containment
     assert (20, 30) not in got     # diagonal separation
+    assert got.count((40, 50)) == 1  # off-grid, once
 
 
 def test_polygon_join_shared_edge_counts(spark):

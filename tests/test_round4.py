@@ -1,11 +1,12 @@
 """Round-4 coverage: d-generic distributed ranges, the large-grid
-(stats-pyramid / super-cell) code paths, the off-grid polygon guard,
+(stats-pyramid / super-cell) code paths, off-grid polygons and tiles,
 and the exact-IEEE vs epsilon-comparator divergence documentation test.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -177,6 +178,69 @@ def test_polygon_off_grid_bbox(spark):
     tri = [(1, [(0, 0), (100, 0), (50, 100)])]
     got = point_in_polygon(pts, tri, grid=Grid(8)).collect()
     assert [r["pid"] for r in got] == [1]
+
+
+@pytest.mark.parametrize("g", [4, 128])
+def test_range_count_off_grid_points(spark, g):
+    """Points off the grid live in its boundary cells, so boxes past
+    the grid find them; inverted boxes count nothing. Grid(128) runs
+    the stats-pyramid descent, Grid(4) the single-level cover."""
+    rng = np.random.default_rng(43)
+    P = np.vstack([rng.integers(0, 10**6, (300, 2)),
+                   [[1_000_005, 500_000], [1_000_010, 500_003],
+                    [-7, 20], [400_000, 1_200_000], [-3, -3]]])
+    pdf = pd.DataFrame({"pid": np.arange(len(P)), "x": P[:, 0],
+                        "y": P[:, 1]})
+    idx = SpatialIndex.build(spark, spark.createDataFrame(pdf),
+                             grid=Grid(g))
+    boxes = [(0, 1_000_000, 0, 1_100_000, 10**6),
+             (1, -100, -100, 100_000, 100_000),
+             (2, 0, 1_100_000, 10**6, 1_300_000),
+             (3, -10, -10, 2_000_000, 2_000_000),
+             (4, 600_000, 0, 400_000, 10**6),
+             (5, 100_000, 100_000, 700_000, 800_000)]
+    got = {r["box_id"]: r["cnt"] for r in range_count(idx, boxes).collect()}
+    for b in boxes:
+        lo, hi = np.array(b[1:3]), np.array(b[3:])
+        assert got[b[0]] == int(np.all((P >= lo) & (P <= hi), axis=1).sum())
+    assert got[0] == 2 and got[4] == 0
+    idx.unpersist()
+
+
+def test_tile_cell_assign_off_grid(spark):
+    """Tiles below, past and straddling the grid, and an inverted
+    (empty) tile, vs a brute force over cell extents and vs the DuckDB
+    oracle. Off-grid points live in the boundary cells, so a boundary
+    cell's extent reaches to infinity on its open side."""
+    import duckdb
+
+    from kdtree_spark.fixtures import tiles_values_sql
+    from kdtree_spark.queries.polygon import (tile_cell_assign,
+                                              tile_cell_assign_sql)
+    grid = Grid(16)
+    g, cw = grid.g, grid.cw
+    tiles = [(0, -100_000, 300_000, 10, 400_000),
+             (1, 1_000_500, -20, 1_200_000, 70_000),
+             (2, 500_000, 500_000, 400_000, 600_000),
+             (3, -5, -5, 2_000_000, 1)]
+
+    def lo(c):
+        return -np.inf if c == 0 else c * cw
+
+    def hi(c):
+        return np.inf if c == g - 1 else c * cw + cw - 1
+    exp = sorted((t, cx * g + cy) for t, x0, y0, x1, y1 in tiles
+                 for cx in range(g) for cy in range(g)
+                 if x0 <= x1 and y0 <= y1
+                 and lo(cx) <= x1 and x0 <= hi(cx)
+                 and lo(cy) <= y1 and y0 <= hi(cy))
+    got = sorted(tuple(r) for r in
+                 tile_cell_assign(spark, grid, tiles).collect())
+    assert got == exp
+    oracle = duckdb.sql(tile_cell_assign_sql(
+        grid, tiles_values_sql(tiles))).fetchall()
+    assert sorted(oracle) == exp
+    assert {t for t, _ in exp} == {0, 1, 3}
 
 
 def test_f64_epsilon_comparator_divergence():
