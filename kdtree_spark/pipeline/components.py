@@ -9,17 +9,18 @@ DataFrame rendering of Kiveris et al., "Connected Components in
 MapReduce and Beyond", SOCC'14 — public literature); details in the
 connected_components docstring. The edge list itself contracts toward
 disjoint stars, so dense components collapse in a few rounds and
-per-round cost shrinks as the graph does — O(log n) rounds, each one
-groupBy-min + one join per phase on uniform node keys,
-AQE-splittable. Every phase materializes through an eager
-localCheckpoint and unpersists the previous round (flat lineage AND
-flat executor storage — the same truncation discipline as
-SpatialIndex.update).
+per-round cost shrinks as the graph does — O(log n) rounds. A round
+is one fused plan: two window-min phases on uniform node keys (two
+exchanges) and one eager localCheckpoint, which frees the previous
+round's blocks (flat lineage AND flat executor storage — the same
+truncation discipline as SpatialIndex.update). The same checkpoint
+carries the fixpoint test, an observed count of the nodes that break
+the star shape, so convergence costs no action of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 
 def dedup_canonical(docs: DataFrame, pairs: DataFrame,
@@ -48,71 +49,68 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
     (id_col) universe so isolated nodes appear as singletons.
     -> (id, comp): comp = smallest node id in the node's component.
 
-    Alternating large-star / small-star edge contraction (Kiveris et
-    al., SOCC'14): each round REWRITES the edge list toward a star
-    centered at the component minimum, so dense components collapse in
-    O(log n) rounds and the per-round join cost SHRINKS as the graph
-    contracts (the earlier min-label-propagation rendering advanced a
-    frontier — O(diameter) rounds at constant full-edge-list cost,
-    measured pathological on large dense eps-graphs; see BENCH.md).
+    Kiveris et al. (SOCC'14), edge list kept oriented (u > v), both
+    phases a window min over u. large-star: on the symmetric list, each
+    larger neighbor v of u links to LEAST(min neighbor, u) <= u < v, so
+    the output is oriented as is. small-star: on that output (its
+    distinct already hash-partitions it on u), u and each smaller
+    neighbor but the least link to the least. A round is one plan, two
+    exchanges and one eager localCheckpoint; the previous one is freed.
 
-    large-star: for each u, every larger neighbor links to
-    m = min(neighborhood(u) + {u}).  small-star: orient edges toward
-    the larger endpoint; every smaller neighbor (and u) links to the
-    minimum smaller neighbor.  Fixpoint = disjoint stars; convergence
-    is detected EXACTLY (count + exceptAll on the canonical edge set,
-    both cheap at converged size), not via a hash fingerprint.
-    Every phase materializes through an eager localCheckpoint and
-    unpersists the previous round (flat lineage AND flat storage).
-    Raises RuntimeError when max_rounds pass without the fixpoint."""
-    e = (edges.selectExpr(f"{a_col} AS u", f"{b_col} AS v")
-         .filter("u != v")
-         .selectExpr("GREATEST(u, v) AS u", "LEAST(u, v) AS v")
-         .distinct().localCheckpoint())
-
-    def large_star(ed):
-        sym = ed.unionByName(ed.selectExpr("v AS u", "u AS v"))
-        m = (sym.groupBy("u").agg(F.min("v").alias("mn"))
-             .select("u", F.least("mn", F.col("u")).alias("m")))
-        return (sym.filter("v > u").join(m, "u")
-                .selectExpr("v AS u", "m AS v").filter("u != v")
-                .distinct())
-
-    def small_star(ed):
-        # ed oriented u > v by invariant below
-        m = ed.groupBy("u").agg(F.min("v").alias("m"))
-        return (ed.join(m, "u")
-                .selectExpr("v AS a", "m AS b")
-                .unionByName(m.selectExpr("u AS a", "m AS b"))
-                .filter("a != b")
-                .selectExpr("GREATEST(a, b) AS u", "LEAST(a, b) AS v")
-                .distinct())
-
-    if e.count() > 0:
-        for _ in range(max_rounds):
-            ls = (large_star(e)
-                  .selectExpr("GREATEST(u, v) AS u", "LEAST(u, v) AS v")
-                  .distinct().localCheckpoint())
-            nxt = small_star(ls).localCheckpoint()
-            ls.unpersist()
-            same = (nxt.count() == e.count()
-                    and nxt.exceptAll(e).isEmpty())
-            e.unpersist()
-            e = nxt
-            if same:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components: no fixpoint after {max_rounds} "
-                f"rounds; the labels would not be components")
-    # fixpoint: stars (member, comp_min) with member > comp_min
-    lbl = (e.selectExpr("u AS id", "v AS comp")
-           .groupBy("id").agg(F.min("comp").alias("comp")))
-    centers = e.selectExpr("v AS id").distinct()         .join(lbl.select("id"), "id", "left_anti")         .withColumn("comp", F.col("id"))
-    out = lbl.unionByName(centers)
+    Fixpoint = stars centered at their minimum, recognised on the
+    round's INPUT without an action of its own: an Observation on the
+    large-star window counts nodes with a smaller neighbor and more
+    than one distinct neighbor. Two such nodes are never adjacent, so
+    at 0 every edge has a leaf end: each component is a star whose
+    center is below its leaves. The loop then keeps that input. Exact:
+    a retried stage can only over-count. Raises RuntimeError when
+    max_rounds contraction rounds pass without the fixpoint."""
+    e = edges.selectExpr(f"GREATEST({a_col}, {b_col}) AS u",
+                         f"LEAST({a_col}, {b_col}) AS v").filter("u != v")
+    w = Window.partitionBy("u")
+    for rnd in range(max_rounds):
+        obs = Observation()  # single-use: one per round
+        ls = (e.selectExpr("stack(2, u, v, v, u) AS (u, v)")
+              .select("u", "v", F.min("v").over(w).alias("mn"),
+                      F.max("v").over(w).alias("mx"))
+              .observe(obs, F.count(F.when(
+                  (F.col("mn") < F.col("u")) & (F.col("mx") > F.col("mn")),
+                  1)).alias("bad"))
+              .filter("v > u")
+              .selectExpr("v AS u", "LEAST(mn, u) AS v")
+              .repartition("u").distinct())
+        nxt = (ls.select("u", "v", F.min("v").over(w).alias("mn"))
+               .selectExpr("IF(v = mn, u, v) AS u", "mn AS v")
+               .localCheckpoint())
+        if _observed(obs) == 0:
+            _free(nxt)
+            break
+        if rnd:  # round 0's input is the caller's plan
+            _free(e)
+        e = nxt
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_rounds} "
+            f"rounds; the labels would not be components")
+    # stars: (leaf, center) edges; every center labels itself
+    out = e.selectExpr("stack(2, u, v, v, v) AS (id, comp)").distinct()
     if nodes is not None:
         singles = (nodes.select(F.col(id_col).alias("id")).distinct()
                    .join(out.select("id"), "id", "left_anti")
                    .withColumn("comp", F.col("id")))
         out = out.unionByName(singles)
     return out
+
+
+def _observed(obs: Observation) -> int:
+    """The one observed metric. AQE prunes an observed operator whose
+    input turned out empty, metrics and all (an empty row, which
+    Observation.get rejects): no rows, so a count of 0."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.size() else 0
+
+
+def _free(ckpt: DataFrame) -> None:
+    """Free a localCheckpoint's blocks: DataFrame.unpersist is a
+    cache-manager call and leaves them to GC (see SpatialIndex.update)."""
+    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -59,6 +59,54 @@ def test_components_round_cap_raises(spark):
         connected_components(_mk_edges(spark, edges), max_rounds=1)
 
 
+def _check(spark, edges, **kw):
+    """connected_components over `edges`, given their nodes, vs
+    union-find."""
+    ids = sorted({x for e in edges for x in e})
+    nodes = spark.createDataFrame(pd.DataFrame({"id": ids}, dtype="int64"))
+    got = dict(connected_components(_mk_edges(spark, edges), nodes,
+                                    **kw).collect())
+    assert got == _uf_components(ids, edges)
+
+
+def test_components_star_forest_input(spark):
+    """Input already at the fixpoint (stars centered at their minimum,
+    given leaf-first and center-first): the first round observes it,
+    so even one round suffices."""
+    edges = ([(0, i) for i in range(1, 12)] + [(57, 50), (50, 51)]
+             + [(90, 80), (7000, 6999)])
+    _check(spark, edges)
+    _check(spark, edges, max_rounds=1)
+
+
+def test_components_duplicates_and_self_loops(spark):
+    edges = [(3, 1), (1, 3), (3, 1), (1, 3), (3, 3), (4, 4), (4, 5),
+             (5, 4), (5, 4), (6, 6), (2, 1), (1, 2)]
+    _check(spark, edges + [(9, 9)])  # 6 and 9: self-loops only
+
+
+def test_components_chain_of_stars(spark):
+    """Stars whose centers are leaves of another star (10 is the center
+    of 11..14 and a leaf of 5; 5 is a leaf of 20's star), and a star
+    whose center is larger than its leaves."""
+    edges = ([(10, i) for i in range(11, 15)] + [(5, 10), (5, 6)]
+             + [(20, 5), (20, 21)] + [(100, i) for i in range(90, 96)])
+    _check(spark, edges)
+
+
+def test_components_complete_graph_and_ring(spark):
+    k30 = [(a, b) for a in range(30) for b in range(a + 1, 30)]
+    ring = [(1000 + i, 1000 + (i + 1) % 200) for i in range(200)]
+    _check(spark, k30 + ring)
+
+
+def test_components_extreme_ids(spark):
+    lo, hi = -2**63, 2**63 - 1
+    edges = [(hi, hi - 1), (hi - 1, -5), (lo, lo + 1), (lo + 1, -1),
+             (-7, -3), (-3, 0), (0, hi - 2), (lo + 2, hi - 3)]
+    _check(spark, edges)
+
+
 def test_components_singletons_and_empty_edges(spark):
     ids = [5, 9, 42]
     got = dict(connected_components(

@@ -1,8 +1,9 @@
-"""Spark job budget of the read operators: one knn_join call and one
+"""Spark job budget of the operators: one knn_join call and one
 range_count call each run a bounded number of Spark jobs, and that
 number does not grow with the fragments SpatialIndex.update layers over
-an index. Answers are checked against numpy brute force at every
-version, so a plan that saves jobs by dropping work fails here too."""
+an index; connected_components and dbscan stay within a fixed budget.
+Answers are checked against brute force every time, so a plan that
+saves jobs by dropping work fails here too."""
 
 from __future__ import annotations
 
@@ -14,10 +15,16 @@ import pandas as pd
 from kdtree_spark import bruteforce as bf
 from kdtree_spark.grid import COORD_LIMIT, Grid
 from kdtree_spark.index import SpatialIndex
+from kdtree_spark.pipeline.components import connected_components
+from kdtree_spark.queries.dbscan import dbscan
 from kdtree_spark.queries.knn import knn_join
 from kdtree_spark.queries.ranges import range_count
+from tests.test_components import _mk_edges, _uf_components
+from tests.test_dbscan import _brute_dbscan
 
 KNN_JOBS = 12  # Spark jobs per knn_join call, at any fragment count
+PATH_CC_JOBS = 60  # connected_components on a 400-node path
+DBSCAN_JOBS = 70  # dbscan on 2,000 uniform points, ~10 neighbours each
 
 
 def _counted(spark, fn):
@@ -93,3 +100,27 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
     (k1, r1), _, (k3, r3) = jobs
     assert max(k1, k3) <= KNN_JOBS, jobs
     assert k3 <= k1 and r3 <= r1, jobs
+
+
+def test_components_job_budget_on_a_path(spark):
+    """A 400-node path takes 10 contraction rounds: the budget holds
+    each round to a few jobs."""
+    edges = [(i, i + 1) for i in range(399)]
+    got, jobs = _counted(spark, lambda: dict(
+        connected_components(_mk_edges(spark, edges)).collect()))
+    assert got == _uf_components(range(400), edges)
+    assert jobs <= PATH_CC_JOBS, jobs
+
+
+def test_dbscan_job_budget(spark):
+    n, min_pts = 2000, 5
+    rng = np.random.default_rng(29)
+    pid = rng.permutation(n).astype(np.int64)
+    xy = rng.integers(0, COORD_LIMIT, size=(n, 2), dtype=np.int64)
+    eps = int(round((10 * COORD_LIMIT ** 2 / (np.pi * n)) ** 0.5))
+    pts = _frame(spark, pid=pid, x=xy[:, 0], y=xy[:, 1])
+    got, jobs = _counted(spark, lambda: {
+        r["pid"]: (r["cluster"], r["kind"])
+        for r in dbscan(pts, eps, min_pts).collect()})
+    assert got == _brute_dbscan(pid, xy, eps, min_pts)
+    assert jobs <= DBSCAN_JOBS, jobs
