@@ -3,7 +3,7 @@
 Top level: grid-cell partition key (grid.py) — the shuffle that plays the
 role of the reference's sampled 6-level top-of-tree + counting-sort bucket
 shuffle (`build_tree.hpp:49-121`). Bottom level: a serialized numpy
-kd-tree per (cell, salt) built inside `applyInPandas` (localtree.py).
+kd-tree per (cell, salt) built inside `applyInArrow` (localtree.py).
 
 Skew handling (the dummy-leaf / INBALANCE analogue at the distributed
 level, plus what BASELINE.json calls out): cells whose row count exceeds
@@ -29,13 +29,16 @@ metrics (the analogue of the reference's per-run timing lines).
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import time
 import uuid
+import zipimport
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, BooleanType
@@ -139,22 +142,99 @@ def _tree_row(cell: int, salt: int, tree: LocalKDTree) -> dict:
                 depth=tree.depth,
                 xmin=lo[0].item(), ymin=lo[1].item(),
                 xmax=hi[0].item(), ymax=hi[1].item(),
-                bbox=np.concatenate([lo, hi]).tolist(),
+                bbox=np.concatenate([lo, hi]),
                 probe=tree.probe_sample(cap=_probe_cap(d, tree.n_live)),
                 blob=tree.to_bytes())
 
 
-def _build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    cell = int(pdf["cell"].iloc[0])
-    salt = int(pdf["salt"].iloc[0])
-    coord_cols = [c for c in pdf.columns
+def _build_group(key, t: pa.Table) -> dict:
+    cell, salt = key
+    coord_cols = [c for c in t.column_names
                   if c not in ("pid", "cell", "salt")]
-    pts = pdf[coord_cols].to_numpy()
+    pts = np.column_stack([_column(t.column(c)) for c in coord_cols])
     pts = pts.astype(np.float64 if pts.dtype.kind == "f" else np.int64,
                      copy=False)
-    ids = pdf["pid"].to_numpy(np.int64)
-    tree = LocalKDTree.build(pts, ids)
-    return pd.DataFrame([_tree_row(cell, salt, tree)])
+    ids = _column(t.column("pid")).astype(np.int64, copy=False)
+    return _rows([_tree_row(cell, salt, LocalKDTree.build(pts, ids))])
+
+
+def _rows(rows: list) -> dict:
+    """Row dicts (_tree_row) as kernel output columns."""
+    return {c: [r[c] for r in rows] for c in rows[0]} if rows else {}
+
+
+def _column(col: pa.ChunkedArray, rows: np.ndarray | None = None):
+    """The `rows` (default all) of an Arrow column as a kernel reads
+    them: fixed-width types as numpy (zero-copy where Arrow allows),
+    binary as memoryview slices of the data buffer, arrays as the flat
+    values of the rows."""
+    a = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    if pa.types.is_binary(a.type):
+        off = np.frombuffer(a.buffers()[1], np.int32)[
+            a.offset:a.offset + len(a) + 1].tolist()
+        data = memoryview(a.buffers()[2] or b"")
+        return [data[off[i]:off[i + 1]]
+                for i in (range(len(a)) if rows is None else rows)]
+    if pa.types.is_list(a.type):
+        return (a if rows is None else a.take(rows)).flatten().to_numpy()
+    v = a.to_numpy(zero_copy_only=False)
+    return v if rows is None else v[rows]
+
+
+def _rescan_changed_zips_only() -> None:
+    """Make importlib.invalidate_caches() re-read a zip archive only
+    when the archive changed on disk. PySpark calls it before every
+    Python task, and CPython 3.11's zipimporter.invalidate_caches
+    re-reads its archive's whole directory each time, once per
+    zipimporter on the worker path (pyspark.zip alone holds over a
+    thousand entries). An archive whose (st_mtime_ns, st_size, st_ino)
+    equals the value recorded at its last read yields the same
+    directory, so imports see the same files. Index kernels call this
+    first, so it ships with the package; installing it rescans every
+    archive once, to record the stamps, which is all it costs per
+    worker process."""
+    zi = zipimport.zipimporter
+    if getattr(zi.invalidate_caches, "narrowed", False):
+        return
+    full = zi.invalidate_caches
+    read_at: dict = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if (stamp is None or files is None
+                or read_at.get(self.archive) != stamp):
+            full(self)
+            read_at[self.archive] = stamp
+        else:
+            self._files = files
+
+    invalidate_caches.narrowed = True
+    zi.invalidate_caches = invalidate_caches
+    importlib.invalidate_caches()
+
+
+def _arrow_fn(fn, schema: str):
+    """fn(key, table) -> {column: values}, as an applyInArrow function
+    of the declared schema: group keys arrive as Python values, and
+    the returned columns (none at all for no rows) become one Arrow
+    table of exactly the schema's types."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+    out = to_arrow_schema(_parse_datatype_string(schema))
+
+    def run(key, t):  # unannotated: applyInArrow infers its mode from hints
+        _rescan_changed_zips_only()
+        cols = fn(tuple(k.as_py() for k in key), t)
+        if not cols:
+            return out.empty_table()
+        return pa.table([pa.array(cols[f.name], f.type) for f in out],
+                        schema=out)
+    return run
 
 
 def _filler(dtype):
@@ -170,14 +250,17 @@ def _filler(dtype):
 
 def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
             schema: str) -> DataFrame:
-    """fn(key, left_pdf, right_pdf) per group of `keys`, like
+    """fn(key, left, right) per group of `keys`, like
     left.groupby(keys).cogroup(right.groupby(keys)), but as ONE grouped
     map over the union of both sides: one exchange and one Spark job
-    instead of two. Each side's rows fill the other side's columns with
-    non-NULL placeholders (a NULL would turn an int64 pandas column into
-    float64); a flag column tells them apart again."""
+    instead of two. Each side reaches fn as {column: values} of its own
+    columns (_column) and fn returns the output columns (_arrow_fn).
+    Each side's rows fill the other side's columns with non-NULL
+    placeholders (an Arrow NULL would make to_numpy return float64 for
+    an int64 column); a flag column tells them apart again."""
     flag = "_right"
     cols = list(dict.fromkeys(left.columns + right.columns))
+    lcols, rcols = left.columns, right.columns
 
     def rows(df, other, is_right):
         fill = {f.name: _filler(f.dataType) for f in other.schema
@@ -185,12 +268,16 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
         return (df.withColumns(fill).withColumn(flag, F.lit(is_right))
                 .select(*cols, flag))
 
-    def kernel(key, pdf):
-        r = pdf[flag].to_numpy(bool)
-        return fn(key, pdf[~r], pdf[r])
+    def side(t, names, m):
+        at = np.flatnonzero(m)
+        return {c: _column(t.column(c), at) for c in names}
+
+    def kernel(key, t):
+        r = _column(t.column(flag))
+        return fn(key, side(t, lcols, ~r), side(t, rcols, r))
 
     return (rows(left, right, False).unionByName(rows(right, left, True))
-            .groupBy(*keys).applyInPandas(kernel, schema))
+            .groupBy(*keys).applyInArrow(_arrow_fn(kernel, schema), schema))
 
 
 class SpatialIndex:
@@ -265,8 +352,9 @@ class SpatialIndex:
                            .cast("int"))
                .drop("nsplit"))
 
-        built = pts.groupBy("cell", "salt").applyInPandas(
-            _build_group, INDEX_SCHEMA_F64 if fmode else INDEX_SCHEMA)
+        schema = INDEX_SCHEMA_F64 if fmode else INDEX_SCHEMA
+        built = pts.groupBy("cell", "salt").applyInArrow(
+            _arrow_fn(_build_group, schema), schema)
         # cached as built, not re-clustered by cell: reads prune the
         # blob side to their cells first and shuffle only the survivors,
         # which AQE coalesces into few Python tasks; a cell-partitioned
@@ -488,40 +576,34 @@ class SpatialIndex:
         for p in parts[1:]:
             ups = ups.unionByName(p)
 
-        out_cols = [f.split()[0] for f in schema.split(", ")]
-
-        def apply_updates(key, updf: pd.DataFrame, idxdf: pd.DataFrame
-                          ) -> pd.DataFrame:
-            cell = int(key[0])
-            ins = updf[updf["op"] == 1]
-            del_ = updf[updf["op"] == 0]
-            out = []
-            if len(idxdf) == 0:
+        def apply_updates(key, upd: dict, idx: dict) -> dict:
+            cell = key[0]
+            ins = upd["op"] == 1
+            del_ = upd["op"] == 0
+            pts = np.column_stack([upd[c] for c in cc]).astype(cdt)
+            ins_pts, del_pts = pts[ins], pts[del_]
+            ids = upd["pid"].astype(np.int64, copy=False)
+            ins_ids, del_ids = ids[ins], ids[del_]
+            if len(idx["salt"]) == 0:
                 # brand-new cell: build from inserts alone
-                if len(ins):
-                    tree = LocalKDTree.build(
-                        ins[cc].to_numpy(cdt),
-                        ins["pid"].to_numpy(np.int64))
-                    out.append(_tree_row(cell, 0, tree))
-                return pd.DataFrame(out, columns=out_cols)
-            nsalt = len(idxdf)
-            ins_pts = ins[cc].to_numpy(cdt)
-            ins_ids = ins["pid"].to_numpy(np.int64)
-            del_pts = del_[cc].to_numpy(cdt)
-            del_ids = del_["pid"].to_numpy(np.int64)
+                if not len(ins_ids):
+                    return {}
+                return _rows([_tree_row(
+                    cell, 0, LocalKDTree.build(ins_pts, ins_ids))])
+            nsalt = len(idx["salt"])
             ins_salt = (ins_ids % nsalt) if nsalt > 1 else np.zeros(
                 len(ins_ids), np.int64)
-            for j in range(len(idxdf)):
-                row = idxdf.iloc[j]
-                tree = LocalKDTree.from_bytes(row["blob"])
+            out = []
+            for j, (salt, blob) in enumerate(zip(idx["salt"], idx["blob"])):
+                tree = LocalKDTree.from_bytes(blob)
                 m = ins_salt == j
                 # deletes are routed by membership (exact, partial-cover)
                 own = (np.isin(del_ids, tree.ids)
                        | np.isin(del_ids, tree.extra_ids))
                 t2 = tree.with_updates(ins_pts[m], ins_ids[m],
                                        del_pts[own], del_ids[own])
-                out.append(_tree_row(cell, int(row["salt"]), t2))
-            return pd.DataFrame(out)
+                out.append(_tree_row(cell, int(salt), t2))
+            return _rows(out)
 
         # the touched-cell set (O(batch), never O(index)) is collected
         # once: every fragment filter below, in this version and its

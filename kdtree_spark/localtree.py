@@ -3,7 +3,7 @@
 This is the Spark-side analogue of the reference's in-memory kd-tree
 (ucrparlay/KDtree `include/cpdd/batch_op/build_tree.hpp:151-218`,
 `query_op/nn_search.hpp:83-126`, `query_op/range_count.hpp:9-96`), built
-inside `applyInPandas` over one grid cell's points and serialized to a
+inside `applyInArrow` over one grid cell's points and serialized to a
 binary blob stored in the index table.
 
 Design parity with the reference (semantics, not code):
@@ -270,10 +270,13 @@ class LocalKDTree:
         return len(h).to_bytes(4, "little") + h + b"".join(bufs)
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "LocalKDTree":
+    def from_bytes(cls, blob) -> "LocalKDTree":
+        """The tree to_bytes wrote, from any buffer (bytes, or a
+        memoryview slice of an Arrow data buffer); the arrays are
+        zero-copy views of it."""
         import json
         hl = int.from_bytes(blob[:4], "little")
-        meta = json.loads(blob[4:4 + hl].decode())
+        meta = json.loads(bytes(blob[4:4 + hl]))
         mv = memoryview(blob)
         off = 4 + hl
         kw = {}
@@ -323,7 +326,7 @@ class LocalKDTree:
             pts, ids = pts[mask], ids[mask]
         return pts, ids
 
-    def probe_sample(self, cap: int = 1024) -> list:
+    def probe_sample(self, cap: int = 1024) -> np.ndarray:
         """Deterministic stride sample of up to `cap` LIVE points,
         flattened row-major coords — the per-cell probe set the
         distributed kNN seeds its prune bound from (queries/knn.py
@@ -336,13 +339,10 @@ class LocalKDTree:
         the distributed analogue of the reference's one-descent seed
         (query_op/nn_search.hpp:83-126)."""
         pts, _ = self.live_points()
-        n = len(pts)
-        if n == 0:
-            return []
-        step = max(1, -(-n // cap))  # ceil(n / cap)
-        # tolist() preserves coordinate type: python ints for the int64
-        # engine (schema array<bigint>), floats for float mode (double)
-        return pts[::step].astype(self.cdtype).ravel().tolist()
+        step = max(1, -(-len(pts) // cap))  # ceil(n / cap)
+        # the coordinate type picks the schema: int64 for the integer
+        # engine (array<bigint>), float64 for float mode (array<double>)
+        return pts[::step].astype(self.cdtype).ravel()
 
     def needs_rebuild(self) -> bool:
         n = max(self.n_base, 1)

@@ -5,7 +5,7 @@ visiting the sibling subtree only when its bounding-box min-distance
 beats the current kth-best (`query_op/nn_search.hpp:83-126`). Across a
 cluster that sibling-pruning becomes *cell* pruning:
 
-  phase 1+2  ONE candidate kernel (a pandas cogroup of the queries,
+  phase 1+2  ONE candidate kernel (an Arrow cogroup of the queries,
            grouped by home cell, with only those cells' probe samples —
            broadcast semi-join) turns every query into candidate cells:
            - bound: each index blob carries a ~1024-pt deterministic
@@ -54,7 +54,6 @@ emitted as BIGINT so oracle hashes match bit-for-bit.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -284,34 +283,26 @@ def _seed_enum(index: SpatialIndex, queries: DataFrame, cc: list, k: int
     probes = pruned_blobs(index.probes(), home)
     out_schema = (f"qid long, {_coord_schema(index, cc)}, ub double, "
                   f"cell long, fin0 boolean")
-    # guard columns derived from the declared schema so they cannot
-    # drift apart (the r5 fusion once widened the schema but not the
-    # guard, crashing the probes-only-key branch)
-    out_cols = [f.split()[0] for f in out_schema.split(", ")]
 
-    def probe_enum(key, qpdf: pd.DataFrame, ppdf: pd.DataFrame
-                   ) -> pd.DataFrame:
-        if len(qpdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        qd = qpdf[cc].to_numpy(cdt)
-        ub = np.full(len(qpdf), np.nan)
-        if len(ppdf):
-            pool = np.concatenate([
-                np.asarray(a, cdt).reshape(-1, d) for a in ppdf["probe"]])
-            if len(pool) > PROBE_POOL_CAP:  # salted cells pool many
-                pool = pool[::-(-len(pool) // PROBE_POOL_CAP)]
-            P = len(pool)
-            if P >= k:
-                # one tiny tree over the pool, then the block-scan
-                # bound kernel: per query a descent plus one
-                # >=max(2k,128)-point block scan — ~8x fewer flops than
-                # a full-pool distance matrix at P=1024, with the same
-                # bound quality (the enclosing sample block holds the
-                # query's nearest sample points)
-                ptree = LocalKDTree.build(
-                    pool, np.arange(P, dtype=np.int64))
-                b = ptree.knn_bound(qd, k)
-                ub = np.where(np.isfinite(b), b, np.nan)
+    def probe_enum(key, q: dict, p: dict) -> dict:
+        if len(q["qid"]) == 0:
+            return {}
+        qd = np.column_stack([q[c] for c in cc]).astype(cdt, copy=False)
+        ub = np.full(len(qd), np.nan)
+        pool = p["probe"].astype(cdt, copy=False).reshape(-1, d)
+        if len(pool) > PROBE_POOL_CAP:  # salted cells pool many
+            pool = pool[::-(-len(pool) // PROBE_POOL_CAP)]
+        P = len(pool)
+        if P >= k:
+            # one tiny tree over the pool, then the block-scan bound
+            # kernel: per query a descent plus one >=max(2k,128)-point
+            # block scan — ~8x fewer flops than a full-pool distance
+            # matrix at P=1024, with the same bound quality (the
+            # enclosing sample block holds the query's nearest sample
+            # points)
+            ptree = LocalKDTree.build(pool, np.arange(P, dtype=np.int64))
+            b = ptree.knn_bound(qd, k)
+            ub = np.where(np.isfinite(b), b, np.nan)
         needy = np.isnan(ub)
         ub[needy] = _prefix_ub(qd[needy], sup, k)
         rows_i, cells, fin0, far = _enum_rows(
@@ -323,13 +314,13 @@ def _seed_enum(index: SpatialIndex, queries: DataFrame, cc: list, k: int
         fin0 &= ~needy[rows_i]
         far_i, far_cells = _far_cells(qd[far], ub[far], sup, grid, S, sg)
         rows_i = np.concatenate([rows_i, far[far_i]])
-        out = {"qid": qpdf["qid"].to_numpy(np.int64)[rows_i]}
+        out = {"qid": q["qid"][rows_i]}
         for j, c in enumerate(cc):
             out[c] = qd[rows_i, j]
         out["ub"] = ub[rows_i]
         out["cell"] = np.concatenate([cells, far_cells])
         out["fin0"] = np.concatenate([fin0, np.zeros(len(far_i), bool)])
-        return pd.DataFrame(out)
+        return out
 
     return cogroup(home, probes, ["cell"], probe_enum, out_schema)
 
@@ -357,27 +348,22 @@ def _cell_knn_maker(cc: list, cdt, k: int):
     the query's fin0 says so, and they force the per-blob block-scan
     bound tighten; hot (per-blob) groups never emit fin rows."""
     def make_cell_knn(cold: bool):
-        def cell_knn(key, qpdf: pd.DataFrame, ipdf: pd.DataFrame
-                     ) -> pd.DataFrame:
-            if len(qpdf) == 0 or len(ipdf) == 0:
-                return pd.DataFrame(
-                    columns=["qid", "nid", "dist_sq", "rank", "fin"])
-            qpts = qpdf[cc].to_numpy(cdt)
-            ub = qpdf["ub"].to_numpy(np.float64)
-            d, i = _group_knn(qpts, ipdf["blob"], k, ub,
-                              tighten=True if cold else None)
-            m = len(qpdf)
-            qid = np.repeat(qpdf["qid"].to_numpy(np.int64), k)
+        def cell_knn(key, q: dict, i: dict) -> dict:
+            if len(q["qid"]) == 0 or len(i["blob"]) == 0:
+                return {}
+            qpts = np.column_stack([q[c] for c in cc]).astype(cdt, copy=False)
+            d, ii = _group_knn(qpts, i["blob"], k, q["ub"],
+                               tighten=True if cold else None)
+            m = len(qpts)
+            qid = np.repeat(q["qid"], k)
             rank = np.tile(np.arange(1, k + 1, dtype=np.int32), m)
-            row_fin = (qpdf["fin0"].to_numpy(bool) if cold
-                       else np.zeros(m, bool))
+            row_fin = q["fin0"] if cold else np.zeros(m, bool)
             fin = np.repeat(row_fin, k)
             dd = d.ravel()
-            ii = i.ravel()
+            ii = ii.ravel()
             ok = np.isfinite(dd)
-            return pd.DataFrame({"qid": qid[ok], "nid": ii[ok],
-                                 "dist_sq": dd[ok], "rank": rank[ok],
-                                 "fin": fin[ok]})
+            return {"qid": qid[ok], "nid": ii[ok], "dist_sq": dd[ok],
+                    "rank": rank[ok], "fin": fin[ok]}
         return cell_knn
     return make_cell_knn
 
@@ -457,17 +443,15 @@ def knn_scan_stats(index: SpatialIndex, queries: DataFrame, k: int
         # mirror knn_join's tighten flags (cold forces the block-scan
         # tighten; its scanned points are counted via knn_bound's stats
         # hook, so the audit reflects ALL distance comparisons)
-        def cell_count(key, qpdf: pd.DataFrame, ipdf: pd.DataFrame
-                       ) -> pd.DataFrame:
-            if len(qpdf) == 0 or len(ipdf) == 0:
-                return pd.DataFrame(columns=["qid", "scanned", "leaves"])
+        def cell_count(key, q: dict, i: dict) -> dict:
+            if len(q["qid"]) == 0 or len(i["blob"]) == 0:
+                return {}
             st: dict = {}
-            _group_knn(qpdf[cc].to_numpy(cdt), ipdf["blob"], k,
-                       qpdf["ub"].to_numpy(np.float64), stats=st,
+            _group_knn(np.column_stack([q[c] for c in cc]).astype(cdt),
+                       i["blob"], k, q["ub"], stats=st,
                        tighten=True if cold else None)
-            return pd.DataFrame({"qid": qpdf["qid"].to_numpy(np.int64),
-                                 "scanned": st["scanned"],
-                                 "leaves": st["leaves"]})
+            return {"qid": q["qid"], "scanned": st["scanned"],
+                    "leaves": st["leaves"]}
         return cell_count
 
     per_cell = scan_blobs(index, cand, make_cell_count(True),

@@ -6,7 +6,7 @@ touched (bbox-stats filter — the partition-pruning analogue); cells whose
 data-bbox is *contained* contribute their stored count straight from the
 stats table, aggregated metadata-only without ever reaching a blob (the
 "contained -> node.size" shortcut, range_count.hpp:78-80); boundary
-cells go to a cogrouped pandas UDF that runs the per-cell tree's
+cells go to an Arrow cogroup (index.cogroup) that runs the per-cell tree's
 vectorized count/report — with hot (salted) cells re-keyed per
 (cell, salt) so one popular cell's boundary scans fan out across tasks
 (queries/skew.py).
@@ -152,15 +152,14 @@ def range_count(index: SpatialIndex, boxes) -> DataFrame:
     bnd = pairs.filter(~F.col("full")).select(
         "box_id", *blo_c, *bhi_c, "cell", "maxsalt")
 
-    def scan(key, bpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(bpdf) == 0 or len(ipdf) == 0:
-            return pd.DataFrame(columns=["box_id", "cnt"])
-        qboxes = bpdf[blo_c + bhi_c].to_numpy(np.int64)
-        part = np.zeros(len(bpdf), np.int64)
-        for blob in ipdf["blob"]:
+    def scan(key, b: dict, i: dict) -> dict:
+        if len(b["box_id"]) == 0 or len(i["blob"]) == 0:
+            return {}
+        qboxes = np.column_stack([b[c] for c in blo_c + bhi_c])
+        part = np.zeros(len(qboxes), np.int64)
+        for blob in i["blob"]:
             part += LocalKDTree.from_bytes(blob).range_count(qboxes)
-        return pd.DataFrame({"box_id": bpdf["box_id"].to_numpy(np.int64),
-                             "cnt": part})
+        return {"box_id": b["box_id"], "cnt": part}
 
     all_counts = scan_blobs(index, bnd, scan, scan, "box_id long, cnt long") \
         .unionByName(full_counts)
@@ -194,22 +193,23 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
         # (lazy: plan truncation is immediate, materialization
         # folds into the first consumer job — same as knn_join)
 
-    def scan(key, bpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(bpdf) == 0 or len(ipdf) == 0:
-            return pd.DataFrame(columns=["box_id", "pid", *cc])
-        qboxes = bpdf[blo_c + bhi_c].to_numpy(np.int64)
-        bids = bpdf["box_id"].to_numpy(np.int64)
+    def scan(key, b: dict, i: dict) -> dict:
+        if len(b["box_id"]) == 0 or len(i["blob"]) == 0:
+            return {}
+        qboxes = np.column_stack([b[c] for c in blo_c + bhi_c])
         outs = []
-        for blob in ipdf["blob"]:
+        for blob in i["blob"]:
             bi, pp, ii = LocalKDTree.from_bytes(blob).range_report(qboxes)
             if len(ii):
-                out = {"box_id": bids[bi], "pid": ii}
-                for j, c in enumerate(cc):
-                    out[c] = pp[:, j]
-                outs.append(pd.DataFrame(out))
+                outs.append((b["box_id"][bi], ii, pp))
         if not outs:
-            return pd.DataFrame(columns=["box_id", "pid", *cc])
-        return pd.concat(outs, ignore_index=True)
+            return {}
+        out = {"box_id": np.concatenate([o[0] for o in outs]),
+               "pid": np.concatenate([o[1] for o in outs])}
+        pp = np.concatenate([o[2] for o in outs])
+        for j, c in enumerate(cc):
+            out[c] = pp[:, j]
+        return out
 
     coord_schema = ", ".join(f"{c} {ct}" for c in cc)
     return scan_blobs(index, pairs, scan, scan,
@@ -259,17 +259,15 @@ def circle_count(index: SpatialIndex, circles) -> DataFrame:
     bnd = pairs.filter(~F.col("full")).select(
         "circle_id", *ctr_c, "r", "cell", "maxsalt")
 
-    def scan(key, cpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cpdf) == 0 or len(ipdf) == 0:
-            return pd.DataFrame(columns=["circle_id", "cnt"])
-        centers = cpdf[ctr_c].to_numpy(np.int64)
-        radii = cpdf["r"].to_numpy(np.float64)
-        part = np.zeros(len(cpdf), np.int64)
-        for blob in ipdf["blob"]:
-            part += LocalKDTree.from_bytes(blob).circle_count(
-                centers, radii)
-        return pd.DataFrame({"circle_id": cpdf["circle_id"].to_numpy(np.int64),
-                             "cnt": part})
+    def scan(key, c: dict, i: dict) -> dict:
+        if len(c["circle_id"]) == 0 or len(i["blob"]) == 0:
+            return {}
+        centers = np.column_stack([c[n] for n in ctr_c])
+        radii = c["r"].astype(np.float64)
+        part = np.zeros(len(centers), np.int64)
+        for blob in i["blob"]:
+            part += LocalKDTree.from_bytes(blob).circle_count(centers, radii)
+        return {"circle_id": c["circle_id"], "cnt": part}
 
     all_counts = scan_blobs(index, bnd, scan, scan,
                             "circle_id long, cnt long") \

@@ -225,3 +225,32 @@ def test_traversal_path_large_tree():
     gd, gi = bf.knn(pts, ids, q, 10)
     np.testing.assert_allclose(td, gd)
     np.testing.assert_array_equal(ti, gi)
+
+
+@pytest.mark.parametrize("n", [0, 500])
+@pytest.mark.parametrize("d", [2, 5])
+@pytest.mark.parametrize("dtype", [np.int64, np.float64])
+def test_from_bytes_memoryview_slice(n, d, dtype):
+    """A tree read from a memoryview slice of a larger buffer — how the
+    Arrow cogroup hands blobs to the kernels — equals the one read from
+    bytes: every field, with its dtype and shape."""
+    import pyarrow as pa
+
+    from kdtree_spark.index import _column
+    pts, ids = mk(n, d=d, seed=11)
+    t = LocalKDTree.build(pts.astype(dtype), ids)
+    if n:  # extra log and tombstones non-empty too
+        t = t.with_updates(pts[:3].astype(dtype) + 1, ids[:3] + 10**9,
+                           pts[3:5].astype(dtype), ids[3:5])
+        assert len(t.extra_ids) and len(t.tomb_ids)
+    blob = t.to_bytes()
+    buf = b"\x07" * 13 + blob + b"\x09" * 5
+    views = [memoryview(buf)[13:13 + len(blob)],
+             _column(pa.chunked_array([pa.array([b"ab", blob, b""])]))[1]]
+    ref = LocalKDTree.from_bytes(blob)
+    for v in views:
+        got = LocalKDTree.from_bytes(v)
+        for f in LocalKDTree._FIELDS:
+            a, b = getattr(got, f), getattr(ref, f)
+            assert a.dtype == b.dtype and a.shape == b.shape, f
+            np.testing.assert_array_equal(a, b, err_msg=f)

@@ -1,0 +1,205 @@
+"""The Python boundary of the index operators (index.py): the narrowed
+zip rescan that every index kernel installs in its worker process, and
+the Arrow cogroup's empty-side groups, checked against brute force."""
+
+from __future__ import annotations
+
+import importlib
+import json
+import os
+import subprocess
+import sys
+import textwrap
+import uuid
+import zipfile
+import zipimport
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from kdtree_spark import bruteforce as bf
+from kdtree_spark.grid import COORD_LIMIT, Grid
+from kdtree_spark.index import SpatialIndex, _rescan_changed_zips_only, cogroup
+from kdtree_spark.queries.knn import knn_join
+from kdtree_spark.queries.ranges import range_count, range_report
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _write_zip(path, module: str, body: str) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr(f"{module}.py", body)
+
+
+def test_rewritten_zip_is_reread(tmp_path, monkeypatch):
+    """An unchanged archive keeps its directory across
+    importlib.invalidate_caches(); one rewritten on disk after a first
+    import is re-read, and the new module body imports."""
+    _rescan_changed_zips_only()
+    name = f"kds_zip_{uuid.uuid4().hex[:8]}"
+    z = str(tmp_path / f"{name}.zip")
+    _write_zip(z, name, "VALUE = 1\n")
+    monkeypatch.syspath_prepend(z)
+    monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module(name).VALUE == 1
+    importlib.invalidate_caches()  # a read that records the archive
+    files = zipimport._zip_directory_cache[z]
+    importlib.invalidate_caches()
+    assert zipimport._zip_directory_cache[z] is files  # not re-read
+    _write_zip(z, name, "VALUE = 22  # a longer body\n")
+    del sys.modules[name]
+    importlib.invalidate_caches()
+    assert zipimport._zip_directory_cache[z] is not files
+    assert importlib.import_module(name).VALUE == 22
+
+
+def _one_row_per_key(spark, n: int):
+    left = spark.createDataFrame(pd.DataFrame(
+        {"k": np.arange(n, dtype=np.int64), "a": np.ones(n, np.int64)}))
+    right = spark.createDataFrame(pd.DataFrame(
+        {"k": np.arange(n, dtype=np.int64), "b": np.ones(n, np.int64)}))
+    return left, right
+
+
+def test_addpyfile_mid_session_imports_in_later_task(spark, tmp_path):
+    """A .py file (and a zip) shipped with addPyFile after index kernels
+    have run in the workers import in a later task."""
+    left, right = _one_row_per_key(spark, 16)
+
+    def run(fn):
+        return cogroup(left, right, ["k"], fn, "k long, v long").toPandas()
+
+    assert len(run(lambda key, l, r: {"k": [key[0]], "v": [0]})) == 16
+    name = f"kds_late_{uuid.uuid4().hex[:8]}"
+    (tmp_path / f"{name}.py").write_text("VALUE = 7\n")
+    _write_zip(tmp_path / f"{name}_z.zip", f"{name}_z", "VALUE = 8\n")
+    spark.sparkContext.addPyFile(str(tmp_path / f"{name}.py"))
+    spark.sparkContext.addPyFile(str(tmp_path / f"{name}_z.zip"))
+
+    def late(key, l, r):
+        v = (importlib.import_module(name).VALUE * 10
+             + importlib.import_module(f"{name}_z").VALUE)
+        return {"k": [key[0]], "v": [v]}
+    got = run(late)
+    assert len(got) == 16 and (got["v"] == 78).all()
+
+
+_MARKER_SCRIPT = textwrap.dedent("""
+    import json, os, sys, zipimport
+    import numpy as np
+    import pandas as pd
+    sys.path.insert(0, sys.argv[1])
+    from kdtree_spark.index import cogroup
+    from kdtree_spark.session import get_spark
+
+    spark = get_spark("worker-boundary", cpus=2, shuffle_partitions=8)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    MARK = "kds-boundary-marker/"
+
+    def plant(key, l, r):
+        from pyspark import TaskContext
+        z = next(p for p in sys.path
+                 if p.endswith(".zip") and p in zipimport._zip_directory_cache)
+        files = zipimport._zip_directory_cache[z]
+        had = MARK in files
+        files[MARK] = next(iter(files.values()))
+        return {"pid": [os.getpid()],
+                "task": [TaskContext.get().taskAttemptId()], "had": [had]}
+
+    keys = pd.DataFrame({"k": np.arange(32, dtype=np.int64)})
+    left = spark.createDataFrame(keys.assign(a=1))
+    right = spark.createDataFrame(keys.assign(b=1))
+    rows = []
+    for _ in range(3):
+        rows += [r.asDict() for r in cogroup(
+            left, right, ["k"], plant,
+            "pid long, task long, had boolean").collect()]
+    spark.stop()
+    print(json.dumps(rows))
+""")
+
+
+def test_tasks_run_the_narrowed_rescan():
+    """Index kernels really narrow the per-task rescan: a marker key
+    that one task plants in the zip directory cache of an archive on
+    the worker path is still there in that worker's later tasks (a full
+    rescan replaces the directory and drops it). Own session, 2 task
+    threads, 24 tasks through index.cogroup."""
+    out = subprocess.run(
+        [sys.executable, "-c", _MARKER_SCRIPT, ROOT], cwd=ROOT,
+        capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = pd.DataFrame(json.loads(out.stdout.strip().splitlines()[-1]))
+    assert rows["task"].nunique() >= 8
+    reused = 0
+    for _, w in rows.groupby("pid"):
+        first = w["task"].min()
+        later = w[w["task"] > first]
+        reused += later["task"].nunique()
+        assert later["had"].all(), w.sort_values("task")
+    assert reused >= 1  # some worker ran more than one task
+
+
+def _points(rng, n: int, fmode: bool, xmax: int) -> np.ndarray:
+    if fmode:
+        return np.column_stack([rng.uniform(0, xmax, n),
+                                rng.uniform(0, COORD_LIMIT, n)])
+    return np.column_stack([rng.integers(0, xmax, n),
+                            rng.integers(0, COORD_LIMIT, n)])
+
+
+@pytest.mark.parametrize("fmode", [False, True], ids=["int", "f64"])
+def test_empty_side_groups_exact(spark, fmode):
+    """Groups with one empty side at the Arrow boundary, on Grid(4):
+    an insert into a cell without a blob (apply_updates' brand-new-cell
+    branch), a delete of every point of one cell, then kNN queries whose
+    home cell is the emptied cell (the needy path) and range
+    count/report over it — each step checked against brute force."""
+    rng = np.random.default_rng(61 + fmode)
+    grid = Grid(4)
+    cw = grid.cw
+    n, k = 3000, 5
+    pts = _points(rng, n, fmode, 2 * cw)  # cells with cx in {0, 1} only
+    live = dict(zip(range(n), map(tuple, pts)))
+
+    def frame(ids, p, id_col="pid"):
+        return spark.createDataFrame(pd.DataFrame(
+            {id_col: np.asarray(ids, np.int64), "x": p[:, 0], "y": p[:, 1]}))
+
+    def check(index, q, boxes):
+        ids = np.array(list(live), np.int64)
+        p = np.array(list(live.values()))
+        got = (knn_join(index, frame(range(len(q)), q, "qid"), k)
+               .toPandas().sort_values(["qid", "rank"]))
+        exp_d, exp_i = bf.knn(p, ids, q, k)
+        np.testing.assert_array_equal(
+            got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
+        np.testing.assert_allclose(
+            got["dist_sq"].to_numpy(np.float64).reshape(len(q), k), exp_d)
+        barr = np.array(boxes, np.int64)
+        rc = (range_count(index, boxes).toPandas()
+              .sort_values("box_id")["cnt"].to_numpy())
+        np.testing.assert_array_equal(rc, bf.range_count(p, barr[:, 1:]))
+        rr = range_report(index, boxes).toPandas()
+        assert sorted(zip(rr["box_id"], rr["pid"])) == sorted(
+            (b, i) for b, _, i in bf.range_report(p, ids, barr[:, 1:]))
+
+    idx = SpatialIndex.build(spark, frame(list(live), pts), grid=grid,
+                             n_hint=n)
+    # the cell at cx = cy = 3 has no blob: its inserts build one
+    new = _points(rng, 40, fmode, cw) % cw + 3 * cw
+    new_ids = np.arange(n, n + len(new))
+    idx = idx.update(inserts=frame(new_ids, new))
+    live.update(zip(new_ids.tolist(), map(tuple, new)))
+    corner = [(0, 3 * cw, 3 * cw, 4 * cw - 1, 4 * cw - 1)]
+    check(idx, new[:4] - 7, corner)
+    # every point of the cell at cx = cy = 0 goes
+    gone = [i for i, (x, y) in live.items() if x < cw and y < cw]
+    assert gone
+    idx = idx.update(deletes=frame(gone, np.array([live[i] for i in gone])))
+    for i in gone:
+        del live[i]
+    home0 = [(0, 0, 0, cw - 1, cw - 1), (1, cw // 2, cw // 2, cw + 5, cw + 5)]
+    q = _points(rng, 6, fmode, cw) % cw  # home cell: the emptied one
+    check(idx, q, home0 + [(2, *c[1:]) for c in corner])
