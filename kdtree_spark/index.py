@@ -19,7 +19,9 @@ checkpointed touched-cell DELTA fragment layered over the inherited
 fragments, each filtered by the batch's touched-cell list, compacted
 every COMPACT_EVERY generations — untouched cells are never shuffled,
 deserialized, or rewritten. Deletes are partial-cover tolerant (`batch_delete.hpp:
-95-107`).
+95-107`). The read statistics travel with each batch: the new version's
+cell_stats / super_table are the parent's, patched with the delta's own
+blob rows, never a rescan of the fragments.
 
 Persistence is write-audit-publish: parquet + JSON manifest written to a
 temp dir, audited (row counts), then atomically renamed — the checkpoint
@@ -29,6 +31,7 @@ metrics (the analogue of the reference's per-run timing lines).
 
 from __future__ import annotations
 
+import contextlib
 import importlib
 import json
 import os
@@ -39,7 +42,7 @@ import zipimport
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, BooleanType
 
@@ -280,6 +283,57 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
             .groupBy(*keys).applyInArrow(_arrow_fn(kernel, schema), schema))
 
 
+def observed(obs: Observation) -> dict | None:
+    """The metrics `obs` collected, or None when its operator saw no
+    rows: AQE prunes an observed operator whose input turned out empty,
+    metrics and all (an empty row, which Observation.get rejects)."""
+    return obs.get if obs._jo.getRow().size() else None
+
+
+def free_checkpoint(ckpt: DataFrame) -> None:
+    """Free a localCheckpoint's blocks now. DataFrame.unpersist is a
+    cache-manager call that leaves them to GC and the ContextCleaner;
+    they belong to the materialized RDD that the checkpointed frame's
+    LogicalRDD wraps (queryExecution().toRdd() is only a wrapper over
+    it)."""
+    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _stored(df: DataFrame) -> bool:
+    """Whether every partition of a cache()d frame is in storage."""
+    cached = (df.sparkSession._jsparkSession.sharedState().cacheManager()
+              .lookupCachedData(df._jdf))
+    return bool(cached.isDefined() and cached.get().cachedRepresentation()
+                .cacheBuilder().isCachedColumnBuffersLoaded())
+
+
+def _fresh_cache(df: DataFrame) -> DataFrame:
+    """df with every column re-aliased, cached: fresh expression ids, so
+    queries can join/cogroup stats-derived frames against index.df
+    without tripping the ambiguous-self-join analyzer check."""
+    return df.select(*[F.col(c).alias(c) for c in df.columns]).cache()
+
+
+def _delta_cell_stats(rows: list, d: int, cdt) -> pd.DataFrame:
+    """cell_stats() rows of the cells an update rewrote, from the
+    update's blob rows (STATS_COLS[, bbox]): the same aggregation
+    cell_stats() runs over a blob table."""
+    lo, hi = bbox_cols(d)
+    b = pd.DataFrame([r[:len(STATS_COLS)] for r in rows],
+                     columns=STATS_COLS).astype(
+        {"cell": np.int64, "salt": np.int32, "cnt": np.int64,
+         **{c: cdt for c in STATS_COLS[-4:]}})
+    if d > 2:
+        box = np.array([r["bbox"] for r in rows], cdt).reshape(-1, 2 * d)
+        for j in range(2, d):
+            b[f"mn{j}"], b[f"mx{j}"] = box[:, j], box[:, d + j]
+    # a blob's row once, even if a re-run task reported it again
+    b = b[b["cnt"] > 0].drop_duplicates(["cell", "salt"])
+    return b.groupby("cell", as_index=False).agg(
+        **{c: (c, "min") for c in lo}, **{c: (c, "max") for c in hi},
+        ccnt=("cnt", "sum"), maxsalt=("salt", "max"))
+
+
 class SpatialIndex:
     def __init__(self, spark: SparkSession, grid: Grid, df: DataFrame,
                  manifest: dict | None = None,
@@ -300,13 +354,24 @@ class SpatialIndex:
         self._pyramid: list | None = None
         # delta versioning (update()): df == union of fragments; each
         # update checkpoints ONLY its touched-cell delta and filters the
-        # inherited fragments to their untouched cells. _ckpt_handles
-        # maps fragment key -> materialized-RDD handle (for freeing
-        # checkpoint blocks); _cached_frames lists cache()d frames this
-        # version's plan still references (for successor-aware release).
+        # inherited fragments to their untouched cells. _ckpts maps
+        # fragment key -> localCheckpointed frame (free_checkpoint);
+        # _cached_frames lists cache()d frames this version's plan still
+        # references (for successor-aware release).
         self._frags: list[DataFrame] = [df]
-        self._ckpt_handles: dict[str, object] = {}
+        self._ckpts: dict[str, DataFrame] = {}
         self._cached_frames: list[DataFrame] = []
+        # carried stats (update()): _cells_pd is the whole cell_stats
+        # table on the driver, kept when the super grid is the fine grid;
+        # _stats_chain lists the cached frames the cell_stats plan reads,
+        # nearest first (None: it scans df); _super_base is (parent super
+        # table, touched cells) until super_table() patches it;
+        # _stats_held lists frames a predecessor's unpersist() left to
+        # this version because its stats still read them
+        self._cells_pd: pd.DataFrame | None = None
+        self._stats_chain: list[DataFrame] | None = None
+        self._super_base: tuple | None = None
+        self._stats_held: list[DataFrame] = []
 
     # ------------------------------------------------------------------ build
     @classmethod
@@ -390,7 +455,16 @@ class SpatialIndex:
         the pruning metadata for kNN phase 2 and range partition-pruning.
         Stays Spark-side: at 1.2e8 cells (the Grid.for_count projection
         for 1e12 rows) this is a few-GB cluster-resident table joined on
-        `cell`, never a driver collect."""
+        `cell`, never a driver collect.
+
+        A built or loaded index aggregates its blob table here (one
+        scan). A version from update() already has its table: the
+        parent's rows of the untouched cells plus the rows of the cells
+        the update rewrote, collected off the update's own checkpoint,
+        so reading it scans no fragment. When the super grid is the fine
+        grid that union is made on the driver (super_table holds every
+        cell) and the table is a local relation; otherwise it is a
+        cached union with the parent's table."""
         if self._cell_stats is None:
             d = len(self.coord_cols)
             # maxsalt: highest salt among NONEMPTY blobs — query operators
@@ -405,14 +479,24 @@ class SpatialIndex:
             for j in range(2, d):
                 aggs.append(F.min(F.col("bbox")[j]).alias(f"mn{j}"))
                 aggs.append(F.max(F.col("bbox")[d + j]).alias(f"mx{j}"))
-            agg = (self.df.filter(F.col("cnt") > 0)
-                   .groupBy("cell").agg(*aggs))
-            # re-alias every column: fresh expression ids, so queries can
-            # join/cogroup stats-derived frames against index.df without
-            # tripping the ambiguous-self-join analyzer check
-            self._cell_stats = agg.select(
-                *[F.col(c).alias(c) for c in agg.columns]).cache()
+            self._cell_stats = _fresh_cache(
+                self.df.filter(F.col("cnt") > 0).groupBy("cell").agg(*aggs))
         return self._cell_stats
+
+    def _stats_reads(self) -> list:
+        """The cached frames cell_stats() reads if computed now: none
+        once it is in storage; else the frames of its stats chain up to
+        the first stored one (a built or loaded version: its cached blob
+        frames)."""
+        if self._cell_stats is not None and _stored(self._cell_stats):
+            return []
+        reads = []
+        chain = self._stats_chain
+        for fr in self._cached_frames if chain is None else chain:
+            reads.append(fr)
+            if _stored(fr):
+                break
+        return reads
 
     def hot_cells(self) -> list:
         """Sorted ids of the cells whose query work fans out per blob
@@ -438,23 +522,44 @@ class SpatialIndex:
         candidate kernel (queries/knn.py) instead of against the
         O(cells) stats table (the reference analogue: the top levels of
         one global tree, build_tree.hpp:49-70, which every query can
-        afford to descend)."""
+        afford to descend).
+
+        With S == 1 this is the whole cell_stats table, kept on the
+        driver, so update() patches it there (no Spark job). With S > 1
+        only the super cells holding touched cells change: the parent's
+        table is patched with those, re-aggregated from this version's
+        cell_stats. A parent that never built its table leaves the whole
+        aggregation to this version's cell_stats, which still scans no
+        fragment."""
         if self._super_pd is None:
-            d = len(self.coord_cols)
             S, sg = self.super_grid()
             cs = self.cell_stats()
-            lo, hi = bbox_cols(d)
-            if S == 1:  # the super grid is the fine grid
-                sup = cs.select(F.col("cell").alias("scell"), "ccnt",
-                                *lo, *hi)
+            lo, hi = bbox_cols(len(self.coord_cols))
+            if S == 1:  # the super grid is the fine grid: keep it all
+                if self._cells_pd is None:
+                    self._cells_pd = cs.toPandas()
+                sup = self._cells_pd.rename(columns={"cell": "scell"})[
+                    ["scell", "ccnt", *lo, *hi]]
             else:
                 scell = F.expr(self.grid.parent_cell_sql(
                     "cell", self.grid.g, S, sg))
-                sup = cs.groupBy(scell.alias("scell")).agg(
+                hit = None
+                if self._super_base is not None:
+                    sup, touched = self._super_base
+                    t = np.asarray(touched, np.int64)
+                    hit = np.zeros_like(t)
+                    for j in range(self.grid.dims):
+                        hit = hit * sg + self.grid.cell_coord(t, j) // S
+                    cs = cs.filter(scell.isin(hit.tolist()))
+                new = cs.groupBy(scell.alias("scell")).agg(
                     F.sum("ccnt").alias("ccnt"),
                     *[F.min(c).alias(c) for c in lo],
-                    *[F.max(c).alias(c) for c in hi])
-            self._super_pd = sup.toPandas()
+                    *[F.max(c).alias(c) for c in hi]).toPandas()
+                if hit is not None:
+                    new = pd.concat([sup[~sup["scell"].isin(hit)],
+                                     new[sup.columns]], ignore_index=True)
+                sup, self._super_base = new, None
+            self._super_pd = sup.sort_values("scell", ignore_index=True)
         return self._super_pd
 
     def probes(self) -> DataFrame:
@@ -488,7 +593,7 @@ class SpatialIndex:
         (range_count.hpp:78-80) instead of visiting every leaf: a box
         costs O(perimeter) cells per level, never O(area) fine cells.
         """
-        if getattr(self, "_pyramid", None) is None:
+        if self._pyramid is None:
             F_ = PYRAMID_FACTOR
             levels = []
             cur = self.cell_stats()
@@ -505,10 +610,8 @@ class SpatialIndex:
                 for j in range(2, len(self.coord_cols)):
                     aggs.append(F.min(f"mn{j}").alias(f"mn{j}"))
                     aggs.append(F.max(f"mx{j}").alias(f"mx{j}"))
-                agg = (cur.groupBy(parent.alias("cell")).agg(*aggs)
-                       .withColumn("maxsalt", F.lit(0)))
-                nxt = agg.select(
-                    *[F.col(c).alias(c) for c in agg.columns]).cache()
+                nxt = _fresh_cache(cur.groupBy(parent.alias("cell"))
+                                   .agg(*aggs).withColumn("maxsalt", F.lit(0)))
                 curg, curw = ng, curw * F_
                 levels.append((curg, curw, nxt))
                 cur = nxt
@@ -544,6 +647,15 @@ class SpatialIndex:
         a large fraction of a huge grid, the touched-cell list grows
         with the batch, never with the index — at that ratio a rebuild
         is the honest competitor anyway.)
+
+        Read statistics travel with the delta, the way the reference
+        keeps subtree sizes current through a batch: an Observation on
+        the delta's checkpoint collects each rewritten blob's (cell,
+        salt, cnt, bbox), so the new version's cell_stats (the parent's
+        untouched rows plus those, aggregated per cell) and super_table
+        (the parent's, patched) cost no Spark job here, and the next
+        read scans no fragment for them. Compaction keeps them as they
+        are.
 
         Dimension-generic: works for any d = len(coord_cols) >= 2, same
         as the reference's dim-templated batch ops (`batch_insert.hpp:
@@ -624,17 +736,13 @@ class SpatialIndex:
         # delta. localCheckpoint truncates the delta's lineage (which
         # references the parent), so chained updates grow the plan by
         # one filter per fragment — linear, not exponential.
-        delta = new_blobs.localCheckpoint(eager=True)
-        # handle to the checkpoint's materialized RDD (the LogicalRDD
-        # the checkpointed frame wraps — queryExecution().toRdd() is
-        # only a wrapper over it): DataFrame.unpersist is a cache-
-        # manager call and does NOT free localCheckpoint blocks, so
-        # unpersist() releases them through this handle instead of
-        # waiting for nondeterministic GC + ContextCleaner
-        try:
-            delta_rdd = delta._jdf.queryExecution().logical().rdd()
-        except Exception:
-            delta_rdd = None
+        obs = Observation()  # single-use: one per update
+        stat_cols = [*STATS_COLS, *(["bbox"] if len(cc) > 2 else [])]
+        delta = (new_blobs.observe(obs, F.collect_list(F.struct(*stat_cols))
+                                   .alias("rows"))
+                 .localCheckpoint(eager=True))
+        rows = observed(obs)
+        cells = _delta_cell_stats(rows["rows"] if rows else [], len(cc), cdt)
         # the fragment filter names `salt` (never negative) next to
         # `cell`: a predicate on `cell` alone would be inferred through
         # the join key onto the small side of every semi-join a read
@@ -642,8 +750,8 @@ class SpatialIndex:
         # would become one per fragment
         untouched = ~in_touched | (F.col("salt") < 0)
         frags = [f.filter(untouched) for f in self._frags] + [delta]
-        handles = dict(self._ckpt_handles)
-        handles[str(uuid.uuid4())[:8]] = delta_rdd
+        ckpts = dict(self._ckpts)
+        ckpts[str(uuid.uuid4())[:8]] = delta
         cached = list(self._cached_frames)
         compacted = False
         if len(frags) > COMPACT_EVERY:
@@ -655,13 +763,8 @@ class SpatialIndex:
             union = frags[0]
             for f in frags[1:]:
                 union = union.unionByName(f)
-            full = union.localCheckpoint(eager=True)
-            try:
-                full_rdd = full._jdf.queryExecution().logical().rdd()
-            except Exception:
-                full_rdd = None
-            frags = [full]
-            handles = {str(uuid.uuid4())[:8]: full_rdd}
+            frags = [union.localCheckpoint(eager=True)]
+            ckpts = {str(uuid.uuid4())[:8]: frags[0]}
             cached = []
             compacted = True
         new_df = frags[0]
@@ -678,8 +781,35 @@ class SpatialIndex:
         new = SpatialIndex(self.spark, grid, new_df, manifest,
                            coord_cols=self.coord_cols)
         new._frags = frags
-        new._ckpt_handles = handles
+        new._ckpts = ckpts
         new._cached_frames = cached
+        # carried stats: the parent's rows of untouched cells plus the
+        # delta's (a touched cell whose blobs all emptied drops out)
+        prev = self.cell_stats()
+        if self._cells_pd is not None:
+            # S == 1: the parent's whole table is on the driver
+            # (super_table), so the union is done there and the new
+            # table is a local relation: nothing to cache or free, and
+            # no first-read job to put it in storage
+            keep = self._cells_pd[~self._cells_pd["cell"].isin(touched)]
+            new._cells_pd = pd.concat([keep, cells[keep.columns]],
+                                      ignore_index=True)
+            new._cell_stats = self.spark.createDataFrame(new._cells_pd,
+                                                         prev.schema)
+            new._stats_chain = []
+        else:
+            # a union's partitions add up: coalesced, every version keeps
+            # the scan formula's count (a cached plan is planned without
+            # AQE, so that is spark.sql.shuffle.partitions)
+            cs = prev.filter(~in_touched)
+            if len(cells):
+                cs = cs.unionByName(self.spark.createDataFrame(
+                    cells[prev.columns], prev.schema)).coalesce(
+                    int(self.spark.conf.get("spark.sql.shuffle.partitions")))
+            new._cell_stats = _fresh_cache(cs)
+            new._stats_chain = [prev, *self._stats_reads()]
+            if self._super_pd is not None:
+                new._super_base = (self._super_pd, touched)
         # the sorted touched-cell ids let an incremental snapshot commit
         # (catalog.SnapshotStore) rewrite only the buckets this update
         # changed
@@ -696,35 +826,39 @@ class SpatialIndex:
 
     def unpersist(self, successor: "SpatialIndex | None" = None) -> None:
         """Release this version's storage (streaming indexers call this
-        on superseded versions to bound executor storage): the cached
-        stats table always; cached blob frames and localCheckpoint RDD
-        blocks ONLY where `successor` (the version that replaced this
-        one) does not still reference them — a delta-update child shares
-        its parent's fragments, so freeing those would sever the child's
-        truncated lineage. After a compaction the child inherits
-        nothing, and the superseded version's whole storage is freed."""
-        pyramid = [s for _, _, s in (getattr(self, "_pyramid", None) or [])]
-        for st in (self._cell_stats, *pyramid):
-            try:
-                if st is not None:
-                    st.unpersist()
-            except Exception:
-                pass
+        on superseded versions to bound executor storage): its cached
+        stats tables, cached blob frames and localCheckpoint blocks,
+        except what `successor` (the version that replaced this one)
+        still reads. A delta-update child shares its parent's fragments,
+        so freeing those would sever the child's truncated lineage;
+        after a compaction it inherits none, and the superseded
+        version's blob storage is freed. Until the child's cell_stats
+        is in storage it reads the parent's (update()): those frames
+        are left to the child, whose own unpersist frees them once
+        nothing reads them."""
+        def has(frames, fr):
+            return any(fr is f for f in frames)
+
         succ_cached = successor._cached_frames if successor is not None else []
-        succ_keys = (set(successor._ckpt_handles)
-                     if successor is not None else set())
-        for fr in self._cached_frames:
-            if not any(fr is sc for sc in succ_cached):
-                try:
+        keep = ([*succ_cached, *successor._stats_reads()]
+                if successor is not None else [])
+        pyramid = [s for _, _, s in (self._pyramid or [])]
+        mine = []
+        for fr in (self._cell_stats, *pyramid, *self._stats_held,
+                   *self._cached_frames):
+            if fr is not None and not has(mine, fr):
+                mine.append(fr)
+        for fr in mine:
+            if not has(keep, fr):
+                with contextlib.suppress(Exception):
                     fr.unpersist()
-                except Exception:
-                    pass
-        for key, h in self._ckpt_handles.items():
-            if key not in succ_keys and h is not None:
-                try:
-                    h.unpersist(False)
-                except Exception:
-                    pass
+            elif not (has(succ_cached, fr) or has(successor._stats_held, fr)):
+                successor._stats_held.append(fr)
+        succ_keys = set(successor._ckpts) if successor is not None else set()
+        for key, ckpt in self._ckpts.items():
+            if key not in succ_keys:
+                with contextlib.suppress(Exception):
+                    free_checkpoint(ckpt)
 
     # -------------------------------------------------------------- persist
     def save(self, path: str) -> str:
@@ -765,21 +899,29 @@ class SpatialIndex:
 
     # ------------------------------------------------------------ validation
     def validate(self, expected_n: int | None = None) -> dict:
-        """Structural invariants (utility/validation.hpp analogue)."""
+        """Structural invariants (utility/validation.hpp analogue).
+        Raises RuntimeError naming the first one that fails (not
+        assert: must survive python -O)."""
         stats = self.stats()
         total = int(stats["cnt"].sum())
-        if expected_n is not None:
-            assert total == expected_n, (total, expected_n)
         live = stats[stats["cnt"] > 0]
-        assert (live["xmin"] <= live["xmax"]).all()
-        assert (live["ymin"] <= live["ymax"]).all()
+
+        def check(ok, what):
+            if not ok:
+                raise RuntimeError(f"validate: {what}")
+
+        check(expected_n is None or total == expected_n,
+              f"live points {total} != expected {expected_n}")
+        v = {c: live[c].to_numpy() for c in ("xmin", "ymin", "xmax", "ymax")}
+        check((v["xmin"] <= v["xmax"]).all(), "a live blob has xmin > xmax")
+        check((v["ymin"] <= v["ymax"]).all(), "a live blob has ymin > ymax")
         # every blob's bbox sits inside its cell's geometric bounds
         # (only for unsalted, tomb-free cells built straight from data)
         xlo, ylo, xhi, yhi = self.grid.cell_bounds(live["cell"].to_numpy())
-        fresh = (live["nextra"].to_numpy() == 0) & (live["ntomb"].to_numpy() == 0)
-        assert (live["xmin"].to_numpy()[fresh] >= xlo[fresh]).all()
-        assert (live["xmax"].to_numpy()[fresh] <= xhi[fresh]).all()
-        assert (live["ymin"].to_numpy()[fresh] >= ylo[fresh]).all()
-        assert (live["ymax"].to_numpy()[fresh] <= yhi[fresh]).all()
+        f = (live["nextra"].to_numpy() == 0) & (live["ntomb"].to_numpy() == 0)
+        check((v["xmin"][f] >= xlo[f]).all() and (v["xmax"][f] <= xhi[f]).all()
+              and (v["ymin"][f] >= ylo[f]).all()
+              and (v["ymax"][f] <= yhi[f]).all(),
+              "a fresh blob's bbox leaves its cell")
         return dict(total=total, cells=len(stats),
                     max_depth=int(stats["depth"].max()) if len(stats) else 0)

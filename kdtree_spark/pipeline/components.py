@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
+from ..index import free_checkpoint, observed
+
 
 def dedup_canonical(docs: DataFrame, pairs: DataFrame,
                     id_col: str = "doc_id",
@@ -82,11 +84,12 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
         nxt = (ls.select("u", "v", F.min("v").over(w).alias("mn"))
                .selectExpr("IF(v = mn, u, v) AS u", "mn AS v")
                .localCheckpoint())
-        if _observed(obs) == 0:
-            _free(nxt)
+        m = observed(obs)  # None: no rows, so none breaks the shape
+        if m is None or m["bad"] == 0:
+            free_checkpoint(nxt)
             break
         if rnd:  # round 0's input is the caller's plan
-            _free(e)
+            free_checkpoint(e)
         e = nxt
     else:
         raise RuntimeError(
@@ -100,17 +103,3 @@ def connected_components(edges: DataFrame, nodes: DataFrame | None = None,
                    .withColumn("comp", F.col("id")))
         out = out.unionByName(singles)
     return out
-
-
-def _observed(obs: Observation) -> int:
-    """The one observed metric. AQE prunes an observed operator whose
-    input turned out empty, metrics and all (an empty row, which
-    Observation.get rejects): no rows, so a count of 0."""
-    row = obs._jo.getRow()
-    return row.getLong(0) if row.size() else 0
-
-
-def _free(ckpt: DataFrame) -> None:
-    """Free a localCheckpoint's blocks: DataFrame.unpersist is a
-    cache-manager call and leaves them to GC (see SpatialIndex.update)."""
-    ckpt._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -1,7 +1,10 @@
 """Spark job budget of the operators: one knn_join call and one
 range_count call each run a bounded number of Spark jobs, and that
 number does not grow with the fragments SpatialIndex.update layers over
-an index; connected_components and dbscan stay within a fixed budget.
+an index; a read right after an update finds the read statistics the
+update carried, so it runs no job to rebuild them; a partial update
+runs a fixed number of jobs; connected_components and dbscan stay
+within a fixed budget.
 Answers are checked against brute force every time, so a plan that
 saves jobs by dropping work fails here too."""
 
@@ -23,6 +26,8 @@ from tests.test_components import _mk_edges, _uf_components
 from tests.test_dbscan import _brute_dbscan
 
 KNN_JOBS = 12  # Spark jobs per knn_join call, at any fragment count
+KNN_JOBS_AFTER_UPDATE = 8  # the same call with the stats carried
+UPDATE_JOBS = 4  # a partial update: touched cells, then its checkpoint
 PATH_CC_JOBS = 60  # connected_components on a 400-node path
 DBSCAN_JOBS = 70  # dbscan on 2,000 uniform points, ~10 neighbours each
 
@@ -89,16 +94,17 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
         dpid = rng.choice(np.array(list(live), np.int64), 40,
                           replace=False)
         dxy = np.array([live[int(i)] for i in dpid], np.int64)
-        idx = idx.update(
-            inserts=_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]),
-            deletes=_frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1]))
+        ups = (_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]),
+               _frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1]))
+        idx, ujobs = _counted(spark, lambda: idx.update(*ups))
+        assert ujobs == UPDATE_JOBS, ujobs
         for i in dpid:
             del live[int(i)]
         live.update({int(i): p for i, p in zip(ipid, ins)})
         jobs.append(read(idx))
     assert idx.manifest["frags"] == 3
-    (k1, r1), _, (k3, r3) = jobs
-    assert max(k1, k3) <= KNN_JOBS, jobs
+    (k1, r1), (k2, _), (k3, r3) = jobs
+    assert k1 <= KNN_JOBS and max(k2, k3) <= KNN_JOBS_AFTER_UPDATE, jobs
     assert k3 <= k1 and r3 <= r1, jobs
 
 

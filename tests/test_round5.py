@@ -168,25 +168,30 @@ def test_registry_fits_sweep_budget():
     assert list(q)[:3] == ["ann_srp_lsh", "ann_ivf", "image_phash_dedup"]
 
 
-def test_probe_enum_empty_guard_schema(spark):
-    """The probes-only-key defensive branch of _seed_enum returns an
-    empty frame whose columns are DERIVED from the declared cogroup
-    schema (they once drifted apart when the r5 fusion widened the
-    schema but not the guard). This exercises the exact shape the
-    guard emits — an all-object-dtype empty pandas frame — through a
-    real applyInPandas hop against the same schema string."""
-    schema = "qid long, x long, y long, ub double, cell long, fin0 boolean"
-    cols = [f.split()[0] for f in schema.split(", ")]
+def test_cogroup_empty_kernel_output_schema(spark):
+    """A kernel that returns {} (no rows) through index.cogroup yields
+    an empty frame whose columns and types are exactly the declared
+    schema: _arrow_fn builds the empty table from that schema, not from
+    what the kernel returned."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from kdtree_spark.index import cogroup
+    schema = ("qid long, x double, ub double, cell long, fin0 boolean, "
+              "probe array<bigint>, blob binary")
+    calls = spark.sparkContext.accumulator(0)
 
     def kernel(key, left, right):
-        return pd.DataFrame(columns=cols)
+        calls.add(1)
+        return {}
 
     left = spark.createDataFrame([(1, 0, 0)], "cell long, qid long, x long")
-    right = spark.createDataFrame([(1, 9)], "cell long, v long")
-    out = (left.groupby("cell").cogroup(right.groupby("cell"))
-           .applyInPandas(kernel, schema))
-    assert out.count() == 0
-    assert out.columns == cols
+    right = spark.createDataFrame([(1, 9), (2, 7)], "cell long, v long")
+    out = cogroup(left, right, ["cell"], kernel, schema)
+    assert out.collect() == []
+    assert calls.value == 2  # the kernel ran, once per cell
+    assert out.schema == _parse_datatype_string(schema)
+    got = out.toPandas()
+    assert got.empty and list(got.columns) == out.columns
 
 
 def test_knn_config_matrix(spark):
