@@ -299,14 +299,6 @@ def free_checkpoint(ckpt: DataFrame) -> None:
     ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def _stored(df: DataFrame) -> bool:
-    """Whether every partition of a cache()d frame is in storage."""
-    cached = (df.sparkSession._jsparkSession.sharedState().cacheManager()
-              .lookupCachedData(df._jdf))
-    return bool(cached.isDefined() and cached.get().cachedRepresentation()
-                .cacheBuilder().isCachedColumnBuffersLoaded())
-
-
 def _fresh_cache(df: DataFrame) -> DataFrame:
     """df with every column re-aliased, cached: fresh expression ids, so
     queries can join/cogroup stats-derived frames against index.df
@@ -361,17 +353,9 @@ class SpatialIndex:
         self._frags: list[DataFrame] = [df]
         self._ckpts: dict[str, DataFrame] = {}
         self._cached_frames: list[DataFrame] = []
-        # carried stats (update()): _cells_pd is the whole cell_stats
-        # table on the driver, kept when the super grid is the fine grid;
-        # _stats_chain lists the cached frames the cell_stats plan reads,
-        # nearest first (None: it scans df); _super_base is (parent super
-        # table, touched cells) until super_table() patches it;
-        # _stats_held lists frames a predecessor's unpersist() left to
-        # this version because its stats still read them
+        # the whole cell_stats table on the driver, kept by super_table()
+        # when the super grid is the fine grid; update() carries it
         self._cells_pd: pd.DataFrame | None = None
-        self._stats_chain: list[DataFrame] | None = None
-        self._super_base: tuple | None = None
-        self._stats_held: list[DataFrame] = []
 
     # ------------------------------------------------------------------ build
     @classmethod
@@ -457,14 +441,12 @@ class SpatialIndex:
         for 1e12 rows) this is a few-GB cluster-resident table joined on
         `cell`, never a driver collect.
 
-        A built or loaded index aggregates its blob table here (one
-        scan). A version from update() already has its table: the
-        parent's rows of the untouched cells plus the rows of the cells
-        the update rewrote, collected off the update's own checkpoint,
-        so reading it scans no fragment. When the super grid is the fine
-        grid that union is made on the driver (super_table holds every
-        cell) and the table is a local relation; otherwise it is a
-        cached union with the parent's table."""
+        Computed here by one scan of the blob table, except when
+        update() carried it: a parent whose whole table was on the
+        driver (super_table() with S == 1) hands its child its rows of
+        the untouched cells plus the rows of the cells the update
+        rewrote, collected off the update's own checkpoint, as a local
+        relation that scans no fragment."""
         if self._cell_stats is None:
             d = len(self.coord_cols)
             # maxsalt: highest salt among NONEMPTY blobs — query operators
@@ -482,21 +464,6 @@ class SpatialIndex:
             self._cell_stats = _fresh_cache(
                 self.df.filter(F.col("cnt") > 0).groupBy("cell").agg(*aggs))
         return self._cell_stats
-
-    def _stats_reads(self) -> list:
-        """The cached frames cell_stats() reads if computed now: none
-        once it is in storage; else the frames of its stats chain up to
-        the first stored one (a built or loaded version: its cached blob
-        frames)."""
-        if self._cell_stats is not None and _stored(self._cell_stats):
-            return []
-        reads = []
-        chain = self._stats_chain
-        for fr in self._cached_frames if chain is None else chain:
-            reads.append(fr)
-            if _stored(fr):
-                break
-        return reads
 
     def hot_cells(self) -> list:
         """Sorted ids of the cells whose query work fans out per blob
@@ -524,13 +491,9 @@ class SpatialIndex:
         one global tree, build_tree.hpp:49-70, which every query can
         afford to descend).
 
-        With S == 1 this is the whole cell_stats table, kept on the
-        driver, so update() patches it there (no Spark job). With S > 1
-        only the super cells holding touched cells change: the parent's
-        table is patched with those, re-aggregated from this version's
-        cell_stats. A parent that never built its table leaves the whole
-        aggregation to this version's cell_stats, which still scans no
-        fragment."""
+        With S == 1 this is the whole cell_stats table, so it is kept on
+        the driver, and update() carries it there (no Spark job, no
+        fragment scan). With S > 1 each version aggregates its own."""
         if self._super_pd is None:
             S, sg = self.super_grid()
             cs = self.cell_stats()
@@ -543,22 +506,10 @@ class SpatialIndex:
             else:
                 scell = F.expr(self.grid.parent_cell_sql(
                     "cell", self.grid.g, S, sg))
-                hit = None
-                if self._super_base is not None:
-                    sup, touched = self._super_base
-                    t = np.asarray(touched, np.int64)
-                    hit = np.zeros_like(t)
-                    for j in range(self.grid.dims):
-                        hit = hit * sg + self.grid.cell_coord(t, j) // S
-                    cs = cs.filter(scell.isin(hit.tolist()))
-                new = cs.groupBy(scell.alias("scell")).agg(
+                sup = cs.groupBy(scell.alias("scell")).agg(
                     F.sum("ccnt").alias("ccnt"),
                     *[F.min(c).alias(c) for c in lo],
                     *[F.max(c).alias(c) for c in hi]).toPandas()
-                if hit is not None:
-                    new = pd.concat([sup[~sup["scell"].isin(hit)],
-                                     new[sup.columns]], ignore_index=True)
-                sup, self._super_base = new, None
             self._super_pd = sup.sort_values("scell", ignore_index=True)
         return self._super_pd
 
@@ -649,13 +600,15 @@ class SpatialIndex:
         is the honest competitor anyway.)
 
         Read statistics travel with the delta, the way the reference
-        keeps subtree sizes current through a batch: an Observation on
-        the delta's checkpoint collects each rewritten blob's (cell,
-        salt, cnt, bbox), so the new version's cell_stats (the parent's
-        untouched rows plus those, aggregated per cell) and super_table
-        (the parent's, patched) cost no Spark job here, and the next
-        read scans no fragment for them. Compaction keeps them as they
-        are.
+        keeps subtree sizes current through a batch, when the parent's
+        whole cell_stats table is on the driver (super_table() with
+        S == 1): an Observation on the delta's checkpoint collects each
+        rewritten blob's (cell, salt, cnt, bbox), and the new version's
+        cell_stats / super_table are the parent's rows of the untouched
+        cells plus those, aggregated per cell, in a driver-side table.
+        That costs no Spark job here, the next read scans no fragment for
+        them, and compaction keeps them as they are. Any other parent
+        leaves the new version to compute its own on first read.
 
         Dimension-generic: works for any d = len(coord_cols) >= 2, same
         as the reference's dim-templated batch ops (`batch_insert.hpp:
@@ -736,13 +689,13 @@ class SpatialIndex:
         # delta. localCheckpoint truncates the delta's lineage (which
         # references the parent), so chained updates grow the plan by
         # one filter per fragment — linear, not exponential.
-        obs = Observation()  # single-use: one per update
-        stat_cols = [*STATS_COLS, *(["bbox"] if len(cc) > 2 else [])]
-        delta = (new_blobs.observe(obs, F.collect_list(F.struct(*stat_cols))
-                                   .alias("rows"))
-                 .localCheckpoint(eager=True))
-        rows = observed(obs)
-        cells = _delta_cell_stats(rows["rows"] if rows else [], len(cc), cdt)
+        carry = self._cells_pd is not None
+        if carry:  # the rewritten blobs' stats rows ride on the checkpoint
+            obs = Observation()  # single-use: one per update
+            stat_cols = [*STATS_COLS, *(["bbox"] if len(cc) > 2 else [])]
+            new_blobs = new_blobs.observe(
+                obs, F.collect_list(F.struct(*stat_cols)).alias("rows"))
+        delta = new_blobs.localCheckpoint(eager=True)
         # the fragment filter names `salt` (never negative) next to
         # `cell`: a predicate on `cell` alone would be inferred through
         # the join key onto the small side of every semi-join a read
@@ -783,33 +736,19 @@ class SpatialIndex:
         new._frags = frags
         new._ckpts = ckpts
         new._cached_frames = cached
-        # carried stats: the parent's rows of untouched cells plus the
-        # delta's (a touched cell whose blobs all emptied drops out)
-        prev = self.cell_stats()
-        if self._cells_pd is not None:
-            # S == 1: the parent's whole table is on the driver
-            # (super_table), so the union is done there and the new
-            # table is a local relation: nothing to cache or free, and
-            # no first-read job to put it in storage
+        if carry:
+            # the parent's rows of untouched cells plus the delta's (a
+            # touched cell whose blobs all emptied drops out), unioned on
+            # the driver: the new table is a local relation, with nothing
+            # to cache or free and no lineage to any fragment
+            rows = observed(obs)
+            cells = _delta_cell_stats(rows["rows"] if rows else [],
+                                      len(cc), cdt)
             keep = self._cells_pd[~self._cells_pd["cell"].isin(touched)]
             new._cells_pd = pd.concat([keep, cells[keep.columns]],
                                       ignore_index=True)
-            new._cell_stats = self.spark.createDataFrame(new._cells_pd,
-                                                         prev.schema)
-            new._stats_chain = []
-        else:
-            # a union's partitions add up: coalesced, every version keeps
-            # the scan formula's count (a cached plan is planned without
-            # AQE, so that is spark.sql.shuffle.partitions)
-            cs = prev.filter(~in_touched)
-            if len(cells):
-                cs = cs.unionByName(self.spark.createDataFrame(
-                    cells[prev.columns], prev.schema)).coalesce(
-                    int(self.spark.conf.get("spark.sql.shuffle.partitions")))
-            new._cell_stats = _fresh_cache(cs)
-            new._stats_chain = [prev, *self._stats_reads()]
-            if self._super_pd is not None:
-                new._super_base = (self._super_pd, touched)
+            new._cell_stats = self.spark.createDataFrame(
+                new._cells_pd, self.cell_stats().schema)
         # the sorted touched-cell ids let an incremental snapshot commit
         # (catalog.SnapshotStore) rewrite only the buckets this update
         # changed
@@ -826,34 +765,25 @@ class SpatialIndex:
 
     def unpersist(self, successor: "SpatialIndex | None" = None) -> None:
         """Release this version's storage (streaming indexers call this
-        on superseded versions to bound executor storage): its cached
-        stats tables, cached blob frames and localCheckpoint blocks,
-        except what `successor` (the version that replaced this one)
-        still reads. A delta-update child shares its parent's fragments,
-        so freeing those would sever the child's truncated lineage;
-        after a compaction it inherits none, and the superseded
-        version's blob storage is freed. Until the child's cell_stats
-        is in storage it reads the parent's (update()): those frames
-        are left to the child, whose own unpersist frees them once
-        nothing reads them."""
-        def has(frames, fr):
-            return any(fr is f for f in frames)
-
-        succ_cached = successor._cached_frames if successor is not None else []
-        keep = ([*succ_cached, *successor._stats_reads()]
-                if successor is not None else [])
+        on superseded versions to bound executor storage): the cached
+        stats tables always (a successor's carried stats are a local
+        relation that never reads them); cached blob frames and
+        localCheckpoint blocks ONLY where `successor` (the version that
+        replaced this one) does not still reference them — a
+        delta-update child shares its parent's fragments, so freeing
+        those would sever the child's truncated lineage. After a
+        compaction the child inherits nothing, and the superseded
+        version's whole storage is freed."""
         pyramid = [s for _, _, s in (self._pyramid or [])]
-        mine = []
-        for fr in (self._cell_stats, *pyramid, *self._stats_held,
-                   *self._cached_frames):
-            if fr is not None and not has(mine, fr):
-                mine.append(fr)
-        for fr in mine:
-            if not has(keep, fr):
+        for st in (self._cell_stats, *pyramid):
+            if st is not None:
+                with contextlib.suppress(Exception):
+                    st.unpersist()
+        succ_cached = successor._cached_frames if successor is not None else []
+        for fr in self._cached_frames:
+            if not any(fr is sc for sc in succ_cached):
                 with contextlib.suppress(Exception):
                     fr.unpersist()
-            elif not (has(succ_cached, fr) or has(successor._stats_held, fr)):
-                successor._stats_held.append(fr)
         succ_keys = set(successor._ckpts) if successor is not None else set()
         for key, ckpt in self._ckpts.items():
             if key not in succ_keys:

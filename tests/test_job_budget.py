@@ -2,8 +2,9 @@
 range_count call each run a bounded number of Spark jobs, and that
 number does not grow with the fragments SpatialIndex.update layers over
 an index; a read right after an update finds the read statistics the
-update carried, so it runs no job to rebuild them; a partial update
-runs a fixed number of jobs; connected_components and dbscan stay
+update carried, so it runs no job to rebuild them; updates with no read
+between them hold no statistics; a partial update runs a fixed number of
+jobs; connected_components and dbscan stay
 within a fixed budget.
 Answers are checked against brute force every time, so a plan that
 saves jobs by dropping work fails here too."""
@@ -17,7 +18,7 @@ import pandas as pd
 
 from kdtree_spark import bruteforce as bf
 from kdtree_spark.grid import COORD_LIMIT, Grid
-from kdtree_spark.index import SpatialIndex
+from kdtree_spark.index import COMPACT_EVERY, SpatialIndex
 from kdtree_spark.pipeline.components import connected_components
 from kdtree_spark.queries.dbscan import dbscan
 from kdtree_spark.queries.knn import knn_join
@@ -106,6 +107,69 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
     (k1, r1), (k2, _), (k3, r3) = jobs
     assert k1 <= KNN_JOBS and max(k2, k3) <= KNN_JOBS_AFTER_UPDATE, jobs
     assert k3 <= k1 and r3 <= r1, jobs
+
+
+def test_updates_without_reads_stay_bounded(spark):
+    """A streaming indexer's shape: updates with no read between them,
+    each superseded version unpersisted at once. No version builds or
+    carries read statistics it was not asked for, so storage is held by
+    the live version's fragments only (and drops at compaction), and
+    the first kNN call after the chain runs within the budget of a fresh
+    index however long the chain was; the update after that read
+    carries the stats again."""
+    sc = spark.sparkContext
+    rng = np.random.default_rng(31)
+    n, k = 2000, 5
+    live = {int(i): p for i, p in enumerate(
+        rng.integers(0, COORD_LIMIT, size=(n, 2)))}
+    pts = np.array(list(live.values()), np.int64)
+    base = sc._jsc.getPersistentRDDs().size()
+    idx = SpatialIndex.build(
+        spark, _frame(spark, pid=np.arange(n, dtype=np.int64),
+                      x=pts[:, 0], y=pts[:, 1]),
+        grid=Grid(8), n_hint=n)
+
+    def step(index, g):
+        ins = rng.integers(0, COORD_LIMIT // 2, size=(20, 2))
+        ipid = np.arange(10**6 + 100 * g, 10**6 + 100 * g + 20,
+                         dtype=np.int64)
+        dpid = rng.choice(np.array(list(live), np.int64), 10,
+                          replace=False)
+        dxy = np.array([live[int(i)] for i in dpid], np.int64)
+        new = index.update(_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]),
+                           _frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1]))
+        index.unpersist(successor=new)
+        for i in dpid:
+            del live[int(i)]
+        live.update({int(i): p for i, p in zip(ipid, ins)})
+        return new
+
+    held = []
+    for g in range(COMPACT_EVERY + 2):
+        idx = step(idx, g)
+        assert idx._cell_stats is None and idx._cells_pd is None
+        held.append(sc._jsc.getPersistentRDDs().size() - base)
+    compact = [i for i in range(len(held))
+               if i and held[i] < held[i - 1]]
+    assert max(held) <= COMPACT_EVERY + 1 and compact, held
+
+    q = rng.integers(0, COORD_LIMIT, size=(16, 2))
+    qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),
+                 x=q[:, 0], y=q[:, 1])
+
+    def knn_jobs(index):
+        got, jobs = _counted(spark, lambda: knn_join(index, qdf, k)
+                             .toPandas().sort_values(["qid", "rank"]))
+        _, exp_i = bf.knn(np.array(list(live.values()), np.int64),
+                          np.array(list(live), np.int64), q, k)
+        np.testing.assert_array_equal(
+            got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
+        return jobs
+
+    cold = knn_jobs(idx)
+    assert cold <= KNN_JOBS, cold
+    idx = step(idx, len(held))
+    assert knn_jobs(idx) <= KNN_JOBS_AFTER_UPDATE
 
 
 def test_components_job_budget_on_a_path(spark):
