@@ -19,9 +19,10 @@ checkpointed touched-cell DELTA fragment layered over the inherited
 fragments, each filtered by the batch's touched-cell list, compacted
 every COMPACT_EVERY generations — untouched cells are never shuffled,
 deserialized, or rewritten. Deletes are partial-cover tolerant (`batch_delete.hpp:
-95-107`). The read statistics travel with each batch: the new version's
+95-107`). The read statistics travel with a batch whose parent holds
+them on the driver (the super grid is the fine grid): the new version's
 cell_stats / super_table are the parent's, patched with the delta's own
-blob rows, never a rescan of the fragments.
+blob rows, not a rescan of the fragments.
 
 Persistence is write-audit-publish: parquet + JSON manifest written to a
 temp dir, audited (row counts), then atomically renamed — the checkpoint
