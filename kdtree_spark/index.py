@@ -16,13 +16,16 @@ inside a cell, new rows append to the extra log / tombstone set and
 rebuild only past the INBALANCE_RATIO=30 threshold (`tree_node.hpp:
 127-131` analogue); across the index, each batch produces a
 checkpointed touched-cell DELTA fragment layered over the inherited
-fragments, each filtered by the batch's touched-cell list, compacted
-every COMPACT_EVERY generations — untouched cells are never shuffled,
-deserialized, or rewritten. Deletes are partial-cover tolerant (`batch_delete.hpp:
-95-107`). The read statistics travel with a batch whose parent holds
-them on the driver (the super grid is the fine grid): the new version's
-cell_stats / super_table are the parent's, patched with the delta's own
-blob rows, not a rescan of the fragments.
+fragments, each filtered by the batch's touched-cell list — untouched
+cells are never shuffled, deserialized, or rewritten. A fragment whose
+rows later deltas all rewrote leaves the union, as the reference's
+rebuilt subtree replaces the old one (`batch_insert.hpp:60-191`), and a
+full compaction bounds the fragments that stay. Deletes are
+partial-cover tolerant (`batch_delete.hpp:95-107`). The read statistics
+travel with a batch whose parent holds them on the driver (the super
+grid is the fine grid): the new version's cell_stats / super_table are
+the parent's, patched with the delta's own blob rows, not a rescan of
+the fragments.
 
 Persistence is write-audit-publish: parquet + JSON manifest written to a
 temp dir, audited (row counts), then atomically renamed — the checkpoint
@@ -33,12 +36,14 @@ metrics (the analogue of the reference's per-run timing lines).
 from __future__ import annotations
 
 import contextlib
+import functools
 import importlib
 import json
 import os
 import time
 import uuid
 import zipimport
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -101,8 +106,8 @@ def _hot_pred():
     hot (the cell's highest non-empty salt + 1 >= FANOUT_MIN_BLOBS)."""
     return (F.col("cnt") > 0) & (F.col("salt") >= FANOUT_MIN_BLOBS - 1)
 
-COMPACT_EVERY = int(os.environ.get("KDS_COMPACT_EVERY", "8"))
-# delta-update generations before a full compaction checkpoint
+COMPACT_EVERY = 8  # an update that would leave more fragments than
+# this checkpoints their union as one (a compaction)
 
 PROBE_CAP = 1024
 PROBE_FRACTION = 32
@@ -300,6 +305,30 @@ def free_checkpoint(ckpt: DataFrame) -> None:
     ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
+class _Frag(NamedTuple):
+    """One fragment of an index version's blob table: `frame` (what
+    reads scan), the cache()d or localCheckpointed `store` that holds
+    its blocks (None: nothing to free), and the `live` blob rows frame
+    serves (None: unknown, never dropped)."""
+    frame: DataFrame
+    store: DataFrame | None
+    live: int | None
+
+
+def _free(store: DataFrame) -> None:
+    """Release a fragment's storage: a cache()d frame's cache entry, or
+    a localCheckpoint's blocks."""
+    with contextlib.suppress(Exception):
+        if store.is_cached:
+            store.unpersist()
+        else:
+            free_checkpoint(store)
+
+
+def _union(frames) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
 def _fresh_cache(df: DataFrame) -> DataFrame:
     """df with every column re-aliased, cached: fresh expression ids, so
     queries can join/cogroup stats-derived frames against index.df
@@ -345,15 +374,11 @@ class SpatialIndex:
         self._cell_stats: DataFrame | None = None
         self._super_pd: pd.DataFrame | None = None
         self._pyramid: list | None = None
-        # delta versioning (update()): df == union of fragments; each
-        # update checkpoints ONLY its touched-cell delta and filters the
-        # inherited fragments to their untouched cells. _ckpts maps
-        # fragment key -> localCheckpointed frame (free_checkpoint);
-        # _cached_frames lists cache()d frames this version's plan still
-        # references (for successor-aware release).
-        self._frags: list[DataFrame] = [df]
-        self._ckpts: dict[str, DataFrame] = {}
-        self._cached_frames: list[DataFrame] = []
+        # delta versioning (update()): df is the union of the fragments'
+        # frames. A version made from a plain frame is one fragment that
+        # holds no storage; a build or load manifest gives its blob row
+        # count
+        self._frags = [_Frag(df, None, self.manifest.get("cells"))]
         # the whole cell_stats table on the driver, kept by super_table()
         # when the super grid is the fine grid; update() carries it
         self._cells_pd: pd.DataFrame | None = None
@@ -423,7 +448,7 @@ class SpatialIndex:
                         coord_cols=list(coord_cols),
                         version=str(uuid.uuid4())[:8])
         idx = cls(spark, grid, df, manifest, coord_cols=coord_cols)
-        idx._cached_frames = [df]
+        idx._frags = [_Frag(df, df, manifest["cells"])]
         return idx
 
     # ------------------------------------------------------------------ stats
@@ -593,18 +618,26 @@ class SpatialIndex:
         filtered to its untouched cells — untouched blobs are neither
         shuffled, deserialized, nor rewritten to storage, so a 0.01%
         batch pays O(batch), not O(index), in both compute AND
-        materialized bytes. Every COMPACT_EVERY generations a full
-        compaction checkpoint bounds the fragment count. Touched cells
-        go log-structured with threshold rebuild. (For batches touching
-        a large fraction of a huge grid, the touched-cell list grows
-        with the batch, never with the index — at that ratio a rebuild
-        is the honest competitor anyway.)
+        materialized bytes. Touched cells go log-structured with
+        threshold rebuild. (For batches touching a large fraction of a
+        huge grid, the touched-cell list grows with the batch, never
+        with the index — at that ratio a rebuild is the honest
+        competitor anyway.)
+
+        Superseded fragments leave the union. Each fragment counts the
+        blob rows it still serves; the delta rewrites every blob of a
+        touched cell, so this update subtracts the (cell, salt) keys an
+        Observation per fragment saw it feed into the cogroup (a set: a
+        re-run task cannot subtract twice). A fragment at 0, an empty
+        delta included, is left out; one of unknown count never is. An
+        update that would leave more than COMPACT_EVERY fragments
+        checkpoints their union as one.
 
         Read statistics travel with the delta, the way the reference
         keeps subtree sizes current through a batch, when the parent's
         whole cell_stats table is on the driver (super_table() with
-        S == 1): an Observation on the delta's checkpoint collects each
-        rewritten blob's (cell, salt, cnt, bbox), and the new version's
+        S == 1): the delta's Observation collects each rewritten blob's
+        (cell, salt, cnt, bbox), and the new version's
         cell_stats / super_table are the parent's rows of the untouched
         cells plus those, aggregated per cell, in a driver-side table.
         That costs no Spark job here, the next read scans no fragment for
@@ -679,8 +712,13 @@ class SpatialIndex:
         touched = sorted(int(r["cell"])
                          for r in ups.select("cell").distinct().collect())
         in_touched = F.col("cell").isin(touched)
+        fed = [Observation() for _ in self._frags]  # single-use: one each
         new_blobs = cogroup(
-            ups, self.df.filter(in_touched).select("cell", "salt", "blob"),
+            ups, _union(
+                f.frame.filter(in_touched).select("cell", "salt", "blob")
+                .observe(o, F.collect_set(F.struct("cell", "salt"))
+                         .alias("keys"))
+                for f, o in zip(self._frags, fed)),
             ["cell"], apply_updates, schema)
         # DELTA versioning: checkpoint ONLY the rebuilt touched-cell
         # blobs — O(batch) materialization, never O(index). The new
@@ -689,41 +727,43 @@ class SpatialIndex:
         # deserialized, NOR rewritten to storage), unioned with the
         # delta. localCheckpoint truncates the delta's lineage (which
         # references the parent), so chained updates grow the plan by
-        # one filter per fragment — linear, not exponential.
-        carry = self._cells_pd is not None
-        if carry:  # the rewritten blobs' stats rows ride on the checkpoint
-            obs = Observation()  # single-use: one per update
-            stat_cols = [*STATS_COLS, *(["bbox"] if len(cc) > 2 else [])]
-            new_blobs = new_blobs.observe(
-                obs, F.collect_list(F.struct(*stat_cols)).alias("rows"))
-        delta = new_blobs.localCheckpoint(eager=True)
+        # one filter per fragment — linear, not exponential. The
+        # rewritten blobs' stats rows, and so the delta's row count,
+        # ride on the checkpoint.
+        obs = Observation()
+        stat_cols = [*STATS_COLS, *(["bbox"] if len(cc) > 2 else [])]
+        delta = new_blobs.observe(
+            obs, F.collect_list(F.struct(*stat_cols)).alias("rows")
+        ).localCheckpoint(eager=True)
+        rows = observed(obs)
+        rows = rows["rows"] if rows else []
         # the fragment filter names `salt` (never negative) next to
         # `cell`: a predicate on `cell` alone would be inferred through
         # the join key onto the small side of every semi-join a read
         # pushes into the fragment union, so one broadcast per read
         # would become one per fragment
         untouched = ~in_touched | (F.col("salt") < 0)
-        frags = [f.filter(untouched) for f in self._frags] + [delta]
-        ckpts = dict(self._ckpts)
-        ckpts[str(uuid.uuid4())[:8]] = delta
-        cached = list(self._cached_frames)
-        compacted = False
-        if len(frags) > COMPACT_EVERY:
-            # compaction: one full materialization every COMPACT_EVERY
-            # generations bounds both fragment count and the filter
-            # stack; the pre-compaction fragments' blocks are freed when
-            # superseded versions call unpersist(successor=...) — they
-            # are NOT inherited past this point.
-            union = frags[0]
-            for f in frags[1:]:
-                union = union.unionByName(f)
-            frags = [union.localCheckpoint(eager=True)]
-            ckpts = {str(uuid.uuid4())[:8]: frags[0]}
-            cached = []
-            compacted = True
-        new_df = frags[0]
-        for f in frags[1:]:
-            new_df = new_df.unionByName(f)
+        frags = []
+        for f, o in zip(self._frags, fed):
+            keys = observed(o)
+            if f.live is not None:
+                f = f._replace(live=f.live - len(keys["keys"] if keys else ()))
+            if f.live != 0:
+                frags.append(f._replace(frame=f.frame.filter(untouched)))
+        nkeys = len({(r["cell"], r["salt"]) for r in rows})
+        if nkeys or not frags:
+            frags.append(_Frag(delta, delta, nkeys))
+        else:  # an empty delta: nothing reads it
+            free_checkpoint(delta)
+        compacted = len(frags) > COMPACT_EVERY
+        if compacted:
+            # the inherited fragments' blocks are freed when the parent
+            # calls unpersist(successor=...), the delta's here: nothing
+            # past this point reads them
+            live = [f.live for f in frags]
+            ckpt = _union(f.frame for f in frags).localCheckpoint(eager=True)
+            free_checkpoint(delta)
+            frags = [_Frag(ckpt, ckpt, None if None in live else sum(live))]
         # no per-update blob-row count: nothing load-bearing reads it
         # (save() audits its own row counts) and it cost a Spark job
         # per chained update
@@ -732,19 +772,15 @@ class SpatialIndex:
                         hot_cells=self.hot_cells(),
                         wall_sec=time.time() - t0,
                         coord_cols=cc, version=str(uuid.uuid4())[:8])
-        new = SpatialIndex(self.spark, grid, new_df, manifest,
-                           coord_cols=self.coord_cols)
+        new = SpatialIndex(self.spark, grid, _union(f.frame for f in frags),
+                           manifest, coord_cols=self.coord_cols)
         new._frags = frags
-        new._ckpts = ckpts
-        new._cached_frames = cached
-        if carry:
+        if self._cells_pd is not None:
             # the parent's rows of untouched cells plus the delta's (a
             # touched cell whose blobs all emptied drops out), unioned on
             # the driver: the new table is a local relation, with nothing
             # to cache or free and no lineage to any fragment
-            rows = observed(obs)
-            cells = _delta_cell_stats(rows["rows"] if rows else [],
-                                      len(cc), cdt)
+            cells = _delta_cell_stats(rows, len(cc), cdt)
             keep = self._cells_pd[~self._cells_pd["cell"].isin(touched)]
             new._cells_pd = pd.concat([keep, cells[keep.columns]],
                                       ignore_index=True)
@@ -757,39 +793,36 @@ class SpatialIndex:
         return new
 
     def cache(self) -> "SpatialIndex":
-        """Cache this version's blob table and register the cached frame
-        for successor-aware release (used after load())."""
+        """Cache this version's blob table as its one fragment, which
+        unpersist(successor=...) frees once no successor reads it (used
+        after load(), whose one fragment holds no storage; it keeps the
+        fragment's live row count, so an update can still drop it)."""
+        live = [f.live for f in self._frags]
         self.df = self.df.cache()
-        self._frags = [self.df]
-        self._cached_frames = [self.df]
+        self._frags = [_Frag(self.df, self.df,
+                             None if None in live else sum(live))]
         return self
 
     def unpersist(self, successor: "SpatialIndex | None" = None) -> None:
         """Release this version's storage (streaming indexers call this
         on superseded versions to bound executor storage): the cached
         stats tables always (a successor's carried stats are a local
-        relation that never reads them); cached blob frames and
+        relation that never reads them); a fragment's cached frame or
         localCheckpoint blocks ONLY where `successor` (the version that
-        replaced this one) does not still reference them — a
-        delta-update child shares its parent's fragments, so freeing
-        those would sever the child's truncated lineage. After a
-        compaction the child inherits nothing, and the superseded
-        version's whole storage is freed."""
+        replaced this one) does not still read them — a delta-update
+        child shares its parent's live fragments, so freeing those would
+        sever the child's truncated lineage. The fragments the child
+        dropped (every row rewritten) are freed, and after a compaction
+        the child inherits nothing, so all of this version's are."""
         pyramid = [s for _, _, s in (self._pyramid or [])]
         for st in (self._cell_stats, *pyramid):
             if st is not None:
                 with contextlib.suppress(Exception):
                     st.unpersist()
-        succ_cached = successor._cached_frames if successor is not None else []
-        for fr in self._cached_frames:
-            if not any(fr is sc for sc in succ_cached):
-                with contextlib.suppress(Exception):
-                    fr.unpersist()
-        succ_keys = set(successor._ckpts) if successor is not None else set()
-        for key, ckpt in self._ckpts.items():
-            if key not in succ_keys:
-                with contextlib.suppress(Exception):
-                    free_checkpoint(ckpt)
+        kept = [f.store for f in successor._frags] if successor else []
+        for f in self._frags:
+            if f.store is not None and not any(f.store is k for k in kept):
+                _free(f.store)
 
     # -------------------------------------------------------------- persist
     def save(self, path: str) -> str:

@@ -4,8 +4,8 @@ number does not grow with the fragments SpatialIndex.update layers over
 an index; a read right after an update finds the read statistics the
 update carried, so it runs no job to rebuild them; updates with no read
 between them hold no statistics; a partial update runs a fixed number of
-jobs; connected_components and dbscan stay
-within a fixed budget.
+jobs, and a chain of whole-index updates stays at one fragment;
+connected_components and dbscan stay within a fixed budget.
 Answers are checked against brute force every time, so a plan that
 saves jobs by dropping work fails here too."""
 
@@ -29,6 +29,7 @@ from tests.test_dbscan import _brute_dbscan
 KNN_JOBS = 12  # Spark jobs per knn_join call, at any fragment count
 KNN_JOBS_AFTER_UPDATE = 8  # the same call with the stats carried
 UPDATE_JOBS = 4  # a partial update: touched cells, then its checkpoint
+# (one job more when it compacts)
 PATH_CC_JOBS = 60  # connected_components on a 400-node path
 DBSCAN_JOBS = 70  # dbscan on 2,000 uniform points, ~10 neighbours each
 
@@ -46,8 +47,49 @@ def _counted(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _persisted(spark) -> set:
+    """Ids of the RDDs Spark holds in storage."""
+    return {int(i) for i in
+            spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _owning(spark, owned: set, fn):
+    """fn(), adding the RDDs it left in storage to `owned`: the storage
+    count of a chain then ignores what other calls (reads, earlier
+    tests) left to Spark's cleaner."""
+    before = _persisted(spark)
+    out = fn()
+    owned.update(_persisted(spark) - before)
+    return out
+
+
 def _frame(spark, **cols):
     return spark.createDataFrame(pd.DataFrame(cols))
+
+
+def _read(spark, index, live: dict, q: np.ndarray, boxes: list,
+          k: int) -> tuple:
+    """(kNN jobs, range_count jobs) of one k-NN batch `q` and one box
+    batch on `index`, each answer checked against brute force over
+    `live` ({pid: (x, y)})."""
+    qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),
+                 x=q[:, 0], y=q[:, 1])
+    got, kjobs = _counted(spark, lambda: knn_join(index, qdf, k)
+                          .toPandas().sort_values(["qid", "rank"]))
+    rc, rjobs = _counted(spark, lambda: range_count(index, boxes)
+                         .toPandas().set_index("box_id")["cnt"])
+    ids = np.array(list(live), np.int64)
+    p = np.array(list(live.values()), np.int64)
+    exp_d, exp_i = bf.knn(p, ids, q, k)
+    np.testing.assert_array_equal(
+        got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
+    np.testing.assert_array_equal(
+        got["dist_sq"].to_numpy(np.int64).reshape(len(q), k),
+        exp_d.astype(np.int64))
+    for b in boxes:
+        inside = np.all((p >= b[1:3]) & (p <= b[3:]), axis=1)
+        assert rc[b[0]] == int(inside.sum()), b
+    return kjobs, rjobs
 
 
 def test_knn_and_range_job_budget_flat_over_fragments(spark):
@@ -61,31 +103,11 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
                       x=pts[:, 0], y=pts[:, 1]),
         grid=Grid(8), n_hint=n)
     q = rng.integers(0, COORD_LIMIT, size=(32, 2))
-    qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),
-                 x=q[:, 0], y=q[:, 1])
     lo = rng.integers(0, COORD_LIMIT - 200_000, size=(16, 2))
     boxes = [(i, *lo[i], *(lo[i] + rng.integers(1_000, 200_000, 2)))
              for i in range(len(lo))]
 
-    def read(index):
-        got, kjobs = _counted(spark, lambda: knn_join(index, qdf, k)
-                              .toPandas().sort_values(["qid", "rank"]))
-        rc, rjobs = _counted(spark, lambda: range_count(index, boxes)
-                             .toPandas().set_index("box_id")["cnt"])
-        ids = np.array(list(live), np.int64)
-        p = np.array(list(live.values()), np.int64)
-        exp_d, exp_i = bf.knn(p, ids, q, k)
-        np.testing.assert_array_equal(
-            got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
-        np.testing.assert_array_equal(
-            got["dist_sq"].to_numpy(np.int64).reshape(len(q), k),
-            exp_d.astype(np.int64))
-        for b in boxes:
-            inside = np.all((p >= b[1:3]) & (p <= b[3:]), axis=1)
-            assert rc[b[0]] == int(inside.sum()), b
-        return kjobs, rjobs
-
-    jobs = [read(idx)]
+    jobs = [_read(spark, idx, live, q, boxes, k)]
     for g in range(2):
         # a batch confined to a quarter of the domain touches only some
         # cells, so every older fragment stays in the version's plan
@@ -102,56 +124,116 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
         for i in dpid:
             del live[int(i)]
         live.update({int(i): p for i, p in zip(ipid, ins)})
-        jobs.append(read(idx))
+        jobs.append(_read(spark, idx, live, q, boxes, k))
     assert idx.manifest["frags"] == 3
     (k1, r1), (k2, _), (k3, r3) = jobs
     assert k1 <= KNN_JOBS and max(k2, k3) <= KNN_JOBS_AFTER_UPDATE, jobs
     assert k3 <= k1 and r3 <= r1, jobs
 
 
+def test_whole_index_updates_keep_one_fragment(spark):
+    """update-mix's shape: every batch touches every cell, so the delta
+    rewrites every inherited blob row and the older fragments leave the
+    union. The chain stays at one fragment with no compaction, the
+    storage it holds stays flat while each superseded version is
+    unpersisted, and the reads after each update run within the job
+    budgets of a carried-stats kNN and of a fresh index's range_count."""
+    rng = np.random.default_rng(37)
+    n, k, grid = 2000, 5, Grid(8)
+    live = {int(i): p for i, p in enumerate(
+        rng.integers(0, COORD_LIMIT, size=(n, 2)))}
+    pts = np.array(list(live.values()), np.int64)
+    owned = set()
+    idx = _owning(spark, owned, lambda: SpatialIndex.build(
+        spark, _frame(spark, pid=np.arange(n, dtype=np.int64),
+                      x=pts[:, 0], y=pts[:, 1]),
+        grid=grid, n_hint=n))
+    q = rng.integers(0, COORD_LIMIT, size=(16, 2))
+    boxes = [(0, 0, 0, COORD_LIMIT - 1, COORD_LIMIT - 1),
+             (1, 100_000, 200_000, 400_000, 500_000)]
+    # one insert at the centre of every cell
+    c = np.arange(grid.g) * grid.cw + grid.cw // 2
+    centres = np.array([(x, y) for x in c for y in c], np.int64)
+
+    _, fresh_rjobs = _read(spark, idx, live, q, boxes, k)
+    held = []
+    for g in range(4):
+        ipid = np.arange(10**6 + 100 * g, 10**6 + 100 * g + len(centres),
+                         dtype=np.int64)
+        dpid = rng.choice(np.array(list(live), np.int64), 30,
+                          replace=False)
+        dxy = np.array([live[int(i)] for i in dpid], np.int64)
+        new = _owning(spark, owned, lambda: idx.update(
+            _frame(spark, pid=ipid, x=centres[:, 0], y=centres[:, 1]),
+            _frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1])))
+        idx.unpersist(successor=new)
+        idx = new
+        for i in dpid:
+            del live[int(i)]
+        live.update({int(i): p for i, p in zip(ipid, centres)})
+        assert len(idx.touched_cells) == grid.g ** 2
+        assert idx.manifest["frags"] == 1, idx.manifest
+        assert not idx.manifest["compacted"]
+        held.append(len(owned & _persisted(spark)))
+        kjobs, rjobs = _read(spark, idx, live, q, boxes, k)
+        assert kjobs <= KNN_JOBS_AFTER_UPDATE, kjobs
+        assert rjobs <= fresh_rjobs, (rjobs, fresh_rjobs)
+    assert held == [1] * len(held), held
+
+
 def test_updates_without_reads_stay_bounded(spark):
     """A streaming indexer's shape: updates with no read between them,
     each superseded version unpersisted at once. No version builds or
     carries read statistics it was not asked for, so storage is held by
-    the live version's fragments only (and drops at compaction), and
-    the first kNN call after the chain runs within the budget of a fresh
-    index however long the chain was; the update after that read
-    carries the stats again."""
-    sc = spark.sparkContext
+    the live version's fragments only, one persisted RDD each (and drops
+    at compaction, which frees the delta it folded in), and the first
+    kNN call after the chain runs within the budget of a fresh index
+    however long the chain was; the update after that read carries the
+    stats again. Each batch inserts into a cell of its own outside the
+    quarter the other rows go to, so no fragment is superseded and the
+    chain reaches a compaction."""
     rng = np.random.default_rng(31)
-    n, k = 2000, 5
+    n, k, grid = 2000, 5, Grid(8)
     live = {int(i): p for i, p in enumerate(
         rng.integers(0, COORD_LIMIT, size=(n, 2)))}
     pts = np.array(list(live.values()), np.int64)
-    base = sc._jsc.getPersistentRDDs().size()
-    idx = SpatialIndex.build(
+    owned = set()
+    idx = _owning(spark, owned, lambda: SpatialIndex.build(
         spark, _frame(spark, pid=np.arange(n, dtype=np.int64),
                       x=pts[:, 0], y=pts[:, 1]),
-        grid=Grid(8), n_hint=n)
+        grid=grid, n_hint=n))
 
     def step(index, g):
-        ins = rng.integers(0, COORD_LIMIT // 2, size=(20, 2))
+        own = (np.array([g % grid.g, grid.g // 2 + g // grid.g]) * grid.cw
+               + rng.integers(0, grid.cw, size=2))
+        ins = np.concatenate([rng.integers(0, COORD_LIMIT // 2, size=(19, 2)),
+                              [own]])
         ipid = np.arange(10**6 + 100 * g, 10**6 + 100 * g + 20,
                          dtype=np.int64)
-        dpid = rng.choice(np.array(list(live), np.int64), 10,
-                          replace=False)
+        quarter = [i for i, p in live.items() if max(p) < COORD_LIMIT // 2]
+        dpid = rng.choice(np.array(quarter, np.int64), 10, replace=False)
         dxy = np.array([live[int(i)] for i in dpid], np.int64)
-        new = index.update(_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]),
-                           _frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1]))
+        ups = (_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]),
+               _frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1]))
+        new, jobs = _counted(spark, lambda: _owning(
+            spark, owned, lambda: index.update(*ups)))
+        ujobs.append(jobs)
         index.unpersist(successor=new)
         for i in dpid:
             del live[int(i)]
         live.update({int(i): p for i, p in zip(ipid, ins)})
         return new
 
-    held = []
+    held, frags, ujobs = [], [], []
     for g in range(COMPACT_EVERY + 2):
         idx = step(idx, g)
         assert idx._cell_stats is None and idx._cells_pd is None
-        held.append(sc._jsc.getPersistentRDDs().size() - base)
-    compact = [i for i in range(len(held))
-               if i and held[i] < held[i - 1]]
-    assert max(held) <= COMPACT_EVERY + 1 and compact, held
+        held.append(len(owned & _persisted(spark)))
+        frags.append(idx.manifest["frags"])
+    assert frags == [*range(2, COMPACT_EVERY + 1), 1, 2, 3], frags
+    assert held == frags, (held, frags)
+    # a compaction costs one job more than a partial update
+    assert ujobs == [UPDATE_JOBS + (f == 1) for f in frags], ujobs
 
     q = rng.integers(0, COORD_LIMIT, size=(16, 2))
     qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),

@@ -1,6 +1,5 @@
-"""Round-2 additions: dimension-generic batch updates, Spark-side
-pruning stats, multi-index Hamming joins, the jaccard df cap, and
-overlapping-delete idempotence."""
+"""Round-2 additions: Spark-side pruning stats, multi-index Hamming
+joins, the jaccard df cap, and local tombstone idempotence."""
 
 import numpy as np
 import pytest
@@ -12,58 +11,6 @@ from kdtree_spark.grid import Grid
 from kdtree_spark.index import SpatialIndex
 from kdtree_spark.localtree import LocalKDTree
 from kdtree_spark.queries.knn import knn_candidates, knn_join
-
-
-def _d3_points(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_t2_li")
-    return spark.sql(
-        f"SELECT {points.PID_SQL} AS pid, {points.UNIFORM_X_SQL} AS x, "
-        f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z "
-        f"FROM _t2_li")
-
-
-def test_update_d3_vs_bruteforce(spark, sf_dir):
-    """Insert + delete on a 3-D index, then kNN — vs numpy brute force."""
-    pts = _d3_points(spark, sf_dir)
-    idx = SpatialIndex.build(spark, pts, grid=Grid(4),
-                             coord_cols=("x", "y", "z"))
-    ins = spark.sql(points.insert_batch_d3_sql("_t2_li"))
-    dele = spark.sql(points.delete_batch_d3_sql("_t2_li"))
-    idx2 = idx.update(inserts=ins, deletes=dele)
-
-    pd_all = pts.toPandas()
-    pd_ins = ins.toPandas()
-    pd_del = dele.toPandas()
-    live = pd_all[~pd_all["pid"].isin(set(pd_del["pid"]))]
-    import pandas as pd
-    live = pd.concat([live, pd_ins], ignore_index=True)
-    P = live[["x", "y", "z"]].to_numpy(np.int64)
-    ids = live["pid"].to_numpy(np.int64)
-
-    q = pts.filter("pid % 101 = 7").selectExpr("pid AS qid", "x", "y", "z")
-    got = (knn_join(idx2, q, 5).toPandas()
-           .sort_values(["qid", "rank"]).reset_index(drop=True))
-    qpd = q.toPandas().sort_values("qid")
-    Q = qpd[["x", "y", "z"]].to_numpy(np.int64)
-    exp_d, exp_i = bf.knn(P, ids, Q, 5)
-    got_i = got["nid"].to_numpy(np.int64).reshape(len(qpd), 5)
-    got_d = got["dist_sq"].to_numpy(np.int64).reshape(len(qpd), 5)
-    assert (got_i == exp_i).all()
-    assert (got_d == exp_d.astype(np.int64)).all()
-
-
-def test_update_counts_after_overlapping_deletes(spark, sf_dir):
-    """Deleting an already-deleted id must not double-subtract."""
-    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
-    idx = SpatialIndex.build(spark, pts, grid=Grid(4))
-    n = pts.count()
-    batch = pts.filter("pid % 10 = 1")
-    nb = batch.count()
-    idx2 = idx.update(deletes=batch)
-    idx3 = idx2.update(deletes=batch)  # fully overlapping second delete
-    assert idx2.validate()["total"] == n - nb
-    assert idx3.validate()["total"] == n - nb
 
 
 def test_local_tombstone_idempotent():
@@ -144,27 +91,6 @@ def test_rotate_split_rule():
     boxes = np.array([[0, 0, 0, 500_000, 700_000, 900_000]], np.int64)
     assert t_rot.range_count(boxes).tolist() == [
         int(np.all((pts >= boxes[0, :3]) & (pts <= boxes[0, 3:]), axis=1).sum())]
-
-
-def test_point_insert_delete_batch_of_one(spark, sf_dir):
-    """I2/D3: pointInsert/pointDelete = batch of exactly one row (and
-    an empty batch)."""
-    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
-    idx = SpatialIndex.build(spark, pts, grid=Grid(4))
-    n = pts.count()
-    one_new = spark.createDataFrame([(999_000_000_001, 123, 456)],
-                                    "pid long, x long, y long")
-    idx2 = idx.update(inserts=one_new)
-    assert idx2.validate()["total"] == n + 1
-    got = knn_join(idx2, spark.createDataFrame(
-        [(1, 123, 456)], "qid long, x long, y long"), 1).collect()
-    assert got[0]["nid"] == 999_000_000_001 and got[0]["dist_sq"] == 0
-    idx3 = idx2.update(deletes=one_new)
-    assert idx3.validate()["total"] == n
-    # and a batch of none: a new version with the same live points
-    idx4 = idx3.update(inserts=one_new.limit(0))
-    assert idx4.validate()["total"] == n
-    assert idx4.touched_cells == []
 
 
 def test_knn_hot_cell_salted_exact(spark, tmp_path):
@@ -293,53 +219,3 @@ def test_range_hot_cell_salted_exact(spark):
     for cid, cx, cy, r in circles:
         d2 = ((pts[:, 0] - cx) ** 2 + (pts[:, 1] - cy) ** 2)
         assert gotc[cid] == int((d2 <= r * r).sum())
-
-
-def test_delta_update_materializes_only_touched(spark):
-    """Delta-versioning contract: an update's checkpointed delta holds
-    ONLY the touched cells' blobs (O(batch), not O(index)); fragment
-    count grows by one per generation and resets at compaction; chained
-    results stay exact."""
-    import pandas as pd
-    from kdtree_spark.index import COMPACT_EVERY
-
-    rng = np.random.default_rng(31)
-    n = 30000
-    pts = pd.DataFrame({
-        "pid": np.arange(n, dtype=np.int64),
-        "x": rng.integers(0, 1_000_000, n).astype(np.int64),
-        "y": rng.integers(0, 1_000_000, n).astype(np.int64)})
-    idx = SpatialIndex.build(spark, spark.createDataFrame(pts),
-                             grid=Grid(16), n_hint=n)
-    ncells_total = idx.df.count()
-    # tiny batch confined to one corner -> few touched cells
-    ins = pd.DataFrame({
-        "pid": np.arange(10**7, 10**7 + 64, dtype=np.int64),
-        "x": rng.integers(0, 50_000, 64).astype(np.int64),
-        "y": rng.integers(0, 50_000, 64).astype(np.int64)})
-    up = idx.update(inserts=spark.createDataFrame(ins))
-    assert up.manifest["frags"] == 2 and not up.manifest["compacted"]
-    # the delta fragment (last frag) holds only the touched cells
-    delta_cells = up._frags[-1].count()
-    touched = len(up.touched_cells)
-    assert delta_cells <= touched + 1 < ncells_total / 4
-    # untouched fragment + delta reconstruct the full index exactly
-    assert up.df.count() == ncells_total  # same cells (no new cells here
-    # beyond touched ones that already existed)
-    total = up.df.agg(F.sum("cnt")).collect()[0][0]
-    assert total == n + 64
-    # drive past compaction
-    cur = up
-    compactions = 0
-    for g in range(COMPACT_EVERY + 1):
-        b = pd.DataFrame({
-            "pid": np.arange(2 * 10**7 + g * 100,
-                             2 * 10**7 + g * 100 + 50, dtype=np.int64),
-            "x": rng.integers(0, 1_000_000, 50).astype(np.int64),
-            "y": rng.integers(0, 1_000_000, 50).astype(np.int64)})
-        cur = cur.update(inserts=spark.createDataFrame(b))
-        compactions += int(cur.manifest["compacted"])
-    assert compactions >= 1
-    assert cur.manifest["frags"] <= COMPACT_EVERY
-    total = cur.df.agg(F.sum("cnt")).collect()[0][0]
-    assert total == n + 64 + 50 * (COMPACT_EVERY + 1)

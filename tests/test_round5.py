@@ -325,67 +325,6 @@ def test_range_circle_config_matrix(spark):
                                       err_msg=f"config {ci} circle")
 
 
-def test_update_salted_hot_cell_exact(spark):
-    """Batch insert into and delete from a SALTED hot cell (the one
-    index shape no update test covered): inserts land in some blob of
-    the cell, deletes are membership-routed across all its blobs, and
-    kNN + range count after the update must equal brute force over the
-    live set — inside the cluster and in the sparse background."""
-    from kdtree_spark import bruteforce as bf
-    from kdtree_spark.queries.knn import knn_join
-    from kdtree_spark.queries.ranges import range_count
-    rng = np.random.default_rng(17)
-    n = 8000
-    pts = np.concatenate([
-        rng.integers(0, 1000, size=(n - 1000, 2)),    # one-cell cluster
-        rng.integers(0, 1_000_000, size=(1000, 2)),   # sparse background
-    ]).astype(np.int64)
-    ids = np.arange(n, dtype=np.int64)
-    df = spark.createDataFrame(pd.DataFrame(
-        {"pid": ids, "x": pts[:, 0], "y": pts[:, 1]}))
-    idx = SpatialIndex.build(spark, df, grid=Grid(16), n_hint=n,
-                             hot_cell_cap=1024)
-    assert idx.df.groupBy("cell").count().filter("count > 1").count() >= 1
-    # inserts: 300 new points INTO the hot cluster + 50 background
-    ins_p = np.concatenate([
-        rng.integers(0, 1000, size=(300, 2)),
-        rng.integers(0, 1_000_000, size=(50, 2))]).astype(np.int64)
-    ins_i = np.arange(n, n + 350, dtype=np.int64)
-    # deletes: 400 cluster points + 100 background points
-    kill = np.concatenate([rng.permutation(n - 1000)[:400],
-                           n - 1000 + rng.permutation(1000)[:100]])
-    ins_df = spark.createDataFrame(pd.DataFrame(
-        {"pid": ins_i, "x": ins_p[:, 0], "y": ins_p[:, 1]}))
-    del_df = spark.createDataFrame(pd.DataFrame(
-        {"pid": ids[kill], "x": pts[kill, 0], "y": pts[kill, 1]}))
-    idx2 = idx.update(inserts=ins_df, deletes=del_df)
-    keep = np.setdiff1d(np.arange(n), kill)
-    live_p = np.concatenate([pts[keep], ins_p])
-    live_i = np.concatenate([ids[keep], ins_i])
-    assert idx2.validate()["total"] == len(live_i)
-    q = np.concatenate([
-        rng.integers(0, 1000, size=(15, 2)),
-        rng.integers(0, 1_000_000, size=(15, 2))]).astype(np.int64)
-    qdf = spark.createDataFrame(pd.DataFrame(
-        {"qid": np.arange(len(q)), "x": q[:, 0], "y": q[:, 1]}))
-    got = knn_join(idx2, qdf, 10).toPandas().sort_values(["qid", "rank"])
-    ed, ei = bf.knn(live_p, live_i, q, 10)
-    np.testing.assert_array_equal(
-        got["nid"].to_numpy(np.int64).reshape(len(q), 10), ei)
-    np.testing.assert_array_equal(
-        got["dist_sq"].to_numpy(np.int64).reshape(len(q), 10),
-        ed.astype(np.int64))
-    boxes = [(0, 0, 0, 999, 999), (1, 0, 0, 500, 500),
-             (2, 400_000, 400_000, 600_000, 600_000)]
-    rc = (range_count(idx2, boxes).toPandas()
-          .set_index("box_id")["cnt"].sort_index())
-    lo = np.array([b[1:3] for b in boxes])
-    hb = np.array([b[3:] for b in boxes])
-    exp = ((live_p[None, :, :] >= lo[:, None, :])
-           & (live_p[None, :, :] <= hb[:, None, :])).all(axis=2).sum(axis=1)
-    np.testing.assert_array_equal(rc.to_numpy(), exp)
-
-
 def test_hot_cell_knn_gate_fans_out_and_is_exact(spark):
     """The hot_cell_knn driver gate at sf0.01 must actually reach the
     salted (cell, salt) fan-out branch — at least one cell with >=

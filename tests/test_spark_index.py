@@ -2,16 +2,24 @@
 against the brute-force numpy oracle and DuckDB SQL (the same checks the
 driver's correctness gate performs)."""
 
+import json
+import os
+
 import duckdb
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from kdtree_spark import bruteforce as bf
 from kdtree_spark import fixtures, points
-from kdtree_spark.grid import Grid
+from kdtree_spark import index as index_mod
+from kdtree_spark.catalog import SnapshotStore
+from kdtree_spark.grid import COORD_LIMIT, Grid
 from kdtree_spark.index import SpatialIndex
 from kdtree_spark.queries.knn import knn_join
 from kdtree_spark.queries.ranges import circle_count, range_count, range_report
+from tests.test_job_budget import _read
 
 
 @pytest.fixture(scope="module", params=["uniform", "varden"])
@@ -228,3 +236,331 @@ def test_knn_d16_vs_bruteforce(spark, sf_dir):
         order = sorted(range(len(ids)), key=lambda i: (d2[i], ids[i]))[:5]
         assert list(grp.nid) == [ids[i] for i in order], qid
         assert list(grp.dist_sq) == [int(d2[i]) for i in order], qid
+
+
+# ------------------------------------------------------------ batch updates
+
+def _frame(spark, pid, p):
+    return spark.createDataFrame(pd.DataFrame(
+        {"pid": np.asarray(pid, np.int64), "x": p[:, 0], "y": p[:, 1]}))
+
+
+def test_update_chain_drops_superseded_fragments(spark, monkeypatch):
+    """A chain of partial and whole-index updates over a salted hot
+    cell: a brand-new cell, a delete-only batch that misses (an empty
+    delta), a whole-index batch that supersedes every older fragment, a
+    compaction, and a batch that supersedes exactly one delta. Each
+    superseded version is unpersisted at once. After every step no
+    (cell, salt) key is served twice, the live count validates, and kNN
+    and range_count match brute force."""
+    monkeypatch.setattr(index_mod, "COMPACT_EVERY", 3)
+    g = Grid(8)
+    cw = g.cw
+    rng = np.random.default_rng(53)
+
+    def at(cx, cy, n):
+        """n points inside cell (cx, cy)."""
+        return np.column_stack([cx * cw + rng.integers(0, cw, n),
+                                cy * cw + rng.integers(0, cw, n)])
+
+    def cells(p):
+        return (np.clip(p // cw, 0, g.g - 1) * [g.g, 1]).sum(axis=1)
+
+    # uniform points outside cells (7, 7) and (7, 6), plus a cluster
+    # in cell 0 that salting splits into a hot cell
+    pts = rng.integers(0, COORD_LIMIT, size=(900, 2))
+    pts = pts[~np.isin(cells(pts), [63, 62])]
+    pts = np.concatenate([pts, at(0, 0, 300)])
+    live = dict(enumerate(map(tuple, pts)))
+    idx = SpatialIndex.build(spark, _frame(spark, list(live), pts),
+                             grid=g, hot_cell_cap=48)
+    assert idx.hot_cells() == [0]
+    q = np.concatenate([rng.integers(0, COORD_LIMIT, size=(12, 2)),
+                        at(0, 0, 4), at(7, 7, 2)])
+    boxes = [(0, 0, 0, COORD_LIMIT - 1, COORD_LIMIT - 1),
+             (1, 0, 0, cw - 1, cw - 1), (2, 100_000, 300_000, 600_000,
+                                          450_000),
+             (3, 7 * cw, 6 * cw, COORD_LIMIT - 1, COORD_LIMIT - 1)]
+    centres = np.array([(x, y) for x in range(g.g) for y in range(g.g)]
+                       ) * cw + cw // 2
+    next_pid = 10**6
+
+    def step(ins=None, dels=(), miss=None):
+        """One update: `ins` points, the live pids `dels`, and `miss`
+        points of pids the index does not hold."""
+        nonlocal idx, next_pid
+        ins = np.zeros((0, 2), np.int64) if ins is None else ins
+        ipid = np.arange(next_pid, next_pid + len(ins))
+        next_pid += len(ins) + 100
+        dels = [int(i) for i in dels]
+        dp = np.array([live[i] for i in dels], np.int64).reshape(-1, 2)
+        if miss is not None:
+            dels += list(range(next_pid, next_pid + len(miss)))
+            dp = np.concatenate([dp, miss])
+        new = idx.update(
+            inserts=_frame(spark, ipid, ins) if len(ins) else None,
+            deletes=_frame(spark, dels, dp) if dels else None)
+        idx.unpersist(successor=new)
+        idx = new
+        for i in dels:
+            live.pop(i, None)
+        live.update(zip(ipid.tolist(), map(tuple, ins)))
+        dup = (idx.df.groupBy("cell", "salt").count()
+               .filter("count > 1").count())
+        assert dup == 0, dup
+        assert idx.validate(expected_n=len(live))["total"] == len(live)
+        _read(spark, idx, live, q, boxes, 5)
+        return idx.manifest["frags"], idx.manifest["compacted"]
+
+    def some(n, where):
+        ids = np.array([i for i, p in live.items()
+                        if where(cells(np.array([p]))[0])])
+        return rng.choice(ids, min(n, len(ids)), replace=False)
+
+    _read(spark, idx, live, q, boxes, 5)
+    # the hot cell
+    assert step(at(0, 0, 40), some(20, lambda c: c == 0)) == (2, False)
+    # a brand-new cell
+    assert step(at(7, 7, 5)) == (3, False)
+    # a delete-only batch that hits no point: its delta is empty
+    assert step(miss=at(7, 6, 3)) == (3, False)
+    assert idx.touched_cells == [62]
+    # every cell: every older fragment is superseded
+    assert step(centres, some(30, lambda c: True)) == (1, False)
+    # one column at a time: the fourth fragment compacts
+    assert step(at(1, 2, 5), some(5, lambda c: c // g.g == 1)) == (2, False)
+    assert step(at(2, 2, 5), some(5, lambda c: c // g.g == 2)) == (3, False)
+    assert step(at(3, 2, 5), some(5, lambda c: c // g.g == 3)) == (1, True)
+    # a batch inside column 4, then one over all of it: the first
+    # delta is superseded, the compacted fragment is not
+    assert step(at(4, 2, 5), some(5, lambda c: c == 4 * g.g + 2)) == (
+        2, False)
+    assert step(centres[4 * g.g:5 * g.g]) == (2, False)
+
+
+@pytest.mark.parametrize("source", ["load", "snapshot", "no_cells"])
+def test_update_drops_loaded_fragment(spark, tmp_path, source):
+    """A loaded index's one fragment counts the manifest's blob rows
+    (`cells`), so a whole-index update drops it; a manifest without
+    `cells` keeps it, as a frame of unknown count."""
+    g = Grid(8)
+    rng = np.random.default_rng(59)
+    pts = rng.integers(0, COORD_LIMIT, size=(1500, 2))
+    live = dict(enumerate(map(tuple, pts)))
+    built = SpatialIndex.build(spark, _frame(spark, list(live), pts),
+                               grid=g)
+    path = str(tmp_path / "idx")
+    if source == "snapshot":
+        store = SnapshotStore(path)
+        store.commit(built)
+        idx = store.load(spark).cache()
+    else:
+        built.save(path)
+        if source == "no_cells":
+            man = os.path.join(path, "manifest.json")
+            with open(man) as f:
+                m = json.load(f)
+            del m["cells"]
+            with open(man, "w") as f:
+                json.dump(m, f)
+        idx = SpatialIndex.load(spark, path).cache()
+    built.unpersist()
+    centres = np.array([(x, y) for x in range(g.g) for y in range(g.g)]
+                       ) * g.cw + g.cw // 2
+    dels = rng.choice(len(pts), 40, replace=False)
+    ipid = np.arange(10**6, 10**6 + len(centres))
+    new = idx.update(inserts=_frame(spark, ipid, centres),
+                     deletes=_frame(spark, dels, pts[dels]))
+    idx.unpersist(successor=new)
+    assert new.manifest["frags"] == (2 if source == "no_cells" else 1)
+    for i in dels:
+        del live[int(i)]
+    live.update(zip(ipid.tolist(), map(tuple, centres)))
+    q = rng.integers(0, COORD_LIMIT, size=(12, 2))
+    boxes = [(0, 0, 0, COORD_LIMIT - 1, COORD_LIMIT - 1),
+             (1, 200_000, 100_000, 700_000, 400_000)]
+    _read(spark, new, live, q, boxes, 5)
+
+
+def _d3_points(spark, sf_dir):
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li.createOrReplaceTempView("_t2_li")
+    return spark.sql(
+        f"SELECT {points.PID_SQL} AS pid, {points.UNIFORM_X_SQL} AS x, "
+        f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z "
+        f"FROM _t2_li")
+
+
+def test_update_d3_vs_bruteforce(spark, sf_dir):
+    """Insert + delete on a 3-D index, then kNN — vs numpy brute force."""
+    pts = _d3_points(spark, sf_dir)
+    idx = SpatialIndex.build(spark, pts, grid=Grid(4),
+                             coord_cols=("x", "y", "z"))
+    ins = spark.sql(points.insert_batch_d3_sql("_t2_li"))
+    dele = spark.sql(points.delete_batch_d3_sql("_t2_li"))
+    idx2 = idx.update(inserts=ins, deletes=dele)
+
+    pd_all = pts.toPandas()
+    pd_ins = ins.toPandas()
+    pd_del = dele.toPandas()
+    live = pd_all[~pd_all["pid"].isin(set(pd_del["pid"]))]
+    import pandas as pd
+    live = pd.concat([live, pd_ins], ignore_index=True)
+    P = live[["x", "y", "z"]].to_numpy(np.int64)
+    ids = live["pid"].to_numpy(np.int64)
+
+    q = pts.filter("pid % 101 = 7").selectExpr("pid AS qid", "x", "y", "z")
+    got = (knn_join(idx2, q, 5).toPandas()
+           .sort_values(["qid", "rank"]).reset_index(drop=True))
+    qpd = q.toPandas().sort_values("qid")
+    Q = qpd[["x", "y", "z"]].to_numpy(np.int64)
+    exp_d, exp_i = bf.knn(P, ids, Q, 5)
+    got_i = got["nid"].to_numpy(np.int64).reshape(len(qpd), 5)
+    got_d = got["dist_sq"].to_numpy(np.int64).reshape(len(qpd), 5)
+    assert (got_i == exp_i).all()
+    assert (got_d == exp_d.astype(np.int64)).all()
+
+
+def test_update_counts_after_overlapping_deletes(spark, sf_dir):
+    """Deleting an already-deleted id must not double-subtract."""
+    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
+    idx = SpatialIndex.build(spark, pts, grid=Grid(4))
+    n = pts.count()
+    batch = pts.filter("pid % 10 = 1")
+    nb = batch.count()
+    idx2 = idx.update(deletes=batch)
+    idx3 = idx2.update(deletes=batch)  # fully overlapping second delete
+    assert idx2.validate()["total"] == n - nb
+    assert idx3.validate()["total"] == n - nb
+
+
+def test_point_insert_delete_batch_of_one(spark, sf_dir):
+    """I2/D3: pointInsert/pointDelete = batch of exactly one row (and
+    an empty batch)."""
+    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
+    idx = SpatialIndex.build(spark, pts, grid=Grid(4))
+    n = pts.count()
+    one_new = spark.createDataFrame([(999_000_000_001, 123, 456)],
+                                    "pid long, x long, y long")
+    idx2 = idx.update(inserts=one_new)
+    assert idx2.validate()["total"] == n + 1
+    got = knn_join(idx2, spark.createDataFrame(
+        [(1, 123, 456)], "qid long, x long, y long"), 1).collect()
+    assert got[0]["nid"] == 999_000_000_001 and got[0]["dist_sq"] == 0
+    idx3 = idx2.update(deletes=one_new)
+    assert idx3.validate()["total"] == n
+    # and a batch of none: a new version with the same live points
+    idx4 = idx3.update(inserts=one_new.limit(0))
+    assert idx4.validate()["total"] == n
+    assert idx4.touched_cells == []
+
+
+def test_delta_update_materializes_only_touched(spark):
+    """Delta-versioning contract: an update's checkpointed delta holds
+    ONLY the touched cells' blobs (O(batch), not O(index)); fragment
+    count grows by one per generation and resets at compaction; chained
+    results stay exact."""
+    import pandas as pd
+    from kdtree_spark.index import COMPACT_EVERY
+
+    rng = np.random.default_rng(31)
+    n = 30000
+    pts = pd.DataFrame({
+        "pid": np.arange(n, dtype=np.int64),
+        "x": rng.integers(0, 1_000_000, n).astype(np.int64),
+        "y": rng.integers(0, 1_000_000, n).astype(np.int64)})
+    idx = SpatialIndex.build(spark, spark.createDataFrame(pts),
+                             grid=Grid(16), n_hint=n)
+    ncells_total = idx.df.count()
+    # tiny batch confined to one corner -> few touched cells
+    ins = pd.DataFrame({
+        "pid": np.arange(10**7, 10**7 + 64, dtype=np.int64),
+        "x": rng.integers(0, 50_000, 64).astype(np.int64),
+        "y": rng.integers(0, 50_000, 64).astype(np.int64)})
+    up = idx.update(inserts=spark.createDataFrame(ins))
+    assert up.manifest["frags"] == 2 and not up.manifest["compacted"]
+    # the delta fragment (last frag) holds only the touched cells
+    delta_cells = up._frags[-1].frame.count()
+    touched = len(up.touched_cells)
+    assert delta_cells <= touched + 1 < ncells_total / 4
+    # untouched fragment + delta reconstruct the full index exactly
+    assert up.df.count() == ncells_total  # same cells (no new cells here
+    # beyond touched ones that already existed)
+    total = up.df.agg(F.sum("cnt")).collect()[0][0]
+    assert total == n + 64
+    # drive past compaction
+    cur = up
+    compactions = 0
+    for g in range(COMPACT_EVERY + 1):
+        b = pd.DataFrame({
+            "pid": np.arange(2 * 10**7 + g * 100,
+                             2 * 10**7 + g * 100 + 50, dtype=np.int64),
+            "x": rng.integers(0, 1_000_000, 50).astype(np.int64),
+            "y": rng.integers(0, 1_000_000, 50).astype(np.int64)})
+        cur = cur.update(inserts=spark.createDataFrame(b))
+        compactions += int(cur.manifest["compacted"])
+    assert compactions >= 1
+    assert cur.manifest["frags"] <= COMPACT_EVERY
+    total = cur.df.agg(F.sum("cnt")).collect()[0][0]
+    assert total == n + 64 + 50 * (COMPACT_EVERY + 1)
+
+
+def test_update_salted_hot_cell_exact(spark):
+    """Batch insert into and delete from a SALTED hot cell (the one
+    index shape no update test covered): inserts land in some blob of
+    the cell, deletes are membership-routed across all its blobs, and
+    kNN + range count after the update must equal brute force over the
+    live set — inside the cluster and in the sparse background."""
+    from kdtree_spark import bruteforce as bf
+    from kdtree_spark.queries.knn import knn_join
+    from kdtree_spark.queries.ranges import range_count
+    rng = np.random.default_rng(17)
+    n = 8000
+    pts = np.concatenate([
+        rng.integers(0, 1000, size=(n - 1000, 2)),    # one-cell cluster
+        rng.integers(0, 1_000_000, size=(1000, 2)),   # sparse background
+    ]).astype(np.int64)
+    ids = np.arange(n, dtype=np.int64)
+    df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ids, "x": pts[:, 0], "y": pts[:, 1]}))
+    idx = SpatialIndex.build(spark, df, grid=Grid(16), n_hint=n,
+                             hot_cell_cap=1024)
+    assert idx.df.groupBy("cell").count().filter("count > 1").count() >= 1
+    # inserts: 300 new points INTO the hot cluster + 50 background
+    ins_p = np.concatenate([
+        rng.integers(0, 1000, size=(300, 2)),
+        rng.integers(0, 1_000_000, size=(50, 2))]).astype(np.int64)
+    ins_i = np.arange(n, n + 350, dtype=np.int64)
+    # deletes: 400 cluster points + 100 background points
+    kill = np.concatenate([rng.permutation(n - 1000)[:400],
+                           n - 1000 + rng.permutation(1000)[:100]])
+    ins_df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ins_i, "x": ins_p[:, 0], "y": ins_p[:, 1]}))
+    del_df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ids[kill], "x": pts[kill, 0], "y": pts[kill, 1]}))
+    idx2 = idx.update(inserts=ins_df, deletes=del_df)
+    keep = np.setdiff1d(np.arange(n), kill)
+    live_p = np.concatenate([pts[keep], ins_p])
+    live_i = np.concatenate([ids[keep], ins_i])
+    assert idx2.validate()["total"] == len(live_i)
+    q = np.concatenate([
+        rng.integers(0, 1000, size=(15, 2)),
+        rng.integers(0, 1_000_000, size=(15, 2))]).astype(np.int64)
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"qid": np.arange(len(q)), "x": q[:, 0], "y": q[:, 1]}))
+    got = knn_join(idx2, qdf, 10).toPandas().sort_values(["qid", "rank"])
+    ed, ei = bf.knn(live_p, live_i, q, 10)
+    np.testing.assert_array_equal(
+        got["nid"].to_numpy(np.int64).reshape(len(q), 10), ei)
+    np.testing.assert_array_equal(
+        got["dist_sq"].to_numpy(np.int64).reshape(len(q), 10),
+        ed.astype(np.int64))
+    boxes = [(0, 0, 0, 999, 999), (1, 0, 0, 500, 500),
+             (2, 400_000, 400_000, 600_000, 600_000)]
+    rc = (range_count(idx2, boxes).toPandas()
+          .set_index("box_id")["cnt"].sort_index())
+    lo = np.array([b[1:3] for b in boxes])
+    hb = np.array([b[3:] for b in boxes])
+    exp = ((live_p[None, :, :] >= lo[:, None, :])
+           & (live_p[None, :, :] <= hb[:, None, :])).all(axis=2).sum(axis=1)
+    np.testing.assert_array_equal(rc.to_numpy(), exp)

@@ -18,7 +18,7 @@ import pandas as pd
 import pytest
 
 from kdtree_spark.grid import COORD_LIMIT, Grid
-from kdtree_spark.index import COMPACT_EVERY, SpatialIndex, free_checkpoint
+from kdtree_spark.index import COMPACT_EVERY, SpatialIndex
 
 CAP = 48  # hot_cell_cap: the clustered cell splits into 7 salted blobs
 
@@ -132,19 +132,28 @@ def test_update_carries_read_stats(spark, tmp_path, mode):
     idx = step(idx, box(COORD_LIMIT - cw, COORD_LIMIT, 5), some(10))
     assert empty in set(idx.cell_stats().toPandas()["cell"])
     _assert_stats(idx, _scan(idx))
-    # a delete of every point of one cell
-    gone = cells(np.array([live[i] for i in some(1, lambda c: c != 0)]))[0]
+    # a delete of every point of one cell, in the upper half of the
+    # last gridded dim below its top row
+    g = grid.g
+    gone = cells(np.array([live[i] for i in some(
+        1, lambda c: (c % g >= g // 2) & (c % g < g - 1))]))[0]
     idx = step(idx, dels=some(len(live), lambda c: c == gone))
     assert gone not in set(idx.cell_stats().toPandas()["cell"])
     _assert_stats(idx, _scan(idx))
-    # the hot cell, then updates up to a compaction
+    # the hot cell, then updates up to a compaction. Each fragment keeps
+    # a cell no later batch touches (the corner, `gone`, cell 0, and
+    # cell (i, g - 1) of batch i), so none is superseded on the way
     for i in range(COMPACT_EVERY - 2):
         if i == 0:
             idx = step(idx, box(0, cw, 40), some(20, lambda c: c == 0))
-        else:  # the lower half of the last gridded dim only: the
-            # other cells stay untouched
-            idx = step(idx, box(0, COORD_LIMIT // 2, 10),
-                       some(10, lambda c: c % grid.g < grid.g // 2))
+        else:  # the lower half of the last gridded dim, but cell 0,
+            # and one point in cell (i, g - 1)
+            own = box(0, COORD_LIMIT, 1)
+            own[:, 0] = i * cw + own[:, 0] % cw
+            own[:, 1] = (g - 1) * cw + own[:, 1] % cw
+            idx = step(idx, np.concatenate([box(cw, COORD_LIMIT // 2, 10),
+                                            own]),
+                       some(10, lambda c: (c % g < g // 2) & (c != 0)))
         assert idx.manifest["compacted"] == (i == COMPACT_EVERY - 3)
         _assert_stats(idx, _scan(idx))
     assert idx.hot_cells() == [0]
@@ -157,10 +166,7 @@ def test_update_carries_read_stats(spark, tmp_path, mode):
     last = step(mid, box(0, COORD_LIMIT, 10), some(10))
     want = {v: _scan(v) for v in (mid, last)}
     for v in versions:
-        for ckpt in v._ckpts.values():
-            free_checkpoint(ckpt)
-        for fr in v._cached_frames:
-            fr.unpersist()
+        v.unpersist()
     os.remove(src)
     with pytest.raises(Exception):
         last.df.count()
