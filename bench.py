@@ -106,7 +106,7 @@ def main() -> None:
 
     # seed the driver-query cache so per-query timings measure queries only
     from kdtree_spark.driver_queries import spatial as dq
-    dq._INDEX_CACHE[(id(spark), sf_dir, "uniform")] = idx
+    dq._INDEX_CACHE[dq._key(spark, sf_dir, dq._U2)] = idx
 
     # warm the query path once (cell-stats cache, blob shuffles, pandas
     # workers for the cogroup UDFs) so the first timed kNN measures the
@@ -156,40 +156,29 @@ def main() -> None:
             aud2 = knn_shipped_blobs(idx, q256, 10)
             for kk, vv in aud2.items():
                 extras[f"grid8_256q_{kk}"] = vv
-            # skewed-density audit: varden clusters concentrate queries
-            # in few cells, the known phase-3 task-skew spot to watch
-            vkey = (id(spark), sf_dir, "varden")
-            if vkey in dq._INDEX_CACHE:
-                qv = points.load_query_points(spark, sf_dir, "varden")
-                extras["knn_k10_varden_cells_per_query"] = round(
-                    knn_candidates(dq._INDEX_CACHE[vkey], qv, 10).count()
-                    / nq, 2)
-            for dname, getter in (("d3", dq.get_index_d3),
-                                  ("d5", dq.get_index_d5)):
-                key = (id(spark), sf_dir, dname)
-                if key in dq._INDEX_CACHE:
-                    idxd = dq._INDEX_CACHE[key]
-                    cc = list(idxd.coord_cols)
-                    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-                    li.createOrReplaceTempView("_bench_li")
-                    sel = ", ".join(
-                        f"{e} AS {c}" for c, e in zip(
-                            points.D5_COLS[:len(cc)], points.D5_EXPRS))
-                    qd = spark.sql(
-                        f"SELECT {points.PID_SQL} AS qid, {sel} "
-                        f"FROM _bench_li WHERE {points.QUERY_FILTER_SQL}")
-                    extras[f"knn_k10_{dname}_cells_per_query"] = round(
+            # skewed-density audit (varden clusters concentrate queries
+            # in few cells, the known phase-3 task-skew spot to watch)
+            # and the d=3 / d=5 pruning audit, over the gates' own
+            # memoized indexes and query sets when those gates ran
+            for tag, name in (("varden", "knn_varden"),
+                              ("d3", "knn_k10_d3"), ("d5", "knn_k10_d5")):
+                g = dq._GATES[name]
+                idxd = dq._INDEX_CACHE.get(
+                    dq._key(spark, sf_dir, g.src, g.build))
+                if idxd is not None:
+                    qd = dq._sql(spark, sf_dir, dq._query_sql(g, dq._VIEW))
+                    extras[f"knn_k10_{tag}_cells_per_query"] = round(
                         knn_candidates(idxd, qd, 10).count() / nq, 2)
             # salted fan-out path (extras-only so the headline sum stays
             # comparable round-over-round): trial 1 includes the
             # hot_cell_cap=512 varden build, trial 2 reuses the cached
             # salted index and times the (cell, salt) fan-out query alone
             t0 = time.time()
-            dq.q_hot_cell_knn(spark, sf_dir).count()
+            dq.QUERIES["hot_cell_knn"](spark, sf_dir).count()
             extras["hot_cell_knn_build_and_query_sec"] = round(
                 time.time() - t0, 3)
             t0 = time.time()
-            dq.q_hot_cell_knn(spark, sf_dir).count()
+            dq.QUERIES["hot_cell_knn"](spark, sf_dir).count()
             hot2 = time.time() - t0
             extras["hot_cell_knn_query_sec"] = round(hot2, 3)
             extras["hot_cell_knn_q_per_sec"] = round(nq / hot2, 1)

@@ -29,8 +29,24 @@ from pyspark.sql import functions as F
 PID_SQL = ("(l_orderkey * 2654435761 + l_linenumber * 40503 "
            "+ l_partkey * 2246822519 + l_suppkey * 3266489917)")
 
-UNIFORM_X_SQL = f"((({PID_SQL} % 1000003) * 7919) % 1000000)"
-UNIFORM_Y_SQL = f"((({PID_SQL} % 999983) * 104729) % 1000000)"
+
+def _scramble(p: int, m: int) -> str:
+    """One coordinate of the multiplicative-scramble family."""
+    return f"((({PID_SQL} % {p}) * {m}) % 1000000)"
+
+
+# arbitrary-d configurations (reference dim dispatch covers d in
+# {2,3,5,7,9,10,12,16}, tests/test.cpp:569-617): every dim is the same
+# multiplicative-scramble family with its own (modulus, multiplier)
+# prime pair; the first two are the uniform 2-D point set's
+_DIM_PRIMES = [
+    (1000003, 7919), (999983, 104729), (999979, 7907), (999961, 6011),
+    (999959, 4001), (999953, 104717), (999931, 9973), (999917, 11939),
+    (999907, 21881), (999883, 32749), (999863, 44683), (999853, 57859),
+    (999809, 71411), (999773, 86813), (999769, 99991), (999763, 30011),
+]
+
+UNIFORM_X_SQL, UNIFORM_Y_SQL = (_scramble(p, m) for p, m in _DIM_PRIMES[:2])
 
 _CLUSTER_SQL = "(l_partkey % 64)"
 _VCX_SQL = f"(({_CLUSTER_SQL} * 2654435761) % 1000000)"
@@ -43,52 +59,22 @@ VARDEN_X_SQL = (f"GREATEST(0, LEAST(999999, {_VCX_SQL} + "
 VARDEN_Y_SQL = (f"GREATEST(0, LEAST(999999, {_VCY_SQL} + "
                 f"((({PID_SQL} % 999983) % (2 * {_SIG_SQL} + 1)) - {_SIG_SQL})))")
 
-# third dimension for d=3 workloads (the reference tests d in {2,3,5,...},
-# tests/test.cpp:569-617); same multiplicative-scramble family
-UNIFORM_Z_SQL = f"((({PID_SQL} % 999979) * 7907) % 1000000)"
-
-# dims 4+5 for the d=5 configuration (tests/test.cpp:584)
-UNIFORM_W_SQL = f"((({PID_SQL} % 999961) * 6011) % 1000000)"
-UNIFORM_V_SQL = f"((({PID_SQL} % 999959) * 4001) % 1000000)"
-
-D5_COLS = ("x", "y", "z", "w", "v")
-D5_EXPRS = (UNIFORM_X_SQL, UNIFORM_Y_SQL, UNIFORM_Z_SQL,
-            UNIFORM_W_SQL, UNIFORM_V_SQL)
-
-
-def d5_select_sql(id_alias: str = "pid") -> str:
-    return ", ".join([f"{PID_SQL} AS {id_alias}"]
-                     + [f"{e} AS {c}" for c, e in zip(D5_COLS, D5_EXPRS)])
-
-
-# arbitrary-d configurations (reference dim dispatch covers d in
-# {2,3,5,7,9,10,12,16}, tests/test.cpp:569-617): every dim is the same
-# multiplicative-scramble family with its own (modulus, multiplier)
-# prime pair; the first five pairs are exactly D5's, so d<=5 derivations
-# are unchanged
-_DIM_PRIMES = [
-    (1000003, 7919), (999983, 104729), (999979, 7907), (999961, 6011),
-    (999959, 4001), (999953, 104717), (999931, 9973), (999917, 11939),
-    (999907, 21881), (999883, 32749), (999863, 44683), (999853, 57859),
-    (999809, 71411), (999773, 86813), (999769, 99991), (999763, 30011),
-]
-
 
 def dim_cols(d: int) -> tuple:
-    names = list(D5_COLS) + [f"c{i}" for i in range(5, d)]
+    names = ["x", "y", "z", "w", "v"] + [f"c{i}" for i in range(5, d)]
     return tuple(names[:d])
 
 
 def dim_exprs(d: int) -> tuple:
     assert 2 <= d <= len(_DIM_PRIMES)
-    return tuple(f"((({PID_SQL} % {p}) * {m}) % 1000000)"
-                 for p, m in _DIM_PRIMES[:d])
+    return tuple(_scramble(p, m) for p, m in _DIM_PRIMES[:d])
 
 
 def dimd_select_sql(d: int, id_alias: str = "pid") -> str:
     return ", ".join([f"{PID_SQL} AS {id_alias}"]
                      + [f"{e} AS {c}"
                         for c, e in zip(dim_cols(d), dim_exprs(d))])
+
 
 # time-slice label for the sliding-window workload (insertOsmByTime analogue,
 # tests/testFramework.h:818-870): 10 slices keyed off pid
@@ -98,12 +84,12 @@ SLICE_SQL = f"({PID_SQL} % 10)"
 def points_select_sql(dist: str = "uniform") -> str:
     """SELECT-list fragment producing (pid, x, y, slice) from lineitem."""
     if dist == "uniform":
-        xs, ys = UNIFORM_X_SQL, UNIFORM_Y_SQL
+        xy = dimd_select_sql(2)
     elif dist == "varden":
-        xs, ys = VARDEN_X_SQL, VARDEN_Y_SQL
+        xy = f"{PID_SQL} AS pid, {VARDEN_X_SQL} AS x, {VARDEN_Y_SQL} AS y"
     else:
         raise ValueError(dist)
-    return (f"{PID_SQL} AS pid, {xs} AS x, {ys} AS y, {SLICE_SQL} AS slice")
+    return f"{xy}, {SLICE_SQL} AS slice"
 
 
 def points_sql(table: str = "lineitem", dist: str = "uniform") -> str:
@@ -165,39 +151,21 @@ def load_query_points(spark: SparkSession, sf_dir: str, dist: str = "uniform",
 INSERT_FILTER_SQL = f"({PID_SQL} % 97 = 13)"   # ~1% batch to insert
 DELETE_FILTER_SQL = f"({PID_SQL} % 89 = 11)"   # ~1% batch to delete
 
-# inserted points get fresh pids + shifted coords so they don't collide
+# inserted points get fresh pids + shifted coords so they don't collide:
+# one scramble (modulus, multiplier) pair per dim, d <= 5
 INSERT_PID_SQL = f"({PID_SQL} + 4000000000000000)"
-INSERT_X_SQL = f"((({PID_SQL} % 1000033) * 6007) % 1000000)"
-INSERT_Y_SQL = f"((({PID_SQL} % 999979) * 31771) % 1000000)"
-INSERT_Z_SQL = f"((({PID_SQL} % 999961) * 16033) % 1000000)"
+_INSERT_PRIMES = [(1000033, 6007), (999979, 31771), (999961, 16033),
+                  (999959, 23003), (999953, 37019)]
+INSERT_X_SQL, INSERT_Y_SQL = (_scramble(p, m) for p, m in _INSERT_PRIMES[:2])
 
 
-def insert_batch_sql(table: str = "lineitem") -> str:
-    return (f"SELECT {INSERT_PID_SQL} AS pid, {INSERT_X_SQL} AS x, "
-            f"{INSERT_Y_SQL} AS y FROM {table} WHERE {INSERT_FILTER_SQL}")
-
-
-def insert_batch_d3_sql(table: str = "lineitem") -> str:
-    return (f"SELECT {INSERT_PID_SQL} AS pid, {INSERT_X_SQL} AS x, "
-            f"{INSERT_Y_SQL} AS y, {INSERT_Z_SQL} AS z "
+def insert_batch_sql(table: str = "lineitem", d: int = 2) -> str:
+    if d > len(_INSERT_PRIMES):
+        raise ValueError(f"insert batches span d <= {len(_INSERT_PRIMES)}")
+    coords = ", ".join(f"{_scramble(p, m)} AS {c}"
+                       for (p, m), c in zip(_INSERT_PRIMES, dim_cols(d)))
+    return (f"SELECT {INSERT_PID_SQL} AS pid, {coords} "
             f"FROM {table} WHERE {INSERT_FILTER_SQL}")
-
-
-INSERT_W_SQL = f"((({PID_SQL} % 999959) * 23003) % 1000000)"
-INSERT_V_SQL = f"((({PID_SQL} % 999953) * 37019) % 1000000)"
-
-
-def insert_batch_d5_sql(table: str = "lineitem") -> str:
-    return (f"SELECT {INSERT_PID_SQL} AS pid, {INSERT_X_SQL} AS x, "
-            f"{INSERT_Y_SQL} AS y, {INSERT_Z_SQL} AS z, "
-            f"{INSERT_W_SQL} AS w, {INSERT_V_SQL} AS v "
-            f"FROM {table} WHERE {INSERT_FILTER_SQL}")
-
-
-def delete_batch_d5_sql(table: str = "lineitem") -> str:
-    return (f"SELECT pid, x, y, z, w, v FROM "
-            f"(SELECT {d5_select_sql()} FROM {table} "
-            f"WHERE {DELETE_FILTER_SQL})")
 
 
 def insert_batch_f64_sql(table: str = "lineitem") -> str:
@@ -220,18 +188,13 @@ def delete_batch_f64_sql(table: str = "lineitem") -> str:
             f"FROM {table} WHERE {DELETE_FILTER_SQL})")
 
 
-def delete_batch_sql(table: str = "lineitem", dist: str = "uniform") -> str:
-    """Deletes target existing points (FullCovered semantics on the match)."""
-    sel = points_select_sql(dist)
-    return (f"SELECT pid, x, y FROM (SELECT {sel} FROM {table} "
-            f"WHERE {DELETE_FILTER_SQL})")
-
-
-def delete_batch_d3_sql(table: str = "lineitem") -> str:
-    return (f"SELECT pid, x, y, z FROM "
-            f"(SELECT {PID_SQL} AS pid, {UNIFORM_X_SQL} AS x, "
-            f"{UNIFORM_Y_SQL} AS y, {UNIFORM_Z_SQL} AS z FROM {table} "
-            f"WHERE {DELETE_FILTER_SQL})")
+def delete_batch_sql(table: str = "lineitem", dist: str = "uniform",
+                     d: int = 2) -> str:
+    """Deletes target existing points (FullCovered semantics on the
+    match); d > 2 is the uniform point set of dimd_select_sql(d)."""
+    sel = points_select_sql(dist) if d == 2 else dimd_select_sql(d)
+    return (f"SELECT pid, {', '.join(dim_cols(d))} FROM (SELECT {sel} "
+            f"FROM {table} WHERE {DELETE_FILTER_SQL})")
 
 
 # -- H2 ratio sweep: insert/delete batches at ratios {1e-4, 1e-3, 1e-2, 0.1}
@@ -245,8 +208,8 @@ def sweep_insert_sql(table: str, step: int) -> str:
     """Insert batch for sweep leg `step` (1-based)."""
     mod, rem = SWEEP_LEGS[step - 1]
     pid = f"({PID_SQL} + {4_000_000_000_000_000 + step * 1_000_000_000_000_000})"
-    x = f"((({PID_SQL} % 1000033) * {6007 + 2 * step}) % 1000000)"
-    y = f"((({PID_SQL} % 999979) * {31771 + 2 * step}) % 1000000)"
+    x = _scramble(1000033, 6007 + 2 * step)
+    y = _scramble(999979, 31771 + 2 * step)
     return (f"SELECT {pid} AS pid, {x} AS x, {y} AS y "
             f"FROM {table} WHERE ({PID_SQL} % {mod} = {rem})")
 

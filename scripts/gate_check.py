@@ -45,7 +45,7 @@ def main(names=None):
     for n, fn in full.items():
         qs.setdefault(n, fn)
     oracles = {**spatial.ORACLES, **pipeline.ORACLES, **imaging.ORACLES}
-    spark = get_spark("gate-check", cpus=8, shuffle_partitions=8)
+    spark = get_spark("gate-check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -79,7 +79,7 @@ def main(names=None):
             fails.append(name)
         print(f"{status}  {name:24s} rows={len(got)}/{len(exp)} "
               f"schema={'ok' if ok_schema else sorted(got.columns)} "
-              f"hash={'ok' if ok_hash else f'{gh}!={eh}'} "
+              f"hash={gh if ok_hash else f'{gh}!={eh}'} "
               f"{time.time() - t0:.1f}s")
         if status == "FAIL" and ok_schema and len(got) and len(exp):
             g = got[sorted(got.columns)].astype(str)

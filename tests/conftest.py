@@ -11,7 +11,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     from kdtree_spark.session import get_spark
-    s = get_spark("kdtree-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("kdtree-tests", shuffle_partitions=8)
     yield s
 
 

@@ -265,7 +265,7 @@ def test_f64_epsilon_comparator_divergence():
     else:
         # exact-IEEE rule: strictly smaller d² wins -> id 2; the
         # reference's epsilon rule would pick id 1 here. This is the
-        # documented divergence (spatial.py q_knn_k10_f64 docstring).
+        # documented divergence (spatial.py, the knn_k10_f64 row's note).
         assert nid[0, 0] == 2
     # gap >= eps (relative): rules agree — nearer point wins under both
     pts2 = np.array([[1.0, 0.0], [1.0 + 1e-16 + eps, 0.0]])

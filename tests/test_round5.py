@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kdtree_spark import fixtures, points
+from kdtree_spark import fixtures
 from kdtree_spark.grid import COORD_LIMIT, Grid
 from kdtree_spark.index import SpatialIndex
 
@@ -156,16 +156,6 @@ def test_inbalance_ratio_env_override(monkeypatch):
     assert not t2.needs_rebuild()
     monkeypatch.setattr(lt, "INBALANCE_RATIO", 10)
     assert t2.needs_rebuild()
-
-
-def test_registry_fits_sweep_budget():
-    import __spark_entry__ as e
-    q = e.queries()
-    o = e.oracle_sql()
-    assert len(q) <= 50, "driver sweep writes at most 50 rows"
-    assert set(q) == set(o)
-    # never-verified gates lead the sweep
-    assert list(q)[:3] == ["ann_srp_lsh", "ann_ivf", "image_phash_dedup"]
 
 
 def test_cogroup_empty_kernel_output_schema(spark):
@@ -323,38 +313,3 @@ def test_range_circle_config_matrix(spark):
         np.testing.assert_array_equal(cc.to_numpy(),
                                       (d2 <= r2[:, None]).sum(axis=1),
                                       err_msg=f"config {ci} circle")
-
-
-def test_hot_cell_knn_gate_fans_out_and_is_exact(spark):
-    """The hot_cell_knn driver gate at sf0.01 must actually reach the
-    salted (cell, salt) fan-out branch — at least one cell with >=
-    FANOUT_MIN_BLOBS blobs — and still match brute force exactly.
-    (At the default 131,072-row cap no gate-scale cell salts, which is
-    why the gate pins hot_cell_cap=512.)"""
-    from kdtree_spark.driver_queries import spatial as dq
-    from kdtree_spark.queries.skew import FANOUT_MIN_BLOBS, hot_blobs
-
-    sf_dir = "/root/testdata/sf0.01"
-    got = (dq.q_hot_cell_knn(spark, sf_dir).toPandas()
-           .sort_values(["qid", "rank"]))
-    idx = dq._INDEX_CACHE[(id(spark), sf_dir, "varden_hot512")]
-    maxblobs = (idx.cell_stats().agg(F.max("maxsalt")).collect()[0][0]) + 1
-    assert maxblobs >= FANOUT_MIN_BLOBS, maxblobs
-    assert hot_blobs(idx).count() >= FANOUT_MIN_BLOBS
-
-    pts = (points.load_points(spark, sf_dir, "varden")
-           .select("pid", "x", "y").toPandas())
-    qs = (points.load_query_points(spark, sf_dir, "varden", qdist="uniform")
-          .toPandas().sort_values("qid"))
-    px = pts.x.to_numpy(np.int64)
-    py = pts.y.to_numpy(np.int64)
-    pid = pts.pid.to_numpy(np.int64)
-    d = ((px[None, :] - qs.x.to_numpy(np.int64)[:, None]) ** 2
-         + (py[None, :] - qs.y.to_numpy(np.int64)[:, None]) ** 2)
-    order = np.lexsort((np.broadcast_to(pid, d.shape), d), axis=1)[:, :10]
-    np.testing.assert_array_equal(
-        got["nid"].to_numpy(np.int64).reshape(len(qs), 10),
-        pid[order])
-    np.testing.assert_array_equal(
-        got["dist_sq"].to_numpy(np.int64).reshape(len(qs), 10),
-        np.take_along_axis(d, order, axis=1))

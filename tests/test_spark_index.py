@@ -184,14 +184,11 @@ def test_knn_d3_vs_bruteforce(spark, sf_dir):
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     li.createOrReplaceTempView("_t3_li")
-    pts3 = spark.sql(
-        f"SELECT {P.PID_SQL} AS pid, {P.UNIFORM_X_SQL} AS x, "
-        f"{P.UNIFORM_Y_SQL} AS y, {P.UNIFORM_Z_SQL} AS z FROM _t3_li")
+    pts3 = spark.sql(f"SELECT {P.dimd_select_sql(3)} FROM _t3_li")
     idx = SpatialIndex.build(spark, pts3, grid=Grid(4),
                              coord_cols=("x", "y", "z"))
     q = spark.sql(
-        f"SELECT {P.PID_SQL} AS qid, {P.UNIFORM_X_SQL} AS x, "
-        f"{P.UNIFORM_Y_SQL} AS y, {P.UNIFORM_Z_SQL} AS z FROM _t3_li "
+        f"SELECT {P.dimd_select_sql(3, 'qid')} FROM _t3_li "
         f"WHERE {P.QUERY_FILTER_SQL}").limit(20)
     got = (knn_join(idx, q, 5).toPandas()
            .sort_values(["qid", "rank"]).reset_index(drop=True))
@@ -385,10 +382,7 @@ def test_update_drops_loaded_fragment(spark, tmp_path, source):
 def _d3_points(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     li.createOrReplaceTempView("_t2_li")
-    return spark.sql(
-        f"SELECT {points.PID_SQL} AS pid, {points.UNIFORM_X_SQL} AS x, "
-        f"{points.UNIFORM_Y_SQL} AS y, {points.UNIFORM_Z_SQL} AS z "
-        f"FROM _t2_li")
+    return spark.sql(f"SELECT {points.dimd_select_sql(3)} FROM _t2_li")
 
 
 def test_update_d3_vs_bruteforce(spark, sf_dir):
@@ -396,8 +390,8 @@ def test_update_d3_vs_bruteforce(spark, sf_dir):
     pts = _d3_points(spark, sf_dir)
     idx = SpatialIndex.build(spark, pts, grid=Grid(4),
                              coord_cols=("x", "y", "z"))
-    ins = spark.sql(points.insert_batch_d3_sql("_t2_li"))
-    dele = spark.sql(points.delete_batch_d3_sql("_t2_li"))
+    ins = spark.sql(points.insert_batch_sql("_t2_li", d=3))
+    dele = spark.sql(points.delete_batch_sql("_t2_li", d=3))
     idx2 = idx.update(inserts=ins, deletes=dele)
 
     pd_all = pts.toPandas()
