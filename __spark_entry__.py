@@ -21,11 +21,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def _ship_package(spark: SparkSession) -> None:
     """Make kdtree_spark importable on executors (driver-created session)."""
+    from kdtree_spark.session import ship_package
     try:
-        from kdtree_spark.session import _package_zip
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:
-        pass  # already added, or local import suffices
+        ship_package(spark)
+    except OSError:
+        pass  # no zip written: workers started in the repo root import it
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -100,21 +100,13 @@ def entry(spark: SparkSession) -> DataFrame:
 #                           narrow-map op stays verified by
 #                           scripts/gate_check.py (hash vs DuckDB
 #                           regexp_extract_all) + pytest
-#   dbscan               -> budget exclusion like regex_token_stats;
-#                           verified by gate_check (DuckDB recursive-
-#                           CTE oracle) + an independent union-find
-#                           brute force in tests/test_dbscan.py
-#   kernel_density       -> budget exclusion; gate_check hash-green
-#                           (pure-int64 Epanechnikov sum) + numpy pytest
-#   closest_pair         -> budget exclusion; gate_check hash-green
-#                           (argmin-with-tie-break oracle) + numpy pytest
 _RETIRED = frozenset({
     "cell_assign", "knn_k1", "range_count", "range_report",
     "insert_then_count", "delete_then_count", "update_then_knn_d3",
     "knn_k10_f64", "range_count_f64", "circle_count_f64",
     "minhash_bands", "sliding_window_count", "circle_count", "simhash",
     "incremental_build", "update_then_knn", "knn_k10_d16",
-    "regex_token_stats", "dbscan", "kernel_density", "closest_pair",
+    "regex_token_stats",
 })
 
 # Never-driver-verified gates run first so even a truncated sweep

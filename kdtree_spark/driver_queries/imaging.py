@@ -4,12 +4,11 @@ Oracle-able queries derive from pure arithmetic on `documents` (the
 image table's parent): metadata projection and spatial kNN over image
 centroids with caption payload (caption equality is part of the value
 hash — the gate's byte-for-byte caption check). Pixel-dependent queries
-(phash dedup, decode stats, frame sampling, audio features) are oracled
-through precomputed fixture parquets (scripts/gen_phash_fixture.py,
-scripts/gen_media_fixture.py): their outputs are pure functions of the
-caption text (+ doc_id-derived fps/sr), materialized once and joined by
-the DuckDB oracle on caption_md5. Drift between fixtures and the live
-kernels fails tests/test_images.py + tests/test_media.py.
+(phash dedup, decode stats) are oracled through a precomputed fixture
+parquet (scripts/gen_phash_fixture.py): their outputs are pure functions
+of the caption text, materialized once and joined by the DuckDB oracle
+on caption_md5. Drift between the fixture and the live kernels fails
+tests/test_images.py.
 """
 
 from __future__ import annotations
@@ -183,95 +182,11 @@ def q_image_decode_stats(spark, sf_dir) -> DataFrame:
                     .alias("mean_lum_c")))
 
 
-# --------------------------------------------------- audio/video payload
-
-def get_media(spark, sf_dir):
-    from .. import media as md
-    key = (id(spark), sf_dir, "media")
-    if key not in _IMG_CACHE:
-        _IMG_CACHE[key] = md.synth_media(spark, sf_dir).cache()
-    return _IMG_CACHE[key]
-
-
-def q_media_meta(spark, sf_dir) -> DataFrame:
-    """Metadata projection of the synthesized audio/video table — kind,
-    codec, duration, fps/sample-rate all derive arithmetically from
-    (doc_id, text) -> exact oracle (media.py derivation contract)."""
-    m = get_media(spark, sf_dir)
-    return m.select(
-        "media_id", "kind", "fmt", "duration_ms", "fps", "sample_rate",
-        F.length("caption").alias("caption_len"),
-        F.md5("caption").alias("caption_md5"))
-
-
-def _sql_media_meta() -> str:
-    from .. import media as md
-    return f"""
-SELECT printf('med-%012d', doc_id) AS media_id,
-       {md.KIND_SQL} AS kind,
-       CASE WHEN doc_id % 2 = 0
-            THEN (CASE WHEN (doc_id // 2) % 2 = 0 THEN 'rawv'
-                       ELSE 'rawvz' END)
-            ELSE (CASE WHEN (doc_id // 2) % 2 = 0 THEN 'pcm16'
-                       ELSE 'pcmz' END)
-       END AS fmt,
-       CAST({md.DUR_SQL} AS BIGINT) AS duration_ms,
-       CAST({md.FPS_SQL} AS BIGINT) AS fps,
-       CAST({md.SR_SQL} AS BIGINT) AS sample_rate,
-       CAST(length(text) AS INT) AS caption_len,
-       md5(text) AS caption_md5
-FROM documents"""
-
-
-def q_video_frame_sample(spark, sf_dir) -> DataFrame:
-    """Frame sampling every 100 ms over every video.
-
-    Oracled exactly: frame phashes are pure functions of
-    (caption text, fps), precomputed per (caption_md5, fps) into
-    fixtures_data/media_frames.parquet (scripts/gen_media_fixture.py);
-    the oracle recomputes fps from doc_id (media.FPS_SQL) and joins."""
-    from .. import media as md
-    return md.frame_sample(get_media(spark, sf_dir), every_ms=100)
-
-
-def q_audio_features(spark, sf_dir) -> DataFrame:
-    """Windowed integer energy / zero-crossings over every audio row.
-
-    Oracled exactly: window features are pure int64 functions of
-    (caption text, sample_rate), precomputed per (caption_md5, sr) into
-    fixtures_data/audio_windows.parquet; the oracle recomputes sr from
-    doc_id (media.SR_SQL) and joins."""
-    from .. import media as md
-    return md.audio_features(get_media(spark, sf_dir), win=256)
-
-
-_FRAMES_FIXTURE = os.path.join(os.path.dirname(_PHASH_FIXTURE),
-                               "media_frames.parquet")
-_AUDIO_FIXTURE = os.path.join(os.path.dirname(_PHASH_FIXTURE),
-                              "audio_windows.parquet")
-
 SQL_IMAGE_DECODE_STATS = f"""
 SELECT printf('img-%012d', d.doc_id) AS image_id,
        f.phash AS phash_check, f.mean_lum_c
 FROM documents d
 JOIN read_parquet('{_PHASH_FIXTURE}') f ON md5(d.text) = f.caption_md5"""
-
-SQL_VIDEO_FRAME_SAMPLE = f"""
-SELECT printf('med-%012d', d.doc_id) AS media_id,
-       f.frame_idx, f.ts_ms, f.frame_phash
-FROM documents d
-JOIN read_parquet('{_FRAMES_FIXTURE}') f
-  ON md5(d.text) = f.caption_md5 AND f.fps = 10 + (d.doc_id % 3) * 5
-WHERE d.doc_id % 2 = 0"""
-
-SQL_AUDIO_FEATURES = f"""
-SELECT printf('med-%012d', d.doc_id) AS media_id,
-       f.win_idx, f.energy, f.zcross
-FROM documents d
-JOIN read_parquet('{_AUDIO_FIXTURE}') f
-  ON md5(d.text) = f.caption_md5
- AND f.sr = 1000 + (d.doc_id % 3) * 1000
-WHERE d.doc_id % 2 = 1"""
 
 
 QUERIES = {
@@ -280,9 +195,6 @@ QUERIES = {
     "image_phash_dedup": q_image_phash_dedup,
     "image_spatial_phash": q_image_spatial_phash,
     "image_decode_stats": q_image_decode_stats,
-    "media_meta": q_media_meta,
-    "video_frame_sample": q_video_frame_sample,
-    "audio_features": q_audio_features,
 }
 
 ORACLES = {
@@ -290,11 +202,7 @@ ORACLES = {
     "image_knn": SQL_IMAGE_KNN,
     "image_phash_dedup": SQL_IMAGE_PHASH_DEDUP,
     "image_spatial_phash": SQL_IMAGE_SPATIAL_PHASH,
-    "media_meta": _sql_media_meta(),
-    # decode/frame/PCM values are pure functions of the caption text
-    # (+ doc_id-derived fps/sr) -> oracled via precomputed fixtures,
-    # the phash-fixture pattern (scripts/gen_media_fixture.py)
+    # decode values are pure functions of the caption text -> oracled
+    # via the precomputed phash fixture (scripts/gen_phash_fixture.py)
     "image_decode_stats": SQL_IMAGE_DECODE_STATS,
-    "video_frame_sample": SQL_VIDEO_FRAME_SAMPLE,
-    "audio_features": SQL_AUDIO_FEATURES,
 }

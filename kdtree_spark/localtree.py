@@ -40,8 +40,6 @@ consult all three; a rebuild folds them in when the imbalance threshold
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 LEAF_WRAP = 128
@@ -51,10 +49,8 @@ LEAF_WRAP = 128
 # traversal is the python-loop cost and leaf scans are numpy — measured
 # at 128 the kNN/range kernels run 2-3x faster than at 32 with identical
 # (exact) results.
-INBALANCE_RATIO = int(os.environ.get("INBALANCE_RATIO", "30"))
-# percent; the reference reads the same env override
-# (tree_node.hpp:118-124) — its summary suite sweeps inba 3/10/30
-# (script/run_summary_3inba.sh)
+INBALANCE_RATIO = 30
+# percent; the reference's default (tree_node.hpp:118-124)
 TIGHTEN_MIN = 32768
 # blobs at least this large tighten a caller-supplied kNN bound with
 # their own block-scan bound before searching (see knn())

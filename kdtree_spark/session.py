@@ -3,6 +3,7 @@ scale out (AQE, Arrow, skew-join) on a real cluster via spark-submit."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -12,18 +13,45 @@ from pyspark.sql import SparkSession
 
 def _package_zip() -> str:
     """Zip this package so executors can import it — the local-mode
-    equivalent of `spark-submit --py-files kdtree_spark.zip`."""
+    equivalent of `spark-submit --py-files kdtree_spark.zip`. The file
+    name carries a hash of the sources, so an unchanged package reuses
+    the file in place, and a new one is written under a temporary name
+    and renamed into place: no process reads a half-written zip."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "kdtree_spark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join("kdtree_spark",
-                                       os.path.relpath(full, pkg_dir))
+    files = []
+    for root, _dirs, names in os.walk(pkg_dir):
+        for f in names:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                files.append((os.path.join(
+                    "kdtree_spark", os.path.relpath(full, pkg_dir)), full))
+    files.sort()
+    h = hashlib.sha256()
+    for rel, full in files:
+        with open(full, "rb") as fh:
+            h.update(f"{rel}\0".encode() + fh.read() + b"\0")
+    out = os.path.join(tempfile.gettempdir(),
+                       f"kdtree_spark_pyfiles-{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(out):
+        fd, tmp = tempfile.mkstemp(suffix=".part", dir=os.path.dirname(out))
+        try:
+            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+                for rel, full in files:
                     z.write(full, rel)
+            os.replace(tmp, out)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     return out
+
+
+def ship_package(spark: SparkSession) -> None:
+    """addPyFile the package zip unless the session already holds it."""
+    sc = spark.sparkContext
+    path = _package_zip()
+    name = os.path.basename(path)
+    if not any(f.rsplit("/", 1)[-1] == name for f in sc.listFiles):
+        sc.addPyFile(path)
 
 
 def host_defaults() -> tuple[int, str]:
@@ -66,5 +94,5 @@ def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addPyFile(_package_zip())
+    ship_package(spark)
     return spark

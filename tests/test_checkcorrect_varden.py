@@ -2,7 +2,7 @@
 (`script/checkCorrect.sh`): dim=5, K=100, tag=2 (build + batch insert
 + batch delete), query types 0/1/2 (kNN, range count, range report),
 run over BOTH distributions — uniform_bigint and ss_varden. The uniform
-side is covered by the config matrices in test_round5; this file adds
+side is covered by the config matrices in test_spark_index; this file adds
 the ss_varden side: clustered points with per-cluster spreads spanning
 three orders of magnitude (`script/gen_ss_varden.sh` shape), which at
 d=5 stresses the dims-keyed grid + salted hot cells + the update

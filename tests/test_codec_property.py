@@ -1,4 +1,4 @@
-"""Property/fuzz tests for the pure-stdlib codecs (jpeg/png/avi/mp4):
+"""Property/fuzz tests for the pure-stdlib codecs (jpeg/png):
 round-trip invariants over arbitrary content, and parser robustness —
 a mutated or truncated stream must raise ValueError /
 NotImplementedError (or still decode to a valid shape), never escape
@@ -6,15 +6,14 @@ with an internal IndexError/struct.error/overflow or hang."""
 
 from __future__ import annotations
 
+import zlib
+
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from kdtree_spark import avi
 from kdtree_spark import images as im
 from kdtree_spark import jpeg
-from kdtree_spark import mp4
 
 OK_ERRORS = (ValueError, NotImplementedError)
 
@@ -41,18 +40,6 @@ def test_jpeg_roundtrip_any_content(px, quality, subsampling):
     if quality >= 90 and subsampling == "444":
         assert im.psnr(px, back) >= 25.0
     assert jpeg.encode(px, quality, subsampling=subsampling) == data
-
-
-@settings(max_examples=40, deadline=None)
-@given(px=small_image(), fps=st.integers(1, 60),
-       container=st.sampled_from(["avi", "mp4"]))
-def test_video_container_roundtrip_any_content(px, fps, container):
-    frames = np.stack([px, 255 - px, px])
-    mod = avi if container == "avi" else mp4
-    back, got_fps = mod.decode(mod.encode(frames, fps=fps))
-    assert back.shape == frames.shape
-    # container fps is quantized (AVI: us/frame; MP4: 600-tick scale)
-    assert abs(got_fps - fps) <= 1
 
 
 @settings(max_examples=150, deadline=None)
@@ -85,27 +72,14 @@ def test_jpeg_decoder_survives_truncation(seed, cut):
 
 
 @settings(max_examples=100, deadline=None)
-@given(seed=st.integers(0, 2**31), nmut=st.integers(1, 8),
-       container=st.sampled_from(["avi", "mp4", "png"]))
-def test_container_decoders_survive_mutation(seed, nmut, container):
+@given(seed=st.integers(0, 2**31), nmut=st.integers(1, 8))
+def test_container_decoders_survive_mutation(seed, nmut):
     rng = np.random.default_rng(seed)
-    frames = md_frames = np.stack([im.render_pixels(seed % 997 + i, 16, 16)
-                                   for i in range(3)])
-    if container == "png":
-        data = bytearray(im.encode_pixels(md_frames[0], "png"))
-        decode = lambda b: im._png_decode(bytes(b))
-    elif container == "avi":
-        data = bytearray(avi.encode(frames))
-        decode = lambda b: avi.decode(bytes(b))
-    else:
-        data = bytearray(mp4.encode(frames))
-        decode = lambda b: mp4.decode(bytes(b))
+    data = bytearray(im.encode_pixels(
+        im.render_pixels(seed % 997, 16, 16), "png"))
     for _ in range(nmut):
         data[rng.integers(0, len(data))] = rng.integers(0, 256)
     try:
-        decode(data)
-    except OK_ERRORS:
+        im._png_decode(bytes(data))
+    except (*OK_ERRORS, zlib.error):  # zlib errors surface from PNG IDAT
         pass
-    except Exception as exc:  # zlib errors surface from PNG IDAT
-        import zlib
-        assert container == "png" and isinstance(exc, zlib.error)

@@ -42,10 +42,10 @@ DRIVER_QUERIES = [
     "incr_build_and_query", "knn_k10_d5", "range_count_d5",
     "range_report_d5", "range_report_f64", "update_then_knn_f64",
     "snapshot_roundtrip", "sliding_window_knn", "knn_graph",
-    "incremental_delete", "point_in_polygon", "tile_cells", "text_stats",
-    "token_topk", "lang_id", "doc_fingerprint", "dedup_exact", "dedup_ngram",
-    "dedup_minhash", "image_decode_stats", "media_meta",
-    "video_frame_sample", "audio_features",
+    "incremental_delete", "point_in_polygon", "tile_cells", "dbscan",
+    "kernel_density", "closest_pair", "text_stats", "token_topk", "lang_id",
+    "doc_fingerprint", "dedup_exact", "dedup_ngram", "dedup_minhash",
+    "image_decode_stats",
 ]
 
 DRIVER_ORACLES = [
@@ -56,12 +56,12 @@ DRIVER_ORACLES = [
     "range_report_d5", "circle_count_d5", "range_report_f64",
     "update_then_knn_f64", "snapshot_roundtrip", "sliding_window_knn",
     "knn_graph", "incremental_delete", "point_in_polygon", "tile_cells",
-    "distance_join", "rect_join", "polygon_overlay", "text_stats",
-    "token_topk", "lang_id", "doc_fingerprint", "dedup_exact", "dedup_ngram",
-    "dedup_minhash", "simhash_pairs", "dedup_components", "ann_cosine_topk",
+    "distance_join", "rect_join", "polygon_overlay", "dbscan",
+    "kernel_density", "closest_pair", "text_stats", "token_topk", "lang_id",
+    "doc_fingerprint", "dedup_exact", "dedup_ngram", "dedup_minhash",
+    "simhash_pairs", "dedup_components", "ann_cosine_topk",
     "embedding_neardup", "ann_srp_lsh", "ann_ivf", "image_meta", "image_knn",
-    "image_phash_dedup", "image_spatial_phash", "media_meta",
-    "image_decode_stats", "video_frame_sample", "audio_features",
+    "image_phash_dedup", "image_spatial_phash", "image_decode_stats",
 ]
 
 # every point source (uniform / varden 2-D, d=3, d=5, d=16, f64) and

@@ -212,6 +212,29 @@ def test_phash_fixture_no_drift(spark, sf_dir):
         assert int(fx.loc[r.m]) == int(r.phash)
 
 
+def test_decode_stats_fixture_no_drift(spark, sf_dir):
+    """image_phash.parquet's mean_lum_c column must equal Spark's
+    floor(mean_lum * 100) from decode_features."""
+    import os
+    import pandas as pd
+    from pyspark.sql import functions as F
+    imgs = im.synth_images(spark, sf_dir).limit(40).cache()
+    feats = im.decode_features(imgs)
+    got = (imgs.join(feats, "image_id")
+           .select(F.expr("md5(caption)").alias("cm"), "phash",
+                   F.floor(F.col("mean_lum") * 100).cast("long")
+                   .alias("mlc"), "phash_check")
+           .toPandas())
+    assert len(got) == 40
+    fx = pd.read_parquet(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "fixtures_data",
+        "image_phash.parquet")).set_index("caption_md5")
+    for _, r in got.iterrows():
+        assert int(fx.loc[r.cm, "phash"]) == int(r.phash) == int(r.phash_check)
+        assert int(fx.loc[r.cm, "mean_lum_c"]) == int(r.mlc)
+    imgs.unpersist()
+
+
 def test_png_interop_with_jvm_imageio(spark):
     """Two-way PNG interop against the JDK's independent codec
     (javax.imageio via Spark's JVM): lossless both directions, so the

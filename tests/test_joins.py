@@ -1,13 +1,17 @@
 """Radius distance join vs numpy brute force: planar, d=3, skew flood,
-r=0, and the count variant's zero rows."""
+r=0, and the count variant's zero rows; the rectangle join, kernel
+density and closest pair; an empty frame on either side of the joins."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
+from kdtree_spark.fixtures import gen_convex_polygons
 from kdtree_spark.grid import Grid
 from kdtree_spark.queries.joins import (distance_join, distance_join_count,
-                                        rect_join)
+                                        kernel_density, rect_join)
+from kdtree_spark.queries.polygon import polygon_join, polygons_df
+from tests.test_polygon_join import _brute_intersects
 
 
 def _brute_pairs(L, R, r):
@@ -270,3 +274,62 @@ def test_closest_pair(spark):
     got4 = closest_pair(_mk(spark, L3, "lid", ("x", "y")),
                         empty).collect()
     assert got4 == []
+
+
+@pytest.mark.parametrize("empty", ["left", "right"])
+@pytest.mark.parametrize("op", ["distance_join", "rect_join",
+                                "kernel_density", "polygon_join"])
+def test_join_empty_side(spark, op, empty):
+    """An empty frame on either side gives the operator's exact columns
+    and the brute force's rows: none, except one kde = 0 row per query
+    when kernel_density's data side is empty."""
+    rng = np.random.default_rng(89)
+    pts = ", x long, y long"
+    if op == "polygon_join":
+        L = gen_convex_polygons(8, seed=91)
+        R = gen_convex_polygons(8, seed=92)
+    elif op == "rect_join":
+        L, R = _rand_rects(rng, 20, 200_000), _rand_rects(rng, 30, 200_000)
+    else:
+        L, R = [np.column_stack([np.arange(n),
+                                 rng.integers(0, 1_000_000, (n, 2))])
+                for n in (20, 30)]
+    L, R = (L[:0], R) if empty == "left" else (L, R[:0])
+    r = 200_000
+    if op == "polygon_join":
+        got = polygon_join(polygons_df(spark, L, "pa"),
+                           polygons_df(spark, R, "pb"), grid=Grid(8))
+        cols = ["pa", "pb"]
+        exp = sorted((a, b) for a, va in L for b, vb in R
+                     if _brute_intersects(va, vb))
+    elif op == "rect_join":
+        rect = ", x0 long, y0 long, x1 long, y1 long"
+        got = rect_join(spark.createDataFrame(L.tolist(), "lid long" + rect),
+                        spark.createDataFrame(R.tolist(), "rid long" + rect),
+                        grid=Grid(8))
+        cols = ["lid", "rid"]
+        exp = _brute_rects(L.tolist(), R.tolist())
+    elif op == "distance_join":
+        got = distance_join(
+            spark.createDataFrame(L.tolist(), "lid long" + pts),
+            spark.createDataFrame(R.tolist(), "rid long" + pts),
+            r, grid=Grid(8))
+        cols = ["lid", "rid", "dist_sq"]
+        exp = _brute_pairs(L, R, r)
+    else:
+        got = kernel_density(
+            spark.createDataFrame(L.tolist(), "qid long" + pts),
+            spark.createDataFrame(R.tolist(), "pid long" + pts),
+            r, grid=Grid(8))
+        cols = ["qid", "kde"]
+        d2 = ((L[:, None, 1:] - R[None, :, 1:]).astype(np.int64) ** 2
+              ).sum(axis=2)
+        exp = sorted((int(q), int(((r * r - d2[i]) * (d2[i] <= r * r)).sum()))
+                     for i, q in enumerate(L[:, 0]))
+    assert got.columns == cols
+    rows = sorted(tuple(x) for x in got.collect())
+    assert rows == exp
+    if op == "kernel_density" and empty == "right":
+        assert rows == [(q, 0) for q in range(20)]
+    else:
+        assert rows == []

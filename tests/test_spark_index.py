@@ -17,7 +17,7 @@ from kdtree_spark import index as index_mod
 from kdtree_spark.catalog import SnapshotStore
 from kdtree_spark.grid import COORD_LIMIT, Grid
 from kdtree_spark.index import SpatialIndex
-from kdtree_spark.queries.knn import knn_join
+from kdtree_spark.queries.knn import knn_candidates, knn_join
 from kdtree_spark.queries.ranges import circle_count, range_count, range_report
 from tests.test_job_budget import _read
 
@@ -558,3 +558,535 @@ def test_update_salted_hot_cell_exact(spark):
     exp = ((live_p[None, :, :] >= lo[:, None, :])
            & (live_p[None, :, :] <= hb[:, None, :])).all(axis=2).sum(axis=1)
     np.testing.assert_array_equal(rc.to_numpy(), exp)
+
+
+def test_knn_candidates_metric(spark, sf_dir):
+    """Phase-2 candidates: every query yields >= 1 candidate cell, and
+    the audited count is small for d=2 uniform data."""
+    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
+    idx = SpatialIndex.build(spark, pts, grid=Grid(4))
+    q = points.load_query_points(spark, sf_dir, "uniform")
+    nq = q.count()
+    cand = knn_candidates(idx, q, 10)
+    per_q = (cand.groupBy("qid").count().agg(
+        F.min("count"), F.max("count")).collect()[0])
+    assert per_q[0] >= 1
+    assert cand.count() / nq < 8  # uniform d=2: pruning keeps it tight
+
+
+def test_knn_hot_cell_salted_exact(spark, tmp_path):
+    """A salted (hot) cell's kNN fans out per blob (cogroup on
+    (cell, salt)) — results must equal brute force, including queries
+    inside the cluster, in the sparse background, and in empty corners
+    that force the phase-2 fallback."""
+    import pandas as pd
+    rng = np.random.default_rng(7)
+    n = 8000
+    pts = np.concatenate([
+        rng.integers(0, 1000, size=(n - 1000, 2)),    # one-cell cluster
+        rng.integers(0, 1_000_000, size=(1000, 2)),   # sparse background
+    ]).astype(np.int64)
+    ids = np.arange(n, dtype=np.int64)
+    df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ids, "x": pts[:, 0], "y": pts[:, 1]}))
+    idx = SpatialIndex.build(spark, df, grid=Grid(16), n_hint=n,
+                             hot_cell_cap=1024)
+    # the cluster cell must actually be salted for this test to bite
+    assert idx.df.groupBy("cell").count().filter("count > 1").count() >= 1
+    # the hot-cell set is collected at build time and is exactly the
+    # cells with >= FANOUT_MIN_BLOBS non-empty blobs
+    from kdtree_spark.index import FANOUT_MIN_BLOBS
+    hot = sorted(r["cell"] for r in idx.cell_stats()
+                 .filter(F.col("maxsalt") + 1 >= FANOUT_MIN_BLOBS)
+                 .collect())
+    assert hot and idx.hot_cells() == hot
+    q = np.concatenate([
+        rng.integers(0, 1000, size=(20, 2)),
+        rng.integers(0, 1_000_000, size=(20, 2)),
+        np.array([[999_999, 999_999], [500_000, 1]], dtype=np.int64),
+    ]).astype(np.int64)
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"qid": np.arange(len(q)), "x": q[:, 0], "y": q[:, 1]}))
+    for k in (1, 10):
+        got = (knn_join(idx, qdf, k).toPandas()
+               .sort_values(["qid", "rank"]))
+        exp_d, exp_i = bf.knn(pts, ids, q, k)
+        assert np.array_equal(
+            got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
+        assert np.array_equal(
+            got["dist_sq"].to_numpy(np.int64).reshape(len(q), k),
+            exp_d.astype(np.int64))
+    # update() never adds salts, so the set carries over unchanged,
+    # and save/load keeps it in the manifest
+    up = idx.update(inserts=spark.createDataFrame(pd.DataFrame(
+        {"pid": [n], "x": [5], "y": [5]})))
+    assert up.manifest["hot_cells"] == hot
+    path = str(tmp_path / "hot")
+    back = SpatialIndex.load(spark, up.save(path))
+    assert back.manifest["hot_cells"] == hot
+    got = knn_join(back, qdf, 10).toPandas().sort_values(["qid", "rank"])
+    pts2 = np.concatenate([pts, [[5, 5]]])
+    ids2 = np.append(ids, n)
+    exp_d, exp_i = bf.knn(pts2, ids2, q, 10)
+    assert np.array_equal(
+        got["nid"].to_numpy(np.int64).reshape(len(q), 10), exp_i)
+
+
+def test_knn_fallback_window_bound(spark):
+    """Queries whose home probe finds < k points get a FINITE bound from
+    the stats prefix-sum window: exact results, and the candidate set
+    stays far below the nonempty-cell count (no full-index scan)."""
+    import pandas as pd
+    rng = np.random.default_rng(13)
+    n = 4000
+    pts = rng.integers(0, 1_000_000, size=(n, 2)).astype(np.int64)
+    ids = np.arange(n, dtype=np.int64)
+    df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ids, "x": pts[:, 0], "y": pts[:, 1]}))
+    idx = SpatialIndex.build(spark, df, grid=Grid(32), n_hint=n)
+    nonempty = idx.cell_stats().count()
+    # k far above any single cell's count (4000 pts / 1024 cells)
+    k = 64
+    q = rng.integers(0, 1_000_000, size=(25, 2)).astype(np.int64)
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"qid": np.arange(len(q)), "x": q[:, 0], "y": q[:, 1]}))
+    got = knn_join(idx, qdf, k).toPandas().sort_values(["qid", "rank"])
+    exp_d, exp_i = bf.knn(pts, ids, q, k)
+    assert np.array_equal(
+        got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
+    cand = knn_candidates(idx, qdf, k)
+    per_q = cand.groupBy("qid").count().agg(F.max("count")).collect()[0][0]
+    assert per_q < nonempty / 2, (per_q, nonempty)
+
+
+def test_range_hot_cell_salted_exact(spark):
+    """Range count/report/circle over an index with a salted hot cell:
+    boundary scans fan out per (cell, salt); results equal brute force,
+    and contained cells aggregate metadata-only."""
+    import pandas as pd
+    from kdtree_spark.queries.ranges import (range_count, range_report,
+                                             circle_count)
+    rng = np.random.default_rng(23)
+    n = 8000
+    pts = np.concatenate([
+        rng.integers(0, 1000, size=(n - 1000, 2)),
+        rng.integers(0, 1_000_000, size=(1000, 2)),
+    ]).astype(np.int64)
+    ids = np.arange(n, dtype=np.int64)
+    df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ids, "x": pts[:, 0], "y": pts[:, 1]}))
+    idx = SpatialIndex.build(spark, df, grid=Grid(16), n_hint=n,
+                             hot_cell_cap=1024)
+    assert idx.df.groupBy("cell").count().filter("count > 1").count() >= 1
+    boxes = [
+        (0, 0, 0, 500, 500),                # cuts through the hot cell
+        (1, 0, 0, 2000, 2000),              # contains the hot cell's bbox
+        (2, 100_000, 100_000, 900_000, 900_000),  # background, many cells
+        (3, 999_000, 999_000, 999_999, 999_999),  # likely empty
+    ]
+    got = (range_count(idx, boxes).toPandas()
+           .sort_values("box_id")["cnt"].to_numpy())
+    exp = bf.range_count(pts, np.asarray(
+        [(b[1], b[2], b[3], b[4]) for b in boxes], dtype=np.int64))
+    assert np.array_equal(got, exp), (got, exp)
+
+    rep = range_report(idx, boxes[:1]).toPandas()
+    in0 = ((pts[:, 0] <= 500) & (pts[:, 1] <= 500))
+    assert sorted(rep["pid"]) == sorted(ids[in0])
+
+    circles = [(0, 500, 500, 600), (1, 500_000, 500_000, 200_000)]
+    gotc = (circle_count(idx, circles).toPandas()
+            .sort_values("circle_id")["cnt"].to_numpy())
+    for cid, cx, cy, r in circles:
+        d2 = ((pts[:, 0] - cx) ** 2 + (pts[:, 1] - cy) ** 2)
+        assert gotc[cid] == int((d2 <= r * r).sum())
+
+
+def _pts_d(spark, sf_dir, d):
+    cc = list(points.dim_cols(d))
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li.createOrReplaceTempView("_r4_lineitem")
+    return spark.sql(
+        f"SELECT {points.dimd_select_sql(d)} FROM _r4_lineitem"), cc
+
+
+def _rand_boxes(rng, n, d, wlo, whi):
+    out = []
+    for i in range(n):
+        lo = rng.integers(0, 10**6 - whi, d)
+        w = rng.integers(wlo, whi, d)
+        out.append((i, *lo.tolist(), *(lo + w).tolist()))
+    return out
+
+
+@pytest.mark.parametrize("d", [3, 5])
+def test_range_ops_d_generic(spark, sf_dir, d):
+    """Distributed range count/report/circle at d>2 vs brute force
+    (reference parity: checkCorrect.sh runs range ops at d=5)."""
+    pts, cc = _pts_d(spark, sf_dir, d)
+    idx = SpatialIndex.build(spark, pts, grid=Grid(4), coord_cols=cc)
+    P = pts.toPandas()[cc].to_numpy(np.int64)
+    rng = np.random.default_rng(7 + d)
+    boxes = _rand_boxes(rng, 12, d, 50_000, 600_000)
+    boxes.append((12, *([0] * d), *([10**6] * d)))  # domain-sized
+
+    got = {r["box_id"]: r["cnt"] for r in range_count(idx, boxes).collect()}
+    for b in boxes:
+        lo, hi = np.array(b[1:1 + d]), np.array(b[1 + d:])
+        assert got[b[0]] == int(np.all((P >= lo) & (P <= hi), axis=1).sum())
+
+    rep = range_report(idx, boxes[:4]).toPandas()
+    exp_rows = sum(
+        int(np.all((P >= np.array(b[1:1 + d]))
+                   & (P <= np.array(b[1 + d:])), axis=1).sum())
+        for b in boxes[:4])
+    assert len(rep) == exp_rows
+    assert list(rep.columns) == ["box_id", "pid", *cc]
+
+    circles = [(i, *rng.integers(10**5, 9 * 10**5, d).tolist(),
+                int(rng.integers(10_000, 400_000))) for i in range(8)]
+    cgot = {r["circle_id"]: r["cnt"]
+            for r in circle_count(idx, circles).collect()}
+    for c in circles:
+        ctr, r = np.array(c[1:1 + d], np.float64), c[1 + d]
+        exp = int((((P - ctr) ** 2).sum(axis=1) <= float(r) * r).sum())
+        assert cgot[c[0]] == exp
+    idx.unpersist()
+
+
+def test_large_grid_pyramid_paths(spark, sf_dir):
+    """Grid(128): exercises the stats pyramid (hierarchical _prune_join
+    descent), super-cell kNN fallback and contained-coarse-cell
+    shortcuts — code paths inactive at the driver gates' Grid(8)
+    (ADVICE r3). Includes a domain-sized box, k far above
+    points-per-cell, and a k whose bound covers over ENUM_CAP cells."""
+    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
+    idx = SpatialIndex.build(spark, pts, grid=Grid(128))
+    assert idx.stats_pyramid(), "Grid(128) must build pyramid levels"
+    pdf = pts.toPandas()
+    P = pdf[["x", "y"]].to_numpy(np.int64)
+    ids = pdf["pid"].to_numpy(np.int64)
+
+    rng = np.random.default_rng(31)
+    boxes = _rand_boxes(rng, 10, 2, 2_000, 500_000)
+    boxes.append((10, 0, 0, 10**6, 10**6))
+    got = {r["box_id"]: r["cnt"] for r in range_count(idx, boxes).collect()}
+    for b in boxes:
+        lo, hi = np.array(b[1:3]), np.array(b[3:])
+        assert got[b[0]] == int(np.all((P >= lo) & (P <= hi), axis=1).sum())
+
+    rep = range_report(idx, boxes[:3]).toPandas()
+    exp = sum(int(np.all((P >= np.array(b[1:3]))
+                         & (P <= np.array(b[3:])), axis=1).sum())
+              for b in boxes[:3])
+    assert len(rep) == exp
+
+    circles = [(0, 500_000, 500_000, 450_000), (1, 10, 10, 3_000),
+               (2, 250_000, 750_000, 120_000)]
+    cgot = {r["circle_id"]: r["cnt"]
+            for r in circle_count(idx, circles).collect()}
+    for i, cx, cy, r in circles:
+        d2 = ((P - np.array([cx, cy], np.float64)) ** 2).sum(axis=1)
+        assert cgot[i] == int((d2 <= float(r) * r).sum())
+
+    # kNN with k >> points-per-cell (n/16384 per cell) forces the
+    # super-cell fallback + multi-cell merges
+    q = spark.createDataFrame(
+        [(int(i), int(x), int(y)) for i, (x, y) in enumerate(P[:8])],
+        "qid long, x long, y long")
+    k = 64
+    out = knn_join(idx, q, k).toPandas()
+    for qi in range(8):
+        d2 = ((P - P[qi]) ** 2).sum(axis=1)
+        order = np.lexsort((ids, d2))[:k]
+        mine = out[out.qid == qi].sort_values("rank")
+        assert list(mine["nid"]) == list(ids[order])
+
+    # k = 2000: the prefix-sum bound's cube spans more than ENUM_CAP
+    # cells, so the kernel expands super cells into fine children
+    from kdtree_spark.queries import knn as K
+    k = 2000
+    ub = K._prefix_ub(P[:2], K._super_arrays(idx), k)
+    assert len(K._enum_rows([P[:2, 0], P[:2, 1]], ub, idx.grid,
+                            False)[3]) == 2
+    out = knn_join(idx, q.filter("qid < 2"), k).toPandas()
+    for qi in range(2):
+        d2 = ((P - P[qi]) ** 2).sum(axis=1)
+        order = np.lexsort((ids, d2))[:k]
+        mine = out[out.qid == qi].sort_values("rank")
+        assert list(mine["nid"]) == list(ids[order])
+        assert list(mine["dist_sq"]) == list(d2[order])
+    idx.unpersist()
+
+
+@pytest.mark.parametrize("g", [4, 128])
+def test_range_count_off_grid_points(spark, g):
+    """Points off the grid live in its boundary cells, so boxes past
+    the grid find them; inverted boxes count nothing. Grid(128) runs
+    the stats-pyramid descent, Grid(4) the single-level cover."""
+    rng = np.random.default_rng(43)
+    P = np.vstack([rng.integers(0, 10**6, (300, 2)),
+                   [[1_000_005, 500_000], [1_000_010, 500_003],
+                    [-7, 20], [400_000, 1_200_000], [-3, -3]]])
+    pdf = pd.DataFrame({"pid": np.arange(len(P)), "x": P[:, 0],
+                        "y": P[:, 1]})
+    idx = SpatialIndex.build(spark, spark.createDataFrame(pdf),
+                             grid=Grid(g))
+    boxes = [(0, 1_000_000, 0, 1_100_000, 10**6),
+             (1, -100, -100, 100_000, 100_000),
+             (2, 0, 1_100_000, 10**6, 1_300_000),
+             (3, -10, -10, 2_000_000, 2_000_000),
+             (4, 600_000, 0, 400_000, 10**6),
+             (5, 100_000, 100_000, 700_000, 800_000)]
+    got = {r["box_id"]: r["cnt"] for r in range_count(idx, boxes).collect()}
+    for b in boxes:
+        lo, hi = np.array(b[1:3]), np.array(b[3:])
+        assert got[b[0]] == int(np.all((P >= lo) & (P <= hi), axis=1).sum())
+    assert got[0] == 2 and got[4] == 0
+    idx.unpersist()
+
+
+def _pts(spark, n=4000, seed=5):
+    rng = np.random.default_rng(seed)
+    pdf = pd.DataFrame({
+        "pid": np.arange(n, dtype=np.int64),
+        "x": rng.integers(0, COORD_LIMIT, n, dtype=np.int64),
+        "y": rng.integers(0, COORD_LIMIT, n, dtype=np.int64),
+    })
+    return spark.createDataFrame(pdf), pdf
+
+
+def _brute_knn(pdf, qx, qy, k):
+    d = (pdf.x.to_numpy() - qx) ** 2 + (pdf.y.to_numpy() - qy) ** 2
+    order = np.lexsort((pdf.pid.to_numpy(), d))
+    return d[order[:k]], pdf.pid.to_numpy()[order[:k]]
+
+
+def test_fused_knn_clustered_queries(spark):
+    """Queries live far from most data and on cell borders; exact match
+    vs brute force through the fused probe+enum path."""
+    from kdtree_spark.queries.knn import knn_join
+    df, pdf = _pts(spark)
+    idx = SpatialIndex.build(spark, df, grid=Grid(8))
+    qs = [(0, 3, 7), (1, COORD_LIMIT - 1, COORD_LIMIT - 1),
+          (2, COORD_LIMIT // 2, COORD_LIMIT // 2),
+          (3, COORD_LIMIT // 8, 0)]  # cell-border x
+    qdf = spark.createDataFrame(
+        pd.DataFrame(qs, columns=["qid", "x", "y"]))
+    out = knn_join(idx, qdf, 7).toPandas()
+    for qid, qx, qy in qs:
+        got = out[out.qid == qid].sort_values("rank")
+        ed, ei = _brute_knn(pdf, qx, qy, 7)
+        assert np.array_equal(got.nid.to_numpy(), ei), qid
+        assert np.array_equal(got.dist_sq.to_numpy(np.int64), ed), qid
+
+
+def test_fused_knn_needy_path(spark):
+    """Queries the probe samples cannot bound take the super-cell
+    prefix-sum bound inside the candidate kernel: k above the probe
+    pool, and a query whose home cell is empty. Results must stay
+    exact."""
+    from kdtree_spark.queries.knn import knn_join
+    df, pdf = _pts(spark, n=3000)
+    idx = SpatialIndex.build(spark, df, grid=Grid(4))
+    # per-cell live counts ~187 < PROBE_SAMPLE, so the pool holds the
+    # home cell's full live set; k > pool size triggers the fallback
+    # only when the home cell holds fewer than k points
+    k = 400
+    qdf = spark.createDataFrame(
+        pd.DataFrame([(0, 11, 22)], columns=["qid", "x", "y"]))
+    out = knn_join(idx, qdf, k).toPandas().sort_values("rank")
+    ed, ei = _brute_knn(pdf, 11, 22, k)
+    assert np.array_equal(out.nid.to_numpy(), ei)
+    assert np.array_equal(out.dist_sq.to_numpy(np.int64), ed)
+
+    # empty home cell: no points in grid cell (0, 0), queries inside it
+    cw = Grid(4).cw
+    hole = pdf[(pdf.x >= cw) | (pdf.y >= cw)]
+    idx2 = SpatialIndex.build(spark, spark.createDataFrame(hole),
+                              grid=Grid(4))
+    qs = [(0, 5, 5), (1, cw - 1, cw // 2), (2, cw // 3, cw - 1)]
+    out = knn_join(idx2, spark.createDataFrame(
+        pd.DataFrame(qs, columns=["qid", "x", "y"])), 5).toPandas()
+    for qid, qx, qy in qs:
+        got = out[out.qid == qid].sort_values("rank")
+        ed, ei = _brute_knn(hole, qx, qy, 5)
+        assert np.array_equal(got.nid.to_numpy(), ei), qid
+        assert np.array_equal(got.dist_sq.to_numpy(np.int64), ed), qid
+
+
+def test_gen_circles_d_shape():
+    cs = fixtures.gen_circles_d(6, 5)
+    assert all(len(c) == 7 for c in cs)
+    sql = fixtures.circles_values_sql_d(cs, 5)
+    assert "ctr4" in sql and "circle_id" in sql
+    # radii stay on-domain
+    assert all(0 < c[-1] <= COORD_LIMIT // 2 for c in cs)
+
+
+def test_knn_and_range_d9(spark):
+    """Mid-range dimension parity (the reference sweeps d in
+    {2,3,5,7,9,10,12,16}, tests/test.cpp:569-617): exact kNN + range
+    count at d=9 through the dims-keyed grid (3-D cell key)."""
+    from kdtree_spark.queries.knn import knn_join
+    from kdtree_spark.queries.ranges import range_count
+    d = 9
+    rng = np.random.default_rng(9)
+    n = 3000
+    arr = rng.integers(0, COORD_LIMIT, (n, d), dtype=np.int64)
+    cols = [f"c{j}" for j in range(d)]
+    pdf = pd.DataFrame(arr, columns=cols)
+    pdf.insert(0, "pid", np.arange(n, dtype=np.int64))
+    df = spark.createDataFrame(pdf)
+    idx = SpatialIndex.build(spark, df, grid=Grid(4, dims=3),
+                             coord_cols=tuple(cols))
+    # kNN k=5 for 12 queries vs brute force
+    qarr = rng.integers(0, COORD_LIMIT, (12, d), dtype=np.int64)
+    qpdf = pd.DataFrame(qarr, columns=cols)
+    qpdf.insert(0, "qid", np.arange(12, dtype=np.int64))
+    out = knn_join(idx, spark.createDataFrame(qpdf), 5).toPandas()
+    for qi in range(12):
+        dist = ((arr - qarr[qi]) ** 2).sum(axis=1)
+        order = np.lexsort((pdf.pid.to_numpy(), dist))[:5]
+        got = out[out.qid == qi].sort_values("rank")
+        assert np.array_equal(got.nid.to_numpy(), order), qi
+        assert np.array_equal(got.dist_sq.to_numpy(np.int64), dist[order]), qi
+    # range count vs numpy over d-dim boxes
+    boxes = fixtures.gen_boxes_d(8, d, seed=19)
+    rc = (range_count(idx, boxes).toPandas()
+          .set_index("box_id")["cnt"].to_dict())
+    for b in boxes:
+        bid, lo, hi = b[0], np.array(b[1:1 + d]), np.array(b[1 + d:])
+        exp = int(((arr >= lo) & (arr <= hi)).all(axis=1).sum())
+        assert rc[bid] == exp, bid
+
+
+def test_knn_config_matrix(spark):
+    """Interaction sweep of the fused distributed kNN: d x k x dtype x
+    grid-key dims x duplicate floods x salted fan-out crossed in one
+    session, each config exact (ids, distances) vs numpy brute force.
+    The single-axis variants are covered elsewhere; this catches
+    interactions (e.g. duplicate-flood ties at k=17 through the fin0
+    bypass, f64 enum rounding, d=7 through a 3-D cell key)."""
+    from kdtree_spark import bruteforce as bf
+    from kdtree_spark.queries.knn import knn_join
+    configs = [
+        # (d, k, hi, fmode, grid, cap)   - why
+        (2, 17, 40, False, Grid(8), None),      # duplicate flood + ties
+        (3, 3, COORD_LIMIT, False, Grid(4, dims=3), None),
+        (5, 17, COORD_LIMIT, False, Grid(3, dims=4), None),
+        (2, 5, float(COORD_LIMIT), True, Grid(8), None),  # f64 end to end
+        (7, 1, COORD_LIMIT, False, Grid(4, dims=3), None),
+        # salting crossed with high-d and f64: cap=8 over ~31 pts/cell
+        # puts every cell past FANOUT_MIN_BLOBS, so the whole batch
+        # takes the (cell, salt) fan-out branch
+        (5, 10, COORD_LIMIT, False, Grid(3, dims=4), 8),
+        (2, 5, float(COORD_LIMIT), True, Grid(4), 8),
+    ]
+    n, m = 2500, 40
+    for ci, (d, k, hi, fmode, grid, cap) in enumerate(configs):
+        rng = np.random.default_rng(100 + ci)
+        if fmode:
+            arr = rng.uniform(0, hi, size=(n, d))
+            q = rng.uniform(0, hi, size=(m, d))
+        else:
+            arr = rng.integers(0, hi, size=(n, d), dtype=np.int64)
+            q = rng.integers(0, hi, size=(m, d), dtype=np.int64)
+        q[:8] = arr[:8]                  # on-point queries
+        q[8] = 0                         # domain corners / cell borders
+        q[9] = hi - (0.5 if fmode else 1)
+        cols = [f"c{j}" for j in range(d)]
+        pdf = pd.DataFrame(arr, columns=cols)
+        ids = (rng.permutation(n).astype(np.int64) * 7 + 1)
+        pdf.insert(0, "pid", ids)
+        kw = {} if cap is None else {"hot_cell_cap": cap}
+        idx = SpatialIndex.build(spark, spark.createDataFrame(pdf),
+                                 grid=grid, coord_cols=tuple(cols), **kw)
+        if cap is not None:
+            from kdtree_spark.queries.skew import FANOUT_MIN_BLOBS
+            assert (idx.cell_stats().agg(F.max("maxsalt")).collect()[0][0]
+                    + 1 >= FANOUT_MIN_BLOBS), ci
+        qpdf = pd.DataFrame(q, columns=cols)
+        qpdf.insert(0, "qid", np.arange(m, dtype=np.int64))
+        out = (knn_join(idx, spark.createDataFrame(qpdf), k)
+               .toPandas().sort_values(["qid", "rank"]))
+        assert len(out) == m * k, (ci, len(out))
+        gd, gi = bf.knn(arr, ids, q, k)
+        np.testing.assert_array_equal(
+            out["nid"].to_numpy(np.int64).reshape(m, k), gi,
+            err_msg=f"config {ci}")
+        if fmode:
+            np.testing.assert_allclose(
+                out["dist_sq"].to_numpy().reshape(m, k), gd,
+                err_msg=f"config {ci}")
+        else:
+            np.testing.assert_array_equal(
+                out["dist_sq"].to_numpy(np.int64).reshape(m, k),
+                gd.astype(np.int64), err_msg=f"config {ci}")
+
+
+def test_range_circle_config_matrix(spark):
+    """Range-side interaction sweep: box count + report + circle count
+    at (d, dtype, grid dims, duplicate floods, salted fan-out) crossed
+    in one session, each exact vs numpy. Complements the kNN matrix."""
+    from kdtree_spark.queries.ranges import (circle_count, range_count,
+                                             range_report)
+    configs = [
+        # (d, hi, fmode, grid, cap)
+        (2, 40, False, Grid(8), None),           # duplicate flood
+        (3, COORD_LIMIT, False, Grid(4, dims=3), None),
+        (5, COORD_LIMIT, False, Grid(3, dims=4), None),
+        (2, float(COORD_LIMIT), True, Grid(8), None),  # f64 end to end
+        # salted fan-out crossed with d=5 (count + report + circle)
+        (5, COORD_LIMIT, False, Grid(3, dims=4), 8),
+    ]
+    n = 2500
+    for ci, (d, hi, fmode, grid, cap) in enumerate(configs):
+        rng = np.random.default_rng(200 + ci)
+        if fmode:
+            arr = rng.uniform(0, hi, size=(n, d))
+        else:
+            arr = rng.integers(0, hi, size=(n, d), dtype=np.int64)
+        cols = [f"c{j}" for j in range(d)]
+        pdf = pd.DataFrame(arr, columns=cols)
+        ids = rng.permutation(n).astype(np.int64) * 3 + 1
+        pdf.insert(0, "pid", ids)
+        kw = {} if cap is None else {"hot_cell_cap": cap}
+        idx = SpatialIndex.build(spark, spark.createDataFrame(pdf),
+                                 grid=grid, coord_cols=tuple(cols), **kw)
+        if cap is not None:
+            from kdtree_spark.queries.skew import FANOUT_MIN_BLOBS
+            assert (idx.cell_stats().agg(F.max("maxsalt")).collect()[0][0]
+                    + 1 >= FANOUT_MIN_BLOBS), ci
+        if hi == 40:  # flood domain: hand-sized boxes over the tiny cube
+            boxes = [(i, *([i] * d), *([i + 7] * d)) for i in range(8)]
+            circles = [(i, *([i * 4] * d), 9) for i in range(6)]
+        else:
+            boxes = fixtures.gen_boxes_d(8, d, seed=50 + ci)
+            circles = fixtures.gen_circles_d(6, d, seed=60 + ci)
+        lo = np.array([b[1:1 + d] for b in boxes], dtype=arr.dtype)
+        hb = np.array([b[1 + d:] for b in boxes], dtype=arr.dtype)
+        inbox = ((arr[None, :, :] >= lo[:, None, :])
+                 & (arr[None, :, :] <= hb[:, None, :])).all(axis=2)
+        # count
+        rc = (range_count(idx, boxes).toPandas()
+              .set_index("box_id")["cnt"].sort_index())
+        np.testing.assert_array_equal(rc.to_numpy(), inbox.sum(axis=1),
+                                      err_msg=f"config {ci} count")
+        # report: multiset of (box_id, pid)
+        rep = range_report(idx, boxes).toPandas()
+        exp_pairs = sorted((int(b), int(p))
+                           for bi, b in enumerate(r[0] for r in boxes)
+                           for p in ids[inbox[bi]])
+        got_pairs = sorted(zip(rep.box_id.astype(int), rep.pid.astype(int)))
+        assert got_pairs == exp_pairs, f"config {ci} report"
+        # circle
+        ctr = np.array([c[1:1 + d] for c in circles], dtype=np.float64)
+        r2 = np.array([c[-1] for c in circles], dtype=np.float64) ** 2
+        d2 = ((arr[None, :, :].astype(np.float64)
+               - ctr[:, None, :]) ** 2).sum(axis=2)
+        cc = (circle_count(idx, circles).toPandas()
+              .set_index("circle_id")["cnt"].sort_index())
+        np.testing.assert_array_equal(cc.to_numpy(),
+                                      (d2 <= r2[:, None]).sum(axis=1),
+                                      err_msg=f"config {ci} circle")

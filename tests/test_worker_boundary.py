@@ -203,3 +203,29 @@ def test_empty_side_groups_exact(spark, fmode):
     home0 = [(0, 0, 0, cw - 1, cw - 1), (1, cw // 2, cw // 2, cw + 5, cw + 5)]
     q = _points(rng, 6, fmode, cw) % cw  # home cell: the emptied one
     check(idx, q, home0 + [(2, *c[1:]) for c in corner])
+
+
+def test_cogroup_empty_kernel_output_schema(spark):
+    """A kernel that returns {} (no rows) through index.cogroup yields
+    an empty frame whose columns and types are exactly the declared
+    schema: _arrow_fn builds the empty table from that schema, not from
+    what the kernel returned."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from kdtree_spark.index import cogroup
+    schema = ("qid long, x double, ub double, cell long, fin0 boolean, "
+              "probe array<bigint>, blob binary")
+    calls = spark.sparkContext.accumulator(0)
+
+    def kernel(key, left, right):
+        calls.add(1)
+        return {}
+
+    left = spark.createDataFrame([(1, 0, 0)], "cell long, qid long, x long")
+    right = spark.createDataFrame([(1, 9), (2, 7)], "cell long, v long")
+    out = cogroup(left, right, ["cell"], kernel, schema)
+    assert out.collect() == []
+    assert calls.value == 2  # the kernel ran, once per cell
+    assert out.schema == _parse_datatype_string(schema)
+    got = out.toPandas()
+    assert got.empty and list(got.columns) == out.columns
