@@ -128,6 +128,57 @@ def test_components_two_clusters_plus_isolated(spark):
     assert got[3] == 1 and got[12] == 10 and got[14] == 14
 
 
+def _check_local(spark, edges, locs, ids=None):
+    """connected_components with a locality column (edge i in group
+    locs[i]) vs union-find, over `ids` (default: the edges' nodes); the
+    caller's job description survives the call."""
+    ids = sorted({x for e in edges for x in e}) if ids is None else ids
+    df = spark.createDataFrame(
+        pd.DataFrame({"da": [a for a, _ in edges],
+                      "db": [b for _, b in edges],
+                      "loc": locs}, dtype="int64"),
+        "da long, db long, loc long")
+    nodes = spark.createDataFrame(pd.DataFrame({"id": ids}, dtype="int64"),
+                                  "id long")
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.job.description", "caller")
+    try:
+        got = dict(connected_components(df, nodes,
+                                        local_col="loc").collect())
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == _uf_components(ids, edges)
+
+
+def test_components_local_path_alternating_groups(spark):
+    """Consecutive path edges sit in different groups, every group
+    holds edges, and no two edges of a group touch: the contraction
+    merges nothing and the rounds do all the work."""
+    edges = [(i, i + 1) for i in range(199)]
+    _check_local(spark, edges, [i % 4 for i in range(199)])
+
+
+def test_components_local_many_components(spark):
+    """Many components across groups, with isolated nodes, duplicate
+    edges (in one group and across groups), self-loops and extreme
+    int64 ids."""
+    rng = np.random.default_rng(37)
+    lo, hi = -2**63, 2**63 - 1
+    pool = ([lo, lo + 1, lo + 2, hi, hi - 1, hi - 2, -1, 0]
+            + [int(x) for x in rng.choice(10**6, 200, replace=False)])
+    idx = rng.integers(0, len(pool), (150, 2))
+    edges = [(pool[a], pool[b]) for a, b in idx]
+    edges += edges[:20] + [(x, x) for x in pool[:6]] + [(lo, hi)]
+    locs = [int(g) for g in rng.integers(0, 5, len(edges))]
+    isolated = [10**7 + i for i in range(5)]
+    _check_local(spark, edges, locs, sorted(set(pool) | set(isolated)))
+
+
+def test_components_local_empty_edges(spark):
+    _check_local(spark, [], [], [3, 8, -2**63])
+
+
 def test_dedup_canonical(spark):
     """Endpoint: one survivor per component, the min id, full rows."""
     import pandas as pd

@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from kdtree_spark.grid import Grid
+from kdtree_spark.grid import COORD_LIMIT, Grid
 from kdtree_spark.queries.dbscan import dbscan
 
 
@@ -83,3 +83,27 @@ def test_dbscan_all_noise_and_single_cluster(spark):
     rows = dbscan(df2, 5_000, 3).collect()
     assert {r["cluster"] for r in rows} == {100}
     assert all(r["kind"] == "core" for r in rows)
+
+
+@pytest.mark.parametrize("g", [8, 200])
+def test_dbscan_off_grid(spark, g):
+    """Clusters across the domain's edges: negative coordinates and
+    coordinates at or above COORD_LIMIT fold onto the boundary cells of
+    the join grid and of its coarse locality grid. eps 20,000 gives a
+    default grid of 50 a side; Grid(8) is coarser, Grid(200) finer."""
+    rng = np.random.default_rng(61)
+    centers = [(-6_000, 500_000), (COORD_LIMIT + 4_000, 30_000),
+               (-9_000, -9_000), (COORD_LIMIT, COORD_LIMIT + 2_000),
+               (480_000, -3_000), (500_000, 500_000)]
+    xy = np.concatenate(
+        [rng.normal(c, 9_000, (40, 2)) for c in centers]
+        + [rng.uniform(-60_000, COORD_LIMIT + 60_000, (60, 2))]
+    ).astype(np.int64)
+    xy[0] = (COORD_LIMIT, 500_000)  # exactly at the limit
+    ids = rng.permutation(len(xy))
+    df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ids, "x": xy[:, 0], "y": xy[:, 1]}))
+    got = {r["pid"]: (r["cluster"], r["kind"])
+           for r in dbscan(df, 20_000, 4, grid=Grid(g)).collect()}
+    assert got == _brute_dbscan(ids, xy, 20_000, 4)
+    assert (xy < 0).any() and (xy >= COORD_LIMIT).any()

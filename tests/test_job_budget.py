@@ -31,7 +31,8 @@ KNN_JOBS_AFTER_UPDATE = 8  # the same call with the stats carried
 UPDATE_JOBS = 4  # a partial update: touched cells, then its checkpoint
 # (one job more when it compacts)
 PATH_CC_JOBS = 60  # connected_components on a 400-node path
-DBSCAN_JOBS = 70  # dbscan on 2,000 uniform points, ~10 neighbours each
+DBSCAN_JOBS = 29  # dbscan on 2,000 uniform points, ~10 neighbours each
+# (29 on local[2], local[4] and local[9], 20 on local[1])
 
 
 def _counted(spark, fn):
