@@ -153,6 +153,17 @@ class Grid:
                       min(max(int(b) // cw, 0), g - 1) + 1)
                 for a, b in zip(lo, hi)]
 
+    def cover_cells(self, lo: np.ndarray, hi: np.ndarray, level: tuple):
+        """Driver-side twin of `cover` for many integer extents at once:
+        lo, hi are (rows, dims) inclusive corners -> (row, cell) arrays,
+        one entry per (row, cell of `level` = (g, cw) the row meets).
+        Work is proportional to the output; empty extents meet none."""
+        g, cw = level
+        c0 = np.clip(lo // cw, 0, g - 1)
+        nper = np.where((lo <= hi).all(axis=1)[:, None],
+                        np.clip(hi // cw, 0, g - 1) - c0 + 1, 0)
+        return block_cells(c0.T, nper.T, g)[:2]
+
     # -- DuckDB SQL (oracle side): the same clamp over integer coords
     def duckdb_axis_sql(self, c: str) -> str:
         return f"LEAST(GREATEST(({c}) // {self.cw}, 0), {self.g - 1})"
@@ -192,3 +203,24 @@ def _axis_sql(c: str, f64: bool, level: tuple) -> str:
     q = (f"CAST(FLOOR(({c}) / CAST({cw} AS DOUBLE)) AS BIGINT)" if f64
          else f"(({c}) DIV {cw})")
     return f"LEAST(GREATEST({q}, 0), {g - 1})"
+
+
+def block_cells(c0, nper, g: int):
+    """Row-major ids of every cell of a g-per-dim grid in per-row
+    blocks (per dim j: [c0[j], c0[j] + nper[j])) -> (rep, cells,
+    counts): the source row of each output cell, the cell ids, and the
+    cells per row."""
+    gd = len(c0)
+    counts = np.asarray(nper[0], np.int64).copy()
+    for nj in nper[1:]:
+        counts *= nj
+    rep = np.repeat(np.arange(len(counts)), counts)
+    starts = np.cumsum(counts) - counts
+    rem = np.arange(len(rep), dtype=np.int64) - starts[rep]
+    # mixed-radix decode, last dim fastest (row-major id)
+    cells = np.zeros(len(rep), np.int64)
+    for j in range(gd - 1, -1, -1):
+        nj = nper[j][rep]
+        cells += (rem % nj + c0[j][rep]) * (g ** (gd - 1 - j))
+        rem = rem // nj
+    return rep, cells, counts

@@ -5,6 +5,13 @@ role of the reference's sampled 6-level top-of-tree + counting-sort bucket
 shuffle (`build_tree.hpp:49-121`). Bottom level: a serialized numpy
 kd-tree per (cell, salt) built inside `applyInArrow` (localtree.py).
 
+Every read routes against one driver-held level per index version
+(`SpatialIndex.level`, at most SUPER_MAX_CELLS top cells): per top cell
+its live count, full-d data bbox, highest salt and pooled probe sample.
+kNN ships it in a narrow kernel's closure; range and circle shapes are
+classified against it in driver numpy. Below it, only S > 1 grids keep
+Spark-side stats (cell_stats, stats_pyramid).
+
 Skew handling (the dummy-leaf / INBALANCE analogue at the distributed
 level, plus what BASELINE.json calls out): cells whose row count exceeds
 `hot_cell_cap` are salted into multiple index rows; every query operator
@@ -21,11 +28,10 @@ cells are never shuffled, deserialized, or rewritten. A fragment whose
 rows later deltas all rewrote leaves the union, as the reference's
 rebuilt subtree replaces the old one (`batch_insert.hpp:60-191`), and a
 full compaction bounds the fragments that stay. Deletes are
-partial-cover tolerant (`batch_delete.hpp:95-107`). The read statistics
-travel with a batch whose parent holds them on the driver (the super
-grid is the fine grid): the new version's cell_stats / super_table are
-the parent's, patched with the delta's own blob rows, not a rescan of
-the fragments.
+partial-cover tolerant (`batch_delete.hpp:95-107`). The routing level
+travels with a batch whose parent holds it (the top level is the fine
+grid): the new version's level is the parent's, patched with the
+delta's own blob rows, not a rescan of the fragments.
 
 Persistence is write-audit-publish: parquet + JSON manifest written to a
 temp dir, audited (row counts), then atomically renamed — the checkpoint
@@ -38,6 +44,7 @@ from __future__ import annotations
 import contextlib
 import functools
 import importlib
+import itertools
 import json
 import os
 import time
@@ -50,7 +57,9 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, BooleanType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
+                               _parse_datatype_string)
 
 from .grid import Grid
 from .localtree import LocalKDTree
@@ -69,22 +78,27 @@ INDEX_SCHEMA_F64 = INDEX_SCHEMA.replace(
 
 PYRAMID_FACTOR = 4  # per-dim coarsening per stats-pyramid level
 
-SUPER_MAX_CELLS = 4096  # super-cell stats table row cap: small enough
-# to ship with every kNN candidate kernel at ANY scale (1.2e8 fine
-# cells at the 1e12-row projection coarsen to these 4096). The per-dim
-# cap follows from the grid's dims: 64 for 2-D, 16 for 3-D.
+SUPER_MAX_CELLS = 4096  # top-level (driver-held) cell cap: small
+# enough to ship with every kNN kernel at ANY scale (1.2e8 fine cells
+# at the 1e12-row projection coarsen to these 4096). The per-dim cap
+# follows from the grid's dims: 64 for 2-D, 16 for 3-D.
+
+LEVEL_PROBES = 1 << 17  # pooled probe points one driver level holds at
+# most: a top-level cell keeps up to its share, LEVEL_PROBES / (top
+# cells of the grid), and strides its pool down past that. update-mix's
+# 81 cells keep every ~1024-point blob sample whole; 4096 cells keep 32
+# each. 2 MB of 2-D int64, riding in the kNN kernel's closure.
 
 
-def _super_max_g(dims: int) -> int:
-    return max(1, int(SUPER_MAX_CELLS ** (1.0 / dims)))
 
 STATS_COLS = ["cell", "salt", "cnt", "nextra", "ntomb", "depth",
               "xmin", "ymin", "xmax", "ymax"]
+LEVEL_COLS = ["cell", "salt", "cnt", "bbox", "probe"]  # a blob's level input
 
 
 def bbox_cols(d: int) -> tuple[list, list]:
     """(lo, hi) data-bbox column names of the stats tables (cell_stats,
-    stats_pyramid, super_table) for a d-dim index."""
+    stats_pyramid) for a d-dim index."""
     return (["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)],
             ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)])
 
@@ -118,7 +132,7 @@ PROBE_FRACTION = 32
 # factor at PROBE_FRACTION^(2/d) in distance² for every blob size —
 # oversized blobs (salted hot cells, coarse test grids) would otherwise
 # dilute a fixed-size sample into a useless bound. Sample bytes stay
-# <= ~3% of blob bytes, and only queried home cells' samples ever ship.
+# <= ~3% of blob bytes, and the driver level pools them (LEVEL_PROBES).
 # High-d floors: looseness costs candidate cells quadratically in the
 # two gridded dims while sample bytes grow only linearly; measured at
 # sf0.1/d=5 (alternated A/B, best-of-3): floor 1024 -> 15.6s, 4096 ->
@@ -227,34 +241,50 @@ def _rescan_changed_zips_only() -> None:
     importlib.invalidate_caches()
 
 
+def _table(cols: dict, out: pa.Schema) -> pa.Table:
+    """Kernel output columns (none at all for no rows) as one Arrow
+    table of exactly the declared schema's types."""
+    if not cols:
+        return out.empty_table()
+    return pa.table([pa.array(cols[f.name], f.type) for f in out],
+                    schema=out)
+
+
 def _arrow_fn(fn, schema: str):
     """fn(key, table) -> {column: values}, as an applyInArrow function
-    of the declared schema: group keys arrive as Python values, and
-    the returned columns (none at all for no rows) become one Arrow
-    table of exactly the schema's types."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-    out = to_arrow_schema(_parse_datatype_string(schema))
+    of the declared schema: group keys arrive as Python values."""
+    out = to_arrow_schema(_parse_datatype_string(schema))  # needs the driver
 
     def run(key, t):  # unannotated: applyInArrow infers its mode from hints
         _rescan_changed_zips_only()
-        cols = fn(tuple(k.as_py() for k in key), t)
-        if not cols:
-            return out.empty_table()
-        return pa.table([pa.array(cols[f.name], f.type) for f in out],
-                        schema=out)
+        return _table(fn(tuple(k.as_py() for k in key), t), out)
     return run
 
 
-def _filler(dtype):
-    """A non-NULL placeholder literal of `dtype`."""
+def map_arrow(df: DataFrame, fn, schema: str) -> DataFrame:
+    """fn({column: values}) -> {column: values} per Arrow batch of df
+    (columns as _column reads them), as one mapInArrow of the declared
+    schema: a narrow kernel, no exchange and no job of its own."""
+    out = to_arrow_schema(_parse_datatype_string(schema))
+
+    def run(batches):
+        _rescan_changed_zips_only()
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            yield from _table(fn({c: _column(t.column(c))
+                                  for c in t.column_names}),
+                              out).to_batches()
+    return df.mapInArrow(run, schema)
+
+
+def _literal(dtype) -> str:
+    """SQL of a non-NULL placeholder value of Spark type `dtype`."""
     if isinstance(dtype, BooleanType):
-        return F.lit(False)
+        return "false"
     if isinstance(dtype, BinaryType):
-        return F.lit(bytearray())
-    if isinstance(dtype, ArrayType):
-        return F.array().cast(dtype)
-    return F.lit(0).cast(dtype)
+        return "X''"
+    fill = "array()" if isinstance(dtype, ArrayType) else "0"
+    return f"CAST({fill} AS {dtype.simpleString()})"
 
 
 def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
@@ -264,18 +294,21 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
     map over the union of both sides: one exchange and one Spark job
     instead of two. Each side reaches fn as {column: values} of its own
     columns (_column) and fn returns the output columns (_arrow_fn).
-    Each side's rows fill the other side's columns with non-NULL
-    placeholders (an Arrow NULL would make to_numpy return float64 for
-    an int64 column); a flag column tells them apart again."""
+    Each side is one projection whose rows fill the other side's
+    columns with non-NULL SQL literals (an Arrow NULL would make
+    to_numpy return float64 for an int64 column); a flag column tells
+    them apart again."""
     flag = "_right"
-    cols = list(dict.fromkeys(left.columns + right.columns))
-    lcols, rcols = left.columns, right.columns
+    ls, rs = left.schema, right.schema
+    lcols, rcols = ls.names, rs.names
+    types = {f.name: f.dataType for f in [*rs, *ls]}
+    cols = list(dict.fromkeys(lcols + rcols))
 
-    def rows(df, other, is_right):
-        fill = {f.name: _filler(f.dataType) for f in other.schema
-                if f.name not in df.columns}
-        return (df.withColumns(fill).withColumn(flag, F.lit(is_right))
-                .select(*cols, flag))
+    def rows(df, names, is_right):
+        return df.selectExpr(*[f"`{c}`" if c in names
+                               else f"{_literal(types[c])} AS `{c}`"
+                               for c in cols],
+                             f"{str(is_right).lower()} AS {flag}")
 
     def side(t, names, m):
         at = np.flatnonzero(m)
@@ -285,7 +318,7 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
         r = _column(t.column(flag))
         return fn(key, side(t, lcols, ~r), side(t, rcols, r))
 
-    return (rows(left, right, False).unionByName(rows(right, left, True))
+    return (rows(left, lcols, False).union(rows(right, rcols, True))
             .groupBy(*keys).applyInArrow(_arrow_fn(kernel, schema), schema))
 
 
@@ -336,24 +369,31 @@ def _fresh_cache(df: DataFrame) -> DataFrame:
     return df.select(*[F.col(c).alias(c) for c in df.columns]).cache()
 
 
-def _delta_cell_stats(rows: list, d: int, cdt) -> pd.DataFrame:
-    """cell_stats() rows of the cells an update rewrote, from the
-    update's blob rows (STATS_COLS[, bbox]): the same aggregation
-    cell_stats() runs over a blob table."""
-    lo, hi = bbox_cols(d)
-    b = pd.DataFrame([r[:len(STATS_COLS)] for r in rows],
-                     columns=STATS_COLS).astype(
-        {"cell": np.int64, "salt": np.int32, "cnt": np.int64,
-         **{c: cdt for c in STATS_COLS[-4:]}})
-    if d > 2:
-        box = np.array([r["bbox"] for r in rows], cdt).reshape(-1, 2 * d)
-        for j in range(2, d):
-            b[f"mn{j}"], b[f"mx{j}"] = box[:, j], box[:, d + j]
-    # a blob's row once, even if a re-run task reported it again
-    b = b[b["cnt"] > 0].drop_duplicates(["cell", "salt"])
-    return b.groupby("cell", as_index=False).agg(
-        **{c: (c, "min") for c in lo}, **{c: (c, "max") for c in hi},
-        ccnt=("cnt", "sum"), maxsalt=("salt", "max"))
+class Level(NamedTuple):
+    """An index version's top routing level (SpatialIndex.level): per
+    non-empty top-level cell (ascending `cell`), its live count, highest
+    non-empty salt, full-d data bbox (cells x d) and pooled probe sample
+    (an object array of points x d arrays: its blobs' samples in
+    (cell, salt) order, strided down to its LEVEL_PROBES share)."""
+    cell: np.ndarray
+    ccnt: np.ndarray
+    maxsalt: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+    probe: np.ndarray
+
+    def find(self, cells: np.ndarray) -> np.ndarray:
+        """Each of `cells`' position in this level, -1 where empty."""
+        return np.where(np.isin(cells, self.cell),
+                        np.searchsorted(self.cell, cells), -1)
+
+    def patched(self, touched: list, delta: "Level") -> "Level":
+        """This level with the cells in `touched` replaced by `delta`'s
+        rows (a touched cell missing from delta drops out)."""
+        keep = ~np.isin(self.cell, touched)
+        both = [np.concatenate([a[keep], b]) for a, b in zip(self, delta)]
+        order = np.argsort(both[0], kind="stable")
+        return Level(*(f[order] for f in both))
 
 
 class SpatialIndex:
@@ -371,17 +411,17 @@ class SpatialIndex:
         self.float_coords = isinstance(df.schema["xmin"].dataType,
                                        DoubleType)
         self._stats_pd: pd.DataFrame | None = None
-        self._cell_stats: DataFrame | None = None
-        self._super_pd: pd.DataFrame | None = None
+        self._cell_stats: DataFrame | None = None  # cached, S > 1 only
         self._pyramid: list | None = None
+        # the driver-held top routing level (level()): a build or an
+        # update hands it over when S == 1, any other version aggregates
+        # it on first read
+        self._level: Level | None = None
         # delta versioning (update()): df is the union of the fragments'
         # frames. A version made from a plain frame is one fragment that
         # holds no storage; a build or load manifest gives its blob row
         # count
         self._frags = [_Frag(df, None, self.manifest.get("cells"))]
-        # the whole cell_stats table on the driver, kept by super_table()
-        # when the super grid is the fine grid; update() carries it
-        self._cells_pd: pd.DataFrame | None = None
 
     # ------------------------------------------------------------------ build
     @classmethod
@@ -435,20 +475,27 @@ class SpatialIndex:
         # which AQE coalesces into few Python tasks; a cell-partitioned
         # cache pins every read's Python stage to all its partitions
         df = built.cache()
+        idx = cls(spark, grid, df, coord_cols=coord_cols)
         # materialize, collecting the hot-cell set in the same job:
         # update() never adds salts, so the set is fixed from here on
-        # and query operators plan their fan-out from this literal
+        # and query operators plan their fan-out from this literal.
+        # When the fine grid is the top level, the job also collects
+        # every non-empty blob's level input, so no read aggregates it
+        top = idx.super_grid()[0] == 1
+        rows = F.collect_list(F.when(F.col("cnt") > 0,
+                                     F.struct(*LEVEL_COLS))).alias("rows")
         row = df.agg(F.count("*").alias("n"),
                      F.collect_set(F.when(_hot_pred(), F.col("cell")))
-                     .alias("hot")).collect()[0]
-        manifest = dict(kind="build", n=n, grid_g=grid.g,
-                        grid_dims=grid.dims, cells=int(row["n"]),
-                        hot_cells=sorted(int(c) for c in row["hot"]),
-                        wall_sec=time.time() - t0,
-                        coord_cols=list(coord_cols),
-                        version=str(uuid.uuid4())[:8])
-        idx = cls(spark, grid, df, manifest, coord_cols=coord_cols)
-        idx._frags = [_Frag(df, df, manifest["cells"])]
+                     .alias("hot"), *([rows] if top else [])).collect()[0]
+        idx.manifest = dict(kind="build", n=n, grid_g=grid.g,
+                            grid_dims=grid.dims, cells=int(row["n"]),
+                            hot_cells=sorted(int(c) for c in row["hot"]),
+                            wall_sec=time.time() - t0,
+                            coord_cols=list(coord_cols),
+                            version=str(uuid.uuid4())[:8])
+        idx._frags = [_Frag(df, df, idx.manifest["cells"])]
+        if top:
+            idx._level = idx._blob_level(row["rows"])
         return idx
 
     # ------------------------------------------------------------------ stats
@@ -461,20 +508,24 @@ class SpatialIndex:
         return self._stats_pd
 
     def cell_stats(self) -> DataFrame:
-        """Per-cell union bbox + live count, as a cached DataFrame —
-        the pruning metadata for kNN phase 2 and range partition-pruning.
-        Stays Spark-side: at 1.2e8 cells (the Grid.for_count projection
-        for 1e12 rows) this is a few-GB cluster-resident table joined on
-        `cell`, never a driver collect.
-
-        Computed here by one scan of the blob table, except when
-        update() carried it: a parent whose whole table was on the
-        driver (super_table() with S == 1) hands its child its rows of
-        the untouched cells plus the rows of the cells the update
-        rewrote, collected off the update's own checkpoint, as a local
-        relation that scans no fragment."""
+        """Per-cell union bbox, live count and highest non-empty salt —
+        the fine-level pruning metadata. With S == 1 the fine grid is
+        the top level, so this is a local relation projected from
+        level(). With S > 1 it is a cached aggregation of the blob
+        table that stays Spark-side: at 1.2e8 cells (the Grid.for_count
+        projection for 1e12 rows) it is a few-GB cluster-resident table
+        joined on `cell`, never a driver collect."""
+        d = len(self.coord_cols)
+        if self.super_grid()[0] == 1:
+            lv, t = self.level(), "double" if self.float_coords else "bigint"
+            cols = {"cell": (lv.cell, "bigint"), "ccnt": (lv.ccnt, "bigint"),
+                    "maxsalt": (lv.maxsalt, "int")}
+            for j, (lo, hi) in enumerate(zip(*bbox_cols(d))):
+                cols[lo], cols[hi] = (lv.lo[:, j], t), (lv.hi[:, j], t)
+            return self.spark.createDataFrame(
+                pd.DataFrame({c: v for c, (v, _) in cols.items()}),
+                ", ".join(f"{c} {t}" for c, (_, t) in cols.items()))
         if self._cell_stats is None:
-            d = len(self.coord_cols)
             # maxsalt: highest salt among NONEMPTY blobs — query operators
             # use it to split a hot (salted) cell's work across tasks; salts
             # in between with empty blobs are enumerated but match nothing
@@ -483,7 +534,7 @@ class SpatialIndex:
                     F.sum("cnt").alias("ccnt"),
                     F.max("salt").alias("maxsalt")]
             # dims >= 2: elementwise bbox union from the array column,
-            # giving kNN phase 2 the tight full-d bound
+            # giving kNN the tight full-d bound
             for j in range(2, d):
                 aggs.append(F.min(F.col("bbox")[j]).alias(f"mn{j}"))
                 aggs.append(F.max(F.col("bbox")[d + j]).alias(f"mx{j}"))
@@ -506,76 +557,98 @@ class SpatialIndex:
             self.manifest["hot_cells"] = hot
         return hot
 
-    def super_table(self) -> pd.DataFrame:
-        """Coarse-level stats: cell_stats re-aggregated onto the super
-        grid — (scell, ccnt, xmin, ymin, xmax, ymax[, mn{j}, mx{j}]) —
-        collected to the driver once per index version. At most
-        SUPER_MAX_CELLS rows at ANY index size, so every sparse kNN
-        query can bound its radius against the whole table inside the
-        candidate kernel (queries/knn.py) instead of against the
-        O(cells) stats table (the reference analogue: the top levels of
-        one global tree, build_tree.hpp:49-70, which every query can
-        afford to descend).
-
-        With S == 1 this is the whole cell_stats table, so it is kept on
-        the driver, and update() carries it there (no Spark job, no
-        fragment scan). With S > 1 each version aggregates its own."""
-        if self._super_pd is None:
+    def level(self) -> Level:
+        """The top routing level every read descends, on the driver, as
+        every query of the reference descends the same top of one tree
+        (build_tree.hpp:49-70): the fine grid when S == 1, else the
+        stats pyramid's top (super_grid()), so at most SUPER_MAX_CELLS
+        rows at ANY index size. build() hands it over at S == 1 and
+        update() patches the parent's; any other version (S > 1,
+        load(), a snapshot) aggregates it here once, striding the
+        samples inside the aggregation, so the driver never holds more
+        than LEVEL_PROBES pooled points."""
+        if self._level is None:
             S, sg = self.super_grid()
-            cs = self.cell_stats()
-            lo, hi = bbox_cols(len(self.coord_cols))
-            if S == 1:  # the super grid is the fine grid: keep it all
-                if self._cells_pd is None:
-                    self._cells_pd = cs.toPandas()
-                sup = self._cells_pd.rename(columns={"cell": "scell"})[
-                    ["scell", "ccnt", *lo, *hi]]
-            else:
-                scell = F.expr(self.grid.parent_cell_sql(
-                    "cell", self.grid.g, S, sg))
-                sup = cs.groupBy(scell.alias("scell")).agg(
-                    F.sum("ccnt").alias("ccnt"),
-                    *[F.min(c).alias(c) for c in lo],
-                    *[F.max(c).alias(c) for c in hi]).toPandas()
-            self._super_pd = sup.sort_values("scell", ignore_index=True)
-        return self._super_pd
+            d = len(self.coord_cols)
+            cap = self._level_cap()
+            top = (self.grid.parent_cell_sql("cell", self.grid.g, S, sg)
+                   if S > 1 else "cell")
+            pool = ("flatten(transform(array_sort(collect_list("
+                    "struct(cell, salt, probe))), b -> b.probe))")
+            stride = f"GREATEST(1, (size(pool) DIV {d} + {cap - 1}) DIV {cap})"
+            lv = (self.df.filter(F.col("cnt") > 0)
+                  .groupBy(F.expr(top).alias("cell"))
+                  .agg(F.sum("cnt").alias("ccnt"),
+                       F.max("salt").alias("maxsalt"),
+                       F.array(*[F.min(F.col("bbox")[j])
+                                 for j in range(d)]).alias("lo"),
+                       F.array(*[F.max(F.col("bbox")[d + j])
+                                 for j in range(d)]).alias("hi"),
+                       F.expr(pool).alias("pool"))
+                  .selectExpr("cell", "ccnt", "maxsalt", "lo", "hi",
+                              f"filter(pool, (v, i) -> (i DIV {d}) "
+                              f"% {stride} = 0) AS pool")
+                  .toPandas().sort_values("cell"))
+            self._level = self._make_level(
+                lv["cell"], lv["ccnt"], lv["maxsalt"], list(lv["lo"]),
+                list(lv["hi"]), list(lv["pool"]))
+        return self._level
 
-    def probes(self) -> DataFrame:
-        """(cell, probe): per-blob live-point samples (localtree.
-        probe_sample) — the phase-1 kNN bound-seeding side. A plain
-        column projection of the cached index table: the per-query-job
-        semi-join on home cells happens in queries/knn.py, so only the
-        samples of cells a batch actually queries are ever shipped."""
-        if "probe" in self.df.columns:
-            return self.df.filter(F.col("cnt") > 0).select("cell", "probe")
-        # legacy blobs (pre-probe snapshots): no samples — every query
-        # seeds from the super-cell stats fallback instead
-        return (self.df.limit(0)
-                .select("cell", F.array().cast("array<bigint>")
-                        .alias("probe")))
+    def _level_cap(self) -> int:
+        """Pooled probe points one top-level cell keeps at most."""
+        return max(1, LEVEL_PROBES // self.super_grid()[1] ** self.grid.dims)
+
+    def _make_level(self, cell, ccnt, maxsalt, lo, hi, pools) -> Level:
+        """A Level from per-cell columns; each pool (flat probe values
+        of the cell's blobs in (cell, salt) order) keeps every s-th
+        point, s the least stride that fits the cell's share."""
+        d = len(self.coord_cols)
+        cdt = np.float64 if self.float_coords else np.int64
+        cap = self._level_cap()
+        probe = np.empty(len(pools), object)
+        for i, p in enumerate(pools):
+            p = np.asarray(p, cdt).reshape(-1, d)
+            probe[i] = p[::max(1, -(-len(p) // cap))]
+        return Level(np.asarray(cell, np.int64), np.asarray(ccnt, np.int64),
+                     np.asarray(maxsalt, np.int32),
+                     np.asarray(lo, cdt).reshape(-1, d),
+                     np.asarray(hi, cdt).reshape(-1, d), probe)
+
+    def _blob_level(self, rows: list) -> Level:
+        """The level of blob rows (LEVEL_COLS) when the top level is the
+        fine grid: the same aggregation level() runs over a blob table.
+        A blob's row counts once, even if a re-run task reported it
+        again."""
+        d = len(self.coord_cols)
+        blobs = {(r["cell"], r["salt"]): r for r in rows if r["cnt"] > 0}
+        cells = [[r for _, r in g] for _, g in itertools.groupby(
+            sorted(blobs.items()), key=lambda kv: kv[0][0])]
+        box = [np.reshape([r["bbox"] for r in g], (-1, 2 * d)) for g in cells]
+        return self._make_level(
+            [g[0]["cell"] for g in cells], [sum(r["cnt"] for r in g)
+                                            for g in cells],
+            [max(r["salt"] for r in g) for g in cells],
+            [b[:, :d].min(axis=0) for b in box],
+            [b[:, d:].max(axis=0) for b in box],
+            [[v for r in g for v in r["probe"]] for g in cells])
 
     def stats_pyramid(self) -> list:
-        """Coarse stats levels above the fine grid for hierarchical
-        range pruning: [(g_l, cw_l, stats_df)] from one level above
-        fine upward, factor PYRAMID_FACTOR per dim per level, until a
-        level is <= SUPER_MAX_G per dim (empty for small grids — the
-        driver-gate Grid(8) runs level-free, exactly the old plan).
-
-        Each level aggregates (ccnt, data bbox) from the level below
-        and adds maxsalt=0 (coarse rows never reach a blob cogroup).
-        Level ids nest by integer division, and a level cell's
-        geometric width is exactly cw * F^l (x DIV (F*cw) ==
-        (x DIV cw) DIV F), so geometric enumeration and id arithmetic
-        agree at every level. This is the distributed analogue of the
-        reference answering a large box from HIGH tree nodes
-        (range_count.hpp:78-80) instead of visiting every leaf: a box
-        costs O(perimeter) cells per level, never O(area) fine cells.
-        """
+        """Coarse stats levels above the fine grid, which boundary top
+        cells of range shapes descend (queries/ranges._prune_join):
+        [(g_l, cw_l, stats_df)] from one level above fine upward,
+        factor PYRAMID_FACTOR per dim per level, up to the top level of
+        level() (none when S == 1). Each level aggregates (ccnt, data
+        bbox) from the level below and adds maxsalt=0 (coarse rows
+        never reach a blob cogroup). Level ids nest by integer
+        division, and a level cell's geometric width is exactly
+        cw * F^l (x DIV (F*cw) == (x DIV cw) DIV F), so geometric
+        enumeration and id arithmetic agree at every level."""
         if self._pyramid is None:
             F_ = PYRAMID_FACTOR
             levels = []
             cur = self.cell_stats()
             curg, curw = self.grid.g, self.grid.cw
-            while curg > _super_max_g(self.grid.dims):
+            while curg > self.super_grid()[1]:
                 ng = (curg + F_ - 1) // F_
                 parent = F.expr(
                     self.grid.parent_cell_sql("cell", curg, F_, ng))
@@ -596,12 +669,13 @@ class SpatialIndex:
         return self._pyramid
 
     def super_grid(self) -> tuple:
-        """(S, sg): fine cells coarsen by S per dim into an sg-per-dim
-        super grid with sg^dims <= SUPER_MAX_CELLS (<= 4096 rows)."""
-        g = self.grid.g
-        smax = _super_max_g(self.grid.dims)
-        S = (g + smax - 1) // smax
-        sg = (g + S - 1) // S
+        """(S, sg): the top level of level() — fine cells coarsen by S
+        per dim into an sg-per-dim grid with sg^dims <= SUPER_MAX_CELLS.
+        S is a power of PYRAMID_FACTOR: the top level is the stats
+        pyramid's top, so a boundary top cell descends its levels."""
+        S, sg = 1, self.grid.g
+        while sg > max(1, int(SUPER_MAX_CELLS ** (1.0 / self.grid.dims))):
+            S, sg = S * PYRAMID_FACTOR, -(-sg // PYRAMID_FACTOR)
         return S, sg
 
     # ---------------------------------------------------------------- updates
@@ -619,10 +693,7 @@ class SpatialIndex:
         shuffled, deserialized, nor rewritten to storage, so a 0.01%
         batch pays O(batch), not O(index), in both compute AND
         materialized bytes. Touched cells go log-structured with
-        threshold rebuild. (For batches touching a large fraction of a
-        huge grid, the touched-cell list grows with the batch, never
-        with the index — at that ratio a rebuild is the honest
-        competitor anyway.)
+        threshold rebuild.
 
         Superseded fragments leave the union. Each fragment counts the
         blob rows it still serves; the delta rewrites every blob of a
@@ -633,16 +704,15 @@ class SpatialIndex:
         update that would leave more than COMPACT_EVERY fragments
         checkpoints their union as one.
 
-        Read statistics travel with the delta, the way the reference
-        keeps subtree sizes current through a batch, when the parent's
-        whole cell_stats table is on the driver (super_table() with
-        S == 1): the delta's Observation collects each rewritten blob's
-        (cell, salt, cnt, bbox), and the new version's
-        cell_stats / super_table are the parent's rows of the untouched
-        cells plus those, aggregated per cell, in a driver-side table.
-        That costs no Spark job here, the next read scans no fragment for
-        them, and compaction keeps them as they are. Any other parent
-        leaves the new version to compute its own on first read.
+        The routing level travels with the delta, the way the reference
+        keeps subtree sizes current through a batch, when the parent
+        holds it on the driver and its top level is the fine grid
+        (S == 1): the delta's Observation collects each rewritten blob's
+        (cell, salt, cnt, bbox, probe), and the new version's level() is
+        the parent's rows of the untouched cells plus those, aggregated
+        per cell: no Spark job here, and no fragment scan at the next
+        read. Any other parent leaves the new version to aggregate its
+        own on first read.
 
         Dimension-generic: works for any d = len(coord_cols) >= 2, same
         as the reference's dim-templated batch ops (`batch_insert.hpp:
@@ -728,15 +798,18 @@ class SpatialIndex:
         # delta. localCheckpoint truncates the delta's lineage (which
         # references the parent), so chained updates grow the plan by
         # one filter per fragment — linear, not exponential. The
-        # rewritten blobs' stats rows, and so the delta's row count,
-        # ride on the checkpoint.
+        # rewritten blobs' keys, and their level rows when the level is
+        # carried, ride on the checkpoint.
+        carry = self._level is not None and self.super_grid()[0] == 1
         obs = Observation()
-        stat_cols = [*STATS_COLS, *(["bbox"] if len(cc) > 2 else [])]
-        delta = new_blobs.observe(
-            obs, F.collect_list(F.struct(*stat_cols)).alias("rows")
+        delta = new_blobs.observe(obs, F.to_json(F.collect_list(F.struct(
+            *(LEVEL_COLS if carry else ["cell", "salt"])))).alias("rows")
         ).localCheckpoint(eager=True)
-        rows = observed(obs)
-        rows = rows["rows"] if rows else []
+        # read as a Java string: Observation.get's pickled row crosses
+        # py4j as bytes that it decodes one at a time in Python, about
+        # 0.2 s per MB of probe samples
+        rows = obs._jo.getRow()
+        rows = json.loads(rows.getString(0)) if rows.size() else []
         # the fragment filter names `salt` (never negative) next to
         # `cell`: a predicate on `cell` alone would be inferred through
         # the join key onto the small side of every semi-join a read
@@ -775,17 +848,12 @@ class SpatialIndex:
         new = SpatialIndex(self.spark, grid, _union(f.frame for f in frags),
                            manifest, coord_cols=self.coord_cols)
         new._frags = frags
-        if self._cells_pd is not None:
+        if carry:
             # the parent's rows of untouched cells plus the delta's (a
-            # touched cell whose blobs all emptied drops out), unioned on
-            # the driver: the new table is a local relation, with nothing
-            # to cache or free and no lineage to any fragment
-            cells = _delta_cell_stats(rows, len(cc), cdt)
-            keep = self._cells_pd[~self._cells_pd["cell"].isin(touched)]
-            new._cells_pd = pd.concat([keep, cells[keep.columns]],
-                                      ignore_index=True)
-            new._cell_stats = self.spark.createDataFrame(
-                new._cells_pd, self.cell_stats().schema)
+            # touched cell whose blobs all emptied drops out): driver
+            # arrays, with nothing to cache or free and no lineage to
+            # any fragment
+            new._level = self._level.patched(touched, new._blob_level(rows))
         # the sorted touched-cell ids let an incremental snapshot commit
         # (catalog.SnapshotStore) rewrite only the buckets this update
         # changed
@@ -806,8 +874,8 @@ class SpatialIndex:
     def unpersist(self, successor: "SpatialIndex | None" = None) -> None:
         """Release this version's storage (streaming indexers call this
         on superseded versions to bound executor storage): the cached
-        stats tables always (a successor's carried stats are a local
-        relation that never reads them); a fragment's cached frame or
+        stats tables always (a successor's carried level is driver
+        arrays that never read them); a fragment's cached frame or
         localCheckpoint blocks ONLY where `successor` (the version that
         replaced this one) does not still read them — a delta-update
         child shares its parent's live fragments, so freeing those would

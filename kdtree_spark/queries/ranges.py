@@ -1,18 +1,22 @@
 """Orthogonal range count / range report / circle count (Q4-Q7, H4-H5).
 
 Two-level plan mirroring the reference's 3-way recursion
-(`query_op/range_count.hpp:9-96`): cells disjoint from a box are never
-touched (bbox-stats filter — the partition-pruning analogue); cells whose
-data-bbox is *contained* contribute their stored count straight from the
-stats table, aggregated metadata-only without ever reaching a blob (the
-"contained -> node.size" shortcut, range_count.hpp:78-80); boundary
-cells go to an Arrow cogroup (index.cogroup) that runs the per-cell tree's
-vectorized count/report — with hot (salted) cells re-keyed per
-(cell, salt) so one popular cell's boundary scans fan out across tasks
-(queries/skew.py).
+(`query_op/range_count.hpp:9-96`). The query shapes arrive as driver
+arrays, so they are routed on the driver, in numpy, against the index's
+top level (index.level()): each shape covers the top cells its extent
+spans (Grid.cover_cells: grid arithmetic, work proportional to the
+cover, never a shapes x cells matrix); empty and disjoint cells drop;
+cells whose data bbox the shape *contains* answer from their stored
+count (the "contained -> node.size" shortcut, range_count.hpp:78-80);
+boundary cells go to an Arrow cogroup (index.cogroup) that runs the
+per-cell tree's vectorized count/report — with hot (salted) cells
+re-keyed per (cell, salt) so one popular cell's boundary scans fan out
+across tasks (queries/skew.py). Every shape emits its contained count,
+0 included, and one groupBy sums those rows with the scan partials: no
+prune join and no final join.
 
-The stats side is a plain DataFrame agg + broadcast join — Catalyst
-keeps it whole-stage-codegen'd; only boundary cells pay the Arrow hop.
+With S > 1 (a grid past the per-dim cap of the top level), boundary
+top cells descend the stats pyramid below it in Spark (_prune_join).
 
 Boxes are inclusive [lo, hi] on int64 coords, matching `within_box`
 (`utility/box_op.hpp:9-20`).
@@ -39,139 +43,148 @@ def _box_cols(d: int) -> tuple[list, list]:
     return lo, hi
 
 
-def _box_conds(d: int):
-    """(overlap, contained) full-d Spark conditions between a box row
-    and a stats row — the reference's 3-way box classification
-    (range_count.hpp:9-96) as whole-stage-codegen'd SQL."""
+def _counts(index: SpatialIndex, counts: DataFrame, pairs: DataFrame,
+            count) -> DataFrame:
+    """(id, cnt) per shape: the contained counts plus the blob-scan
+    partials of the boundary pairs (count(tree, shapes) -> one blob's
+    per-shape counts), summed by one groupBy."""
+    key = counts.columns[0]
+
+    def scan(_, b: dict, i: dict) -> dict:
+        if len(b[key]) == 0 or len(i["blob"]) == 0:
+            return {}
+        part = np.zeros(len(b[key]), np.int64)
+        for blob in i["blob"]:
+            part += count(LocalKDTree.from_bytes(blob), b)
+        return {key: b[key], "cnt": part}
+
+    return (scan_blobs(index, pairs, scan, scan, f"{key} long, cnt long")
+            .unionByName(counts).groupBy(key).agg(F.sum("cnt").alias("cnt")))
+
+
+def _box_tests(d: int):
+    """tests(side, slo, shi, mx) of _route for boxes: (overlap,
+    contained) of each box against a data bbox over all d dims — the
+    reference's 3-way box classification (range_count.hpp:9-96)."""
     blo, bhi = _box_cols(d)
-    slo, shi = bbox_cols(d)
-    overlap = contained = F.lit(True)
-    for bl, bh, sl, sh in zip(blo, bhi, slo, shi):
-        overlap = overlap & (F.col(sl) <= F.col(bh)) \
-            & (F.col(sh) >= F.col(bl))
-        contained = contained & (F.col(sl) >= F.col(bl)) \
-            & (F.col(sh) <= F.col(bh))
-    return overlap, contained
+
+    def tests(side, slo, shi, mx):
+        overlap = contained = True
+        for bl, bh, sl, sh in zip(map(side, blo), map(side, bhi), slo, shi):
+            overlap = overlap & (sl <= bh) & (sh >= bl)
+            contained = contained & (sl >= bl) & (sh <= bh)
+        return overlap, contained
+    return tests
 
 
-def _boxes_df(index: SpatialIndex, boxes) -> DataFrame:
-    """boxes: sequence of (box_id, lo0..lo{d-1}, hi0..hi{d-1}) — for
-    d=2 the historical (box_id, xlo, ylo, xhi, yhi) — -> DataFrame
-    (Arrow path via pandas — createDataFrame over python tuples is
-    row-at-a-time and stalls the driver for 1e5+ query batches)."""
-    d = len(index.coord_cols)
-    arr = np.asarray(boxes, dtype=np.int64).reshape(-1, 1 + 2 * d)
-    lo, hi = _box_cols(d)
-    cols = {"box_id": arr[:, 0]}
-    for j, c in enumerate(lo + hi):
-        cols[c] = arr[:, 1 + j]
-    return index.spark.createDataFrame(pd.DataFrame(cols))
-
-
-def _prune_join(index: SpatialIndex, qdf: DataFrame, n_queries: int,
-                cond, contained=None) -> DataFrame:
-    """query-shapes ⋈ cell-stats, pruned hierarchically.
-
-    Small grids (g <= 64): each shape covers the fine cells its extent
-    spans (`Grid.cover` over the box columns of the grid dims — pure
-    integer SQL on the regular grid), then an EQUI-join on `cell`
-    against the stats table applies the exact data-bbox condition
-    `cond`. No nested-loop join anywhere: this is O(overlap pairs) and
-    broadcasts whichever equi-join side is smaller (Catalyst/AQE).
-
-    Large grids: the stats PYRAMID (index.stats_pyramid) makes the
-    enumeration O(perimeter), not O(area): shapes cover the COARSEST
-    level (<= 64 per dim, so <= 4096 cells even for a domain-sized
-    shape), and each level classifies its cells with the same
-    data-bbox exprs — disjoint cells drop (`cond`), cells passing
-    `contained` are emitted AS pairs immediately (their aggregated
-    ccnt answers count queries metadata-only; maxsalt=0 and the
-    caller's own contained test re-evaluates true on the coarse bbox,
-    so they never reach a blob cogroup), and only BOUNDARY cells cover
-    their own geometric extent on the next level down: their
-    PYRAMID_FACTOR² children, since a level's cell width is exactly
-    PYRAMID_FACTOR times the width below it. `contained=None` (range
-    report needs actual points) descends every overlapping cell
-    instead. This is the reference's answer-from-high-nodes recursion
-    (range_count.hpp:9-96) over the distributed grid.
-
-    A shape with an empty extent (lo > hi) pairs with no cell; shape
-    parts off the grid fold onto the boundary cells, where off-grid
-    points live too."""
+def _prune_join(index: SpatialIndex, frontier: DataFrame, cond,
+                contained=None) -> DataFrame:
+    """Boundary top cells descend the stats pyramid below the driver
+    level (S > 1 only). `frontier` holds the shape columns and `cell`,
+    a boundary top cell. Each cell covers its PYRAMID_FACTOR^dims
+    children on the level below (`Grid.cover`: a level's cell is
+    exactly PYRAMID_FACTOR times as wide), and an equi-join on `cell`
+    with that level's stats classifies them: disjoint cells drop
+    (`cond`), cells passing `contained` are emitted (their ccnt answers
+    counts metadata-only; maxsalt=0 keeps them off the blob scan), and
+    only the rest descend — O(perimeter) cells per level, never O(area)
+    fine cells (range_count.hpp:78-80 answers from high nodes).
+    `contained=None` (a report) descends every overlapping cell. -> the
+    emitted rows plus the fine cells passing `cond`, with stats columns."""
     grid = index.grid
-    blo, bhi = _box_cols(grid.dims)
-    par = index.spark.sparkContext.defaultParallelism
-    if n_queries > 4 * par:
-        qdf = qdf.repartition(par)
-    pyramid = list(reversed(index.stats_pyramid()))  # coarsest .. fine+1
-    walk = [(lg, lcw) for lg, lcw, _ in pyramid] + [grid.level]
-    frontier = grid.cover(qdf, list(zip(blo, bhi)), False, walk[0])
+    S, sg = index.super_grid()
+    cols = [c for c in frontier.columns if c != "cell"]
+    below = list(reversed(index.stats_pyramid()))[1:]  # under the top
+    walk = [(sg, grid.cw * S), *[(lg, lcw) for lg, lcw, _ in below],
+            grid.level]
+    stats = [st for _, _, st in below] + [index.cell_stats()]
     emitted = []
-    for (lg, lcw, stats_l), child in zip(pyramid, walk[1:]):
-        j = frontier.withColumnRenamed("_cell", "cell") \
-            .join(stats_l, "cell").filter(cond)
-        if contained is not None:
-            emitted.append(j.filter(contained))
-            j = j.filter(~contained)
+    for (lg, lcw), child, st in zip(walk, walk[1:], stats):
         ext = [(f"{grid.coord_sql('cell', k, lg)} * {lcw}",
                 f"{grid.coord_sql('cell', k, lg)} * {lcw} + {lcw - 1}")
                for k in range(grid.dims)]
-        frontier = grid.cover(j.select(*qdf.columns, "cell"), ext, False,
-                              child).drop("cell")
-    out = (frontier.withColumnRenamed("_cell", "cell")
-           .join(index.cell_stats(), "cell").filter(cond))
+        out = (grid.cover(frontier, ext, False, child).drop("cell")
+               .withColumnRenamed("_cell", "cell").join(st, "cell")
+               .filter(cond))
+        if contained is not None and st is not stats[-1]:
+            emitted.append(out.filter(contained))
+            out = out.filter(~contained)
+        frontier = out.select(*cols, "cell")
     for e in emitted:
         out = out.unionByName(e.select(*out.columns))
     return out
 
 
+def _route(index: SpatialIndex, arr: np.ndarray, names: list,
+           lo: np.ndarray, hi: np.ndarray, tests) -> tuple:
+    """Route query shapes against the driver level -> (counts, pairs).
+
+    `arr` has one int64 row per shape, its columns `names` (the id
+    first); (lo, hi) are its integer extents on the grid dims.
+    tests(side, slo, shi, mx) -> (overlap, inside) of shapes against
+    data bboxes (per-dim slo, shi), inside None for a report; written
+    once, it runs on numpy arrays here (side: a shape column's values
+    per pair, mx: np.maximum) and as Spark conditions below the top
+    level when S > 1 (side: F.col).
+    counts: (id, cnt) rows holding every shape's count from the cells
+    it contains, 0 included (None for a report); pairs: the shape
+    columns, `cell` and `maxsalt` of the boundary fine cells the blob
+    scan visits."""
+    spark, key = index.spark, names[0]
+    shapes = pd.DataFrame(arr, columns=names)
+    S, sg = index.super_grid()
+    lvl = index.level()
+    rows, cells = index.grid.cover_cells(lo, hi, (sg, index.grid.cw * S))
+    at = lvl.find(cells)
+    rows, at = rows[at >= 0], at[at >= 0]
+    over, inside = tests(lambda c: shapes[c].to_numpy()[rows], lvl.lo[at].T,
+                         lvl.hi[at].T, np.maximum)
+    counts = None
+    if inside is not None:
+        full = np.zeros(len(shapes), np.int64)
+        np.add.at(full, rows[over & inside], lvl.ccnt[at[over & inside]])
+        counts = spark.createDataFrame(
+            pd.DataFrame({key: shapes[key], "cnt": full}),
+            f"{key} long, cnt long")
+        over &= ~inside
+    bnd = shapes.iloc[rows[over]].reset_index(drop=True)
+    bnd["cell"] = lvl.cell[at[over]]
+    shape_t = ", ".join(f"{c} long" for c in shapes.columns)
+    if S == 1:
+        bnd["maxsalt"] = lvl.maxsalt[at[over]]
+        return counts, spark.createDataFrame(
+            bnd, f"{shape_t}, cell long, maxsalt int")
+    cond, contained = tests(
+        F.col, *[[F.col(c) for c in cols]
+                 for cols in bbox_cols(len(index.coord_cols))],
+        lambda a, b: F.greatest(a, F.lit(b) if isinstance(b, int) else b))
+    desc = _prune_join(index, spark.createDataFrame(
+        bnd, f"{shape_t}, cell long"), cond, contained)
+    cols = [*shapes.columns, "cell", "maxsalt"]
+    if contained is None:
+        return counts, desc.select(*cols)
+    desc = desc.withColumn("full", contained)
+    counts = counts.unionByName(desc.filter(F.col("full")).select(
+        key, F.col("ccnt").alias("cnt")))
+    return counts, desc.filter(~F.col("full")).select(*cols)
+
+
 def range_count(index: SpatialIndex, boxes) -> DataFrame:
-    """-> (box_id, cnt). Exact, inclusive bounds; d-generic (the
-    reference's correctness sweep runs range count at d=5,
-    script/checkCorrect.sh) — cell enumeration keys on the two grid
-    dims, classification and the kernel scan use all d."""
+    """boxes: sequence of (box_id, lo0..lo{d-1}, hi0..hi{d-1}) — for
+    d=2 the historical (box_id, xlo, ylo, xhi, yhi) — -> (box_id, cnt).
+    Exact, inclusive bounds; d-generic (the reference's correctness
+    sweep runs range count at d=5, script/checkCorrect.sh) — cell
+    enumeration keys on the grid dims, classification and the kernel
+    scan use all d."""
     d = len(index.coord_cols)
+    gd = index.grid.dims
     blo_c, bhi_c = _box_cols(d)
-    bdf = _boxes_df(index, boxes)
-    # fully-contained cells take their stored count from the stats row
-    # (the "contained -> node.size" shortcut, range_count.hpp:78-80)
-    # and aggregate METADATA-ONLY — at EVERY pyramid level (a large
-    # box's interior resolves at coarse levels; _prune_join) — they
-    # never shuffle into the blob cogroup; only boundary pairs pay the
-    # Arrow hop + tree scan
-    overlap, contained = _box_conds(d)
-    joined = _prune_join(index, bdf, len(boxes), overlap,
-                         contained=contained)
-    # the (box, cell) prune join feeds three consumers (contained agg,
-    # cold scan, hot scan); checkpoint it so it is computed once
-    pairs = joined.withColumn("full", contained).select(
-        "box_id", *blo_c, *bhi_c, "cell", "ccnt", "full",
-        "maxsalt").localCheckpoint(eager=False)
-    full_counts = (pairs.filter(F.col("full"))
-                   .groupBy("box_id").agg(F.sum("ccnt").alias("cnt")))
-    bnd = pairs.filter(~F.col("full")).select(
-        "box_id", *blo_c, *bhi_c, "cell", "maxsalt")
-
-    def scan(key, b: dict, i: dict) -> dict:
-        if len(b["box_id"]) == 0 or len(i["blob"]) == 0:
-            return {}
-        qboxes = np.column_stack([b[c] for c in blo_c + bhi_c])
-        part = np.zeros(len(qboxes), np.int64)
-        for blob in i["blob"]:
-            part += LocalKDTree.from_bytes(blob).range_count(qboxes)
-        return {"box_id": b["box_id"], "cnt": part}
-
-    all_counts = scan_blobs(index, bnd, scan, scan, "box_id long, cnt long") \
-        .unionByName(full_counts)
-
-    # boxes with zero matches must still appear with cnt=0; broadcast
-    # the aggregated side (<= one row per box) — build-left on a left
-    # outer join is unsupported, so hinting bdf would be a no-op
-    return (bdf.select("box_id")
-            .join(F.broadcast(
-                all_counts.groupBy("box_id").agg(F.sum("cnt").alias("c"))),
-                  "box_id", "left")
-            .select("box_id", F.coalesce("c", F.lit(0)).alias("cnt")))
+    arr = np.asarray(boxes, dtype=np.int64).reshape(-1, 1 + 2 * d)
+    lo, hi = arr[:, 1:1 + d], arr[:, 1 + d:]
+    return _counts(index, *_route(index, arr, ["box_id", *blo_c, *bhi_c],
+                                  lo[:, :gd], hi[:, :gd], _box_tests(d)),
+                   lambda tree, b: tree.range_count(
+                       np.column_stack([b[c] for c in blo_c + bhi_c])))
 
 
 def range_report(index: SpatialIndex, boxes) -> DataFrame:
@@ -182,16 +195,15 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
     compare of a double against an exact integer bound is the same
     predicate in numpy, Spark and DuckDB)."""
     d = len(index.coord_cols)
+    gd = index.grid.dims
     cc = list(index.coord_cols)
     blo_c, bhi_c = _box_cols(d)
     ct = "double" if index.float_coords else "long"
-    bdf = _boxes_df(index, boxes)
-    overlap, _ = _box_conds(d)
-    pairs = _prune_join(index, bdf, len(boxes), overlap) \
-        .select("box_id", *blo_c, *bhi_c, "cell", "maxsalt") \
-        .localCheckpoint(eager=False)  # consumed by both scan branches
-        # (lazy: plan truncation is immediate, materialization
-        # folds into the first consumer job — same as knn_join)
+    arr = np.asarray(boxes, dtype=np.int64).reshape(-1, 1 + 2 * d)
+    lo, hi = arr[:, 1:1 + d], arr[:, 1 + d:]
+    tests = _box_tests(d)
+    _, pairs = _route(index, arr, ["box_id", *blo_c, *bhi_c], lo[:, :gd],
+                      hi[:, :gd], lambda *a: (tests(*a)[0], None))
 
     def scan(key, b: dict, i: dict) -> dict:
         if len(b["box_id"]) == 0 or len(i["blob"]) == 0:
@@ -223,57 +235,25 @@ def circle_count(index: SpatialIndex, circles) -> DataFrame:
     Counts points with squared distance <= r² (range_count.hpp:99-131);
     d-generic: ball-vs-bbox min/max distance² over all dims.
     """
-    spark = index.spark
     d = len(index.coord_cols)
+    gd = index.grid.dims
     ctr_c = ["cx", "cy"] + [f"ctr{j}" for j in range(2, d)]
     arr = np.asarray(circles, dtype=np.int64).reshape(-1, d + 2)
-    cols = {"circle_id": arr[:, 0]}
-    for j, c in enumerate(ctr_c):
-        cols[c] = arr[:, 1 + j]
-    cols["r"] = arr[:, d + 1]
-    cdf = spark.createDataFrame(pd.DataFrame(cols))
-    # circle's bounding box (grid dims) drives the cell enumeration;
-    # the exact full-d min-dist² <= r² test below refines it
-    gd = index.grid.dims
-    blo, bhi = _box_cols(gd)
-    cdf = cdf.selectExpr(
-        "*", *[f"{ctr_c[j]} - r AS {blo[j]}" for j in range(gd)],
-        *[f"{ctr_c[j]} + r AS {bhi[j]}" for j in range(gd)])
-    slo, shi = bbox_cols(d)
-    mind2 = maxd2 = None
-    for c, sl, sh in zip(ctr_c, slo, shi):
-        nearc = F.greatest(F.col(sl) - F.col(c), F.col(c) - F.col(sh),
-                           F.lit(0))
-        farc = F.greatest(F.abs(F.col(c) - F.col(sl)),
-                          F.abs(F.col(c) - F.col(sh)))
-        mind2 = nearc * nearc if mind2 is None else mind2 + nearc * nearc
-        maxd2 = farc * farc if maxd2 is None else maxd2 + farc * farc
-    r2 = F.col("r") * F.col("r")
-    joined = _prune_join(index, cdf, len(circles), mind2 <= r2,
-                         contained=maxd2 <= r2)
-    pairs = joined.withColumn("full", maxd2 <= r2).select(
-        "circle_id", *ctr_c, "r", "cell", "ccnt", "full", "maxsalt") \
-        .localCheckpoint(eager=False)  # three consumers, compute once
-    full_counts = (pairs.filter(F.col("full"))
-                   .groupBy("circle_id").agg(F.sum("ccnt").alias("cnt")))
-    bnd = pairs.filter(~F.col("full")).select(
-        "circle_id", *ctr_c, "r", "cell", "maxsalt")
+    ctr, r = arr[:, 1:1 + d], arr[:, d + 1]
 
-    def scan(key, c: dict, i: dict) -> dict:
-        if len(c["circle_id"]) == 0 or len(i["blob"]) == 0:
-            return {}
-        centers = np.column_stack([c[n] for n in ctr_c])
-        radii = c["r"].astype(np.float64)
-        part = np.zeros(len(centers), np.int64)
-        for blob in i["blob"]:
-            part += LocalKDTree.from_bytes(blob).circle_count(centers, radii)
-        return {"circle_id": c["circle_id"], "cnt": part}
+    def tests(side, slo, shi, mx):
+        """ball-vs-bbox min / max distance² against r²"""
+        mind2 = maxd2 = 0
+        for c, sl, sh in zip(map(side, ctr_c), slo, shi):
+            near = mx(mx(sl - c, c - sh), 0)
+            far = mx(mx(c - sl, sl - c), mx(c - sh, sh - c))
+            mind2, maxd2 = mind2 + near * near, maxd2 + far * far
+        r2 = side("r") * side("r")
+        return mind2 <= r2, maxd2 <= r2
 
-    all_counts = scan_blobs(index, bnd, scan, scan,
-                            "circle_id long, cnt long") \
-        .unionByName(full_counts)
-    return (cdf.select("circle_id")
-            .join(F.broadcast(
-                all_counts.groupBy("circle_id").agg(F.sum("cnt").alias("c"))),
-                  "circle_id", "left")
-            .select("circle_id", F.coalesce("c", F.lit(0)).alias("cnt")))
+    return _counts(index, *_route(index, arr, ["circle_id", *ctr_c, "r"],
+                                  ctr[:, :gd] - r[:, None],
+                                  ctr[:, :gd] + r[:, None], tests),
+                   lambda tree, c: tree.circle_count(
+                       np.column_stack([c[n] for n in ctr_c]),
+                       c["r"].astype(np.float64)))

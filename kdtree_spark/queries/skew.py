@@ -59,9 +59,11 @@ def scan_blobs(index: SpatialIndex, cand: DataFrame, cold_fn, hot_fn,
     serialized through the Arrow hop — bytes scale with the query set,
     not with index size. hot_fn sees one blob per group, so its partial
     results must compose in the caller's merge (counts sum, reported
-    rows union, kNN top-k lists merge). `cand` must carry `maxsalt` and
-    must be checkpointed by the caller (its lineage must not reach
-    index.df, or the semi-join would trip the self-join analyzer)."""
+    rows union, kNN top-k lists merge). `cand` must carry `maxsalt`,
+    and its lineage must not reach index.df (or the semi-join would
+    trip the self-join analyzer) unless through re-aliased stats
+    frames (index.cell_stats): the reads' candidates come from a
+    kernel over the queries or from driver arrays."""
     cold, hot = split_by_salt(index, cand)
     out = cogroup(cold, pruned_blobs(index.df, cold).select("cell", "blob"),
                   ["cell"], cold_fn, schema)

@@ -1,13 +1,13 @@
 """Spark job budget of the operators: one knn_join call and one
-range_count call each run a bounded number of Spark jobs, and that
-number does not grow with the fragments SpatialIndex.update layers over
-an index; a read right after an update finds the read statistics the
-update carried, so it runs no job to rebuild them; updates with no read
-between them hold no statistics; a partial update runs a fixed number of
-jobs, and a chain of whole-index updates stays at one fragment;
-connected_components and dbscan stay within a fixed budget.
-Answers are checked against brute force every time, so a plan that
-saves jobs by dropping work fails here too."""
+range_count or circle_count call each run a fixed number of Spark jobs,
+right after a build and after updates, and that number does not grow
+with the fragments SpatialIndex.update layers over an index: the build
+and every update hand the next version its driver-held routing level,
+so no read runs a job to rebuild it; reads leave nothing in storage; a
+partial update runs a fixed number of jobs, and a chain of whole-index
+updates stays at one fragment; connected_components and dbscan stay
+within a fixed budget. Answers are checked against brute force every
+time, so a plan that saves jobs by dropping work fails here too."""
 
 from __future__ import annotations
 
@@ -22,12 +22,14 @@ from kdtree_spark.index import COMPACT_EVERY, SpatialIndex
 from kdtree_spark.pipeline.components import connected_components
 from kdtree_spark.queries.dbscan import dbscan
 from kdtree_spark.queries.knn import knn_join
-from kdtree_spark.queries.ranges import range_count
+from kdtree_spark.queries.ranges import circle_count, range_count
 from tests.test_components import _mk_edges, _uf_components
 from tests.test_dbscan import _brute_dbscan
 
-KNN_JOBS = 12  # Spark jobs per knn_join call, at any fragment count
-KNN_JOBS_AFTER_UPDATE = 8  # the same call with the stats carried
+KNN_JOBS = 4  # Spark jobs per knn_join call, after a build or an
+# update, at any fragment count: the candidate broadcast, the blob
+# cogroup's exchange, the merge window's exchange and the result
+RANGE_JOBS = 4  # the same for one range_count or circle_count call
 UPDATE_JOBS = 4  # a partial update: touched cells, then its checkpoint
 # (one job more when it compacts)
 PATH_CC_JOBS = 60  # connected_components on a 400-node path
@@ -70,15 +72,19 @@ def _frame(spark, **cols):
 
 def _read(spark, index, live: dict, q: np.ndarray, boxes: list,
           k: int) -> tuple:
-    """(kNN jobs, range_count jobs) of one k-NN batch `q` and one box
-    batch on `index`, each answer checked against brute force over
-    `live` ({pid: (x, y)})."""
+    """(kNN jobs, range_count jobs, circle_count jobs) of one k-NN batch
+    `q`, one box batch and one circle batch (one circle per query, of
+    radius 100k) on `index`, each answer checked against brute force
+    over `live` ({pid: (x, y)})."""
     qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),
                  x=q[:, 0], y=q[:, 1])
     got, kjobs = _counted(spark, lambda: knn_join(index, qdf, k)
                           .toPandas().sort_values(["qid", "rank"]))
     rc, rjobs = _counted(spark, lambda: range_count(index, boxes)
                          .toPandas().set_index("box_id")["cnt"])
+    circles = [(i, *c, 100_000) for i, c in enumerate(q.tolist())]
+    cc, cjobs = _counted(spark, lambda: circle_count(index, circles)
+                         .toPandas().set_index("circle_id")["cnt"])
     ids = np.array(list(live), np.int64)
     p = np.array(list(live.values()), np.int64)
     exp_d, exp_i = bf.knn(p, ids, q, k)
@@ -90,7 +96,15 @@ def _read(spark, index, live: dict, q: np.ndarray, boxes: list,
     for b in boxes:
         inside = np.all((p >= b[1:3]) & (p <= b[3:]), axis=1)
         assert rc[b[0]] == int(inside.sum()), b
-    return kjobs, rjobs
+    for i, x, y, r in circles:
+        assert cc[i] == int((((p - (x, y)) ** 2).sum(axis=1)
+                             <= r * r).sum()), i
+    return kjobs, rjobs, cjobs
+
+
+def _within_budget(jobs: tuple) -> None:
+    kjobs, *rjobs = jobs
+    assert kjobs <= KNN_JOBS and max(rjobs) <= RANGE_JOBS, jobs
 
 
 def test_knn_and_range_job_budget_flat_over_fragments(spark):
@@ -108,7 +122,7 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
     boxes = [(i, *lo[i], *(lo[i] + rng.integers(1_000, 200_000, 2)))
              for i in range(len(lo))]
 
-    jobs = [_read(spark, idx, live, q, boxes, k)]
+    _within_budget(_read(spark, idx, live, q, boxes, k))
     for g in range(2):
         # a batch confined to a quarter of the domain touches only some
         # cells, so every older fragment stays in the version's plan
@@ -125,11 +139,8 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
         for i in dpid:
             del live[int(i)]
         live.update({int(i): p for i, p in zip(ipid, ins)})
-        jobs.append(_read(spark, idx, live, q, boxes, k))
+        _within_budget(_read(spark, idx, live, q, boxes, k))
     assert idx.manifest["frags"] == 3
-    (k1, r1), (k2, _), (k3, r3) = jobs
-    assert k1 <= KNN_JOBS and max(k2, k3) <= KNN_JOBS_AFTER_UPDATE, jobs
-    assert k3 <= k1 and r3 <= r1, jobs
 
 
 def test_whole_index_updates_keep_one_fragment(spark):
@@ -138,7 +149,7 @@ def test_whole_index_updates_keep_one_fragment(spark):
     union. The chain stays at one fragment with no compaction, the
     storage it holds stays flat while each superseded version is
     unpersisted, and the reads after each update run within the job
-    budgets of a carried-stats kNN and of a fresh index's range_count."""
+    budgets."""
     rng = np.random.default_rng(37)
     n, k, grid = 2000, 5, Grid(8)
     live = {int(i): p for i, p in enumerate(
@@ -156,7 +167,7 @@ def test_whole_index_updates_keep_one_fragment(spark):
     c = np.arange(grid.g) * grid.cw + grid.cw // 2
     centres = np.array([(x, y) for x in c for y in c], np.int64)
 
-    _, fresh_rjobs = _read(spark, idx, live, q, boxes, k)
+    _within_budget(_read(spark, idx, live, q, boxes, k))
     held = []
     for g in range(4):
         ipid = np.arange(10**6 + 100 * g, 10**6 + 100 * g + len(centres),
@@ -176,23 +187,21 @@ def test_whole_index_updates_keep_one_fragment(spark):
         assert idx.manifest["frags"] == 1, idx.manifest
         assert not idx.manifest["compacted"]
         held.append(len(owned & _persisted(spark)))
-        kjobs, rjobs = _read(spark, idx, live, q, boxes, k)
-        assert kjobs <= KNN_JOBS_AFTER_UPDATE, kjobs
-        assert rjobs <= fresh_rjobs, (rjobs, fresh_rjobs)
+        _within_budget(_read(spark, idx, live, q, boxes, k))
     assert held == [1] * len(held), held
 
 
 def test_updates_without_reads_stay_bounded(spark):
     """A streaming indexer's shape: updates with no read between them,
-    each superseded version unpersisted at once. No version builds or
-    carries read statistics it was not asked for, so storage is held by
-    the live version's fragments only, one persisted RDD each (and drops
-    at compaction, which frees the delta it folded in), and the first
-    kNN call after the chain runs within the budget of a fresh index
-    however long the chain was; the update after that read carries the
-    stats again. Each batch inserts into a cell of its own outside the
-    quarter the other rows go to, so no fragment is superseded and the
-    chain reaches a compaction."""
+    each superseded version unpersisted at once. Every version holds the
+    routing level the build handed over and each update patched, as
+    driver arrays, and no cached stats frame, so storage is held by the
+    live version's fragments only, one persisted RDD each (and drops at
+    compaction, which frees the delta it folded in); carrying the level
+    costs an update no job, and the kNN calls after the chain run within
+    the budget however long the chain was. Each batch inserts into a
+    cell of its own outside the quarter the other rows go to, so no
+    fragment is superseded and the chain reaches a compaction."""
     rng = np.random.default_rng(31)
     n, k, grid = 2000, 5, Grid(8)
     live = {int(i): p for i, p in enumerate(
@@ -228,7 +237,7 @@ def test_updates_without_reads_stay_bounded(spark):
     held, frags, ujobs = [], [], []
     for g in range(COMPACT_EVERY + 2):
         idx = step(idx, g)
-        assert idx._cell_stats is None and idx._cells_pd is None
+        assert idx._level is not None and idx._cell_stats is None
         held.append(len(owned & _persisted(spark)))
         frags.append(idx.manifest["frags"])
     assert frags == [*range(2, COMPACT_EVERY + 1), 1, 2, 3], frags
@@ -249,10 +258,71 @@ def test_updates_without_reads_stay_bounded(spark):
             got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
         return jobs
 
-    cold = knn_jobs(idx)
-    assert cold <= KNN_JOBS, cold
+    assert knn_jobs(idx) <= KNN_JOBS
     idx = step(idx, len(held))
-    assert knn_jobs(idx) <= KNN_JOBS_AFTER_UPDATE
+    assert knn_jobs(idx) <= KNN_JOBS
+
+
+def test_reads_leave_nothing_in_storage(spark):
+    """20 calls alternating kNN, range_count and circle_count reads
+    with updates, each superseded version unpersisted with its
+    successor: after every call, what the session holds in storage is
+    exactly what the index's fragments hold, so a read leaves no
+    checkpoint or cache behind for Spark's cleaner."""
+    rng = np.random.default_rng(41)
+    n, k, grid = 2000, 5, Grid(8)
+    live = {int(i): p for i, p in enumerate(
+        rng.integers(0, COORD_LIMIT, size=(n, 2)))}
+    pts = np.array(list(live.values()), np.int64)
+    before = _persisted(spark)
+    idx = SpatialIndex.build(
+        spark, _frame(spark, pid=np.arange(n, dtype=np.int64),
+                      x=pts[:, 0], y=pts[:, 1]),
+        grid=grid, n_hint=n)
+    q = rng.integers(0, COORD_LIMIT, size=(16, 2))
+    qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),
+                 x=q[:, 0], y=q[:, 1])
+    lo = rng.integers(0, COORD_LIMIT - 300_000, size=(8, 2))
+    boxes = [(i, *lo[i], *(lo[i] + 300_000)) for i in range(len(lo))]
+    circles = [(i, *c, 150_000) for i, c in enumerate(q.tolist())]
+
+    def update(index, g):
+        ins = rng.integers(0, COORD_LIMIT, size=(30, 2))
+        ipid = np.arange(10**6 + 100 * g, 10**6 + 100 * g + 30,
+                         dtype=np.int64)
+        dpid = rng.choice(np.array(list(live), np.int64), 20,
+                          replace=False)
+        dxy = np.array([live[int(i)] for i in dpid], np.int64)
+        new = index.update(_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]),
+                           _frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1]))
+        index.unpersist(successor=new)
+        for i in dpid:
+            del live[int(i)]
+        live.update({int(i): p for i, p in zip(ipid, ins)})
+        return new
+
+    for call in range(20):
+        p = np.array(list(live.values()), np.int64)
+        ids = np.array(list(live), np.int64)
+        op = call % 4
+        if op == 0:
+            got = knn_join(idx, qdf, k).toPandas().sort_values(["qid", "rank"])
+            np.testing.assert_array_equal(
+                got["nid"].to_numpy(np.int64).reshape(len(q), k),
+                bf.knn(p, ids, q, k)[1])
+        elif op == 1:
+            got = range_count(idx, boxes).toPandas().set_index("box_id")
+            assert [got["cnt"][b[0]] for b in boxes] == bf.range_count(
+                p, np.array(boxes)[:, 1:]).tolist()
+        elif op == 2:
+            got = circle_count(idx, circles).toPandas() \
+                .set_index("circle_id")
+            assert [got["cnt"][c[0]] for c in circles] == bf.circle_count(
+                p, q, np.full(len(q), 150_000)).tolist()
+        else:
+            idx = update(idx, call)
+        stores = {id(f.store) for f in idx._frags if f.store is not None}
+        assert len(_persisted(spark) - before) == len(stores), call
 
 
 def test_components_job_budget_on_a_path(spark):

@@ -123,9 +123,9 @@ def test_large_grid_pyramid_paths(spark, sf_dir):
     # cells, so the kernel expands super cells into fine children
     from kdtree_spark.queries import knn as K
     k = 2000
-    ub = K._prefix_ub(P[:2], K._super_arrays(idx), k)
+    ub = K._prefix_ub(P[:2], idx.level(), k)
     assert len(K._enum_rows([P[:2, 0], P[:2, 1]], ub, idx.grid,
-                            False)[3]) == 2
+                            False)[2]) == 2
     out = knn_join(idx, q.filter("qid < 2"), k).toPandas()
     for qi in range(2):
         d2 = ((P - P[qi]) ** 2).sum(axis=1)
