@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .index import _rescan_changed_zips_only
+
 IMAGE_SCHEMA = ("image_id string, bytes binary, w int, h int, fmt string, "
                 "caption string, phash long")
 
@@ -300,6 +302,7 @@ def synth_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         d=spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _rescan_changed_zips_only()
         for pdf in batches:
             rows = []
             for doc_id, text, cx, cy, w, h in zip(
@@ -328,6 +331,7 @@ def decode_features(images: DataFrame) -> DataFrame:
     numpy kernel -> narrow output), Arrow-batched, no shuffle."""
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _rescan_changed_zips_only()
         for pdf in batches:
             out = {k: [] for k in
                    ("image_id", "mean_lum", "std_lum", "phash_check",
@@ -353,6 +357,7 @@ def resize_images(images: DataFrame, tw: int = 8, th: int = 8) -> DataFrame:
     """Nearest-neighbor thumbnail stage: (image_id, bytes raw thumb)."""
 
     def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _rescan_changed_zips_only()
         for pdf in batches:
             ids, thumbs = [], []
             for iid, data, w, h, fmt in zip(

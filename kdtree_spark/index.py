@@ -212,7 +212,7 @@ def _rescan_changed_zips_only() -> None:
     zipimporter on the worker path (pyspark.zip alone holds over a
     thousand entries). An archive whose (st_mtime_ns, st_size, st_ino)
     equals the value recorded at its last read yields the same
-    directory, so imports see the same files. Index kernels call this
+    directory, so imports see the same files. Engine kernels call this
     first, so it ships with the package; installing it rescans every
     archive once, to record the stamps, which is all it costs per
     worker process."""
@@ -327,6 +327,19 @@ def observed(obs: Observation) -> dict | None:
     rows: AQE prunes an observed operator whose input turned out empty,
     metrics and all (an empty row, which Observation.get rejects)."""
     return obs.get if obs._jo.getRow().size() else None
+
+
+@contextlib.contextmanager
+def job_description(spark: SparkSession, label: str):
+    """Run the block's Spark jobs under spark.job.description `label`
+    (a per-phase label in the event log), then restore the caller's."""
+    sc = spark.sparkContext
+    desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(desc)
 
 
 def free_checkpoint(ckpt: DataFrame) -> None:
@@ -779,8 +792,9 @@ class SpatialIndex:
         # descendants until compaction, is a literal predicate on it —
         # no broadcast per read, and no lineage back to the caller's
         # input frames (a streaming caller deletes evicted slice files)
-        touched = sorted(int(r["cell"])
-                         for r in ups.select("cell").distinct().collect())
+        with job_description(self.spark, "update:touched"):
+            touched = sorted(int(r["cell"]) for r in
+                             ups.select("cell").distinct().collect())
         in_touched = F.col("cell").isin(touched)
         fed = [Observation() for _ in self._frags]  # single-use: one each
         new_blobs = cogroup(
@@ -802,9 +816,10 @@ class SpatialIndex:
         # carried, ride on the checkpoint.
         carry = self._level is not None and self.super_grid()[0] == 1
         obs = Observation()
-        delta = new_blobs.observe(obs, F.to_json(F.collect_list(F.struct(
-            *(LEVEL_COLS if carry else ["cell", "salt"])))).alias("rows")
-        ).localCheckpoint(eager=True)
+        with job_description(self.spark, "update:rewrite"):
+            delta = new_blobs.observe(obs, F.to_json(F.collect_list(
+                F.struct(*(LEVEL_COLS if carry else ["cell", "salt"]))))
+                .alias("rows")).localCheckpoint(eager=True)
         # read as a Java string: Observation.get's pickled row crosses
         # py4j as bytes that it decodes one at a time in Python, about
         # 0.2 s per MB of probe samples
@@ -834,7 +849,9 @@ class SpatialIndex:
             # calls unpersist(successor=...), the delta's here: nothing
             # past this point reads them
             live = [f.live for f in frags]
-            ckpt = _union(f.frame for f in frags).localCheckpoint(eager=True)
+            with job_description(self.spark, "update:compact"):
+                ckpt = (_union(f.frame for f in frags)
+                        .localCheckpoint(eager=True))
             free_checkpoint(delta)
             frags = [_Frag(ckpt, ckpt, None if None in live else sum(live))]
         # no per-update blob-row count: nothing load-bearing reads it

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..index import _rescan_changed_zips_only
 from .common import spark_quant_sql
 
 BLOCK_ROWS = 4096  # target base rows per matmul block
@@ -71,16 +72,38 @@ def _nblocks(emb: DataFrame) -> int:
     return max(1, int(np.ceil(emb.count() / BLOCK_ROWS)))
 
 
-def _cosine_order(df: DataFrame, nq_sq: DataFrame) -> DataFrame:
-    """Attach exact-int-derived cosine and rank (cos desc, nid asc)."""
-    d = df.join(nq_sq, "qid")
+def _cosine_topk(d: DataFrame, k: int) -> DataFrame:
+    """The top-k (qid, nid, dot, na, nb) rows per qid by exact-int-derived
+    cosine, ranked (cos desc, nid asc), with their cos and rank."""
     d = d.withColumn(
         "cos",
         F.col("dot").cast("double")
         / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")))
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(),
                                           F.col("nid").asc())
-    return d.withColumn("rank", F.row_number().over(w).cast("long"))
+    return (d.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k)
+            .select("qid", "nid", "dot", "na", "nb", "cos", "rank"))
+
+
+def _rerank(cand: DataFrame, k: int) -> DataFrame:
+    """Candidate (qid, nid, q_emb, n_emb) rows re-ranked exactly: each
+    distinct pair scored on the int64 grid, then _cosine_topk."""
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _rescan_changed_zips_only()
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            a = _quantize(pdf["q_emb"])
+            b = _quantize(pdf["n_emb"])
+            yield pd.DataFrame({"qid": pdf["qid"], "nid": pdf["nid"],
+                                "dot": (a * b).sum(axis=1),
+                                "na": (a * a).sum(axis=1),
+                                "nb": (b * b).sum(axis=1)})
+
+    return _cosine_topk(cand.mapInPandas(
+        score, "qid long, nid long, dot long, na long, nb long").distinct(), k)
 
 
 def cosine_topk(emb: DataFrame, query_filter: str, k: int = 10) -> DataFrame:
@@ -105,6 +128,7 @@ def cosine_topk(emb: DataFrame, query_filter: str, k: int = 10) -> DataFrame:
 
     def block_topk(key, qpdf: pd.DataFrame, bpdf: pd.DataFrame
                    ) -> pd.DataFrame:
+        _rescan_changed_zips_only()
         if len(qpdf) == 0 or len(bpdf) == 0:
             return pd.DataFrame(
                 {"qid": pd.Series(dtype=np.int64),
@@ -139,10 +163,7 @@ def cosine_topk(emb: DataFrame, query_filter: str, k: int = 10) -> DataFrame:
             .cogroup(base.groupby("bb"))
             .applyInPandas(block_topk, "qid long, nid long, dot long, nb long")
             .filter(F.col("qid") != F.col("nid")))
-    na_df = q.select("qid", "na")
-    ranked = _cosine_order(cand, na_df)
-    return (ranked.filter(F.col("rank") <= k)
-            .select("qid", "nid", "dot", "na", "nb", "cos", "rank"))
+    return _cosine_topk(cand.join(q.select("qid", "na"), "qid"), k)
 
 
 def neardup_pairs(emb: DataFrame, tau: float = 0.4) -> DataFrame:
@@ -206,6 +227,7 @@ def neardup_pairs(emb: DataFrame, tau: float = 0.4) -> DataFrame:
 
     def block_pairs(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame
                     ) -> pd.DataFrame:
+        _rescan_changed_zips_only()
         if len(lpdf) == 0 or len(rpdf) == 0:
             return pd.DataFrame(
                 {c: pd.Series(dtype=np.int64)
@@ -275,6 +297,7 @@ def srp_buckets(emb: DataFrame) -> DataFrame:
     bc = spark.sparkContext.broadcast(_planes_q())
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _rescan_changed_zips_only()
         planes = bc.value
         for pdf in batches:
             if not len(pdf):
@@ -313,32 +336,8 @@ def srp_topk(emb: DataFrame, query_filter: str, k: int = 10) -> DataFrame:
     # equi-join on bucket; no forced broadcast — the query side is a
     # constant fraction of the table, so AQE picks broadcast at small
     # scale and a shuffle join once the query set outgrows it
-    cand = (base.join(q, "bucket")
-            .filter(F.col("qid") != F.col("nid")))
-
-    def rerank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = _quantize(pdf["q_emb"])
-            b = _quantize(pdf["n_emb"])
-            dot = (a * b).sum(axis=1)
-            na = (a * a).sum(axis=1)
-            nb = (b * b).sum(axis=1)
-            yield pd.DataFrame({"qid": pdf["qid"], "nid": pdf["nid"],
-                                "dot": dot, "na": na, "nb": nb})
-
-    scored = cand.mapInPandas(
-        rerank, "qid long, nid long, dot long, na long, nb long").distinct()
-    scored = scored.withColumn(
-        "cos",
-        F.col("dot").cast("double")
-        / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(),
-                                          F.col("nid").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nid", "dot", "na", "nb", "cos", "rank"))
+    return _rerank(base.join(q, "bucket")
+                   .filter(F.col("qid") != F.col("nid")), k)
 
 
 # IVF (inverted-file) ANN — the centroid-partition scale path, the
@@ -400,6 +399,7 @@ def _list_assign(cent_q: np.ndarray, topn: int):
     ties resolve to the lowest list id via argmax/stable argsort) and
     reproducible by the fixture oracle."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _rescan_changed_zips_only()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -435,28 +435,5 @@ def ivf_topk(emb: DataFrame, query_filter: str, k: int = 10,
     q = (qdf.join(q_lists, "vec_id")
          .select(F.col("vec_id").alias("qid"),
                  F.col("embedding").alias("q_emb"), "list_id"))
-    cand = (base.join(q, "list_id")
-            .filter(F.col("qid") != F.col("nid")))
-
-    def rerank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = _quantize(pdf["q_emb"])
-            b = _quantize(pdf["n_emb"])
-            yield pd.DataFrame({"qid": pdf["qid"], "nid": pdf["nid"],
-                                "dot": (a * b).sum(axis=1),
-                                "na": (a * a).sum(axis=1),
-                                "nb": (b * b).sum(axis=1)})
-
-    scored = cand.mapInPandas(
-        rerank, "qid long, nid long, dot long, na long, nb long").distinct()
-    scored = scored.withColumn(
-        "cos",
-        F.col("dot").cast("double")
-        / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(),
-                                          F.col("nid").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nid", "dot", "na", "nb", "cos", "rank"))
+    return _rerank(base.join(q, "list_id")
+                   .filter(F.col("qid") != F.col("nid")), k)

@@ -15,6 +15,8 @@ and DuckDB. Rules used throughout:
 
 from __future__ import annotations
 
+from ..index import _rescan_changed_zips_only
+
 # -- portable 56-bit string hash: first 14 hex chars of md5 -------------------
 
 def spark_h_sql(col: str) -> str:
@@ -75,6 +77,7 @@ def sorted_group_map(df, key: str, kernel, schema: str):
     parted = df.repartition(key).sortWithinPartitions(key)
 
     def run(batches):
+        _rescan_changed_zips_only()
         carry = None
         for pdf in batches:
             if carry is not None and len(carry):

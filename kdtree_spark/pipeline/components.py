@@ -26,7 +26,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
-from ..index import _arrow_fn, _column, free_checkpoint, observed
+from ..index import (_arrow_fn, _column, free_checkpoint, job_description,
+                     observed)
 
 
 def dedup_canonical(docs: DataFrame, pairs: DataFrame,
@@ -96,16 +97,14 @@ def star_edges(edges: DataFrame, a_col: str = "da", b_col: str = "db",
                          f"LEAST({a_col}, {b_col}) AS v",
                          *([local_col] if local_col else [])
                          ).filter("u != v")
-    sc = edges.sparkSession.sparkContext
-    desc = sc.getLocalProperty("spark.job.description")
+    spark = edges.sparkSession
     w = Window.partitionBy("u")
-    try:
-        if local_col:
-            sc.setJobDescription("components:contract")
+    if local_col:
+        with job_description(spark, "components:contract"):
             e = (e.groupBy(local_col)
                  .applyInArrow(_arrow_fn(_contract, "u long, v long"),
                                "u long, v long").localCheckpoint())
-        sc.setJobDescription("components:round")
+    with job_description(spark, "components:round"):
         for rnd in range(max_rounds):
             obs = Observation()  # single-use: one per round
             ls = (e.selectExpr("stack(2, u, v, v, u) AS (u, v)")
@@ -126,8 +125,6 @@ def star_edges(edges: DataFrame, a_col: str = "da", b_col: str = "db",
             e = nxt
             if m is None or m["bad"] == 0:
                 return e
-    finally:
-        sc.setJobDescription(desc)
     raise RuntimeError(
         f"connected_components: no fixpoint after {max_rounds} "
         f"rounds; the labels would not be components")

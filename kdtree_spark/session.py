@@ -1,14 +1,42 @@
 """SparkSession factory tuned for the local[N] sandbox; the same settings
-scale out (AQE, Arrow, skew-join) on a real cluster via spark-submit."""
+scale out (AQE, Arrow, skew-join) on a real cluster via spark-submit.
+
+Every PySpark socket (worker daemon, task data channel, accumulator
+server, Arrow toPandas / createDataFrame) is a Unix domain socket
+(UDS_CONF, static): Spark opens loopback TCP without TCP_NODELAY, so
+each Python task's small Arrow writes would wait out a 40 ms delayed
+ACK. Spark names a socket `<dir>/.<uuid4>.sock`, 43 bytes past the
+directory, and an AF_UNIX path holds at most 107 bytes. The default
+directory, java.io.tmpdir, may be longer (a deep checkout, a long
+TMPDIR) and fail context start-up, so each process's local[N] sessions
+get one private directory that fits (_socket_dir)."""
 
 from __future__ import annotations
 
+import atexit
+import functools
 import hashlib
 import os
+import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+UDS_CONF = "spark.python.unix.domain.socket.enabled"
+
+
+@functools.cache
+def _socket_dir() -> str:
+    """Under the temp dir, or /tmp when that path is too long for a
+    socket path; removed, sockets and all, at interpreter exit."""
+    d = tempfile.mkdtemp(prefix="kds-sock-")
+    if len(os.fsencode(d)) + 43 > 107:
+        os.rmdir(d)
+        d = tempfile.mkdtemp(prefix="kds-sock-", dir="/tmp")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def _package_zip() -> str:
@@ -91,6 +119,8 @@ def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(UDS_CONF, "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -54,10 +54,15 @@ def main() -> None:
                          "checkpoint) and reloaded before querying")
     args = ap.parse_args()
 
-    # session comes from spark-submit; only analytics confs are set here
-    # (master/memory/executors belong to the submit command line)
+    # session comes from spark-submit; only analytics confs and Unix
+    # sockets are set here (master/memory/executors belong to the submit
+    # command line); each JVM keeps its java.io.tmpdir as socket dir: a
+    # directory the driver made would not exist on the executor hosts
     from pyspark.sql import SparkSession
+
+    from kdtree_spark.session import UDS_CONF
     spark = (SparkSession.builder.appName("kdtree-spark-job")
+             .config(UDS_CONF, "true")
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.adaptive.skewJoin.enabled", "true")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")

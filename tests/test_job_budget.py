@@ -37,17 +37,28 @@ DBSCAN_JOBS = 29  # dbscan on 2,000 uniform points, ~10 neighbours each
 # (29 on local[2], local[4] and local[9], 20 on local[1])
 
 
-def _counted(spark, fn):
-    """(fn(), Spark jobs fn ran), counted through a fresh job group."""
+def _labelled(spark, fn):
+    """(fn(), the spark.job.description of each Spark job fn ran, in
+    job order), through a fresh job group whose description fn leaves
+    as it found it."""
     sc = spark.sparkContext
     group = f"budget-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
+        assert sc.getLocalProperty("spark.job.description") == group
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    return out, [store.job(i).description().get()
+                 for i in sorted(sc.statusTracker().getJobIdsForGroup(group))]
+
+
+def _counted(spark, fn):
+    """(fn(), Spark jobs fn ran)."""
+    out, labels = _labelled(spark, fn)
+    return out, len(labels)
 
 
 def _persisted(spark) -> set:
@@ -225,9 +236,9 @@ def test_updates_without_reads_stay_bounded(spark):
         dxy = np.array([live[int(i)] for i in dpid], np.int64)
         ups = (_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]),
                _frame(spark, pid=dpid, x=dxy[:, 0], y=dxy[:, 1]))
-        new, jobs = _counted(spark, lambda: _owning(
+        new, labels = _labelled(spark, lambda: _owning(
             spark, owned, lambda: index.update(*ups)))
-        ujobs.append(jobs)
+        ujobs.append(labels)
         index.unpersist(successor=new)
         for i in dpid:
             del live[int(i)]
@@ -242,8 +253,14 @@ def test_updates_without_reads_stay_bounded(spark):
         frags.append(idx.manifest["frags"])
     assert frags == [*range(2, COMPACT_EVERY + 1), 1, 2, 3], frags
     assert held == frags, (held, frags)
-    # a compaction costs one job more than a partial update
-    assert ujobs == [UPDATE_JOBS + (f == 1) for f in frags], ujobs
+    # a compaction costs one job more than a partial update; each job
+    # carries its phase's label, in phase order
+    assert [len(j) for j in ujobs] == [UPDATE_JOBS + (f == 1)
+                                       for f in frags], ujobs
+    phases = ["update:touched", "update:rewrite", "update:compact"]
+    for labels, f in zip(ujobs, frags):
+        assert sorted(set(labels)) == sorted(phases[:2 + (f == 1)]), labels
+        assert labels == sorted(labels, key=phases.index), labels
 
     q = rng.integers(0, COORD_LIMIT, size=(16, 2))
     qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),

@@ -1,17 +1,29 @@
 """Session defaults come from the host, never above it; the package zip
-is written once per package content and added to a session once."""
+is written once per package content and added to a session once; every
+PySpark socket is a Unix domain socket whose path fits AF_UNIX."""
 
 from __future__ import annotations
 
+import glob
 import importlib.util
+import json
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
+import textwrap
 import zipfile
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
+
 from kdtree_spark import session
+from kdtree_spark.index import map_arrow
 from kdtree_spark.session import _package_zip, host_defaults
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SOCK_NAME = len("/.00000000-0000-0000-0000-000000000000.sock")  # 43
 
 
 def _gib(mem: str) -> int:
@@ -95,3 +107,72 @@ def test_ship_package_adds_once(spark, monkeypatch):
     session.ship_package(spark)
     session.ship_package(spark)
     assert added == []
+
+
+def _plus_one(spark):
+    """A map_arrow kernel over 64 rows in 2 partitions: x + 1."""
+    df = spark.range(64).selectExpr("id AS x").repartition(2)
+    got = map_arrow(df, lambda c: {"x": c["x"] + 1}, "x long").toPandas()
+    assert sorted(got["x"]) == list(range(1, 65))
+
+
+def _long_dir(root, nbytes: int) -> str:
+    d = os.path.join(str(root), "d" * (nbytes - len(str(root)) - 1))
+    os.makedirs(d)
+    assert len(os.fsencode(d)) == nbytes
+    return d
+
+
+def test_session_uses_unix_sockets(spark):
+    """Unix sockets on, in a private directory whose socket paths fit
+    in 107 bytes and hold the live session's sockets; a kernel runs."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get(session.UDS_CONF) == "true"
+    d = conf.get("spark.python.unix.domain.socket.dir")
+    assert d == session._socket_dir() and os.path.isdir(d)
+    assert len(os.fsencode(d)) + SOCK_NAME <= 107
+    _plus_one(spark)
+    assert glob.glob(os.path.join(d, ".*.sock"))
+
+
+def test_socket_dir_falls_back_under_tmp(monkeypatch, tmp_path):
+    """Under a temp dir too long for a socket path, the directory is
+    made under /tmp instead, and its socket paths fit."""
+    monkeypatch.setattr(tempfile, "tempdir", _long_dir(tmp_path, 90))
+    d = session._socket_dir.__wrapped__()
+    try:
+        assert os.path.dirname(d) == "/tmp" and os.path.isdir(d)
+        assert len(os.fsencode(d)) + SOCK_NAME <= 107
+    finally:
+        shutil.rmtree(d)
+
+
+_SOCKET_SCRIPT = textwrap.dedent("""
+    import glob, json, os, sys
+    sys.path.insert(0, sys.argv[1])
+    from kdtree_spark.session import get_spark
+    from tests.test_session import _plus_one
+
+    spark = get_spark("socket-dir", cpus=2)
+    _plus_one(spark)
+    d = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    live = glob.glob(os.path.join(d, ".*.sock"))
+    spark.stop()
+    print(json.dumps({"dir": d, "live": live}))
+""")
+
+
+def test_socket_dir_left_clean(tmp_path):
+    """A session started with a 90-byte TMPDIR runs a kernel over Unix
+    sockets; after spark.stop() and interpreter exit neither a socket
+    file nor the socket directory is left behind."""
+    tmp = _long_dir(tmp_path, 90)
+    out = subprocess.run(
+        [sys.executable, "-c", _SOCKET_SCRIPT, ROOT], cwd=ROOT,
+        env=dict(os.environ, TMPDIR=tmp), capture_output=True, text=True,
+        timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert os.path.dirname(got["dir"]) == "/tmp" and got["live"]
+    assert not os.path.exists(got["dir"])
+    assert not glob.glob(os.path.join(tmp, "**", ".*.sock"), recursive=True)

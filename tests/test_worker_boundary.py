@@ -91,13 +91,15 @@ _MARKER_SCRIPT = textwrap.dedent("""
     import pandas as pd
     sys.path.insert(0, sys.argv[1])
     from kdtree_spark.index import cogroup
+    from kdtree_spark.pipeline.common import sorted_group_map
     from kdtree_spark.session import get_spark
 
     spark = get_spark("worker-boundary", cpus=2, shuffle_partitions=8)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     MARK = "kds-boundary-marker/"
+    SCHEMA = "pid long, task long, had boolean"
 
-    def plant(key, l, r):
+    def plant():
         from pyspark import TaskContext
         z = next(p for p in sys.path
                  if p.endswith(".zip") and p in zipimport._zip_directory_cache)
@@ -110,24 +112,27 @@ _MARKER_SCRIPT = textwrap.dedent("""
     keys = pd.DataFrame({"k": np.arange(32, dtype=np.int64)})
     left = spark.createDataFrame(keys.assign(a=1))
     right = spark.createDataFrame(keys.assign(b=1))
+    if sys.argv[2] == "cogroup":
+        run = lambda: cogroup(left, right, ["k"],
+                              lambda key, l, r: plant(), SCHEMA)
+    else:
+        run = lambda: sorted_group_map(
+            left, "k", lambda pdf: pd.DataFrame(plant()), SCHEMA)
     rows = []
     for _ in range(3):
-        rows += [r.asDict() for r in cogroup(
-            left, right, ["k"], plant,
-            "pid long, task long, had boolean").collect()]
+        rows += [r.asDict() for r in run().collect()]
     spark.stop()
     print(json.dumps(rows))
 """)
 
 
-def test_tasks_run_the_narrowed_rescan():
-    """Index kernels really narrow the per-task rescan: a marker key
-    that one task plants in the zip directory cache of an archive on
-    the worker path is still there in that worker's later tasks (a full
-    rescan replaces the directory and drops it). Own session, 2 task
-    threads, 24 tasks through index.cogroup."""
+def _marked_tasks(path: str) -> None:
+    """A marker key that one task plants in the zip directory cache of
+    an archive on the worker path is still there in that worker's later
+    tasks (a full rescan replaces the directory and drops it). Own
+    session, 2 task threads, 24 tasks through `path`."""
     out = subprocess.run(
-        [sys.executable, "-c", _MARKER_SCRIPT, ROOT], cwd=ROOT,
+        [sys.executable, "-c", _MARKER_SCRIPT, ROOT, path], cwd=ROOT,
         capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-3000:]
     rows = pd.DataFrame(json.loads(out.stdout.strip().splitlines()[-1]))
@@ -139,6 +144,18 @@ def test_tasks_run_the_narrowed_rescan():
         reused += later["task"].nunique()
         assert later["had"].all(), w.sort_values("task")
     assert reused >= 1  # some worker ran more than one task
+
+
+def test_tasks_run_the_narrowed_rescan():
+    """Index kernels really narrow the per-task rescan (index.cogroup)."""
+    _marked_tasks("cogroup")
+
+
+def test_pandas_kernels_run_the_narrowed_rescan():
+    """So do the pipelines' pandas kernels, in a fresh session whose
+    workers never ran an index kernel (pipeline.common.sorted_group_map,
+    a mapInPandas)."""
+    _marked_tasks("sorted_group_map")
 
 
 def _points(rng, n: int, fmode: bool, xmax: int) -> np.ndarray:
