@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .grid import Grid
-from .index import SpatialIndex
+from .index import SpatialIndex, in_list
 
 
 class SnapshotStore:
@@ -122,7 +122,7 @@ class SnapshotStore:
                     f"nbuckets={pman['nbuckets']}, store uses {self.nb}")
             buckets = {int(b): p for b, p in pman["buckets"].items()}
             dirty = sorted({int(c) % self.nb for c in touched_cells})
-            out = df.filter(F.col("bucket").isin(dirty))
+            out = df.filter(in_list("bucket", dirty))
         else:
             buckets = {}
             dirty = list(range(self.nb))

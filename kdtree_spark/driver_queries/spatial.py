@@ -466,19 +466,29 @@ def q_snapshot_roundtrip(spark, sf_dir) -> DataFrame:
     commit -> batch insert -> INCREMENTAL commit (only touched buckets
     rewritten) -> load(CURRENT) -> range counts. The counts come from
     the re-read snapshot files, so the gate proves the checkpoint
-    round-trip end to end, not just in-memory state."""
+    round-trip end to end, not just in-memory state. They are taken
+    before the store's directory is removed: the gate returns them as
+    a local frame, and leaves no file behind."""
+    import shutil
     import tempfile
     from ..catalog import SnapshotStore
     # fresh index (not the shared cache): updates must not leak into
     # other gates' cached index
     pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
     idx = SpatialIndex.build(spark, pts, grid=Grid(GRID_G))
-    store = SnapshotStore(tempfile.mkdtemp(prefix="snapstore-"))
-    base = store.commit(idx)
-    idx2 = idx.update(inserts=_sql(spark, sf_dir, _U2.insert_sql(_VIEW)))
-    store.commit(idx2, parent=base)
-    loaded = store.load(spark)  # CURRENT
-    return range_count(loaded, BOXES_SMALL)
+    root = tempfile.mkdtemp(prefix="snapstore-")
+    try:
+        store = SnapshotStore(root)
+        base = store.commit(idx)
+        idx2 = idx.update(inserts=_sql(spark, sf_dir,
+                                       _U2.insert_sql(_VIEW)))
+        store.commit(idx2, parent=base)
+        idx.unpersist(successor=idx2)
+        idx2.unpersist()
+        got = range_count(store.load(spark), BOXES_SMALL)  # CURRENT
+        return spark.createDataFrame(got.collect(), got.schema)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # ------------------------------------------------------------------ registry

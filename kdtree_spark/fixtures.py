@@ -188,17 +188,6 @@ def gen_tiles(n: int = 12, seed: int = 40) -> list[tuple[int, int, int, int, int
 
 # ---------------------------------------------------------------- SQL render
 
-def boxes_values_sql(boxes, alias: str = "b") -> str:
-    rows = ", ".join(f"({b}, {x0}, {y0}, {x1}, {y1})"
-                     for b, x0, y0, x1, y1 in boxes)
-    return (f"(VALUES {rows}) AS {alias}(box_id, bxlo, bylo, bxhi, byhi)")
-
-
-def circles_values_sql(circles, alias: str = "c") -> str:
-    rows = ", ".join(f"({i}, {x}, {y}, {r})" for i, x, y, r in circles)
-    return f"(VALUES {rows}) AS {alias}(circle_id, cx, cy, r)"
-
-
 def tiles_values_sql(tiles, alias: str = "t") -> str:
     rows = ", ".join(f"({i}, {x0}, {y0}, {x1}, {y1})"
                      for i, x0, y0, x1, y1 in tiles)

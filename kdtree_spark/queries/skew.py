@@ -21,13 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import FANOUT_MIN_BLOBS, SpatialIndex, cogroup  # noqa: F401
+from ..index import (FANOUT_MIN_BLOBS, TREE_COLS, SpatialIndex,  # noqa: F401
+                     cogroup, in_list)
 
 
 def hot_blobs(index: SpatialIndex) -> DataFrame:
     """Blobs of fanned-out ("hot") cells — the minority side that query
     operators re-key by (cell, salt)."""
-    return index.df.filter(F.col("cell").isin(index.hot_cells()))
+    return index.df.filter(in_list("cell", index.hot_cells()))
 
 
 def split_by_salt(index: SpatialIndex, cand: DataFrame
@@ -41,7 +42,7 @@ def split_by_salt(index: SpatialIndex, cand: DataFrame
     hot_cells = index.hot_cells()
     if not hot_cells:
         return cand.drop("maxsalt"), None
-    hot_pred = F.col("cell").isin(hot_cells)
+    hot_pred = in_list("cell", hot_cells)
     cold = cand.filter(~hot_pred).drop("maxsalt")
     hot = (cand.filter(hot_pred)
            .withColumn("salt", F.explode(
@@ -57,7 +58,9 @@ def scan_blobs(index: SpatialIndex, cand: DataFrame, cold_fn, hot_fn,
     (cell, salt) blob with hot_fn. Each blob side is first pruned to
     its side's cells (pruned_blobs), so only those cells' blobs are
     serialized through the Arrow hop — bytes scale with the query set,
-    not with index size. hot_fn sees one blob per group, so its partial
+    not with index size. Both kernels receive a group's index rows
+    (TREE_COLS, read with index.blob_trees: base and log rows pair up
+    by salt); hot_fn sees one (cell, salt) per group, so its partial
     results must compose in the caller's merge (counts sum, reported
     rows union, kNN top-k lists merge). `cand` must carry `maxsalt`,
     and its lineage must not reach index.df (or the semi-join would
@@ -65,13 +68,13 @@ def scan_blobs(index: SpatialIndex, cand: DataFrame, cold_fn, hot_fn,
     frames (index.cell_stats): the reads' candidates come from a
     kernel over the queries or from driver arrays."""
     cold, hot = split_by_salt(index, cand)
-    out = cogroup(cold, pruned_blobs(index.df, cold).select("cell", "blob"),
+    out = cogroup(cold, pruned_blobs(index.df, cold).select("cell",
+                                                            *TREE_COLS),
                   ["cell"], cold_fn, schema)
     if hot is None:
         return out
     return out.unionByName(cogroup(
-        hot, pruned_blobs(hot_blobs(index), hot).select("cell", "salt",
-                                                        "blob"),
+        hot, pruned_blobs(hot_blobs(index), hot).select("cell", *TREE_COLS),
         ["cell", "salt"], hot_fn, schema))
 
 

@@ -126,6 +126,20 @@ def test_spec_gate_matches_duckdb(spark, sf_dir, duck, value_hash, name):
     assert value_hash(got) == value_hash(exp)
 
 
+def test_snapshot_gate_leaves_no_store(spark, sf_dir, duck, value_hash,
+                                      tmp_path, monkeypatch):
+    """The snapshot round-trip gate answers from a store it writes under
+    the temp dir: its rows match DuckDB, and the store is gone once the
+    gate returns."""
+    import tempfile
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = spatial.QUERIES["snapshot_roundtrip"](spark, sf_dir).toPandas()
+    assert not list(tmp_path.glob("snapstore-*"))
+    exp = duck.sql(spatial.ORACLES["snapshot_roundtrip"]).df()
+    assert len(got) == len(exp) > 0
+    assert value_hash(got) == value_hash(exp)
+
+
 def test_hot_cell_knn_gate_fans_out_and_is_exact(spark):
     """The hot_cell_knn driver gate at sf0.01 must actually reach the
     salted (cell, salt) fan-out branch — at least one cell with >=
