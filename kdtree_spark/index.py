@@ -18,26 +18,21 @@ level, plus what BASELINE.json calls out): cells whose row count exceeds
 cogroups on `cell` and scans all of a cell's blobs vectorized, so salting
 is invisible to query semantics. AQE skew-join handles residual imbalance.
 
-Updates are log-structured at BOTH levels (I1/D1/D2 of SURVEY §2), so
-an update's cost follows its batch, not the index. Inside a cell, each
-(cell, salt) is an immutable BASE row (the tree, its point ids in a
-column of their own) and a small LOG row beside it (the inserts and the
-tombstoned pids since the base was built); reads overlay the log on the
-base (blob_trees), and a log folds into its base, a rebuild, only past
-the INBALANCE_RATIO=30 threshold (`tree_node.hpp:127-131` analogue).
-An update ships the touched cells' log rows and their base rows' ids,
-never a base tree unless it merges it. Across the index, each batch
-produces a checkpointed DELTA fragment of new log rows layered over the
-inherited fragments, each filtered to drop what the delta supersedes —
-untouched cells are never shuffled, deserialized, or rewritten. A
-fragment whose rows later deltas all superseded leaves the union, as
-the reference's rebuilt subtree replaces the old one
-(`batch_insert.hpp:60-191`), and a full compaction bounds the fragments
-that stay. Deletes are exact and partial-cover tolerant
-(`batch_delete.hpp:95-107`). The routing level travels with a batch
-whose parent holds it (the top level is the fine grid): the new
-version's level is the parent's, patched with the delta's own rows, not
-a rescan of the fragments.
+Updates are log-structured at BOTH levels (I1/D1/D2 of SURVEY §2):
+inside a cell, new rows append to the extra log / tombstone set and
+rebuild only past the INBALANCE_RATIO=30 threshold (`tree_node.hpp:
+127-131` analogue); across the index, each batch produces a
+checkpointed touched-cell DELTA fragment layered over the inherited
+fragments, each filtered by the batch's touched-cell list (one SQL
+execution: a broadcast semi-join selects the touched blobs) — untouched
+cells are never shuffled, deserialized, or rewritten. A fragment whose
+rows later deltas all rewrote leaves the union, as the reference's
+rebuilt subtree replaces the old one (`batch_insert.hpp:60-191`), and a
+full compaction bounds the fragments that stay. Deletes are
+partial-cover tolerant (`batch_delete.hpp:95-107`). The routing level
+travels with a batch whose parent holds it (the top level is the fine
+grid): the new version's level is the parent's, patched with the
+delta's own blob rows, not a rescan of the fragments.
 
 Persistence is write-audit-publish: parquet + JSON manifest written to a
 temp dir, audited (row counts), then atomically renamed — the checkpoint
@@ -68,20 +63,11 @@ from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
                                _parse_datatype_string)
 
 from .grid import Grid
-from .localtree import LocalKDTree, apply_batch, over_ratio
+from .localtree import LocalKDTree
 
-# one row per (cell, salt, log): `log` false is a base row (an immutable
-# tree: `ids` its point ids as int64 bytes, `blob` the rest of it), `log`
-# true the log row beside it (a tree of no points whose extras and
-# tombstones are the inserts and deletes since the base was built). A
-# log row's `cnt` is nextra - ntomb, so a cell's rows sum to its live
-# count, and its bbox and probe describe base and log together
-# (_log_row). `ids` is bytes, not an array: the JVM moves it through a
-# shuffle and into Arrow as one buffer, not element by element
-INDEX_SCHEMA = ("cell long, salt int, log boolean, cnt long, nextra long, "
-                "ntomb long, depth int, xmin long, ymin long, xmax long, "
-                "ymax long, bbox array<bigint>, probe array<bigint>, "
-                "ids binary, blob binary")
+INDEX_SCHEMA = ("cell long, salt int, cnt long, nextra long, ntomb long, "
+                "depth int, xmin long, ymin long, xmax long, ymax long, "
+                "bbox array<bigint>, probe array<bigint>, blob binary")
 
 # float-coordinate mode (the reference's double-coordinate test build,
 # comparator.h:10-79): same layout, double-typed coordinate metadata
@@ -106,10 +92,9 @@ LEVEL_PROBES = 1 << 17  # pooled probe points one driver level holds at
 
 
 
-STATS_COLS = ["cell", "salt", "log", "cnt", "nextra", "ntomb", "depth",
+STATS_COLS = ["cell", "salt", "cnt", "nextra", "ntomb", "depth",
               "xmin", "ymin", "xmax", "ymax"]
 LEVEL_COLS = ["cell", "salt", "cnt", "bbox", "probe"]  # a blob's level input
-TREE_COLS = ["salt", "log", "ids", "blob"]  # what blob_trees reads
 
 
 def bbox_cols(d: int) -> tuple[list, list]:
@@ -131,29 +116,17 @@ HOT_CELL_CAP = 131_072  # rows per index blob before salting splits it
 FANOUT_MIN_BLOBS = 4
 
 
+def _hot_pred():
+    """Blob-row predicate: a non-empty blob whose salt makes its cell
+    hot (the cell's highest non-empty salt + 1 >= FANOUT_MIN_BLOBS)."""
+    return (F.col("cnt") > 0) & (F.col("salt") >= FANOUT_MIN_BLOBS - 1)
+
 def in_list(col: str, values) -> F.Column:
     """`col` IN (integer values) as one SQL expression, false when
     values is empty: Column.isin makes one py4j call per value (14 ms
     for 81 cells, 0.14 ms as one SQL string)."""
     values = ", ".join(str(int(v)) for v in values)
     return F.expr(f"`{col}` IN ({values})") if values else F.lit(False)
-
-
-def _salt_rows(df: DataFrame, cols: list) -> DataFrame:
-    """One row per non-empty (cell, salt) of an index table: its live
-    count `cnt` (the sum over its base and log rows) and each of `cols`
-    from its log row where it has one (a log row's bbox and probe
-    describe base and log together), else from its base row."""
-    return (df.groupBy("cell", "salt")
-            .agg(F.sum("cnt").alias("cnt"),
-                 *[F.max_by(c, "log").alias(c) for c in cols])
-            .filter(F.col("cnt") > 0))
-
-
-def _hot_pred():
-    """Blob-row predicate: a non-empty blob whose salt makes its cell
-    hot (the cell's highest non-empty salt + 1 >= FANOUT_MIN_BLOBS)."""
-    return (F.col("cnt") > 0) & (F.col("salt") >= FANOUT_MIN_BLOBS - 1)
 
 COMPACT_EVERY = 8  # an update that would leave more fragments than
 # this checkpoints their union as one (a compaction)
@@ -180,7 +153,6 @@ def _probe_cap(d: int, n_live: int) -> int:
 
 
 def _tree_row(cell: int, salt: int, tree: LocalKDTree) -> dict:
-    """The base row of a tree without a log."""
     d = tree.pts.shape[1]
     cdt = tree.cdtype
     if tree.n_base:
@@ -190,79 +162,20 @@ def _tree_row(cell: int, salt: int, tree: LocalKDTree) -> dict:
     else:
         lo = np.zeros(d, cdt)
         hi = np.full(d, -1, cdt)
+    # widen bbox to cover the extra log (stats must stay a valid superset)
+    if len(tree.extra_ids):
+        lo = np.minimum(lo, tree.extra_pts.min(axis=0))
+        hi = np.maximum(hi, tree.extra_pts.max(axis=0))
     # xmin..ymax: the two grid dims (fast path for 2-D range ops);
     # bbox: all d dims, the tight phase-2 kNN bound for d > 2
-    return dict(cell=cell, salt=salt, log=False, cnt=tree.n_base,
-                nextra=0, ntomb=0, depth=tree.depth,
+    return dict(cell=cell, salt=salt, cnt=tree.n_live,
+                nextra=len(tree.extra_ids), ntomb=len(tree.tomb_ids),
+                depth=tree.depth,
                 xmin=lo[0].item(), ymin=lo[1].item(),
                 xmax=hi[0].item(), ymax=hi[1].item(),
                 bbox=np.concatenate([lo, hi]),
-                probe=tree.probe_sample(cap=_probe_cap(d, tree.n_base)),
-                ids=tree.ids.tobytes(), blob=tree.to_bytes(ids=False))
-
-
-def _ids(buf) -> np.ndarray:
-    """An `ids` column value as int64 point ids (a zero-copy view)."""
-    return np.frombuffer(buf, np.int64)
-
-
-def _log_row(cell: int, salt: int, base: dict | None,
-             log: LocalKDTree) -> dict:
-    """The log row of `log` (a tree of no points: its extras and
-    tombstones) beside `base` (the base row's point ids, bbox and probe;
-    None for a cell without one). Its bbox is the base's widened by the
-    extras, a superset of the live points. Its probe is the base's
-    sample less its tombstoned points, plus a stride sample of the
-    extras, so it stays a subset of the live points; level() takes both
-    over the base row's."""
-    d = log.pts.shape[1]
-    cdt = log.cdtype
-    n = len(base["ids"]) if base else 0
-    ne, nt = len(log.extra_ids), len(log.tomb_ids)
-    boxes = [np.reshape(base["bbox"], (2, d))] if n else []
-    if ne:
-        boxes.append(np.stack([log.extra_pts.min(axis=0),
-                               log.extra_pts.max(axis=0)]))
-    if boxes:
-        lo = np.min([b[0] for b in boxes], axis=0).astype(cdt)
-        hi = np.max([b[1] for b in boxes], axis=0).astype(cdt)
-    else:
-        lo, hi = np.zeros(d, cdt), np.full(d, -1, cdt)
-    probe = np.reshape(base["probe"], (-1, d)).astype(cdt) if n else \
-        np.empty((0, d), cdt)
-    if nt and len(probe):  # the base sample is ids[::step] (_tree_row)
-        step = max(1, -(-n // _probe_cap(d, n)))
-        probe = probe[~np.isin(base["ids"][::step], log.tomb_ids)]
-    step = max(1, -(-(n + ne) // _probe_cap(d, n + ne - nt)))
-    probe = np.concatenate([probe, log.extra_pts[::step].astype(cdt)])
-    return dict(cell=cell, salt=salt, log=True, cnt=ne - nt,
-                nextra=ne, ntomb=nt, depth=0,
-                xmin=lo[0].item(), ymin=lo[1].item(),
-                xmax=hi[0].item(), ymax=hi[1].item(),
-                bbox=np.concatenate([lo, hi]), probe=probe.ravel(),
-                ids=log.ids.tobytes(), blob=log.to_bytes(ids=False))
-
-
-def _by_salt(rows: dict) -> dict:
-    """{salt: (base row, log row)} positions in a kernel's index rows,
-    None where a salt has no such row."""
-    at: dict = {}
-    for i, (salt, log) in enumerate(zip(rows["salt"], rows["log"])):
-        at.setdefault(int(salt), [None, None])[bool(log)] = i
-    return {s: tuple(p) for s, p in at.items()}
-
-
-def blob_trees(rows: dict):
-    """The trees of a read kernel's index rows ({column: values} of at
-    least TREE_COLS), one per salt in ascending order: the base row's
-    tree overlaid with its log row's extras and tombstones, or the log
-    row's tree alone where the salt has no base row."""
-    at = _by_salt(rows)
-    for salt in sorted(at):
-        b, lg = at[salt]
-        trees = [LocalKDTree.from_bytes(rows["blob"][i], _ids(rows["ids"][i]))
-                 for i in (b, lg) if i is not None]
-        yield trees[0].with_log(trees[-1]) if len(trees) == 2 else trees[0]
+                probe=tree.probe_sample(cap=_probe_cap(d, tree.n_live)),
+                blob=tree.to_bytes())
 
 
 def _build_group(key, t: pa.Table) -> dict:
@@ -284,8 +197,8 @@ def _rows(rows: list) -> dict:
 def _column(col: pa.ChunkedArray, rows: np.ndarray | None = None):
     """The `rows` (default all) of an Arrow column as a kernel reads
     them: fixed-width types as numpy (zero-copy where Arrow allows),
-    binary as memoryview slices of the data buffer, arrays as one
-    numpy view of each row's values."""
+    binary as memoryview slices of the data buffer, arrays as the flat
+    values of the rows."""
     a = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
     if pa.types.is_binary(a.type):
         off = np.frombuffer(a.buffers()[1], np.int32)[
@@ -293,12 +206,8 @@ def _column(col: pa.ChunkedArray, rows: np.ndarray | None = None):
         data = memoryview(a.buffers()[2] or b"")
         return [data[off[i]:off[i + 1]]
                 for i in (range(len(a)) if rows is None else rows)]
-    if pa.types.is_list(a.type):  # one numpy view per row
-        off = np.frombuffer(a.buffers()[1], np.int32)[
-            a.offset:a.offset + len(a) + 1].tolist()
-        v = a.values.to_numpy(zero_copy_only=False)
-        return [v[off[i]:off[i + 1]]
-                for i in (range(len(a)) if rows is None else rows)]
+    if pa.types.is_list(a.type):
+        return (a if rows is None else a.take(rows)).flatten().to_numpy()
     v = a.to_numpy(zero_copy_only=False)
     return v if rows is None else v[rows]
 
@@ -345,8 +254,20 @@ def _table(cols: dict, out: pa.Schema) -> pa.Table:
     table of exactly the declared schema's types."""
     if not cols:
         return out.empty_table()
-    return pa.table([pa.array(cols[f.name], f.type) for f in out],
+    return pa.table([_array(cols[f.name], f.type) for f in out],
                     schema=out)
+
+
+def _array(values: list, typ: pa.DataType) -> pa.Array:
+    """One output column as Arrow: a list column of numpy arrays is
+    built from their concatenation and offsets, not value by value."""
+    if (pa.types.is_list(typ) and values
+            and all(isinstance(v, np.ndarray) for v in values)):
+        off = np.zeros(len(values) + 1, np.int32)
+        np.cumsum([len(v) for v in values], out=off[1:])
+        return pa.ListArray.from_arrays(
+            pa.array(off), pa.array(np.concatenate(values), typ.value_type))
+    return pa.array(values, typ)
 
 
 def _arrow_fn(fn, schema: str):
@@ -387,7 +308,7 @@ def _literal(dtype) -> str:
 
 
 def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
-            schema: str) -> DataFrame:
+            schema: str, partitions: int | None = None) -> DataFrame:
     """fn(key, left, right) per group of `keys`, like
     left.groupby(keys).cogroup(right.groupby(keys)), but as ONE grouped
     map over the union of both sides: one exchange and one Spark job
@@ -396,7 +317,13 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
     Each side is one projection whose rows fill the other side's
     columns with non-NULL SQL literals (an Arrow NULL would make
     to_numpy return float64 for an int64 column); a flag column tells
-    them apart again."""
+    them apart again.
+
+    `partitions` set: the exchange makes exactly that many partitions
+    (AQE leaves an explicit count alone), each sorted by `keys`, and
+    one mapInArrow walks a partition's groups in order, so a Python
+    task pays its Arrow stream and per-call overhead once, not once
+    per group. Groups are never split across partitions."""
     flag = "_right"
     ls, rs = left.schema, right.schema
     lcols, rcols = ls.names, rs.names
@@ -417,8 +344,37 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
         r = _column(t.column(flag))
         return fn(key, side(t, lcols, ~r), side(t, rcols, r))
 
-    return (rows(left, lcols, False).union(rows(right, rcols, True))
-            .groupBy(*keys).applyInArrow(_arrow_fn(kernel, schema), schema))
+    both = rows(left, lcols, False).union(rows(right, rcols, True))
+    if partitions is None:
+        return both.groupBy(*keys).applyInArrow(_arrow_fn(kernel, schema),
+                                                schema)
+    out = to_arrow_schema(_parse_datatype_string(schema))
+
+    def run(batches):
+        _rescan_changed_zips_only()
+        held = None  # the rows of the last group seen, maybe incomplete
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            if held is not None:
+                t = pa.concat_tables([held, t])
+            new = np.zeros(t.num_rows, bool)
+            new[0] = True
+            for c in keys:
+                k = _column(t.column(c))
+                new[1:] |= k[1:] != k[:-1]
+            at = [*np.flatnonzero(new).tolist(), t.num_rows]
+            for lo, hi in zip(at[:-2], at[1:-1]):
+                g = t.slice(lo, hi - lo)
+                yield from _table(kernel(tuple(g.column(c)[0].as_py()
+                                               for c in keys), g),
+                                  out).to_batches()
+            held = t.slice(at[-2])
+        if held is not None:
+            yield from _table(kernel(tuple(held.column(c)[0].as_py()
+                                           for c in keys), held),
+                              out).to_batches()
+    return (both.repartition(partitions, *keys)
+            .sortWithinPartitions(*keys).mapInArrow(run, schema))
 
 
 def observed(obs: Observation) -> dict | None:
@@ -450,68 +406,10 @@ def free_checkpoint(ckpt: DataFrame) -> None:
     ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def _cell_update(cc: list, cdt):
-    """The update kernel: one cell's batch rows (`upd`: pid, coords, op)
-    and index rows (`idx`: its base rows' metadata and ids, trees only
-    where due for a merge, and its log rows) -> the cell's new rows,
-    one per salt: a log row, or a base row where the cell merges."""
-    # a tree of no points: a salt's log before its first batch
-    empty = LocalKDTree.build(np.empty((0, len(cc)), cdt),
-                              np.empty(0, np.int64))
-
-    def apply_updates(key, upd: dict, idx: dict) -> dict:
-        cell = key[0]
-        ins = upd["op"] == 1
-        pts = np.column_stack([upd[c] for c in cc]).astype(cdt)
-        ids = upd["pid"].astype(np.int64, copy=False)
-        at = _by_salt(idx)
-        if not at:
-            if not ins.any():
-                return {}
-            at = {0: (None, None)}  # a brand-new cell
-        salts = sorted(at)
-        ins_salt = (ids % len(salts)) if len(salts) > 1 else \
-            np.zeros(len(ids), np.int64)
-        base_ids = {s: np.empty(0, np.int64) if b is None
-                    else _ids(idx["ids"][b]) for s, (b, _) in at.items()}
-        logs = {s: empty if lg is None
-                else LocalKDTree.from_bytes(idx["blob"][lg],
-                                            _ids(idx["ids"][lg]))
-                for s, (_, lg) in at.items()}
-        # a merge needs every base tree of the cell, and ships them
-        # only for a cell whose log had crossed the ratio
-        merge = all(len(idx["blob"][b]) for b, _ in at.values()
-                    if b is not None) and any(
-            over_ratio(len(lg.extra_ids) + len(lg.tomb_ids),
-                       len(base_ids[s])) for s, lg in logs.items())
-        out = []
-        for j, s in enumerate(salts):
-            b = at[s][0]
-            mi = ins & (ins_salt == j)
-            # deletes are routed by membership (exact, partial-cover):
-            # apply_batch drops the ones a salt does not hold
-            md = ~ins if len(salts) == 1 else ~ins & (
-                np.isin(ids, base_ids[s]) | np.isin(ids, logs[s].extra_ids))
-            tree = logs[s] if not merge or b is None else \
-                LocalKDTree.from_bytes(idx["blob"][b], base_ids[s])
-            t = apply_batch(tree.with_log(logs[s]), base_ids[s],
-                            pts[mi], ids[mi], pts[md], ids[md])
-            if merge:
-                out.append(_tree_row(
-                    cell, s, LocalKDTree.build(*t.live_points())))
-            elif b is not None or len(t.extra_ids):
-                base = None if b is None else dict(
-                    ids=base_ids[s], bbox=idx["bbox"][b],
-                    probe=idx["probe"][b])
-                out.append(_log_row(cell, s, base, t))
-        return _rows(out)
-    return apply_updates
-
-
 class _Frag(NamedTuple):
     """One fragment of an index version's blob table: `frame` (what
     reads scan), the cache()d or localCheckpointed `store` that holds
-    its blocks (None: nothing to free), and the `live` index rows frame
+    its blocks (None: nothing to free), and the `live` blob rows frame
     serves (None: unknown, never dropped)."""
     frame: DataFrame
     store: DataFrame | None
@@ -529,9 +427,7 @@ def _free(store: DataFrame) -> None:
 
 
 def _union(frames) -> DataFrame:
-    """The union of frames whose columns agree by position (fragments
-    of one index, batch parts): cheaper to plan than unionByName."""
-    return functools.reduce(DataFrame.union, frames)
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def _fresh_cache(df: DataFrame) -> DataFrame:
@@ -594,9 +490,6 @@ class SpatialIndex:
         # holds no storage; a build or load manifest gives its blob row
         # count
         self._frags = [_Frag(df, None, self.manifest.get("cells"))]
-        # the sorted cells whose log has crossed INBALANCE_RATIO of its
-        # base (update()); None: not known, _due_cells() aggregates it
-        self._due: list | None = None
 
     # ------------------------------------------------------------------ build
     @classmethod
@@ -645,44 +538,32 @@ class SpatialIndex:
         schema = INDEX_SCHEMA_F64 if fmode else INDEX_SCHEMA
         built = pts.groupBy("cell", "salt").applyInArrow(
             _arrow_fn(_build_group, schema), schema)
-        # checkpointed as built, not re-clustered by cell: reads prune
-        # the blob side to their cells first and shuffle only the
-        # survivors, which AQE coalesces into few Python tasks; a
-        # cell-partitioned layout pins every read's Python stage to all
-        # its partitions. A localCheckpoint, not a cache(): reads scan
-        # its rows without decoding a columnar cache, and no version
-        # keeps the caller's source in its plan (a createDataFrame frame
-        # carries every row, which each read would plan again). One
-        # partition per core: every read and update scans it, one task
-        # per partition
-        built = built.coalesce(spark.sparkContext.defaultParallelism)
-        idx = cls(spark, grid, built, coord_cols=coord_cols)
-        # the hot-cell set rides on the checkpoint: update() never adds
-        # salts, so the set is fixed from here on and query operators
-        # plan their fan-out from this literal. When the fine grid is
-        # the top level, so does every non-empty blob's level input, so
-        # no read aggregates it (as JSON: see update())
+        # cached as built, not re-clustered by cell: reads prune the
+        # blob side to their cells first and shuffle only the survivors,
+        # which AQE coalesces into few Python tasks; a cell-partitioned
+        # cache pins every read's Python stage to all its partitions
+        df = built.cache()
+        idx = cls(spark, grid, df, coord_cols=coord_cols)
+        # materialize, collecting the hot-cell set in the same job:
+        # update() never adds salts, so the set is fixed from here on
+        # and query operators plan their fan-out from this literal.
+        # When the fine grid is the top level, the job also collects
+        # every non-empty blob's level input, so no read aggregates it
         top = idx.super_grid()[0] == 1
         rows = F.collect_list(F.when(F.col("cnt") > 0,
                                      F.struct(*LEVEL_COLS))).alias("rows")
-        obs = Observation()
-        df = built.observe(obs, F.to_json(F.struct(
-            F.count("*").alias("n"),
-            F.collect_set(F.when(_hot_pred(), F.col("cell"))).alias("hot"),
-            *([rows] if top else [])))).localCheckpoint(eager=True)
-        row = obs._jo.getRow()
-        row = json.loads(row.getString(0)) if row.size() else {}
-        idx.df = df
+        row = df.agg(F.count("*").alias("n"),
+                     F.collect_set(F.when(_hot_pred(), F.col("cell")))
+                     .alias("hot"), *([rows] if top else [])).collect()[0]
         idx.manifest = dict(kind="build", n=n, grid_g=grid.g,
-                            grid_dims=grid.dims, cells=row.get("n", 0),
-                            hot_cells=sorted(row.get("hot", [])),
+                            grid_dims=grid.dims, cells=int(row["n"]),
+                            hot_cells=sorted(int(c) for c in row["hot"]),
                             wall_sec=time.time() - t0,
                             coord_cols=list(coord_cols),
                             version=str(uuid.uuid4())[:8])
         idx._frags = [_Frag(df, df, idx.manifest["cells"])]
-        idx._due = []  # a build has no log rows
         if top:
-            idx._level = idx._blob_level(row.get("rows", []))
+            idx._level = idx._blob_level(row["rows"])
         return idx
 
     # ------------------------------------------------------------------ stats
@@ -725,9 +606,8 @@ class SpatialIndex:
             for j in range(2, d):
                 aggs.append(F.min(F.col("bbox")[j]).alias(f"mn{j}"))
                 aggs.append(F.max(F.col("bbox")[d + j]).alias(f"mx{j}"))
-            self._cell_stats = _fresh_cache(_salt_rows(
-                self.df, ["xmin", "ymin", "xmax", "ymax", "bbox"])
-                .groupBy("cell").agg(*aggs))
+            self._cell_stats = _fresh_cache(
+                self.df.filter(F.col("cnt") > 0).groupBy("cell").agg(*aggs))
         return self._cell_stats
 
     def hot_cells(self) -> list:
@@ -764,7 +644,7 @@ class SpatialIndex:
             pool = ("flatten(transform(array_sort(collect_list("
                     "struct(cell, salt, probe))), b -> b.probe))")
             stride = f"GREATEST(1, (size(pool) DIV {d} + {cap - 1}) DIV {cap})"
-            lv = (_salt_rows(self.df, ["bbox", "probe"])
+            lv = (self.df.filter(F.col("cnt") > 0)
                   .groupBy(F.expr(top).alias("cell"))
                   .agg(F.sum("cnt").alias("ccnt"),
                        F.max("salt").alias("maxsalt"),
@@ -871,50 +751,42 @@ class SpatialIndex:
                deletes: DataFrame | None = None) -> "SpatialIndex":
         """Batch insert/delete (I1, D1/D2). Both args: (pid, <coord_cols>).
 
-        The work follows the batch, not the index, as in the reference's
-        batch ops (`batch_insert.hpp:60-191`, `batch_delete.hpp:75-107`):
-        base rows are immutable, and a batch rewrites only the log rows
-        of the cells it touches. It runs as one SQL execution of three
-        Spark jobs: a broadcast semi-join on the batch's cells selects
-        every fragment's rows of those cells, and the base rows among
-        them reach the Python cogroup as metadata and point ids, without
-        their trees. The kernel applies the batch to each (cell, salt)'s
-        log (localtree.apply_batch: deletes are exact against the base
-        ids and the log), writes one log row per salt, and those rows are
-        localCheckpointed as the new version's delta fragment.
+        Physical plan (the reference rebuilds only tagged subtrees,
+        `inner_tree.hpp:78-95`; the distributed analogue is touching only
+        updated cells): one SQL execution. A broadcast semi-join on the
+        batch's cells feeds ONLY touched blobs into the Python cogroup,
+        whose output is checkpointed as the touched-cell DELTA; the
+        batch's distinct cells ride back on an Observation, and the new
+        version is the delta unioned with the inherited fragments, each
+        that fed the cogroup filtered to its untouched cells by one
+        literal `cell IN (...)` — untouched blobs are neither shuffled,
+        deserialized, nor rewritten to storage, so a 0.01% batch pays
+        O(batch), not O(index), in both compute AND materialized bytes.
+        Touched cells go log-structured with threshold rebuild
+        (LocalKDTree.with_updates).
 
-        A cell's log folds into its base, a rebuild, only when before
-        this batch it had crossed INBALANCE_RATIO of the base
-        (`tree_node.hpp:127-131`). The version knows those cells (the
-        previous update read them off its log rows), and only their base
-        rows ship their trees: a merge is the only time a base tree
-        crosses into Python on the write path. A version that does not
-        know them (a load, a snapshot) aggregates them first, one job.
-
-        The new version is the delta unioned with the inherited
-        fragments, each filtered to drop the log rows of the batch's
-        cells and the base rows of the cells it merged. Each fragment
-        counts the rows it still serves: this update subtracts the
-        superseded (cell, salt, log) keys an Observation per fragment
-        saw it feed into the cogroup (a set: a re-run task cannot
-        subtract twice). A fragment at 0, an empty delta included, is
-        left out; one of unknown count never is. So a chain of batches
-        that touch every cell holds the base fragment and the latest
-        delta. An update that would leave more than COMPACT_EVERY
-        fragments checkpoints their union as one.
+        Superseded fragments leave the union. Each fragment counts the
+        blob rows it still serves; the delta rewrites every blob of a
+        touched cell, so this update subtracts the (cell, salt) keys an
+        Observation per fragment saw it feed into the cogroup (a set: a
+        re-run task cannot subtract twice). A fragment at 0, an empty
+        delta included, is left out; one of unknown count never is. An
+        update that would leave more than COMPACT_EVERY fragments
+        checkpoints their union as one.
 
         The routing level travels with the delta, the way the reference
         keeps subtree sizes current through a batch, when the parent
         holds it on the driver and its top level is the fine grid
-        (S == 1): the delta's Observation collects each rewritten (cell,
-        salt)'s live count, bbox and probe, and the new version's
-        level() is the parent's rows of the untouched cells plus those,
-        aggregated per cell: no Spark job here, and no fragment scan at
-        the next read. Any other parent leaves the new version to
-        aggregate its own on first read.
+        (S == 1): the delta's Observation collects each rewritten blob's
+        (cell, salt, cnt, bbox, probe), and the new version's level() is
+        the parent's rows of the untouched cells plus those, aggregated
+        per cell: no Spark job here, and no fragment scan at the next
+        read. Any other parent leaves the new version to aggregate its
+        own on first read.
 
         Dimension-generic: works for any d = len(coord_cols) >= 2, same
-        as the reference's dim-templated batch ops.
+        as the reference's dim-templated batch ops (`batch_insert.hpp:
+        60-191`, `batch_delete.hpp:75-107`).
 
         Same-batch semantics: DELETES APPLY BEFORE INSERTS within one
         call. Deletes are routed by membership against the PRE-batch
@@ -925,79 +797,111 @@ class SpatialIndex:
         batch is a caller error (ids are unique in the data model).
         """
         t0 = time.time()
+        grid = self.grid
         cc = list(self.coord_cols)
         cdt = np.float64 if self.float_coords else np.int64
         schema = INDEX_SCHEMA_F64 if self.float_coords else INDEX_SCHEMA
         cell_sql = self.grid.cell_sql(cc, self.float_coords)
-        parts = [df.selectExpr("pid", *cc, f"{cell_sql} AS cell",
-                               f"CAST({op} AS int) AS op")
+        parts = [df.selectExpr("pid", *cc, f"CAST({op} AS int) AS op")
                  for df, op in ((inserts, 1), (deletes, 0)) if df is not None]
         if not parts:
             return self
-        ups = _union(parts)
+        ups = _union(parts).selectExpr("*", f"{cell_sql} AS cell")
 
-        # the rows of the batch's cells, base trees left out but where
-        # the cell is due for a merge: a broadcast semi-join per
+        def apply_updates(key, upd: dict, idx: dict) -> dict:
+            cell = key[0]
+            ins = upd["op"] == 1
+            del_ = upd["op"] == 0
+            pts = np.column_stack([upd[c] for c in cc]).astype(cdt)
+            ins_pts, del_pts = pts[ins], pts[del_]
+            ids = upd["pid"].astype(np.int64, copy=False)
+            ins_ids, del_ids = ids[ins], ids[del_]
+            if len(idx["salt"]) == 0:
+                # brand-new cell: build from inserts alone
+                if not len(ins_ids):
+                    return {}
+                return _rows([_tree_row(
+                    cell, 0, LocalKDTree.build(ins_pts, ins_ids))])
+            nsalt = len(idx["salt"])
+            ins_salt = (ins_ids % nsalt) if nsalt > 1 else np.zeros(
+                len(ins_ids), np.int64)
+            out = []
+            for j, (salt, blob) in enumerate(zip(idx["salt"], idx["blob"])):
+                tree = LocalKDTree.from_bytes(blob)
+                m = ins_salt == j
+                # deletes are routed by membership (exact, partial-cover);
+                # an unsalted cell's one blob takes them all
+                own = (np.isin(del_ids, tree.ids)
+                       | np.isin(del_ids, tree.extra_ids)) if nsalt > 1 \
+                    else slice(None)
+                t2 = tree.with_updates(ins_pts[m], ins_ids[m],
+                                       del_pts[own], del_ids[own])
+                out.append(_tree_row(cell, int(salt), t2))
+            return _rows(out)
+
+        # the blobs of the batch's cells: a broadcast semi-join per
         # fragment (one broadcast, reused), each fragment observing the
-        # keys it fed
-        due = self._due_cells()
-        # the semi-join keeps only `cell` of the broadcast side
-        cells = F.broadcast(ups)
-        blob = F.when(F.col("log") | in_list("cell", due), F.col("blob")) \
-            .otherwise(F.expr("X''"))
+        # (cell, salt) keys it fed, and the batch observing its cells,
+        # so the update is one SQL execution with no driver round trip
+        # before it. The broadcast holds a cell per batch row: O(batch)
+        cells = F.broadcast(ups.select("cell"))
         fed = [Observation() for _ in self._frags]  # single-use: one each
-        feed = _union(
-            f.frame.join(cells, "cell", "semi")
-            .observe(o, F.collect_set(F.struct("cell", "salt", "log",
-                                               "cnt")).alias("keys"))
-            for f, o in zip(self._frags, fed)).select(
-            "cell", "salt", "log", "bbox", "probe", "ids", blob.alias("blob"))
         batch = Observation()
-        new_rows = cogroup(
-            ups.observe(batch, F.collect_set("cell").alias("cells")), feed,
-            ["cell"], _cell_update(cc, cdt), schema)
-        # the delta is checkpointed: localCheckpoint truncates its lineage
-        # (which references the parent), so chained updates grow the plan
-        # by one filter per fragment — linear, not exponential. Each new
-        # row's key, count and log size, with its level input when the
-        # level is carried, ride on the checkpoint
+        new_blobs = cogroup(
+            ups.observe(batch, F.expr("collect_set(cell) AS cells")),
+            _union(f.frame.join(cells, "cell", "semi")
+                   .select("cell", "salt", "blob")
+                   .observe(o, F.expr("collect_set(struct(cell, salt)) "
+                                      "AS keys"))
+                   for f, o in zip(self._frags, fed)),
+            ["cell"], apply_updates, schema,
+            partitions=self.spark.sparkContext.defaultParallelism)
+        # DELTA versioning: checkpoint ONLY the rebuilt touched-cell
+        # blobs — O(batch) materialization, never O(index). The new
+        # version's df is the inherited fragments each filtered by the
+        # touched-cell predicate (untouched blobs are neither shuffled,
+        # deserialized, NOR rewritten to storage), unioned with the
+        # delta. localCheckpoint truncates the delta's lineage (which
+        # references the parent), so chained updates grow the plan by
+        # one filter per fragment — linear, not exponential. The
+        # rewritten blobs' keys, and their level rows when the level is
+        # carried, ride on the checkpoint.
         carry = self._level is not None and self.super_grid()[0] == 1
-        cols = ["cell", "salt", "log", "cnt", "nextra", "ntomb",
-                *(["bbox", "probe"] if carry else [])]
         obs = Observation()
         with job_description(self.spark, "update:rewrite"):
-            delta = new_rows.observe(obs, F.to_json(F.collect_list(
-                F.struct(*cols))).alias("rows")).localCheckpoint(eager=True)
+            cols = ", ".join(LEVEL_COLS if carry else ["cell", "salt"])
+            delta = new_blobs.observe(obs, F.expr(
+                f"to_json(collect_list(struct({cols}))) AS rows")
+            ).localCheckpoint(eager=True)
         # read as a Java string: Observation.get's pickled row crosses
         # py4j as bytes that it decodes one at a time in Python, about
         # 0.2 s per MB of probe samples
         rows = obs._jo.getRow()
         rows = json.loads(rows.getString(0)) if rows.size() else []
+        # the touched-cell set (O(batch), never O(index)): every
+        # fragment filter below, in this version and its descendants
+        # until compaction, is a literal predicate on it — no broadcast
+        # per read, and no lineage back to the caller's input frames (a
+        # streaming caller deletes evicted slice files)
         got = observed(batch)
         touched = sorted(int(c) for c in got["cells"]) if got else []
-        merged = {r["cell"] for r in rows if not r["log"]}
-        # what the delta supersedes: the batch cells' log rows, and the
-        # base rows of the cells it merged
-        gone = in_list("cell", touched) & (F.col("log")
-                                           | in_list("cell", merged))
-        fed = [(observed(o) or {"keys": []})["keys"] for o in fed]
-        # each new row's live count: a log row's counts over its base
-        nbase = {(k["cell"], k["salt"]): k["cnt"]
-                 for keys in fed for k in keys if not k["log"]}
-        for r in rows:
-            r["live"] = r["cnt"] + (nbase.get((r["cell"], r["salt"]), 0)
-                                    if r["log"] else 0)
+        # the fragment filter names `salt` (never negative) next to
+        # `cell`: a predicate on `cell` alone would be inferred through
+        # the join key onto the small side of every semi-join a read
+        # pushes into the fragment union, so one broadcast per read
+        # would become one per fragment
+        untouched = ~in_list("cell", touched) | (F.col("salt") < 0)
         frags = []
-        for f, keys in zip(self._frags, fed):
-            # every row of the batch's cells was fed, so a fragment that
-            # fed none of the superseded rows holds none: no filter
-            lost = sum(1 for k in keys if k["log"] or k["cell"] in merged)
+        for f, o in zip(self._frags, fed):
+            keys = (observed(o) or {"keys": ()})["keys"]
             if f.live is not None:
-                f = f._replace(live=f.live - lost)
+                f = f._replace(live=f.live - len(keys))
+            # every blob of a touched cell was fed, so a fragment that
+            # fed none holds none: it keeps its frame unfiltered
             if f.live != 0:
-                frags.append(f._replace(frame=f.frame.filter(~gone))
-                             if lost else f)
-        nkeys = len({(r["cell"], r["salt"], r["log"]) for r in rows})
+                frags.append(f._replace(frame=f.frame.filter(untouched))
+                             if keys else f)
+        nkeys = len({(r["cell"], r["salt"]) for r in rows})
         if nkeys or not frags:
             frags.append(_Frag(delta, delta, nkeys))
         else:  # an empty delta: nothing reads it
@@ -1021,42 +925,20 @@ class SpatialIndex:
                         hot_cells=self.hot_cells(),
                         wall_sec=time.time() - t0,
                         coord_cols=cc, version=str(uuid.uuid4())[:8])
-        new = SpatialIndex(self.spark, self.grid,
-                           _union(f.frame for f in frags), manifest,
-                           coord_cols=self.coord_cols)
+        new = SpatialIndex(self.spark, grid, _union(f.frame for f in frags),
+                           manifest, coord_cols=self.coord_cols)
         new._frags = frags
-        new._due = sorted(set(due).difference(touched) | {
-            r["cell"] for r in rows if r["log"] and over_ratio(
-                r["nextra"] + r["ntomb"], r["live"] - r["cnt"])})
         if carry:
             # the parent's rows of untouched cells plus the delta's (a
             # touched cell whose blobs all emptied drops out): driver
             # arrays, with nothing to cache or free and no lineage to
             # any fragment
-            new._level = self._level.patched(touched, new._blob_level(
-                [dict(r, cnt=r["live"]) for r in rows]))
-        # the sorted cells of the batch let an incremental snapshot
-        # commit (catalog.SnapshotStore) rewrite only the buckets this
-        # update changed
+            new._level = self._level.patched(touched, new._blob_level(rows))
+        # the sorted touched-cell ids let an incremental snapshot commit
+        # (catalog.SnapshotStore) rewrite only the buckets this update
+        # changed
         new.touched_cells = touched
         return new
-
-    def _due_cells(self) -> list:
-        """The sorted cells whose log has crossed INBALANCE_RATIO of its
-        base, which the next update() merges. A build or an update hands
-        them over; any other version aggregates them here once."""
-        if self._due is None:
-            churn = F.when(F.col("log"), F.col("nextra") + F.col("ntomb"))
-            with job_description(self.spark, "update:due"):
-                rows = (self.df.groupBy("cell", "salt")
-                        .agg(F.sum(churn).alias("churn"),
-                             F.sum(F.when(~F.col("log"),
-                                          F.expr("length(ids) DIV 8")))
-                             .alias("n"))
-                        .filter(F.col("churn") > 0).collect())
-            self._due = sorted({int(r["cell"]) for r in rows
-                                if over_ratio(r["churn"], r["n"] or 0)})
-        return self._due
 
     def cache(self) -> "SpatialIndex":
         """Cache this version's blob table as its one fragment, which
@@ -1078,7 +960,7 @@ class SpatialIndex:
         replaced this one) does not still read them — a delta-update
         child shares its parent's live fragments, so freeing those would
         sever the child's truncated lineage. The fragments the child
-        dropped (every row superseded) are freed, and after a compaction
+        dropped (every row rewritten) are freed, and after a compaction
         the child inherits nothing, so all of this version's are."""
         pyramid = [s for _, _, s in (self._pyramid or [])]
         for st in (self._cell_stats, *pyramid):

@@ -32,12 +32,10 @@ Coordinates are int64 (the reference's default `long`, README.md:125) so
 all comparisons are exact — no epsilon comparator needed
 (`include/cpdd/comparator.h`).
 
-Log-structured updates: a tree also carries `extra` (inserted, not yet
-merged into the tree) and `tomb` (deleted ids + coords). Queries consult
-all three; a rebuild folds them in once the imbalance threshold
-(INBALANCE_RATIO=30, `utility/tree_node.hpp:118-131`) is crossed. The
-index stores the log apart from the tree (index.py: a log row beside an
-immutable base row), and apply_batch is the one place its rules live.
+Log-structured updates: a cell blob also carries `extra` (inserted, not
+yet merged into the tree) and `tomb` (deleted ids + coords). Queries
+consult all three; a rebuild folds them in when the imbalance threshold
+(INBALANCE_RATIO=30, `utility/tree_node.hpp:118-131`) is crossed.
 """
 
 from __future__ import annotations
@@ -76,41 +74,6 @@ TIGHTEN_MIN = 32768
 # ~30 us/block all-in, NOT overhead-bound, and padding pays more in
 # gather/partition width than the loop costs.
 DENSE_SCAN_DIM = 6
-
-
-def over_ratio(churn, n_base) -> bool:
-    """Whether a log of `churn` extras + tombstones over a base of
-    `n_base` points has crossed INBALANCE_RATIO, the rebuild threshold."""
-    return churn * 100 > INBALANCE_RATIO * max(n_base, 1)
-
-
-def apply_batch(log: "LocalKDTree", base_ids: np.ndarray, ins_pts=None,
-                ins_ids=None, del_pts=None, del_ids=None) -> "LocalKDTree":
-    """`log` (a tree whose extra/tomb fields are a log over base points
-    `base_ids`) after one batch, as a new tree sharing log's base
-    arrays. Deletes apply before inserts. A delete of a logged insert
-    nets it out of the extras; a delete of a base pid not yet
-    tombstoned becomes a tombstone; any other delete (an absent or
-    already-tombstoned pid) changes nothing (partial-cover semantics,
-    batch_delete.hpp:95-107). Inserts append to the extras."""
-    t = log.with_log(log)
-    cdt = t.cdtype
-    if del_ids is not None and len(del_ids):
-        del_ids = np.asarray(del_ids, np.int64)
-        del_pts = np.asarray(del_pts, cdt).reshape(len(del_ids), -1)
-        in_extra = np.isin(del_ids, t.extra_ids)
-        if in_extra.any():
-            kill = np.isin(t.extra_ids, del_ids[in_extra])
-            t.extra_pts, t.extra_ids = t.extra_pts[~kill], t.extra_ids[~kill]
-        rest, rest_pts = del_ids[~in_extra], del_pts[~in_extra]
-        present = np.isin(rest, base_ids) & ~np.isin(rest, t.tomb_ids)
-        t.tomb_pts = np.concatenate([t.tomb_pts, rest_pts[present]])
-        t.tomb_ids = np.concatenate([t.tomb_ids, rest[present]])
-    if ins_ids is not None and len(ins_ids):
-        t.extra_pts = np.concatenate([t.extra_pts, np.asarray(ins_pts, cdt)])
-        t.extra_ids = np.concatenate([t.extra_ids,
-                                      np.asarray(ins_ids, np.int64)])
-    return t
 
 
 def _alive_mask(tomb_sorted: np.ndarray, ids: np.ndarray) -> np.ndarray:
@@ -291,15 +254,11 @@ class LocalKDTree:
     # raw header+buffer serialization: ~3x faster than np.savez (which
     # zips with a per-array CRC32) — blob encode/decode is on the hot
     # path of every build and every query cogroup
-    def to_bytes(self, ids: bool = True) -> bytes:
-        """Every field as one buffer; ids=False leaves `ids` out, for a
-        caller that stores them beside the blob (from_bytes' `ids`)."""
+    def to_bytes(self) -> bytes:
         import json
         meta = []
         bufs = []
         for f in self._FIELDS:
-            if f == "ids" and not ids:
-                continue
             a = np.ascontiguousarray(getattr(self, f))
             meta.append([f, a.dtype.str, list(a.shape)])
             bufs.append(a.tobytes())
@@ -307,11 +266,10 @@ class LocalKDTree:
         return len(h).to_bytes(4, "little") + h + b"".join(bufs)
 
     @classmethod
-    def from_bytes(cls, blob, ids: np.ndarray | None = None) -> "LocalKDTree":
+    def from_bytes(cls, blob) -> "LocalKDTree":
         """The tree to_bytes wrote, from any buffer (bytes, or a
         memoryview slice of an Arrow data buffer); the arrays are
-        zero-copy views of it. `ids` supplies the point ids of a blob
-        written without them."""
+        zero-copy views of it."""
         import json
         hl = int.from_bytes(blob[:4], "little")
         meta = json.loads(bytes(blob[4:4 + hl]))
@@ -326,17 +284,7 @@ class LocalKDTree:
             kw[f] = np.frombuffer(
                 mv[off:off + nbytes], dtype=dt).reshape(shape)
             off += nbytes
-        if ids is not None:
-            kw["ids"] = np.asarray(ids, np.int64)
         return cls(**kw)
-
-    def with_log(self, log: "LocalKDTree") -> "LocalKDTree":
-        """This tree's points overlaid with `log`'s extras and
-        tombstones (the arrays are shared, not copied)."""
-        return LocalKDTree(self.pts, self.ids, self.split_dim,
-                           self.split_val, self.left, self.right,
-                           self.start, self.end, self.nbox, log.extra_pts,
-                           log.extra_ids, log.tomb_pts, log.tomb_ids)
 
     # ---------------------------------------------------------------- helpers
 
@@ -350,23 +298,22 @@ class LocalKDTree:
 
     @property
     def depth(self) -> int:
-        # max leaf depth, iterative
+        # max leaf depth, one level of nodes at a time from the root
+        # (node 0): the deepest level holds leaves only
         if len(self.split_dim) == 0:
             return 0
-        depths = np.zeros(len(self.split_dim), np.int32)
-        best = 0
-        for i in range(len(self.split_dim)):
-            if self.left[i] >= 0:
-                depths[self.left[i]] = depths[i] + 1
-                depths[self.right[i]] = depths[i] + 1
-            else:
-                best = max(best, int(depths[i]))
-        return best
+        level, nodes = 0, np.zeros(1, np.int64)
+        while True:
+            inner = nodes[self.left[nodes] >= 0]
+            if not len(inner):
+                return level
+            nodes = np.concatenate([self.left[inner], self.right[inner]])
+            level += 1
 
     def live_points(self):
         """Materialize (pts, ids) net of tombstones + extras (for rebuild).
         Tombstones name base points only: an extra whose pid is
-        tombstoned (a re-insert) is live."""
+        tombstoned (a re-insert of a deleted pid) is live."""
         pts, ids = self.pts, self.ids
         if len(self.tomb_ids):
             alive = ~np.isin(ids, self.tomb_ids)
@@ -393,16 +340,45 @@ class LocalKDTree:
         return pts[::step].astype(self.cdtype).ravel()
 
     def needs_rebuild(self) -> bool:
-        return over_ratio(len(self.extra_ids) + len(self.tomb_ids),
-                          self.n_base)
+        n = max(self.n_base, 1)
+        churn = len(self.extra_ids) + len(self.tomb_ids)
+        return churn * 100 > INBALANCE_RATIO * n
 
     def with_updates(self, ins_pts=None, ins_ids=None, del_pts=None,
                      del_ids=None) -> "LocalKDTree":
-        """Log-structured apply (apply_batch); rebuilds when the
-        imbalance threshold is crossed."""
-        t = apply_batch(self, self.ids, ins_pts, ins_ids, del_pts, del_ids)
+        """Log-structured apply; rebuilds when imbalance threshold crossed.
+        Deletes apply before inserts, so a batch that deletes and inserts
+        one pid replaces its point. A delete of a logged insert nets it
+        out of the extras; a delete of a base pid not yet tombstoned
+        becomes a tombstone; any other delete (an absent or an
+        already-tombstoned pid) changes nothing (partial-cover
+        semantics, batch_delete.hpp:95-107). Inserts append to the
+        extras."""
+        t = LocalKDTree(self.pts, self.ids, self.split_dim, self.split_val,
+                        self.left, self.right, self.start, self.end, self.nbox,
+                        self.extra_pts, self.extra_ids, self.tomb_pts,
+                        self.tomb_ids)
+        cdt = t.cdtype
+        if del_ids is not None and len(del_ids):
+            del_ids = np.asarray(del_ids, np.int64)
+            del_pts = np.asarray(del_pts, cdt)
+            in_extra = np.isin(del_ids, t.extra_ids)
+            if in_extra.any():
+                kill = np.isin(t.extra_ids, del_ids[in_extra])
+                t.extra_pts, t.extra_ids = t.extra_pts[~kill], t.extra_ids[~kill]
+            rest = del_ids[~in_extra]
+            rest_pts = del_pts[~in_extra]
+            # ignore ids already tombstoned (overlapping delete batches,
+            # e.g. the H2 ratio sweep's nested modulus filters)
+            present = np.isin(rest, t.ids) & ~np.isin(rest, t.tomb_ids)
+            t.tomb_pts = np.concatenate([t.tomb_pts, rest_pts[present]])
+            t.tomb_ids = np.concatenate([t.tomb_ids, rest[present]])
+        if ins_ids is not None and len(ins_ids):
+            t.extra_pts = np.concatenate([t.extra_pts, np.asarray(ins_pts, cdt)])
+            t.extra_ids = np.concatenate([t.extra_ids, np.asarray(ins_ids, np.int64)])
         if t.needs_rebuild():
-            return LocalKDTree.build(*t.live_points())
+            pts, ids = t.live_points()
+            return LocalKDTree.build(pts, ids)
         return t
 
     # -------------------------------------------------------------------- kNN

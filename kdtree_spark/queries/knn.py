@@ -54,19 +54,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..grid import block_cells
-from ..index import Level, SpatialIndex, bbox_cols, blob_trees, map_arrow
+from ..index import Level, SpatialIndex, bbox_cols, map_arrow
 from ..localtree import LocalKDTree
 from .skew import hot_blobs, pruned_blobs, scan_blobs, split_by_salt
 
 
-def _group_knn(qpts: np.ndarray, trees, k: int, ub: np.ndarray | None,
+def _group_knn(qpts: np.ndarray, blobs, k: int, ub: np.ndarray | None,
                stats: dict | None = None, tighten: bool | None = None):
-    """Best-k over the trees of one cell group (index.blob_trees);
-    returns (dist2, ids)."""
+    """Best-k over every blob of one cell group; returns (dist2, ids)."""
     m = qpts.shape[0]
     best_d = best_i = None
     bound = None if ub is None else np.asarray(ub, np.float64).copy()
-    for tree in trees:
+    for blob in blobs:
+        tree = LocalKDTree.from_bytes(blob)
         d, i = tree.knn(qpts, k, ub=bound, stats=stats, tighten=tighten)
         if best_d is None:
             # knn() rows are (dist², id)-sorted with (inf, -1) padding
@@ -289,7 +289,7 @@ def _cell_knn(cc: list, cdt, k: int, cold: bool):
         if len(q["qid"]) == 0 or len(i["blob"]) == 0:
             return {}
         qpts = np.column_stack([q[c] for c in cc]).astype(cdt, copy=False)
-        d, ii = _group_knn(qpts, blob_trees(i), k, q["ub"],
+        d, ii = _group_knn(qpts, i["blob"], k, q["ub"],
                            tighten=True if cold else None)
         qid = np.repeat(q["qid"], k)
         dd, ii = d.ravel(), ii.ravel()
@@ -364,7 +364,7 @@ def knn_scan_stats(index: SpatialIndex, queries: DataFrame, k: int
                 return {}
             st: dict = {}
             _group_knn(np.column_stack([q[c] for c in cc]).astype(cdt),
-                       blob_trees(i), k, q["ub"], stats=st,
+                       i["blob"], k, q["ub"], stats=st,
                        tighten=True if cold else None)
             return {"qid": q["qid"], "scanned": st["scanned"],
                     "leaves": st["leaves"]}

@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import SpatialIndex, bbox_cols, blob_trees
+from ..index import SpatialIndex, bbox_cols
+from ..localtree import LocalKDTree
 from .skew import scan_blobs
 
 
@@ -45,7 +46,7 @@ def _box_cols(d: int) -> tuple[list, list]:
 def _counts(index: SpatialIndex, counts: DataFrame, pairs: DataFrame,
             count) -> DataFrame:
     """(id, cnt) per shape: the contained counts plus the blob-scan
-    partials of the boundary pairs (count(tree, shapes) -> one tree's
+    partials of the boundary pairs (count(tree, shapes) -> one blob's
     per-shape counts), summed by one groupBy."""
     key = counts.columns[0]
 
@@ -53,8 +54,8 @@ def _counts(index: SpatialIndex, counts: DataFrame, pairs: DataFrame,
         if len(b[key]) == 0 or len(i["blob"]) == 0:
             return {}
         part = np.zeros(len(b[key]), np.int64)
-        for tree in blob_trees(i):
-            part += count(tree, b)
+        for blob in i["blob"]:
+            part += count(LocalKDTree.from_bytes(blob), b)
         return {key: b[key], "cnt": part}
 
     return (scan_blobs(index, pairs, scan, scan, f"{key} long, cnt long")
@@ -209,8 +210,8 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
             return {}
         qboxes = np.column_stack([b[c] for c in blo_c + bhi_c])
         outs = []
-        for tree in blob_trees(i):
-            bi, pp, ii = tree.range_report(qboxes)
+        for blob in i["blob"]:
+            bi, pp, ii = LocalKDTree.from_bytes(blob).range_report(qboxes)
             if len(ii):
                 outs.append((b["box_id"][bi], ii, pp))
         if not outs:

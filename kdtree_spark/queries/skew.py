@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import (FANOUT_MIN_BLOBS, TREE_COLS, SpatialIndex,  # noqa: F401
-                     cogroup, in_list)
+from ..index import (FANOUT_MIN_BLOBS, SpatialIndex, cogroup,  # noqa: F401
+                     in_list)
 
 
 def hot_blobs(index: SpatialIndex) -> DataFrame:
@@ -58,9 +58,7 @@ def scan_blobs(index: SpatialIndex, cand: DataFrame, cold_fn, hot_fn,
     (cell, salt) blob with hot_fn. Each blob side is first pruned to
     its side's cells (pruned_blobs), so only those cells' blobs are
     serialized through the Arrow hop — bytes scale with the query set,
-    not with index size. Both kernels receive a group's index rows
-    (TREE_COLS, read with index.blob_trees: base and log rows pair up
-    by salt); hot_fn sees one (cell, salt) per group, so its partial
+    not with index size. hot_fn sees one blob per group, so its partial
     results must compose in the caller's merge (counts sum, reported
     rows union, kNN top-k lists merge). `cand` must carry `maxsalt`,
     and its lineage must not reach index.df (or the semi-join would
@@ -68,13 +66,13 @@ def scan_blobs(index: SpatialIndex, cand: DataFrame, cold_fn, hot_fn,
     frames (index.cell_stats): the reads' candidates come from a
     kernel over the queries or from driver arrays."""
     cold, hot = split_by_salt(index, cand)
-    out = cogroup(cold, pruned_blobs(index.df, cold).select("cell",
-                                                            *TREE_COLS),
+    out = cogroup(cold, pruned_blobs(index.df, cold).select("cell", "blob"),
                   ["cell"], cold_fn, schema)
     if hot is None:
         return out
     return out.unionByName(cogroup(
-        hot, pruned_blobs(hot_blobs(index), hot).select("cell", *TREE_COLS),
+        hot, pruned_blobs(hot_blobs(index), hot).select("cell", "salt",
+                                                        "blob"),
         ["cell", "salt"], hot_fn, schema))
 
 

@@ -97,10 +97,6 @@ def host_defaults() -> tuple[int, str]:
                            f"{max(1, phys // 2 // 2 ** 30)}g"))
 
 
-_LOCAL_RELATION = ("org.apache.spark.sql.catalyst.optimizer."
-                   "ConvertToLocalRelation")
-
-
 def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     host_cpus, driver_mem = host_defaults()
@@ -117,15 +113,6 @@ def get_spark(app: str = "kdtree_spark", cpus: int | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # the engine's inputs are often createDataFrame frames (query
-        # and update batches): this rule evaluates each projection over
-        # such a frame row by row, interpreted, in the optimizer and
-        # again in every adaptive re-plan; it was 55 of the 95 ms an
-        # update of a 12k-row batch spent optimizing its plan. The
-        # projection runs in the job instead
-        .config("spark.sql.optimizer.excludedRules", _LOCAL_RELATION)
-        .config("spark.sql.adaptive.optimizer.excludedRules",
-                _LOCAL_RELATION)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", driver_mem)

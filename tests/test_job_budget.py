@@ -5,8 +5,8 @@ with the fragments SpatialIndex.update layers over an index: the build
 and every update hand the next version its driver-held routing level,
 so no read runs a job to rebuild it; reads leave nothing in storage; a
 partial update runs a fixed number of jobs, and a chain of whole-index
-updates stays at the base fragment and one log fragment;
-connected_components and dbscan stay within a fixed budget. Answers are checked against brute force every
+updates stays at one fragment; connected_components and dbscan stay
+within a fixed budget. Answers are checked against brute force every
 time, so a plan that saves jobs by dropping work fails here too."""
 
 from __future__ import annotations
@@ -157,12 +157,11 @@ def test_knn_and_range_job_budget_flat_over_fragments(spark):
 
 def test_whole_index_updates_keep_one_fragment(spark):
     """update-mix's shape: every batch touches every cell, so the delta
-    rewrites every log row and the older log fragment leaves the union,
-    while no cell's log grows past the merge threshold, so the build's
-    base fragment stays. The chain stays at two fragments with no
-    compaction, the storage it holds stays flat while each superseded
-    version is unpersisted, and the reads after each update run within
-    the job budgets."""
+    rewrites every inherited blob row and the older fragments leave the
+    union. The chain stays at one fragment with no compaction, the
+    storage it holds stays flat while each superseded version is
+    unpersisted, and the reads after each update run within the job
+    budgets."""
     rng = np.random.default_rng(37)
     n, k, grid = 2000, 5, Grid(8)
     live = {int(i): p for i, p in enumerate(
@@ -197,11 +196,11 @@ def test_whole_index_updates_keep_one_fragment(spark):
             del live[int(i)]
         live.update({int(i): p for i, p in zip(ipid, centres)})
         assert len(idx.touched_cells) == grid.g ** 2
-        assert idx.manifest["frags"] == 2, idx.manifest
+        assert idx.manifest["frags"] == 1, idx.manifest
         assert not idx.manifest["compacted"]
         held.append(len(owned & _persisted(spark)))
         _within_budget(_read(spark, idx, live, q, boxes, k))
-    assert held == [2] * len(held), held
+    assert held == [1] * len(held), held
 
 
 def test_updates_without_reads_stay_bounded(spark):

@@ -174,24 +174,6 @@ def test_save_load_roundtrip(built, spark, tmp_path):
     assert a["cnt"].tolist() == b["cnt"].tolist()
 
 
-def test_build_drops_source_lineage(spark):
-    """A build from a createDataFrame frame leaves no LocalRelation (the
-    caller's rows) in its version's plan, nor in an updated version's,
-    so no read plans the source again; answers stay exact."""
-    rng = np.random.default_rng(17)
-    pts = rng.integers(0, COORD_LIMIT, size=(3000, 2))
-    idx = SpatialIndex.build(spark, _frame(spark, np.arange(3000), pts),
-                             grid=Grid(4))
-    new = idx.update(inserts=_frame(spark, [10**6], pts[:1] + 1))
-    for v in (idx, new):
-        assert "LocalRelation" not in \
-            v.df._jdf.queryExecution().analyzed().toString()
-    got = knn_join(new, spark.createDataFrame(
-        [(0, int(pts[0, 0]), int(pts[0, 1]))], "qid long, x long, y long"),
-        2).toPandas().sort_values("rank")
-    assert got["nid"].tolist() == [0, 10**6]
-
-
 def test_knn_d3_vs_bruteforce(spark, sf_dir):
     """d=3: per-cell trees split on all dims; xy cell pruning stays exact."""
     import numpy as np
@@ -263,12 +245,11 @@ def _frame(spark, pid, p):
 def test_update_chain_drops_superseded_fragments(spark, monkeypatch):
     """A chain of partial and whole-index updates over a salted hot
     cell: a brand-new cell, a delete-only batch that misses (an empty
-    delta), a whole-index batch that supersedes every older log
-    fragment, a compaction, and a batch that supersedes exactly one
-    delta while merging a cell. Each superseded version is unpersisted
-    at once. After every step no (cell, salt, log) key is served twice,
-    the live count validates, and kNN and range_count match brute
-    force."""
+    delta), a whole-index batch that supersedes every older fragment, a
+    compaction, and a batch that supersedes exactly one delta. Each
+    superseded version is unpersisted at once. After every step no
+    (cell, salt) key is served twice, the live count validates, and kNN
+    and range_count match brute force."""
     monkeypatch.setattr(index_mod, "COMPACT_EVERY", 3)
     g = Grid(8)
     cw = g.cw
@@ -291,7 +272,6 @@ def test_update_chain_drops_superseded_fragments(spark, monkeypatch):
     idx = SpatialIndex.build(spark, _frame(spark, list(live), pts),
                              grid=g, hot_cell_cap=48)
     assert idx.hot_cells() == [0]
-    built = idx._frags[0].store
     q = np.concatenate([rng.integers(0, COORD_LIMIT, size=(12, 2)),
                         at(0, 0, 4), at(7, 7, 2)])
     boxes = [(0, 0, 0, COORD_LIMIT - 1, COORD_LIMIT - 1),
@@ -322,7 +302,7 @@ def test_update_chain_drops_superseded_fragments(spark, monkeypatch):
         for i in dels:
             live.pop(i, None)
         live.update(zip(ipid.tolist(), map(tuple, ins)))
-        dup = (idx.df.groupBy("cell", "salt", "log").count()
+        dup = (idx.df.groupBy("cell", "salt").count()
                .filter("count > 1").count())
         assert dup == 0, dup
         assert idx.validate(expected_n=len(live))["total"] == len(live)
@@ -342,47 +322,30 @@ def test_update_chain_drops_superseded_fragments(spark, monkeypatch):
     # a delete-only batch that hits no point: its delta is empty
     assert step(miss=at(7, 6, 3)) == (3, False)
     assert idx.touched_cells == [62]
-    # every cell: every older log fragment is superseded, and the
-    # brand-new cell's log merges into a base row; the build's base
-    # fragment stays
-    assert step(centres, some(30, lambda c: True)) == (2, False)
-    assert idx._frags[0].store is built
+    # every cell: every older fragment is superseded
+    assert step(centres, some(30, lambda c: True)) == (1, False)
     # one column at a time: the fourth fragment compacts
-    assert step(at(1, 2, 5), some(5, lambda c: c // g.g == 1)) == (3, False)
-    assert step(at(2, 2, 5), some(5, lambda c: c // g.g == 2)) == (1, True)
-    assert step(at(3, 2, 5), some(5, lambda c: c // g.g == 3)) == (2, False)
-    # a batch inside column 4, which pushes its cell's log past the
-    # merge threshold, then one over all of column 4, which merges that
-    # cell: the first delta is superseded, the compacted fragment is not
+    assert step(at(1, 2, 5), some(5, lambda c: c // g.g == 1)) == (2, False)
+    assert step(at(2, 2, 5), some(5, lambda c: c // g.g == 2)) == (3, False)
+    assert step(at(3, 2, 5), some(5, lambda c: c // g.g == 3)) == (1, True)
+    # a batch inside column 4, then one over all of it: the first
+    # delta is superseded, the compacted fragment is not
     assert step(at(4, 2, 5), some(5, lambda c: c == 4 * g.g + 2)) == (
-        3, False)
-    assert 4 * g.g + 2 in idx._due_cells()
-    assert step(centres[4 * g.g:5 * g.g]) == (3, False)
-    assert 4 * g.g + 2 not in idx._due_cells()
+        2, False)
+    assert step(centres[4 * g.g:5 * g.g]) == (2, False)
 
 
 @pytest.mark.parametrize("source", ["load", "snapshot", "no_cells"])
 def test_update_drops_loaded_fragment(spark, tmp_path, source):
     """A loaded index's one fragment counts the manifest's blob rows
-    (`cells`), so a whole-index update that merges every cell drops it;
-    a manifest without `cells` keeps it, as a frame of unknown count.
-    The saved version holds a log row per cell past the merge
-    threshold, which the loaded version, not knowing it, finds first."""
+    (`cells`), so a whole-index update drops it; a manifest without
+    `cells` keeps it, as a frame of unknown count."""
     g = Grid(8)
     rng = np.random.default_rng(59)
     pts = rng.integers(0, COORD_LIMIT, size=(1500, 2))
     live = dict(enumerate(map(tuple, pts)))
-    centres = np.array([(x, y) for x in range(g.g) for y in range(g.g)]
-                       ) * g.cw + g.cw // 2
-    # 16 inserts per cell of at most 53 points: past INBALANCE_RATIO
-    extra = np.concatenate([centres + r for r in range(16)])
-    epid = np.arange(2 * 10**6, 2 * 10**6 + len(extra))
-    first = SpatialIndex.build(spark, _frame(spark, list(live), pts),
+    built = SpatialIndex.build(spark, _frame(spark, list(live), pts),
                                grid=g)
-    built = first.update(inserts=_frame(spark, epid, extra))
-    first.unpersist(successor=built)
-    assert built._due_cells() == list(range(g.g ** 2))
-    live.update(zip(epid.tolist(), map(tuple, extra)))
     path = str(tmp_path / "idx")
     if source == "snapshot":
         store = SnapshotStore(path)
@@ -399,7 +362,8 @@ def test_update_drops_loaded_fragment(spark, tmp_path, source):
                 json.dump(m, f)
         idx = SpatialIndex.load(spark, path).cache()
     built.unpersist()
-    assert idx._due is None
+    centres = np.array([(x, y) for x in range(g.g) for y in range(g.g)]
+                       ) * g.cw + g.cw // 2
     dels = rng.choice(len(pts), 40, replace=False)
     ipid = np.arange(10**6, 10**6 + len(centres))
     new = idx.update(inserts=_frame(spark, ipid, centres),
@@ -513,10 +477,9 @@ def test_delta_update_materializes_only_touched(spark):
     delta_cells = up._frags[-1].frame.count()
     touched = len(up.touched_cells)
     assert delta_cells <= touched + 1 < ncells_total / 4
-    # untouched fragment + delta reconstruct the full index exactly:
-    # the base rows are the build's (no new cells here beyond touched
-    # ones that already existed, and no merge), beside the delta's logs
-    assert up.df.filter(~F.col("log")).count() == ncells_total
+    # untouched fragment + delta reconstruct the full index exactly
+    assert up.df.count() == ncells_total  # same cells (no new cells here
+    # beyond touched ones that already existed)
     total = up.df.agg(F.sum("cnt")).collect()[0][0]
     assert total == n + 64
     # drive past compaction

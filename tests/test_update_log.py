@@ -1,13 +1,12 @@
-"""The per-cell side log of SpatialIndex.update: each (cell, salt) keeps
-an immutable base row and a log row of the inserts and tombstones since
-the base was built, and reads overlay the log on the base. Every case
-here checks kNN, range_count, circle_count and range_report against
+"""The per-blob log of SpatialIndex.update: each (cell, salt) blob keeps
+the inserts and tombstones since its tree was built beside the tree,
+and reads overlay them on it. Every case here checks kNN, range_count, circle_count and range_report against
 brute force over the live points: a delete of an absent pid under a
 range shape that contains the cell, deletes of the pooled probe points
 under kNN queries at those points, a salted hot cell, the same pid
 deleted and inserted in one batch and re-inserted later, a batch that
-pushes a cell past INBALANCE_RATIO (the next batch merges it), and a
-version holding log rows saved and loaded, and committed to and loaded
+pushes a cell past INBALANCE_RATIO (its tree is rebuilt), and a
+version holding logs saved and loaded, and committed to and loaded
 from a SnapshotStore."""
 
 from __future__ import annotations
@@ -84,8 +83,9 @@ class _Chain:
 
 
 def _logs(idx) -> pd.DataFrame:
-    return idx.df.filter(F.col("log")).select(
-        "cell", "salt", "cnt", "nextra", "ntomb").toPandas()
+    """The blob rows with a non-empty log."""
+    return idx.df.filter((F.col("nextra") > 0) | (F.col("ntomb") > 0)) \
+        .select("cell", "salt", "cnt", "nextra", "ntomb").toPandas()
 
 
 def test_delete_of_absent_pid_keeps_contained_counts(spark):
@@ -148,7 +148,7 @@ def test_salted_hot_cell_logs(spark):
         ins = list(range(10**6 + 100 * g, 10**6 + 100 * g + 20))
         ch.update(ins=ins, ins_pts=_at(rng, 0, 0, 20), dels=dels)
         logs = _logs(ch.idx)
-        assert (logs["cell"] == 0).sum() > 1  # a log row per salt
+        assert (logs["cell"] == 0).sum() > 1  # a log per salt
         ch.check(q, boxes)
 
 
@@ -181,7 +181,7 @@ def test_same_pid_deleted_inserted_and_reinserted(spark):
     ch.check(q, boxes)
 
 
-def test_log_past_ratio_merges_next_batch(spark):
+def test_log_past_ratio_rebuilds_the_tree(spark):
     rng = np.random.default_rng(79)
     ch = _Chain(spark, rng.integers(0, COORD_LIMIT, size=(1600, 2)))
     q = np.concatenate([_at(rng, 2, 1, 5), rng.integers(0, COORD_LIMIT,
@@ -191,21 +191,22 @@ def test_log_past_ratio_merges_next_batch(spark):
     cell = 2 * G.g + 1
     n = sum(1 for p in ch.live.values()
             if p[0] // CW == 2 and p[1] // CW == 1)
-    churn = n * INBALANCE_RATIO // 100 + 1  # just past the ratio
+    # a batch just short of the ratio stays in the log
+    churn = n * INBALANCE_RATIO // 100
     ins = list(range(10**6, 10**6 + churn))
     ch.update(ins=ins, ins_pts=_at(rng, 2, 1, churn))
-    assert ch.idx._due_cells() == [cell]
-    assert _logs(ch.idx)["nextra"].tolist() == [churn]
+    assert _logs(ch.idx)[["cell", "cnt", "nextra", "ntomb"]] \
+        .values.tolist() == [[cell, n + churn, churn, 0]]
     ch.check(q, boxes)
-    # the next batch that touches the cell folds its log into a new
-    # base row: the delta holds that base row and no log row for it
+    # one more insert and three deletes cross it: the cell's tree is
+    # rebuilt over its live points, with an empty log
     dels = [i for i, p in ch.live.items()
             if p[0] // CW == 2 and p[1] // CW == 1][:3]
     ch.update(ins=[2 * 10**6], ins_pts=_at(rng, 2, 1, 1), dels=dels)
+    assert ch.idx.touched_cells == [cell]
     delta = ch.idx._frags[-1].frame.toPandas()
-    assert delta[["cell", "log", "cnt"]].values.tolist() == [
-        [cell, False, n + churn + 1 - 3]]
-    assert ch.idx._due_cells() == []
+    assert delta[["cell", "cnt", "nextra", "ntomb"]].values.tolist() == [
+        [cell, n + churn + 1 - 3, 0, 0]]
     assert _logs(ch.idx).empty
     ch.check(q, boxes)
 
@@ -226,7 +227,6 @@ def test_logged_version_saved_and_snapshotted(spark, tmp_path):
     for loaded in (SpatialIndex.load(spark, ch.idx.save(
             str(tmp_path / "saved"))), store.load(spark, store.commit(
                 ch.idx))):
-        assert loaded._due is None
         for got, exp in zip(loaded.level(), want):
             if got.dtype == object:
                 for a, b in zip(got, exp):

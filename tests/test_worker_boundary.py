@@ -246,3 +246,44 @@ def test_cogroup_empty_kernel_output_schema(spark):
     assert out.schema == _parse_datatype_string(schema)
     got = out.toPandas()
     assert got.empty and list(got.columns) == out.columns
+
+
+def test_cogroup_partitions_walks_groups_across_batches(spark):
+    """index.cogroup with `partitions` (one mapInArrow over key-sorted
+    partitions) returns what the grouped form returns: every group of
+    two keys exactly once, with both sides whole, also when a group's
+    rows span Arrow batches, when a key has rows on one side only and
+    when the kernel returns no rows for a group."""
+    rng = np.random.default_rng(5)
+    schema = "cell long, salt int, nl long, sl long, nr long, v array<bigint>"
+
+    def kernel(key, left, right):
+        cell, salt = key
+        if cell % 5 == 4:
+            return {}  # no output rows for this group
+        return {"cell": [cell], "salt": [salt], "nl": [len(left["x"])],
+                "sl": [int(left["x"].sum())], "nr": [len(right["v"])],
+                "v": [np.sort(right["v"]).astype(np.int64)]}
+
+    left = spark.createDataFrame(pd.DataFrame({
+        "cell": rng.integers(0, 12, 300), "salt": rng.integers(0, 2, 300),
+        "x": rng.integers(0, 1000, 300)}))
+    right = spark.createDataFrame(pd.DataFrame({
+        "cell": rng.integers(3, 16, 90), "salt": rng.integers(0, 2, 90),
+        "v": rng.integers(0, 1000, 90)}))
+    keys = ["cell", "salt"]
+    want = cogroup(left, right, keys, kernel, schema).toPandas()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")  # groups span batches
+    try:
+        got = cogroup(left, right, keys, kernel, schema,
+                      partitions=3).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    assert len(want) > 20
+
+    def norm(df):
+        return sorted((r.cell, r.salt, r.nl, r.sl, r.nr, tuple(r.v))
+                      for r in df.itertuples())
+    assert norm(got) == norm(want)
