@@ -308,10 +308,10 @@ def _literal(dtype) -> str:
 
 
 def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
-            schema: str, partitions: int | None = None) -> DataFrame:
+            schema: str) -> DataFrame:
     """fn(key, left, right) per group of `keys`, like
-    left.groupby(keys).cogroup(right.groupby(keys)), but as ONE grouped
-    map over the union of both sides: one exchange and one Spark job
+    left.groupby(keys).cogroup(right.groupby(keys)), but as ONE map
+    over the union of both sides: one exchange and one Spark job
     instead of two. Each side reaches fn as {column: values} of its own
     columns (_column) and fn returns the output columns (_arrow_fn).
     Each side is one projection whose rows fill the other side's
@@ -319,11 +319,11 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
     to_numpy return float64 for an int64 column); a flag column tells
     them apart again.
 
-    `partitions` set: the exchange makes exactly that many partitions
-    (AQE leaves an explicit count alone), each sorted by `keys`, and
-    one mapInArrow walks a partition's groups in order, so a Python
-    task pays its Arrow stream and per-call overhead once, not once
-    per group. Groups are never split across partitions."""
+    The exchange makes one partition per core (AQE leaves an explicit
+    count alone), each sorted by `keys`, and one mapInArrow walks a
+    partition's groups in order: a Python task opens one Arrow stream,
+    not one per group, and the tasks run in one wave. A group's rows
+    may span Arrow batches, never partitions."""
     flag = "_right"
     ls, rs = left.schema, right.schema
     lcols, rcols = ls.names, rs.names
@@ -344,10 +344,6 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
         r = _column(t.column(flag))
         return fn(key, side(t, lcols, ~r), side(t, rcols, r))
 
-    both = rows(left, lcols, False).union(rows(right, rcols, True))
-    if partitions is None:
-        return both.groupBy(*keys).applyInArrow(_arrow_fn(kernel, schema),
-                                                schema)
     out = to_arrow_schema(_parse_datatype_string(schema))
 
     def run(batches):
@@ -357,6 +353,8 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
             t = pa.Table.from_batches([b])
             if held is not None:
                 t = pa.concat_tables([held, t])
+            if not t.num_rows:
+                continue
             new = np.zeros(t.num_rows, bool)
             new[0] = True
             for c in keys:
@@ -373,8 +371,10 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
             yield from _table(kernel(tuple(held.column(c)[0].as_py()
                                            for c in keys), held),
                               out).to_batches()
-    return (both.repartition(partitions, *keys)
-            .sortWithinPartitions(*keys).mapInArrow(run, schema))
+    n = left.sparkSession.sparkContext.defaultParallelism
+    return (rows(left, lcols, False).union(rows(right, rcols, True))
+            .repartition(n, *keys).sortWithinPartitions(*keys)
+            .mapInArrow(run, schema))
 
 
 def observed(obs: Observation) -> dict | None:
@@ -539,9 +539,9 @@ class SpatialIndex:
         built = pts.groupBy("cell", "salt").applyInArrow(
             _arrow_fn(_build_group, schema), schema)
         # cached as built, not re-clustered by cell: reads prune the
-        # blob side to their cells first and shuffle only the survivors,
-        # which AQE coalesces into few Python tasks; a cell-partitioned
-        # cache pins every read's Python stage to all its partitions
+        # blob side to their cells first and shuffle only the survivors
+        # (index.cogroup), so a cell-clustered cache would save them
+        # nothing
         df = built.cache()
         idx = cls(spark, grid, df, coord_cols=coord_cols)
         # materialize, collecting the hot-cell set in the same job:
@@ -854,8 +854,7 @@ class SpatialIndex:
                    .observe(o, F.expr("collect_set(struct(cell, salt)) "
                                       "AS keys"))
                    for f, o in zip(self._frags, fed)),
-            ["cell"], apply_updates, schema,
-            partitions=self.spark.sparkContext.defaultParallelism)
+            ["cell"], apply_updates, schema)
         # DELTA versioning: checkpoint ONLY the rebuilt touched-cell
         # blobs — O(batch) materialization, never O(index). The new
         # version's df is the inherited fragments each filtered by the

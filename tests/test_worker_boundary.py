@@ -112,14 +112,18 @@ _MARKER_SCRIPT = textwrap.dedent("""
     keys = pd.DataFrame({"k": np.arange(32, dtype=np.int64)})
     left = spark.createDataFrame(keys.assign(a=1))
     right = spark.createDataFrame(keys.assign(b=1))
+    # 24 tasks either way: cogroup makes one partition per task
+    # thread, sorted_group_map one per shuffle partition
     if sys.argv[2] == "cogroup":
         run = lambda: cogroup(left, right, ["k"],
                               lambda key, l, r: plant(), SCHEMA)
+        runs = 12
     else:
         run = lambda: sorted_group_map(
             left, "k", lambda pdf: pd.DataFrame(plant()), SCHEMA)
+        runs = 3
     rows = []
-    for _ in range(3):
+    for _ in range(runs):
         rows += [r.asDict() for r in run().collect()]
     spark.stop()
     print(json.dumps(rows))
@@ -248,12 +252,12 @@ def test_cogroup_empty_kernel_output_schema(spark):
     assert got.empty and list(got.columns) == out.columns
 
 
-def test_cogroup_partitions_walks_groups_across_batches(spark):
-    """index.cogroup with `partitions` (one mapInArrow over key-sorted
-    partitions) returns what the grouped form returns: every group of
-    two keys exactly once, with both sides whole, also when a group's
-    rows span Arrow batches, when a key has rows on one side only and
-    when the kernel returns no rows for a group."""
+def test_cogroup_walks_groups_across_batches(spark):
+    """index.cogroup (one mapInArrow over key-sorted partitions) calls
+    the kernel once per group of two keys with both sides whole, also
+    when a group's rows span Arrow batches, when a key has rows on one
+    side only and when the kernel returns no rows for a group; checked
+    against pandas groupby."""
     rng = np.random.default_rng(5)
     schema = "cell long, salt int, nl long, sl long, nr long, v array<bigint>"
 
@@ -265,25 +269,29 @@ def test_cogroup_partitions_walks_groups_across_batches(spark):
                 "sl": [int(left["x"].sum())], "nr": [len(right["v"])],
                 "v": [np.sort(right["v"]).astype(np.int64)]}
 
-    left = spark.createDataFrame(pd.DataFrame({
-        "cell": rng.integers(0, 12, 300), "salt": rng.integers(0, 2, 300),
-        "x": rng.integers(0, 1000, 300)}))
-    right = spark.createDataFrame(pd.DataFrame({
-        "cell": rng.integers(3, 16, 90), "salt": rng.integers(0, 2, 90),
-        "v": rng.integers(0, 1000, 90)}))
-    keys = ["cell", "salt"]
-    want = cogroup(left, right, keys, kernel, schema).toPandas()
+    lp = pd.DataFrame({"cell": rng.integers(0, 12, 300),
+                       "salt": rng.integers(0, 2, 300),
+                       "x": rng.integers(0, 1000, 300)})
+    rp = pd.DataFrame({"cell": rng.integers(3, 16, 90),
+                       "salt": rng.integers(0, 2, 90),
+                       "v": rng.integers(0, 1000, 90)})
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "7")  # groups span batches
     try:
-        got = cogroup(left, right, keys, kernel, schema,
-                      partitions=3).toPandas()
+        got = cogroup(spark.createDataFrame(lp), spark.createDataFrame(rp),
+                      ["cell", "salt"], kernel, schema).toPandas()
     finally:
         spark.conf.set(conf, old)
+    want = []
+    for cell, salt in set(zip(lp["cell"], lp["salt"])) | set(
+            zip(rp["cell"], rp["salt"])):
+        if cell % 5 == 4:
+            continue
+        lx = lp["x"][(lp["cell"] == cell) & (lp["salt"] == salt)]
+        rv = rp["v"][(rp["cell"] == cell) & (rp["salt"] == salt)]
+        want.append((cell, salt, len(lx), int(lx.sum()), len(rv),
+                     tuple(sorted(rv))))
     assert len(want) > 20
-
-    def norm(df):
-        return sorted((r.cell, r.salt, r.nl, r.sl, r.nr, tuple(r.v))
-                      for r in df.itertuples())
-    assert norm(got) == norm(want)
+    assert sorted((r.cell, r.salt, r.nl, r.sl, r.nr, tuple(r.v))
+                  for r in got.itertuples()) == sorted(want)
