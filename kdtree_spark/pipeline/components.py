@@ -16,8 +16,9 @@ round's blocks (flat lineage AND flat executor storage — the same
 truncation discipline as SpatialIndex.update). The same checkpoint
 carries the fixpoint test, an observed count of the nodes that break
 the star shape, so convergence costs no action of its own. Spatially
-local edges (dbscan's) first merge per locality group by numpy
-union-find in one Arrow kernel (cell-local merging before cross-cell
+local edges (dbscan's) take no round: a numpy union-find per locality
+group in one Arrow kernel, then one union-find over the labels of the
+nodes that several groups share (cell-local merging before cross-cell
 links, as in Wang, Gu & Shun's parallel DBSCAN, SIGMOD'20).
 """
 
@@ -80,8 +81,17 @@ def star_edges(edges: DataFrame, a_col: str = "da", b_col: str = "db",
     distinct already hash-partitions it on u), u and each smaller
     neighbor but the least link to the least. A round is one plan, two
     exchanges and one eager localCheckpoint; the previous one is freed.
-    With local_col (integer ids), a checkpoint of _contract over each
-    local_col group comes first: per group, stars of equal connectivity.
+
+    With local_col (integer ids) there is no round and no checkpoint,
+    only one lazy plan. Per local_col group, one Arrow kernel labels
+    every node with its group-local least id. A node in several groups
+    ties their labels together, and one union-find over the labels of
+    all such nodes, in ONE task, maps each label to its component's
+    least id, broadcast back. Exact: a component's least id labels its
+    own local component, and shared nodes link every local component
+    of a component. local_col must be spatially local (dbscan's coarse
+    cells) so that the shared nodes stay few: about sqrt(n) at
+    dbscan's shape. max_rounds applies only without local_col.
 
     Fixpoint = stars centered at their minimum, recognised on the
     round's INPUT without an action of its own: an Observation on the
@@ -91,19 +101,16 @@ def star_edges(edges: DataFrame, a_col: str = "da", b_col: str = "db",
     center is below its leaves, and the round's output is its edges
     once each, which the loop keeps. Exact: a retried stage can only
     over-count. Raises RuntimeError when max_rounds contraction rounds
-    pass without the fixpoint. Job descriptions: components:contract,
+    pass without the fixpoint. Rounds run under the job description
     components:round; the caller's is restored."""
     e = edges.selectExpr(f"GREATEST({a_col}, {b_col}) AS u",
                          f"LEAST({a_col}, {b_col}) AS v",
                          *([local_col] if local_col else [])
                          ).filter("u != v")
+    if local_col:
+        return _local_stars(e, local_col)
     spark = edges.sparkSession
     w = Window.partitionBy("u")
-    if local_col:
-        with job_description(spark, "components:contract"):
-            e = (e.groupBy(local_col)
-                 .applyInArrow(_arrow_fn(_contract, "u long, v long"),
-                               "u long, v long").localCheckpoint())
     with job_description(spark, "components:round"):
         for rnd in range(max_rounds):
             obs = Observation()  # single-use: one per round
@@ -120,7 +127,7 @@ def star_edges(edges: DataFrame, a_col: str = "da", b_col: str = "db",
                    .selectExpr("IF(v = mn, u, v) AS u", "mn AS v")
                    .localCheckpoint())
             m = observed(obs)  # None: no rows, so none breaks the shape
-            if rnd or local_col:  # else e is the caller's plan
+            if rnd:  # else e is the caller's plan
                 free_checkpoint(e)
             e = nxt
             if m is None or m["bad"] == 0:
@@ -130,11 +137,31 @@ def star_edges(edges: DataFrame, a_col: str = "da", b_col: str = "db",
         f"rounds; the labels would not be components")
 
 
-def _contract(key, t) -> dict:
-    """One group's edges (u, v) -> (u, v) for each node u that is not
-    the least of its group-local component, v that least id. Each pass
-    hooks the larger root of every edge onto the smaller, then pointer
-    jumping flattens the forest; a component's least id stays a root."""
+def _local_stars(e: DataFrame, local_col: str) -> DataFrame:
+    """star_edges of (u, v, local_col) edges: per group each node's
+    group-local least id, then one union-find over the labels of the
+    nodes in more than one group."""
+    # NOT NULL: no inferred null filter under only one of node's two
+    # uses, so both read one exchange and the group kernel runs once
+    schema = "u long NOT NULL, l long NOT NULL"
+    kern = _arrow_fn(_labels, schema)
+    lab = e.groupBy(local_col).applyInArrow(kern, schema)
+    node = lab.groupBy("u").agg(F.collect_set("l").alias("ls"))
+    # a node in >= 2 groups ties their labels; one task joins them all
+    root = (node.filter("size(ls) > 1")
+            .selectExpr("explode(ls) AS u", "array_min(ls) AS v")
+            .groupBy().applyInArrow(kern, schema)
+            .selectExpr("u AS l", "l AS r"))
+    return (node.selectExpr("u", "array_min(ls) AS l")
+            .join(F.broadcast(root), "l", "left")
+            .selectExpr("u", "COALESCE(r, l) AS v").filter("u != v"))
+
+
+def _labels(key, t) -> dict:
+    """Edges (u, v) -> (u, l) for every node u, l the least id of its
+    component. Each pass hooks the larger root of every edge onto the
+    smaller, then pointer jumping flattens the forest; a component's
+    least id stays a root."""
     u, v = _column(t.column("u")), _column(t.column("v"))
     ids, ix = np.unique(np.concatenate([u, v]), return_inverse=True)
     a, b = np.split(ix, 2)  # dense indices in id order
@@ -144,5 +171,4 @@ def _contract(key, t) -> dict:
                       np.minimum(lab[a], lab[b]))
         while (lab[lab] != lab).any():
             lab = lab[lab]
-    leaf = lab != np.arange(len(ids))
-    return {"u": ids[leaf], "v": ids[lab[leaf]]}
+    return {"u": ids, "l": ids[lab]}

@@ -6,7 +6,8 @@ to scale, expressed as four bounded Spark stages:
      (cell-blocked equi-join, r-sized grid, zero Python)
   2. core detection              -> one groupBy count
   3. cluster formation           -> pipeline/components.py star_edges
-     over CORE-CORE edges, contracted per coarse cell first
+     over CORE-CORE edges: union-find per coarse cell, then one over
+     the nodes the cells share
   4. labelling                   -> one plan: each point's core label
      and the min core label among its neighbors (one join + groupBy)
 
@@ -20,9 +21,11 @@ output a pure function of the data, which is what lets an SQL oracle
 and a brute force agree bit-for-bit). Labels are the smallest core pid
 of the cluster. Everything else is noise.
 
-Job shape (2k uniform points, ~10 neighbours each, local[2]): 26 Spark
-jobs per call: 6 contract stages 1-3 (components:contract), 3 per star
-round (3 rounds), 9 the labelling plan and 2 the join's exchanges.
+Job shape (2k uniform points, ~10 neighbours each, local[2] and
+local[4]): 16 Spark jobs per call and no round loop: 2 the join's
+exchanges, 4 stage 3's (the coarse-cell exchange, the per-node
+exchange, the one-task exchange and the label broadcast) and 10 the
+rest of stages 2 and 4.
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ def dbscan(points: DataFrame, eps: int, min_pts: int,
            coord_cols=("x", "y")) -> DataFrame:
     """-> (pid, cluster, kind): cluster = min core pid of the cluster
     (NULL for noise); kind in {'core', 'border', 'noise'}. Integer
-    pids (the star contraction's kernel keys them as long)."""
+    pids (the union-find kernel keys them as long)."""
     grid = grid or radius_grid(eps)
     cc = list(coord_cols)
     # locality key: one of ~defaultParallelism coarse cells of the grid

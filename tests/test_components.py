@@ -1,8 +1,11 @@
 """Connected components vs a driver-side union-find oracle."""
 
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from kdtree_spark.pipeline.components import connected_components
 
@@ -131,7 +134,8 @@ def test_components_two_clusters_plus_isolated(spark):
 def _check_local(spark, edges, locs, ids=None):
     """connected_components with a locality column (edge i in group
     locs[i]) vs union-find, over `ids` (default: the edges' nodes); the
-    caller's job description survives the call."""
+    caller's job description survives the call and labels every job it
+    ran, so none is a components:round job."""
     ids = sorted({x for e in edges for x in e}) if ids is None else ids
     df = spark.createDataFrame(
         pd.DataFrame({"da": [a for a, _ in edges],
@@ -141,22 +145,62 @@ def _check_local(spark, edges, locs, ids=None):
     nodes = spark.createDataFrame(pd.DataFrame({"id": ids}, dtype="int64"),
                                   "id long")
     sc = spark.sparkContext
-    sc.setLocalProperty("spark.job.description", "caller")
+    group = f"cc-local-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "caller")
     try:
         got = dict(connected_components(df, nodes,
                                         local_col="loc").collect())
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert got == _uf_components(ids, edges)
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(i).description().get()
+             for i in sc.statusTracker().getJobIdsForGroup(group)]
+    assert descs and set(descs) == {"caller"}, descs
+
+
+def test_components_local_runs_no_round(spark):
+    """A local_col call takes no contraction round: its jobs carry the
+    caller's description, and max_rounds=1 does not bind, though one
+    round cannot reach a 20-edge path's fixpoint (the round cap test)."""
+    edges = [(i, i + 1) for i in range(20)]
+    _check_local(spark, edges, [i % 2 for i in range(20)])
+    df = _mk_edges(spark, edges).withColumn("loc", F.lit(0))
+    assert dict(connected_components(df, max_rounds=1, local_col="loc")
+                .collect()) == {i: 0 for i in range(21)}
 
 
 def test_components_local_path_alternating_groups(spark):
     """Consecutive path edges sit in different groups, every group
-    holds edges, and no two edges of a group touch: the contraction
-    merges nothing and the rounds do all the work."""
+    holds edges, and no two edges of a group touch: the per-group
+    union-find merges nothing and every node but the ends is shared."""
     edges = [(i, i + 1) for i in range(199)]
     _check_local(spark, edges, [i % 4 for i in range(199)])
+
+
+def test_components_local_zigzag_through_groups(spark):
+    """One component, a path over shuffled ids, zig-zags through all 4
+    groups 6 times in runs of 5 edges (each group holds 6 disjoint
+    pieces of it, joined only through other groups), beside a second
+    component that stays in group 2."""
+    rng = np.random.default_rng(41)
+    p = [int(x) for x in rng.permutation(121) * 3 + 7]
+    edges = list(zip(p, p[1:])) + [(1000, 1001), (1001, 1002)]
+    _check_local(spark, edges, [i // 5 % 4 for i in range(120)] + [2, 2])
+
+
+def test_components_local_no_shared_node(spark):
+    """Every component lies in one group: no node is in two groups, so
+    the shared-node union-find gets no input."""
+    rng = np.random.default_rng(43)
+    edges, locs = [], []
+    for g in range(4):
+        ids = [int(x) for x in 100 * g + rng.permutation(40)]
+        edges += list(zip(ids[:30], ids[1:31])) + [(ids[35], ids[36])]
+        locs += [g] * 31
+    _check_local(spark, edges, locs)
 
 
 def test_components_local_many_components(spark):

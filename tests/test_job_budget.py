@@ -34,8 +34,8 @@ UPDATE_JOBS = 3  # a partial update, one SQL execution: the batch cells'
 # broadcast, the cogroup's exchange and the checkpoint (one job more
 # when it compacts)
 PATH_CC_JOBS = 60  # connected_components on a 400-node path
-DBSCAN_JOBS = 29  # dbscan on 2,000 uniform points, ~10 neighbours each
-# (29 on local[2], local[4] and local[9], 20 on local[1])
+DBSCAN_JOBS = 17  # dbscan on 2,000 uniform points, ~10 neighbours each
+# (16 on local[2] and local[4], 16 or 17 on local[9], 17 on local[1])
 
 
 def _labelled(spark, fn):

@@ -282,3 +282,44 @@ def test_regex_token_stats_no_shuffle_and_values(spark, sf_dir):
         toks = pat.findall(r["text"])
         assert got[r["doc_id"]] == (len(toks), len(set(toks)),
                                     sum(len(t) for t in toks))
+
+
+def test_hamming_pairs_lossless(spark):
+    """Multi-index join finds EXACTLY the brute-force Hamming<=7 pairs."""
+    from kdtree_spark.pipeline.dedup import hamming_pairs
+    rng = np.random.default_rng(11)
+    base = rng.integers(0, 1 << 56, size=40, dtype=np.int64)
+    # planted near pairs: flip 0..7 random bits of some fingerprints
+    fps = list(base)
+    for j in range(12):
+        v = int(base[j])
+        for b in rng.choice(56, size=int(rng.integers(0, 8)), replace=False):
+            v ^= 1 << int(b)
+        fps.append(v)
+    df = spark.createDataFrame(
+        [(i, int(v)) for i, v in enumerate(fps)], "doc_id long, fp long")
+    got = (hamming_pairs(df, "doc_id", "fp", 56, 7, "da", "db")
+           .toPandas().sort_values(["da", "db"]).reset_index(drop=True))
+    arr = np.array(fps, dtype=np.int64)
+    x = arr[:, None] ^ arr[None, :]
+    ham = np.array([[bin(int(v)).count("1") for v in row] for row in x])
+    ii, jj = np.nonzero((ham <= 7) & (np.arange(len(arr))[:, None]
+                                      < np.arange(len(arr))[None, :]))
+    exp = sorted(zip(ii.tolist(), jj.tolist()))
+    assert list(zip(got["da"], got["db"])) == exp
+    assert got["hamming"].tolist() == [int(ham[a, b]) for a, b in exp]
+
+
+def test_jaccard_df_cap(spark):
+    """df-capped join drops pairs that only share ultra-common shingles."""
+    from kdtree_spark.pipeline.dedup import jaccard_pairs
+    common = "the quick brown fox jumps over the lazy dog again"
+    docs = [(i, common) for i in range(20)]          # df of every shingle = 20
+    docs += [(100, "alpha beta gamma delta epsilon"),
+             (101, "alpha beta gamma delta zeta")]    # rare near-dup pair
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    capped = jaccard_pairs(df, 3, 1, 2, df_cap=12).toPandas()
+    # the 20 identical docs' shingles are over the cap -> no pairs from them
+    assert set(zip(capped["da"], capped["db"])) == {(100, 101)}
+    uncapped = jaccard_pairs(df, 3, 1, 2).toPandas()
+    assert len(uncapped) > 1
