@@ -69,34 +69,3 @@ def test_spark_index_f64_knn(spark):
         got["nid"].to_numpy(np.int64).reshape(80, 10), gi)
     np.testing.assert_allclose(
         got["dist_sq"].to_numpy().reshape(80, 10), gd)
-
-
-def test_f64_epsilon_comparator_divergence():
-    """Documents EXACTLY when float mode diverges from the reference:
-    the reference's Num_Comparator (comparator.h:10-79) treats doubles
-    within eps=DBL_EPSILON as EQUAL, so two neighbours whose distances
-    differ by < eps tie and break by point id; this repo (and DuckDB)
-    compares IEEE-exactly, so the strictly-nearer point wins. For any
-    gap >= eps the two rules agree."""
-    from kdtree_spark.localtree import LocalKDTree
-    eps = np.finfo(np.float64).eps
-    q = np.array([[0.0, 0.0]])
-    # d²(a) and d²(b) differ by ~eps/4 — below the comparator epsilon
-    da, db = 1.0, 1.0 + eps / 4
-    pts = np.array([[np.sqrt(db), 0.0], [np.sqrt(da), 0.0]])
-    ids = np.array([1, 2], np.int64)  # nearer point has the LARGER id
-    tree = LocalKDTree.build(pts, ids)
-    d2, nid = tree.knn(q, 1)
-    if d2[0, 0] == np.float64(pts[0, 0]) ** 2 == np.float64(pts[1, 0]) ** 2:
-        # distances rounded to equal doubles: both rules give id 1
-        assert nid[0, 0] == 1
-    else:
-        # exact-IEEE rule: strictly smaller d² wins -> id 2; the
-        # reference's epsilon rule would pick id 1 here. This is the
-        # documented divergence (spatial.py, the knn_k10_f64 row's note).
-        assert nid[0, 0] == 2
-    # gap >= eps (relative): rules agree — nearer point wins under both
-    pts2 = np.array([[1.0, 0.0], [1.0 + 1e-16 + eps, 0.0]])
-    tree2 = LocalKDTree.build(pts2, ids)
-    _, nid2 = tree2.knn(q, 1)
-    assert nid2[0, 0] == 1

@@ -14,8 +14,7 @@ import pytest
 from kdtree_spark import fixtures
 from kdtree_spark.fixtures import gen_convex_polygons
 from kdtree_spark.grid import Grid
-from kdtree_spark.queries.polygon import (point_in_polygon, polygon_join,
-                                          polygons_df)
+from kdtree_spark.queries.polygon import polygon_join, polygons_df
 from tests.test_spark_index import _pts
 
 
@@ -133,53 +132,3 @@ def test_polygon_broadcast_guard(spark, monkeypatch):
               .toPandas().sort_values(["poly_id", "pid"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(base, nohint)
     assert len(base) > 0
-
-
-def test_polygon_off_grid_bbox(spark):
-    """A polygon whose bbox lies entirely off-grid on one axis must
-    match nothing (and not trip sequence()'s descending-range
-    behavior, ADVICE r3)."""
-    pts = spark.createDataFrame(
-        [(1, 10, 10), (2, 999_999, 999_999)], "pid long, x long, y long")
-    off = [(0, [(1_200_000, 100), (1_300_000, 100), (1_250_000, 200)])]
-    assert point_in_polygon(pts, off, grid=Grid(8)).count() == 0
-    # and a normal polygon still matches
-    tri = [(1, [(0, 0), (100, 0), (50, 100)])]
-    got = point_in_polygon(pts, tri, grid=Grid(8)).collect()
-    assert [r["pid"] for r in got] == [1]
-
-
-def test_tile_cell_assign_off_grid(spark):
-    """Tiles below, past and straddling the grid, and an inverted
-    (empty) tile, vs a brute force over cell extents and vs the DuckDB
-    oracle. Off-grid points live in the boundary cells, so a boundary
-    cell's extent reaches to infinity on its open side."""
-    import duckdb
-
-    from kdtree_spark.fixtures import tiles_values_sql
-    from kdtree_spark.queries.polygon import (tile_cell_assign,
-                                              tile_cell_assign_sql)
-    grid = Grid(16)
-    g, cw = grid.g, grid.cw
-    tiles = [(0, -100_000, 300_000, 10, 400_000),
-             (1, 1_000_500, -20, 1_200_000, 70_000),
-             (2, 500_000, 500_000, 400_000, 600_000),
-             (3, -5, -5, 2_000_000, 1)]
-
-    def lo(c):
-        return -np.inf if c == 0 else c * cw
-
-    def hi(c):
-        return np.inf if c == g - 1 else c * cw + cw - 1
-    exp = sorted((t, cx * g + cy) for t, x0, y0, x1, y1 in tiles
-                 for cx in range(g) for cy in range(g)
-                 if x0 <= x1 and y0 <= y1
-                 and lo(cx) <= x1 and x0 <= hi(cx)
-                 and lo(cy) <= y1 and y0 <= hi(cy))
-    got = sorted(tuple(r) for r in
-                 tile_cell_assign(spark, grid, tiles).collect())
-    assert got == exp
-    oracle = duckdb.sql(tile_cell_assign_sql(
-        grid, tiles_values_sql(tiles))).fetchall()
-    assert sorted(oracle) == exp
-    assert {t for t, _ in exp} == {0, 1, 3}

@@ -946,147 +946,3 @@ def test_range_hot_cell_salted_exact(spark):
     for cid, cx, cy, r in circles:
         d2 = ((pts[:, 0] - cx) ** 2 + (pts[:, 1] - cy) ** 2)
         assert gotc[cid] == int((d2 <= r * r).sum())
-
-
-def _pts_d(spark, sf_dir, d):
-    cc = list(points.dim_cols(d))
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_r4_lineitem")
-    return spark.sql(
-        f"SELECT {points.dimd_select_sql(d)} FROM _r4_lineitem"), cc
-
-
-def _rand_boxes(rng, n, d, wlo, whi):
-    out = []
-    for i in range(n):
-        lo = rng.integers(0, 10**6 - whi, d)
-        w = rng.integers(wlo, whi, d)
-        out.append((i, *lo.tolist(), *(lo + w).tolist()))
-    return out
-
-
-@pytest.mark.parametrize("d", [3, 5])
-def test_range_ops_d_generic(spark, sf_dir, d):
-    """Distributed range count/report/circle at d>2 vs brute force
-    (reference parity: checkCorrect.sh runs range ops at d=5)."""
-    pts, cc = _pts_d(spark, sf_dir, d)
-    idx = SpatialIndex.build(spark, pts, grid=Grid(4), coord_cols=cc)
-    P = pts.toPandas()[cc].to_numpy(np.int64)
-    rng = np.random.default_rng(7 + d)
-    boxes = _rand_boxes(rng, 12, d, 50_000, 600_000)
-    boxes.append((12, *([0] * d), *([10**6] * d)))  # domain-sized
-
-    got = {r["box_id"]: r["cnt"] for r in range_count(idx, boxes).collect()}
-    for b in boxes:
-        lo, hi = np.array(b[1:1 + d]), np.array(b[1 + d:])
-        assert got[b[0]] == int(np.all((P >= lo) & (P <= hi), axis=1).sum())
-
-    rep = range_report(idx, boxes[:4]).toPandas()
-    exp_rows = sum(
-        int(np.all((P >= np.array(b[1:1 + d]))
-                   & (P <= np.array(b[1 + d:])), axis=1).sum())
-        for b in boxes[:4])
-    assert len(rep) == exp_rows
-    assert list(rep.columns) == ["box_id", "pid", *cc]
-
-    circles = [(i, *rng.integers(10**5, 9 * 10**5, d).tolist(),
-                int(rng.integers(10_000, 400_000))) for i in range(8)]
-    cgot = {r["circle_id"]: r["cnt"]
-            for r in circle_count(idx, circles).collect()}
-    for c in circles:
-        ctr, r = np.array(c[1:1 + d], np.float64), c[1 + d]
-        exp = int((((P - ctr) ** 2).sum(axis=1) <= float(r) * r).sum())
-        assert cgot[c[0]] == exp
-    idx.unpersist()
-
-
-def test_large_grid_pyramid_paths(spark, sf_dir):
-    """Grid(128): exercises the stats pyramid (hierarchical _prune_join
-    descent), super-cell kNN fallback and contained-coarse-cell
-    shortcuts — code paths inactive at the driver gates' Grid(8)
-    (ADVICE r3). Includes a domain-sized box, k far above
-    points-per-cell, and a k whose bound covers over ENUM_CAP cells."""
-    pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
-    idx = SpatialIndex.build(spark, pts, grid=Grid(128))
-    assert idx.stats_pyramid(), "Grid(128) must build pyramid levels"
-    pdf = pts.toPandas()
-    P = pdf[["x", "y"]].to_numpy(np.int64)
-    ids = pdf["pid"].to_numpy(np.int64)
-
-    rng = np.random.default_rng(31)
-    boxes = _rand_boxes(rng, 10, 2, 2_000, 500_000)
-    boxes.append((10, 0, 0, 10**6, 10**6))
-    got = {r["box_id"]: r["cnt"] for r in range_count(idx, boxes).collect()}
-    for b in boxes:
-        lo, hi = np.array(b[1:3]), np.array(b[3:])
-        assert got[b[0]] == int(np.all((P >= lo) & (P <= hi), axis=1).sum())
-
-    rep = range_report(idx, boxes[:3]).toPandas()
-    exp = sum(int(np.all((P >= np.array(b[1:3]))
-                         & (P <= np.array(b[3:])), axis=1).sum())
-              for b in boxes[:3])
-    assert len(rep) == exp
-
-    circles = [(0, 500_000, 500_000, 450_000), (1, 10, 10, 3_000),
-               (2, 250_000, 750_000, 120_000)]
-    cgot = {r["circle_id"]: r["cnt"]
-            for r in circle_count(idx, circles).collect()}
-    for i, cx, cy, r in circles:
-        d2 = ((P - np.array([cx, cy], np.float64)) ** 2).sum(axis=1)
-        assert cgot[i] == int((d2 <= float(r) * r).sum())
-
-    # kNN with k >> points-per-cell (n/16384 per cell) forces the
-    # super-cell fallback + multi-cell merges
-    q = spark.createDataFrame(
-        [(int(i), int(x), int(y)) for i, (x, y) in enumerate(P[:8])],
-        "qid long, x long, y long")
-    k = 64
-    out = knn_join(idx, q, k).toPandas()
-    for qi in range(8):
-        d2 = ((P - P[qi]) ** 2).sum(axis=1)
-        order = np.lexsort((ids, d2))[:k]
-        mine = out[out.qid == qi].sort_values("rank")
-        assert list(mine["nid"]) == list(ids[order])
-
-    # k = 2000: the prefix-sum bound's cube spans more than ENUM_CAP
-    # cells, so the kernel expands super cells into fine children
-    from kdtree_spark.queries import knn as K
-    k = 2000
-    ub = K._prefix_ub(P[:2], idx.level(), k)
-    assert len(K._enum_rows([P[:2, 0], P[:2, 1]], ub, idx.grid,
-                            False)[2]) == 2
-    out = knn_join(idx, q.filter("qid < 2"), k).toPandas()
-    for qi in range(2):
-        d2 = ((P - P[qi]) ** 2).sum(axis=1)
-        order = np.lexsort((ids, d2))[:k]
-        mine = out[out.qid == qi].sort_values("rank")
-        assert list(mine["nid"]) == list(ids[order])
-        assert list(mine["dist_sq"]) == list(d2[order])
-    idx.unpersist()
-
-
-@pytest.mark.parametrize("g", [4, 128])
-def test_range_count_off_grid_points(spark, g):
-    """Points off the grid live in its boundary cells, so boxes past
-    the grid find them; inverted boxes count nothing. Grid(128) runs
-    the stats-pyramid descent, Grid(4) the single-level cover."""
-    rng = np.random.default_rng(43)
-    P = np.vstack([rng.integers(0, 10**6, (300, 2)),
-                   [[1_000_005, 500_000], [1_000_010, 500_003],
-                    [-7, 20], [400_000, 1_200_000], [-3, -3]]])
-    pdf = pd.DataFrame({"pid": np.arange(len(P)), "x": P[:, 0],
-                        "y": P[:, 1]})
-    idx = SpatialIndex.build(spark, spark.createDataFrame(pdf),
-                             grid=Grid(g))
-    boxes = [(0, 1_000_000, 0, 1_100_000, 10**6),
-             (1, -100, -100, 100_000, 100_000),
-             (2, 0, 1_100_000, 10**6, 1_300_000),
-             (3, -10, -10, 2_000_000, 2_000_000),
-             (4, 600_000, 0, 400_000, 10**6),
-             (5, 100_000, 100_000, 700_000, 800_000)]
-    got = {r["box_id"]: r["cnt"] for r in range_count(idx, boxes).collect()}
-    for b in boxes:
-        lo, hi = np.array(b[1:3]), np.array(b[3:])
-        assert got[b[0]] == int(np.all((P >= lo) & (P <= hi), axis=1).sum())
-    assert got[0] == 2 and got[4] == 0
-    idx.unpersist()
