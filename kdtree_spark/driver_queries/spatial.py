@@ -531,11 +531,11 @@ _GATES: dict = {
     # H11: build on uniform, query with varden-derived points
     "knn_ood": _Gate(_U2, ("knn", 10), _Q("varden")),
     # North-rule skew path, oracle-gated: build over the varden clusters
-    # with hot_cell_cap=512 so the dense cells salt into >=4 blobs and
-    # kNN takes the (cell, salt) fan-out branch (queries/skew.py
-    # FANOUT_MIN_BLOBS) instead of the cold cell-keyed cogroup — at the
-    # default 131,072-row cap no gate-scale cell ever salts, so without
-    # this gate the salted query path had pytest coverage only. Queries
+    # with hot_cell_cap=512 so the dense cells salt into >=4 blobs
+    # (index.FANOUT_MIN_BLOBS), whose kNN searches run blob by blob
+    # without the cold cells' forced bound tighten — at the default
+    # 131,072-row cap no gate-scale cell ever salts, so without this
+    # gate the salted query path had pytest coverage only. Queries
     # come from the uniform sample (also keeps the result distinct from
     # knn_varden's). Reference analogue: kdTreeParallel.h's par_do
     # subtree parallelism — one dense subtree never serializes on one

@@ -181,6 +181,21 @@ class Grid:
                     + np.floor(y / float(self.cw)).astype(np.int64))
         return (x // self.cw) * self.g + (y // self.cw)
 
+    def home_cells(self, pts: np.ndarray, S: int = 1) -> np.ndarray:
+        """numpy twin of cell_sql over the rows of pts (first `dims`
+        columns; a float dtype floors as f64 does), each home cell's
+        coordinates divided by S and composed on the -(-g // S)-per-dim
+        grid above it (parent_cell_sql)."""
+        g, cw = self.level
+        cell = np.zeros(len(pts), np.int64)
+        for j in range(self.dims):
+            p = pts[:, j]
+            c = (np.floor(p / float(cw)) if p.dtype.kind == "f"
+                 else p // cw)
+            cell = cell * -(-g // S) + np.clip(c, 0, g - 1).astype(
+                np.int64) // S
+        return cell
+
     def cell_coord(self, cell: np.ndarray, j: int) -> np.ndarray:
         """j-th grid coordinate of a row-major cell id (numpy)."""
         c = cell // (self.g ** (self.dims - 1 - j))

@@ -8,15 +8,21 @@ kd-tree per (cell, salt) built inside `applyInArrow` (localtree.py).
 Every read routes against one driver-held level per index version
 (`SpatialIndex.level`, at most SUPER_MAX_CELLS top cells): per top cell
 its live count, full-d data bbox, highest salt and pooled probe sample.
-kNN ships it in a narrow kernel's closure; range and circle shapes are
-classified against it in driver numpy. Below it, only S > 1 grids keep
-Spark-side stats (cell_stats, stats_pyramid).
+kNN queries and range / circle shapes are routed against it in driver
+numpy. Below it, only S > 1 grids keep Spark-side stats (cell_stats,
+stats_pyramid). Every read then scans its candidate cells' blobs in ONE
+broadcast-hash join (scan_blobs): the cached blob table streams in
+place, the build side is one row per candidate cell holding its shapes
+as a list, and one mapInArrow runs the cell's tree kernel once per
+joined blob row, so no read shuffles or sorts a blob, as no query of
+the reference moves its tree (`nn_search.hpp:83-126`).
 
 Skew handling (the dummy-leaf / INBALANCE analogue at the distributed
 level, plus what BASELINE.json calls out): cells whose row count exceeds
-`hot_cell_cap` are salted into multiple index rows; every query operator
-cogroups on `cell` and scans all of a cell's blobs vectorized, so salting
-is invisible to query semantics. AQE skew-join handles residual imbalance.
+`hot_cell_cap` are salted into multiple index rows; a read's blob scan
+meets each of a cell's blobs wherever the cache holds it, so a salted
+cell's work spreads over the tasks holding its blobs and salting is
+invisible to query semantics.
 
 Updates are log-structured at BOTH levels (I1/D1/D2 of SURVEY §2):
 inside a cell, new rows append to the extra log / tombstone set and
@@ -88,7 +94,7 @@ LEVEL_PROBES = 1 << 17  # pooled probe points one driver level holds at
 # most: a top-level cell keeps up to its share, LEVEL_PROBES / (top
 # cells of the grid), and strides its pool down past that. update-mix's
 # 81 cells keep every ~1024-point blob sample whole; 4096 cells keep 32
-# each. 2 MB of 2-D int64, riding in the kNN kernel's closure.
+# each. 2 MB of 2-D int64, held on the driver, where kNN routes.
 
 
 
@@ -105,14 +111,11 @@ def bbox_cols(d: int) -> tuple[list, list]:
 
 HOT_CELL_CAP = 131_072  # rows per index blob before salting splits it
 
-# a cell is "hot" (its query work fans out per (cell, salt) blob,
-# queries/skew.py) once it has at least this many non-empty blobs: a
-# 2-3-blob "warm" cell is handled fine by one cell-keyed task looping
-# its blobs (with cross-blob bound tightening), while fanning it out
-# costs query replication, a second blob pass and an extra merge
-# shuffle — pure overhead unless the cell dominates the workload.
-# Genuinely hot cells (varden-style clusters, many blobs) still fan out
-# to one task per blob.
+# a cell is "hot" once it has at least this many non-empty blobs. A
+# read's blob scan meets every blob of a cell on its own (scan_blobs);
+# a kNN search of a cold cell's blob forces its block-scan bound
+# tighten, a hot cell's many small blobs skip it (per-blob bound scans
+# cost the varden leg 3x, localtree.LocalKDTree.knn)
 FANOUT_MIN_BLOBS = 4
 
 
@@ -198,7 +201,8 @@ def _column(col: pa.ChunkedArray, rows: np.ndarray | None = None):
     """The `rows` (default all) of an Arrow column as a kernel reads
     them: fixed-width types as numpy (zero-copy where Arrow allows),
     binary as memoryview slices of the data buffer, arrays as the flat
-    values of the rows."""
+    values of the rows, arrays of structs as one {field: values} per
+    row."""
     a = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
     if pa.types.is_binary(a.type):
         off = np.frombuffer(a.buffers()[1], np.int32)[
@@ -207,7 +211,16 @@ def _column(col: pa.ChunkedArray, rows: np.ndarray | None = None):
         return [data[off[i]:off[i + 1]]
                 for i in (range(len(a)) if rows is None else rows)]
     if pa.types.is_list(a.type):
-        return (a if rows is None else a.take(rows)).flatten().to_numpy()
+        a = a if rows is None else a.take(rows)
+        if not pa.types.is_struct(a.type.value_type):
+            return a.flatten().to_numpy()
+        off = a.offsets.to_numpy()
+        off = off - off[0]
+        flat = a.flatten()
+        fields = {f.name: v.to_numpy(zero_copy_only=False)
+                  for f, v in zip(flat.type, flat.flatten())}
+        return [{c: v[lo:hi] for c, v in fields.items()}
+                for lo, hi in zip(off[:-1], off[1:])]
     v = a.to_numpy(zero_copy_only=False)
     return v if rows is None else v[rows]
 
@@ -312,12 +325,13 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
     """fn(key, left, right) per group of `keys`, like
     left.groupby(keys).cogroup(right.groupby(keys)), but as ONE map
     over the union of both sides: one exchange and one Spark job
-    instead of two. Each side reaches fn as {column: values} of its own
-    columns (_column) and fn returns the output columns (_arrow_fn).
-    Each side is one projection whose rows fill the other side's
-    columns with non-NULL SQL literals (an Arrow NULL would make
-    to_numpy return float64 for an int64 column); a flag column tells
-    them apart again.
+    instead of two. update() rewrites its touched cells through it (a
+    new cell needs its group even with no blob on the right). Each side
+    reaches fn as {column: values} of its own columns (_column) and fn
+    returns the output columns (_arrow_fn). Each side is one projection
+    whose rows fill the other side's columns with non-NULL SQL literals
+    (an Arrow NULL would make to_numpy return float64 for an int64
+    column); a flag column tells them apart again.
 
     The exchange makes one partition per core (AQE leaves an explicit
     count alone), each sorted by `keys`, and one mapInArrow walks a
@@ -375,6 +389,54 @@ def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
     return (rows(left, lcols, False).union(rows(right, rcols, True))
             .repartition(n, *keys).sortWithinPartitions(*keys)
             .mapInArrow(run, schema))
+
+
+def cell_lists(spark: SparkSession, cell: np.ndarray, cols: dict
+               ) -> DataFrame:
+    """Driver arrays of shapes (`cols`: field -> numpy values, one per
+    shape; `cell`: each shape's cell) as a scan_blobs build side: one
+    row per distinct cell, `cell bigint, shapes array<struct<cols>>`,
+    built in Arrow from sorted offsets. A local relation: collecting it
+    for the broadcast reads no input."""
+    order = np.argsort(cell, kind="stable")
+    cell = np.asarray(cell, np.int64)[order]
+    first = np.flatnonzero(np.diff(cell, prepend=cell[:1] - 1))
+    shapes = pa.StructArray.from_arrays(
+        [pa.array(np.asarray(v)[order]) for v in cols.values()], list(cols))
+    return spark.createDataFrame(pa.table({
+        "cell": pa.array(cell[first]),
+        "shapes": pa.ListArray.from_arrays(
+            pa.array(np.append(first, len(cell)).astype(np.int32)),
+            shapes)}))
+
+
+def shape_lists(df: DataFrame, cols: list) -> DataFrame:
+    """cell_lists from Spark rows of one (shape, cell) each."""
+    return df.groupBy("cell").agg(
+        F.collect_list(F.struct(*cols)).alias("shapes"))
+
+
+def scan_blobs(index: "SpatialIndex", cells: DataFrame, fn,
+               schema: str) -> DataFrame:
+    """fn(cell, shapes, blob) -> output columns, once per blob of every
+    cell in `cells` (cell_lists / shape_lists: one row per candidate
+    cell, its shapes as a list), shapes reaching fn as {field: values}.
+    ONE broadcast-hash join streams the cached blob table in place
+    against the cells and one mapInArrow runs fn per joined row: no
+    blob is shuffled or sorted, only the candidate cells' blobs cross
+    the Arrow hop, and a salted cell's blobs are scanned by whichever
+    tasks hold them. Each call sees one blob, so the caller's merge
+    composes the partials (counts sum, reports union, kNN top-k lists
+    merge). `cells` must not reach index.df in its lineage except
+    through re-aliased stats frames (index.cell_stats), or the join
+    trips the self-join analyzer."""
+    def run(c: dict) -> dict:
+        outs = [o for o in map(fn, c["cell"].tolist(), c["shapes"],
+                               c["blob"]) if o]
+        return ({k: np.concatenate([o[k] for o in outs]) for k in outs[0]}
+                if outs else {})
+    return map_arrow(index.df.select("cell", "blob")
+                     .join(F.broadcast(cells), "cell"), run, schema)
 
 
 def observed(obs: Observation) -> dict | None:
@@ -538,10 +600,10 @@ class SpatialIndex:
         schema = INDEX_SCHEMA_F64 if fmode else INDEX_SCHEMA
         built = pts.groupBy("cell", "salt").applyInArrow(
             _arrow_fn(_build_group, schema), schema)
-        # cached as built, not re-clustered by cell: reads prune the
-        # blob side to their cells first and shuffle only the survivors
-        # (index.cogroup), so a cell-clustered cache would save them
-        # nothing
+        # cached as built, not re-clustered by cell: a read streams the
+        # cache in place through its broadcast-hash join on the
+        # candidate cells (scan_blobs) and shuffles no blob, so a
+        # cell-clustered cache would save it nothing
         df = built.cache()
         idx = cls(spark, grid, df, coord_cols=coord_cols)
         # materialize, collecting the hot-cell set in the same job:
@@ -594,9 +656,8 @@ class SpatialIndex:
                 pd.DataFrame({c: v for c, (v, _) in cols.items()}),
                 ", ".join(f"{c} {t}" for c, (_, t) in cols.items()))
         if self._cell_stats is None:
-            # maxsalt: highest salt among NONEMPTY blobs — query operators
-            # use it to split a hot (salted) cell's work across tasks; salts
-            # in between with empty blobs are enumerated but match nothing
+            # maxsalt: highest salt among NONEMPTY blobs (knn_candidates
+            # reports it)
             aggs = [F.min("xmin").alias("xmin"), F.min("ymin").alias("ymin"),
                     F.max("xmax").alias("xmax"), F.max("ymax").alias("ymax"),
                     F.sum("cnt").alias("ccnt"),
@@ -611,13 +672,13 @@ class SpatialIndex:
         return self._cell_stats
 
     def hot_cells(self) -> list:
-        """Sorted ids of the cells whose query work fans out per blob
-        (>= FANOUT_MIN_BLOBS non-empty blobs). Fixed at build time —
-        update() keeps each cell's blob count and gives new cells salt
-        0 — and carried through update/save/load by the manifest; a
-        manifest without it (legacy snapshots, catalog loads) collects
-        it once here. Hot cells are rare by construction, so query
-        operators use the set as a literal instead of a broadcast."""
+        """Sorted ids of the cells of >= FANOUT_MIN_BLOBS non-empty
+        blobs. Fixed at build time — update() keeps each cell's blob
+        count and gives new cells salt 0 — and carried through
+        update/save/load by the manifest; a manifest without it (legacy
+        snapshots, catalog loads) collects it once here. Hot cells are
+        rare by construction, so the kNN kernel holds the set as a
+        literal."""
         hot = self.manifest.get("hot_cells")
         if hot is None:
             hot = sorted(int(r["cell"]) for r in self.df.filter(_hot_pred())
@@ -707,7 +768,7 @@ class SpatialIndex:
         factor PYRAMID_FACTOR per dim per level, up to the top level of
         level() (none when S == 1). Each level aggregates (ccnt, data
         bbox) from the level below and adds maxsalt=0 (coarse rows
-        never reach a blob cogroup). Level ids nest by integer
+        never reach a blob scan). Level ids nest by integer
         division, and a level cell's geometric width is exactly
         cw * F^l (x DIV (F*cw) == (x DIV cw) DIV F), so geometric
         enumeration and id arithmetic agree at every level."""

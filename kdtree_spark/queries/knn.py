@@ -7,9 +7,10 @@ cluster that sibling-pruning becomes *cell* pruning against the index's
 driver-held top level (index.level(): per top cell its live count, data
 bbox, highest non-empty salt and pooled probe sample):
 
-  phase 1+2  ONE narrow kernel (mapInArrow over the queries, the level
-           in its closure, each home cell from Grid.cell_sql in the
-           plan) turns every query into candidate cells:
+  phase 1+2  the queries are collected and routed on the driver, in
+           numpy, against the level (as ranges routes its shapes), so
+           the route runs once per call and the level never leaves
+           the driver; each query turns into candidate cells:
            - bound: the kth smallest distance² to the home top cell's
              pooled probe sample (localtree.probe_sample per blob) is a
              VALID upper bound ub on the kth distance, tight within a
@@ -21,27 +22,31 @@ bbox, highest non-empty salt and pooled probe sample):
            - near queries enumerate the grid cells in their ub-radius
              cube; far ones (cube over ENUM_CAP cells, or ub = inf)
              expand only the top cells within ub into fine children.
-           - the kernel keeps cells whose top cell holds live points
+           - the route keeps cells whose top cell holds live points
              with a data-bbox min-dist² <= ub (p2b_min_distance,
              nn_search.hpp:22-35) and takes maxsalt from the level.
            With S == 1 (the top level is the fine grid) its rows are
-           final; with S > 1 they join the fine cell-stats table for
-           the same test per fine cell, the one Spark prune join left.
-  phase 3  candidates shuffle to their cells; the blob side is PRUNED
-           FIRST by a broadcast semi-join on the candidate cells, so
-           the bytes crossing the Arrow hop scale with candidate cells,
-           not index size; then per-blob batched tree search with ub as
-           the prune bound -> local top-k per cell. Hot (salted) cells
-           fan out per blob (queries/skew.py).
-  phase 4  global top-k: one window over qid ranks every per-cell row
+           final and group per cell on the driver; with S > 1 they join
+           the fine cell-stats table for the same test per fine cell,
+           the one Spark prune join left, and a groupBy(cell) groups
+           them.
+  phase 3  the per-cell query lists are the build side of one
+           broadcast-hash join against the cached blob table
+           (index.scan_blobs): no blob is shuffled, only the candidate
+           cells' blobs cross the Arrow hop, and each blob's batched
+           tree search with ub as the prune bound gives its local
+           top-k per query. A salted cell's blobs are searched by
+           whichever tasks hold them.
+  phase 4  global top-k: one window over qid ranks every per-blob row
            by (dist², nid) — the DuckDB oracle's ORDER BY tie-break.
 
-The phases are one plan: one SQL execution of 4 jobs, no checkpoint,
-nothing left in storage.
+The phases are one plan: one SQL execution of 3 jobs (the cells'
+broadcast, the blob scan into the window's exchange, the result), no
+checkpoint, nothing left in storage.
 
 Exactness: any true neighbour at distance d <= true-kth <= ub lies in a
 cell whose bbox min-dist <= ub, so phase 2 never drops it; phase 3's
-per-cell top-k keeps everything that can reach the global top-k.
+per-blob top-k keeps everything that can reach the global top-k.
 
 Distances are squared L2 on int64 coords — exact in float64 (< 2^53),
 emitted as BIGINT so oracle hashes match bit-for-bit.
@@ -50,42 +55,14 @@ emitted as BIGINT so oracle hashes match bit-for-bit.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..grid import block_cells
-from ..index import Level, SpatialIndex, bbox_cols, map_arrow
+from ..index import (Level, SpatialIndex, bbox_cols, cell_lists, scan_blobs,
+                     shape_lists)
 from ..localtree import LocalKDTree
-from .skew import hot_blobs, pruned_blobs, scan_blobs, split_by_salt
-
-
-def _group_knn(qpts: np.ndarray, blobs, k: int, ub: np.ndarray | None,
-               stats: dict | None = None, tighten: bool | None = None):
-    """Best-k over every blob of one cell group; returns (dist2, ids)."""
-    m = qpts.shape[0]
-    best_d = best_i = None
-    bound = None if ub is None else np.asarray(ub, np.float64).copy()
-    for blob in blobs:
-        tree = LocalKDTree.from_bytes(blob)
-        d, i = tree.knn(qpts, k, ub=bound, stats=stats, tighten=tighten)
-        if best_d is None:
-            # knn() rows are (dist², id)-sorted with (inf, -1) padding
-            # at the end — for the first (and most often only) blob the
-            # result IS the running best; no merge sort needed
-            best_d, best_i = d, i
-        else:
-            cat_d = np.concatenate([best_d, d], axis=1)
-            cat_i = np.concatenate([best_i, i], axis=1)
-            ordr = np.lexsort((cat_i, cat_d), axis=1)[:, :k]
-            rows = np.arange(m)[:, None]
-            best_d = cat_d[rows, ordr]
-            best_i = cat_i[rows, ordr]
-        if bound is not None:
-            bound = np.minimum(bound, best_d[:, k - 1])
-    if best_d is None:
-        best_d = np.full((m, k), np.inf)
-        best_i = np.full((m, k), -1, np.int64)
-    return best_d, best_i
 
 
 ENUM_CAP = 4096  # max geometrically-enumerated cells per query; beyond
@@ -210,6 +187,54 @@ def _far_cells(q: np.ndarray, ub: np.ndarray, lvl: Level, grid, S: int,
     return qi[rep], cells
 
 
+def _route(index: SpatialIndex, queries: DataFrame, k: int) -> dict:
+    """Phases 1+2 on the driver: the queries' candidate cells as numpy
+    columns qid, <coords>, ub, cell, maxsalt, one entry per (query,
+    candidate cell). With S > 1 the cells are the fine children of the
+    top cells in reach, unpruned, and maxsalt is 0 (knn_candidates
+    prunes them in Spark)."""
+    cc = list(index.coord_cols)
+    cdt = _cdt(index)
+    grid = index.grid
+    S, sg = index.super_grid()
+    lvl = index.level()
+    cols = list(zip(*queries.select("qid", *cc).collect()))
+    qid = np.asarray(cols[0] if cols else (), np.int64)
+    qd = np.column_stack([np.asarray(cols[j + 1] if cols else (), cdt)
+                          for j in range(len(cc))])
+    at = lvl.find(grid.home_cells(qd, S))
+    ub = np.full(len(qd), np.inf)
+    for p in np.unique(at[at >= 0]):
+        pool = lvl.probe[p]
+        if len(pool) < k:
+            continue
+        # one tiny tree over the pool, then the block-scan bound
+        # kernel: per query a descent plus one >=max(2k,128)-point
+        # block scan
+        m = at == p
+        ub[m] = LocalKDTree.build(
+            pool, np.arange(len(pool), dtype=np.int64)).knn_bound(qd[m], k)
+    needy = ~np.isfinite(ub)
+    ub[needy] = _prefix_ub(qd[needy], lvl, k)
+    rows_i, cells, far = _enum_rows(
+        [qd[:, j] for j in range(grid.dims)], ub, grid, index.float_coords)
+    far_i, far_cells = _far_cells(qd[far], ub[far], lvl, grid, S, sg)
+    rows_i = np.concatenate([rows_i, far[far_i]])
+    cells = np.concatenate([cells, far_cells])
+    salt = np.zeros(len(cells), np.int32)
+    if S == 1:  # the prune: the cell holds live points within ub
+        at = lvl.find(cells)
+        keep = at >= 0
+        keep[keep] = _box_d2(qd[rows_i[keep]], lvl.lo[at[keep]],
+                             lvl.hi[at[keep]]) <= ub[rows_i[keep]]
+        rows_i, cells, salt = rows_i[keep], cells[keep], lvl.maxsalt[at[keep]]
+    out = {"qid": qid[rows_i]}
+    for j, c in enumerate(cc):
+        out[c] = qd[rows_i, j]
+    out.update(ub=ub[rows_i], cell=cells, maxsalt=salt)
+    return out
+
+
 def knn_candidates(index: SpatialIndex, queries: DataFrame, k: int
                    ) -> DataFrame:
     """Phases 1+2: (qid, coords, ub, cell, maxsalt), one row per
@@ -220,60 +245,8 @@ def knn_candidates(index: SpatialIndex, queries: DataFrame, k: int
     quality (candidate cells per query — the reference's visited-node
     counters analogue, testFramework.h:505-517)."""
     cc = list(index.coord_cols)
-    cdt = _cdt(index)
-    grid = index.grid
-    fmode = index.float_coords
-    S, sg = index.super_grid()
-    lvl = index.level()
-    home = grid.cell_sql(cc, fmode)
-    if S > 1:
-        home = grid.parent_cell_sql(f"({home})", grid.g, S, sg)
-    home = queries.selectExpr("qid", *cc, f"{home} AS cell")  # a top cell
-    trees: dict = {}  # per task: each home top cell's pooled-sample tree
-
-    def route(q: dict) -> dict:
-        if len(q["qid"]) == 0:
-            return {}
-        qd = np.column_stack([q[c] for c in cc]).astype(cdt, copy=False)
-        at = lvl.find(q["cell"])
-        ub = np.full(len(qd), np.inf)
-        for p in np.unique(at[at >= 0]):
-            pool = lvl.probe[p]
-            if len(pool) < k:
-                continue
-            if p not in trees:
-                # one tiny tree over the pool, then the block-scan
-                # bound kernel: per query a descent plus one
-                # >=max(2k,128)-point block scan
-                trees[p] = LocalKDTree.build(
-                    pool, np.arange(len(pool), dtype=np.int64))
-            m = at == p
-            ub[m] = trees[p].knn_bound(qd[m], k)
-        needy = ~np.isfinite(ub)
-        ub[needy] = _prefix_ub(qd[needy], lvl, k)
-        rows_i, cells, far = _enum_rows(
-            [qd[:, j] for j in range(grid.dims)], ub, grid, fmode)
-        far_i, far_cells = _far_cells(qd[far], ub[far], lvl, grid, S, sg)
-        rows_i = np.concatenate([rows_i, far[far_i]])
-        cells = np.concatenate([cells, far_cells])
-        salt = np.zeros(len(cells), np.int32)  # S > 1: the join adds it
-        if S == 1:  # the prune: the cell holds live points within ub
-            at = lvl.find(cells)
-            keep = at >= 0
-            keep[keep] = _box_d2(qd[rows_i[keep]], lvl.lo[at[keep]],
-                                 lvl.hi[at[keep]]) <= ub[rows_i[keep]]
-            at = at[keep]
-            rows_i, cells, salt = rows_i[keep], cells[keep], lvl.maxsalt[at]
-        out = {"qid": q["qid"][rows_i]}
-        for j, c in enumerate(cc):
-            out[c] = qd[rows_i, j]
-        out.update(ub=ub[rows_i], cell=cells, maxsalt=salt)
-        return out
-
-    coords = ", ".join(f"{c} {'double' if fmode else 'long'}" for c in cc)
-    cand = map_arrow(home, route, f"qid long, {coords}, ub double, "
-                                  f"cell long, maxsalt int")
-    if S == 1:
+    cand = index.spark.createDataFrame(pa.table(_route(index, queries, k)))
+    if index.super_grid()[0] == 1:
         return cand
     mind2 = _mind2_expr(cc, *bbox_cols(len(cc)))
     return (cand.drop("maxsalt").join(index.cell_stats(), "cell")
@@ -281,21 +254,38 @@ def knn_candidates(index: SpatialIndex, queries: DataFrame, k: int
             .select("qid", *cc, "ub", "cell", "maxsalt"))
 
 
-def _cell_knn(cc: list, cdt, k: int, cold: bool):
-    """Phase-3 kernel: a group's local top-k rows per query. Cold (one
-    group per cell) kernels force the per-blob block-scan bound
-    tighten; hot (per-blob) groups leave it to the tree."""
-    def cell_knn(key, q: dict, i: dict) -> dict:
-        if len(q["qid"]) == 0 or len(i["blob"]) == 0:
-            return {}
-        qpts = np.column_stack([q[c] for c in cc]).astype(cdt, copy=False)
-        d, ii = _group_knn(qpts, i["blob"], k, q["ub"],
-                           tighten=True if cold else None)
+def _cells(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
+    """The candidates as the blob scan's build side: one row per cell,
+    its (qid, <coords>, ub) rows as a list."""
+    cols = ["qid", *index.coord_cols, "ub"]
+    if index.super_grid()[0] > 1:
+        return shape_lists(knn_candidates(index, queries, k), cols)
+    r = _route(index, queries, k)
+    return cell_lists(index.spark, r["cell"], {c: r[c] for c in cols})
+
+
+def _blob_knn(index: SpatialIndex, k: int, count: bool = False):
+    """Phase-3 kernel: one blob's local top-k rows per query, or with
+    `count` its per-query work counters. A cold cell's blob forces the
+    block-scan bound tighten; a hot cell's many blobs leave it to the
+    tree (index.FANOUT_MIN_BLOBS)."""
+    cc = list(index.coord_cols)
+    cdt = _cdt(index)
+    hot = frozenset(index.hot_cells())
+
+    def scan(cell: int, q: dict, blob) -> dict:
+        st: dict | None = {} if count else None
+        d, i = LocalKDTree.from_bytes(blob).knn(
+            np.column_stack([q[c] for c in cc]).astype(cdt, copy=False), k,
+            ub=q["ub"], stats=st, tighten=None if cell in hot else True)
+        if count:
+            return {"qid": q["qid"], "scanned": st["scanned"],
+                    "leaves": st["leaves"]}
         qid = np.repeat(q["qid"], k)
-        dd, ii = d.ravel(), ii.ravel()
-        ok = np.isfinite(dd)
-        return {"qid": qid[ok], "nid": ii[ok], "dist_sq": dd[ok]}
-    return cell_knn
+        d, i = d.ravel(), i.ravel()
+        ok = np.isfinite(d)
+        return {"qid": qid[ok], "nid": i[ok], "dist_sq": d[ok]}
+    return scan
 
 
 def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
@@ -305,13 +295,9 @@ def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     pruning (phase 2) uses the full-d data bbox, a lower bound on every
     point's distance, so exactness is preserved for any d.
 
-    All candidate cells scan concurrently in ONE cogroup round, and one
-    window over qid merges every per-cell top-k."""
-    cc = list(index.coord_cols)
-    cdt = _cdt(index)
-    local = scan_blobs(index, knn_candidates(index, queries, k),
-                       _cell_knn(cc, cdt, k, True),
-                       _cell_knn(cc, cdt, k, False),
+    Every candidate cell's blobs scan in ONE broadcast-hash join, and
+    one window over qid merges every per-blob top-k."""
+    local = scan_blobs(index, _cells(index, queries, k), _blob_knn(index, k),
                        "qid long, nid long, dist_sq double")
     w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(),
                                           F.col("nid").asc())
@@ -324,13 +310,12 @@ def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
 
 def knn_shipped_blobs(index: SpatialIndex, queries: DataFrame, k: int
                       ) -> dict:
-    """Bench/scale audit: how many blob rows (and bytes) a kNN job
-    ships through the Arrow cogroup vs the whole index — evidence that
-    phase 3's semi-join prunes blob shipping to the candidate set."""
-    cold, hot = split_by_salt(index, knn_candidates(index, queries, k))
-    shipped = pruned_blobs(index.df, cold)
-    if hot is not None:
-        shipped = shipped.unionByName(pruned_blobs(hot_blobs(index), hot))
+    """Bench/scale audit: how many blob rows (and bytes) a kNN call
+    passes through its Arrow blob scan vs the whole index — evidence
+    that phase 3's join on the candidate cells prunes blob shipping to
+    the candidate set."""
+    shipped = index.df.join(
+        F.broadcast(_cells(index, queries, k).select("cell")), "cell", "semi")
     srow = shipped.agg(
         F.count("*").alias("rows"),
         F.sum(F.length("blob")).alias("bytes")).collect()[0]
@@ -351,28 +336,12 @@ def knn_scan_stats(index: SpatialIndex, queries: DataFrame, k: int
     metadata arithmetic and scans nothing). This is the bench-side
     analogue of the reference's visited-node kNN audit
     (tests/testFramework.h:505-517, knn.csv last column); it reruns the
-    search with counting on, so it is for audits, not the hot path."""
-    cc = list(index.coord_cols)
-    cdt = _cdt(index)
-
-    def make_cell_count(cold: bool):
-        # mirror knn_join's tighten flags (cold forces the block-scan
-        # tighten; its scanned points are counted via knn_bound's stats
-        # hook, so the audit reflects ALL distance comparisons)
-        def cell_count(key, q: dict, i: dict) -> dict:
-            if len(q["qid"]) == 0 or len(i["blob"]) == 0:
-                return {}
-            st: dict = {}
-            _group_knn(np.column_stack([q[c] for c in cc]).astype(cdt),
-                       i["blob"], k, q["ub"], stats=st,
-                       tighten=True if cold else None)
-            return {"qid": q["qid"], "scanned": st["scanned"],
-                    "leaves": st["leaves"]}
-        return cell_count
-
-    per_cell = scan_blobs(index, knn_candidates(index, queries, k),
-                          make_cell_count(True), make_cell_count(False),
+    search with counting on (and knn_join's tighten flags, so the
+    block-scan bound's points count too), so it is for audits, not the
+    hot path."""
+    per_blob = scan_blobs(index, _cells(index, queries, k),
+                          _blob_knn(index, k, count=True),
                           "qid long, scanned long, leaves long")
-    return (per_cell.groupBy("qid")
+    return (per_blob.groupBy("qid")
             .agg(F.sum("scanned").alias("scanned"),
                  F.sum("leaves").alias("leaves")))

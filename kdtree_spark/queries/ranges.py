@@ -8,15 +8,17 @@ spans (Grid.cover_cells: grid arithmetic, work proportional to the
 cover, never a shapes x cells matrix); empty and disjoint cells drop;
 cells whose data bbox the shape *contains* answer from their stored
 count (the "contained -> node.size" shortcut, range_count.hpp:78-80);
-boundary cells go to an Arrow cogroup (index.cogroup) that runs the
-per-cell tree's vectorized count/report — with hot (salted) cells
-re-keyed per (cell, salt) so one popular cell's boundary scans fan out
-across tasks (queries/skew.py). Every shape emits its contained count,
-0 included, and one groupBy sums those rows with the scan partials: no
+boundary cells, grouped per cell with their shapes as a list, are the
+build side of one broadcast-hash join against the cached blob table
+(index.scan_blobs) that runs each blob's vectorized count/report in
+place: no blob is shuffled, and a salted cell's blobs are scanned by
+whichever tasks hold them. Every shape emits its contained count, 0
+included, and one groupBy sums those rows with the scan partials: no
 prune join and no final join.
 
 With S > 1 (a grid past the per-dim cap of the top level), boundary
-top cells descend the stats pyramid below it in Spark (_prune_join).
+top cells descend the stats pyramid below it in Spark (_prune_join),
+and a groupBy(cell) groups the fine boundary cells' shapes.
 
 Boxes are inclusive [lo, hi] on int64 coords, matching `within_box`
 (`utility/box_op.hpp:9-20`).
@@ -29,9 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import SpatialIndex, bbox_cols
+from ..index import (SpatialIndex, bbox_cols, cell_lists, scan_blobs,
+                     shape_lists)
 from ..localtree import LocalKDTree
-from .skew import scan_blobs
 
 
 def _box_cols(d: int) -> tuple[list, list]:
@@ -43,22 +45,17 @@ def _box_cols(d: int) -> tuple[list, list]:
     return lo, hi
 
 
-def _counts(index: SpatialIndex, counts: DataFrame, pairs: DataFrame,
+def _counts(index: SpatialIndex, counts: DataFrame, cells: DataFrame,
             count) -> DataFrame:
     """(id, cnt) per shape: the contained counts plus the blob-scan
-    partials of the boundary pairs (count(tree, shapes) -> one blob's
+    partials of the boundary cells (count(tree, shapes) -> one blob's
     per-shape counts), summed by one groupBy."""
     key = counts.columns[0]
 
-    def scan(_, b: dict, i: dict) -> dict:
-        if len(b[key]) == 0 or len(i["blob"]) == 0:
-            return {}
-        part = np.zeros(len(b[key]), np.int64)
-        for blob in i["blob"]:
-            part += count(LocalKDTree.from_bytes(blob), b)
-        return {key: b[key], "cnt": part}
+    def scan(_, b: dict, blob) -> dict:
+        return {key: b[key], "cnt": count(LocalKDTree.from_bytes(blob), b)}
 
-    return (scan_blobs(index, pairs, scan, scan, f"{key} long, cnt long")
+    return (scan_blobs(index, cells, scan, f"{key} long, cnt long")
             .unionByName(counts).groupBy(key).agg(F.sum("cnt").alias("cnt")))
 
 
@@ -86,9 +83,9 @@ def _prune_join(index: SpatialIndex, frontier: DataFrame, cond,
     exactly PYRAMID_FACTOR times as wide), and an equi-join on `cell`
     with that level's stats classifies them: disjoint cells drop
     (`cond`), cells passing `contained` are emitted (their ccnt answers
-    counts metadata-only; maxsalt=0 keeps them off the blob scan), and
-    only the rest descend — O(perimeter) cells per level, never O(area)
-    fine cells (range_count.hpp:78-80 answers from high nodes).
+    counts metadata-only), and only the rest descend — O(perimeter)
+    cells per level, never O(area) fine cells (range_count.hpp:78-80
+    answers from high nodes).
     `contained=None` (a report) descends every overlapping cell. -> the
     emitted rows plus the fine cells passing `cond`, with stats columns."""
     grid = index.grid
@@ -127,9 +124,9 @@ def _route(index: SpatialIndex, arr: np.ndarray, names: list,
     per pair, mx: np.maximum) and as Spark conditions below the top
     level when S > 1 (side: F.col).
     counts: (id, cnt) rows holding every shape's count from the cells
-    it contains, 0 included (None for a report); pairs: the shape
-    columns, `cell` and `maxsalt` of the boundary fine cells the blob
-    scan visits."""
+    it contains, 0 included (None for a report); cells: the boundary
+    fine cells the blob scan visits, each with its shapes as a list
+    (index.cell_lists)."""
     spark, key = index.spark, names[0]
     shapes = pd.DataFrame(arr, columns=names)
     S, sg = index.super_grid()
@@ -147,26 +144,25 @@ def _route(index: SpatialIndex, arr: np.ndarray, names: list,
             pd.DataFrame({key: shapes[key], "cnt": full}),
             f"{key} long, cnt long")
         over &= ~inside
+    if S == 1:
+        return counts, cell_lists(spark, lvl.cell[at[over]],
+                                  {c: arr[rows[over], j]
+                                   for j, c in enumerate(names)})
     bnd = shapes.iloc[rows[over]].reset_index(drop=True)
     bnd["cell"] = lvl.cell[at[over]]
     shape_t = ", ".join(f"{c} long" for c in shapes.columns)
-    if S == 1:
-        bnd["maxsalt"] = lvl.maxsalt[at[over]]
-        return counts, spark.createDataFrame(
-            bnd, f"{shape_t}, cell long, maxsalt int")
     cond, contained = tests(
         F.col, *[[F.col(c) for c in cols]
                  for cols in bbox_cols(len(index.coord_cols))],
         lambda a, b: F.greatest(a, F.lit(b) if isinstance(b, int) else b))
     desc = _prune_join(index, spark.createDataFrame(
         bnd, f"{shape_t}, cell long"), cond, contained)
-    cols = [*shapes.columns, "cell", "maxsalt"]
     if contained is None:
-        return counts, desc.select(*cols)
+        return counts, shape_lists(desc, names)
     desc = desc.withColumn("full", contained)
     counts = counts.unionByName(desc.filter(F.col("full")).select(
         key, F.col("ccnt").alias("cnt")))
-    return counts, desc.filter(~F.col("full")).select(*cols)
+    return counts, shape_lists(desc.filter(~F.col("full")), names)
 
 
 def range_count(index: SpatialIndex, boxes) -> DataFrame:
@@ -202,29 +198,19 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
     arr = np.asarray(boxes, dtype=np.int64).reshape(-1, 1 + 2 * d)
     lo, hi = arr[:, 1:1 + d], arr[:, 1 + d:]
     tests = _box_tests(d)
-    _, pairs = _route(index, arr, ["box_id", *blo_c, *bhi_c], lo[:, :gd],
+    _, cells = _route(index, arr, ["box_id", *blo_c, *bhi_c], lo[:, :gd],
                       hi[:, :gd], lambda *a: (tests(*a)[0], None))
 
-    def scan(key, b: dict, i: dict) -> dict:
-        if len(b["box_id"]) == 0 or len(i["blob"]) == 0:
+    def scan(_, b: dict, blob) -> dict:
+        bi, pp, ii = LocalKDTree.from_bytes(blob).range_report(
+            np.column_stack([b[c] for c in blo_c + bhi_c]))
+        if not len(ii):
             return {}
-        qboxes = np.column_stack([b[c] for c in blo_c + bhi_c])
-        outs = []
-        for blob in i["blob"]:
-            bi, pp, ii = LocalKDTree.from_bytes(blob).range_report(qboxes)
-            if len(ii):
-                outs.append((b["box_id"][bi], ii, pp))
-        if not outs:
-            return {}
-        out = {"box_id": np.concatenate([o[0] for o in outs]),
-               "pid": np.concatenate([o[1] for o in outs])}
-        pp = np.concatenate([o[2] for o in outs])
-        for j, c in enumerate(cc):
-            out[c] = pp[:, j]
-        return out
+        return {"box_id": b["box_id"][bi], "pid": ii,
+                **{c: pp[:, j] for j, c in enumerate(cc)}}
 
     coord_schema = ", ".join(f"{c} {ct}" for c in cc)
-    return scan_blobs(index, pairs, scan, scan,
+    return scan_blobs(index, cells, scan,
                       f"box_id long, pid long, {coord_schema}")
 
 

@@ -105,7 +105,7 @@ def test_salted_index_snapshot_roundtrip(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from kdtree_spark import bruteforce as bf
-    from kdtree_spark.queries.skew import FANOUT_MIN_BLOBS
+    from kdtree_spark.index import FANOUT_MIN_BLOBS
 
     pts_pdf = (points.load_points(spark, sf_dir, "uniform")
                .select("pid", "x", "y").toPandas())

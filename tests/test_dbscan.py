@@ -107,3 +107,27 @@ def test_dbscan_off_grid(spark, g):
            for r in dbscan(df, 20_000, 4, grid=Grid(g)).collect()}
     assert got == _brute_dbscan(ids, xy, 20_000, 4)
     assert (xy < 0).any() and (xy >= COORD_LIMIT).any()
+
+
+def test_dbscan_chain_across_coarse_cells(spark):
+    """One cluster that is a chain along the domain's diagonal: it
+    crosses every coarse locality cell boundary (at any parallelism,
+    each coarse cell is a fraction of the domain a side), so its cores
+    are labelled in several cells and only the union-find over the
+    nodes those cells share makes it one cluster. Noise points around
+    it are checked too."""
+    rng = np.random.default_rng(67)
+    eps = 20_000
+    t = np.arange(40_000, 960_000, 9_000)
+    chain = np.stack([t, t], axis=1) + rng.integers(-1_500, 1_500,
+                                                    (len(t), 2))
+    noise = rng.uniform(0, COORD_LIMIT, (60, 2))
+    xy = np.concatenate([chain, noise]).astype(np.int64)
+    ids = rng.permutation(len(xy))
+    df = spark.createDataFrame(pd.DataFrame(
+        {"pid": ids, "x": xy[:, 0], "y": xy[:, 1]}))
+    got = {r["pid"]: (r["cluster"], r["kind"])
+           for r in dbscan(df, eps, 3).collect()}
+    exp = _brute_dbscan(ids, xy, eps, 3)
+    assert got == exp
+    assert len({exp[int(i)][0] for i in ids[:len(t)]}) == 1

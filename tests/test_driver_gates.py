@@ -147,7 +147,7 @@ def test_hot_cell_knn_gate_fans_out_and_is_exact(spark):
     (At the default 131,072-row cap no gate-scale cell salts, which is
     why the gate pins hot_cell_cap=512.)"""
     from kdtree_spark.driver_queries import spatial as dq
-    from kdtree_spark.queries.skew import FANOUT_MIN_BLOBS, hot_blobs
+    from kdtree_spark.index import FANOUT_MIN_BLOBS, in_list
 
     sf_dir = "/root/testdata/sf0.01"
     got = (dq.QUERIES["hot_cell_knn"](spark, sf_dir).toPandas()
@@ -156,7 +156,8 @@ def test_hot_cell_knn_gate_fans_out_and_is_exact(spark):
     idx = dq._index(spark, sf_dir, gate.src, gate.build)  # the memoized one
     maxblobs = (idx.cell_stats().agg(F.max("maxsalt")).collect()[0][0]) + 1
     assert maxblobs >= FANOUT_MIN_BLOBS, maxblobs
-    assert hot_blobs(idx).count() >= FANOUT_MIN_BLOBS
+    assert (idx.df.filter(in_list("cell", idx.hot_cells())).count()
+            >= FANOUT_MIN_BLOBS)
 
     pts = (points.load_points(spark, sf_dir, "varden")
            .select("pid", "x", "y").toPandas())

@@ -26,10 +26,10 @@ from kdtree_spark.queries.ranges import circle_count, range_count
 from tests.test_components import _mk_edges, _uf_components
 from tests.test_dbscan import _brute_dbscan
 
-KNN_JOBS = 4  # Spark jobs per knn_join call, after a build or an
-# update, at any fragment count: the candidate broadcast, the blob
-# cogroup's exchange, the merge window's exchange and the result
-RANGE_JOBS = 4  # the same for one range_count or circle_count call
+KNN_JOBS = 3  # Spark jobs per knn_join call, after a build or an
+# update, at any fragment count: the candidate cells' broadcast, the
+# blob scan into the merge window's exchange, and the result
+RANGE_JOBS = 3  # the same for one range_count or circle_count call
 UPDATE_JOBS = 3  # a partial update, one SQL execution: the batch cells'
 # broadcast, the cogroup's exchange and the checkpoint (one job more
 # when it compacts)
@@ -341,6 +341,52 @@ def test_reads_leave_nothing_in_storage(spark):
             idx = update(idx, call)
         stores = {id(f.store) for f in idx._frags if f.store is not None}
         assert len(_persisted(spark) - before) == len(stores), call
+
+
+def _plan_paths(plan, above=()):
+    """(node name, names of the nodes above it) for every node of an
+    executed physical plan, through AQE's plan and its query stages."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_paths(plan.executedPlan(), above)
+        return
+    if name.endswith("QueryStage"):
+        above += (name,)
+        plan = plan.plan()
+        name = plan.nodeName()
+    yield name, above
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_paths(kids.apply(i), above + (name,))
+
+
+def test_reads_scan_blobs_in_place(spark):
+    """knn_join's and range_count's executed plans hold exactly one
+    MapInArrow, and the path from it down to the cached blob table's
+    scan holds no exchange or sort: a read shuffles no blob."""
+    rng = np.random.default_rng(43)
+    n = 2000
+    pts = rng.integers(0, COORD_LIMIT, size=(n, 2))
+    idx = SpatialIndex.build(
+        spark, _frame(spark, pid=np.arange(n, dtype=np.int64),
+                      x=pts[:, 0], y=pts[:, 1]),
+        grid=Grid(4), n_hint=n)
+    q = rng.integers(0, COORD_LIMIT, size=(16, 2))
+    qdf = _frame(spark, qid=np.arange(len(q), dtype=np.int64),
+                 x=q[:, 0], y=q[:, 1])
+    boxes = [(i, x, y, x + 300_000, y + 300_000)
+             for i, (x, y) in enumerate(q.tolist())]
+    for df in (knn_join(idx, qdf, 5), range_count(idx, boxes)):
+        assert df.collect()
+        paths = list(_plan_paths(df._jdf.queryExecution().executedPlan()))
+        assert [n for n, _ in paths].count("MapInArrow") == 1, paths
+        scans = [above for n, above in paths if n == "InMemoryTableScan"]
+        assert scans, paths
+        for above in scans:
+            below = above[above.index("MapInArrow") + 1:]
+            assert not [n for n in below if "Exchange" in n
+                        or "Shuffle" in n or n == "Sort"], above
+    idx.unpersist()
 
 
 def test_components_job_budget_on_a_path(spark):

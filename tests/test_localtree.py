@@ -295,3 +295,81 @@ def test_rotate_split_rule():
     boxes = np.array([[0, 0, 0, 500_000, 700_000, 900_000]], np.int64)
     assert t_rot.range_count(boxes).tolist() == [
         int(np.all((pts >= boxes[0, :3]) & (pts <= boxes[0, 3:]), axis=1).sum())]
+
+
+def test_dense_knn_kernel_matches_traversal():
+    """d >= DENSE_SCAN_DIM dispatches to the dense matmul kernel; its
+    results (ties, tombstones, extras, ub semantics) must be identical
+    to the traversal path's."""
+    import kdtree_spark.localtree as LT
+    from kdtree_spark.localtree import LocalKDTree
+    rng = np.random.default_rng(3)
+    n, m, d, k = 2500, 150, 9, 10
+    P = rng.integers(0, 500, (n, d)).astype(np.int64)  # ties likely
+    ids = (rng.permutation(n) * 11 + 5).astype(np.int64)
+    tree = LocalKDTree.build(P, ids)
+    sel = rng.choice(n, 80, replace=False)
+    ins = rng.integers(0, 500, (40, d)).astype(np.int64)
+    tree = tree.with_updates(
+        ins_pts=ins, ins_ids=(np.arange(40) + 10**9).astype(np.int64),
+        del_pts=P[sel], del_ids=ids[sel])
+    Q = rng.integers(0, 500, (m, d)).astype(np.int64)
+    ub = tree.knn_bound(Q, k)
+    saved = LT.DENSE_SCAN_DIM
+    try:
+        LT.DENSE_SCAN_DIM = 99
+        dt, it = tree.knn(Q, k, ub=ub.copy())
+        LT.DENSE_SCAN_DIM = 2
+        dd, di = tree.knn(Q, k, ub=ub.copy())
+    finally:
+        LT.DENSE_SCAN_DIM = saved
+    assert (it == di).all()
+    assert np.array_equal(dt, dd)
+
+
+def test_knn_stop_block_reuse_edges():
+    """knn_bound(collect=True) candidates replace a rescan of the stop
+    subtree; these are the edge shapes of that contract (round 4):
+    dummy-leaf root (all duplicates), stop-at-root (children below the
+    block threshold), k above the live count (no scan, full traversal),
+    and a tombstoned stop block with < k survivors."""
+    from kdtree_spark.localtree import LocalKDTree
+
+    def brute(P, ids, q, k):
+        d2 = ((P.astype(np.float64) - q) ** 2).sum(axis=1)
+        order = np.lexsort((ids, d2))[:k]
+        return list(ids[order])
+
+    rng = np.random.default_rng(44)
+    q = np.array([[7, 9]], np.int64)
+
+    # all-identical points -> single leaf root IS the stop block
+    P = np.tile(np.array([[5, 5]], np.int64), (400, 1))
+    ids = rng.permutation(400).astype(np.int64)
+    t = LocalKDTree.build(P, ids)
+    d2, nid = t.knn(q, 3)
+    assert list(nid[0]) == brute(P, ids, q, 3)
+
+    # 200 points: root is internal but both children < 128 -> stop at
+    # root; traversal must gather nothing and still be exact
+    P = rng.integers(0, 1000, (200, 2)).astype(np.int64)
+    ids = rng.permutation(200).astype(np.int64)
+    t = LocalKDTree.build(P, ids)
+    st: dict = {}
+    d2, nid = t.knn(q, 5, stats=st)
+    assert list(nid[0]) == brute(P, ids, q, 5)
+    assert st["leaves"][0] == 1  # the stop-block scan, nothing rescanned
+
+    # k above the live count: bound stays inf, stopn = -1, full scan
+    d2, nid = t.knn(q, 300)
+    assert list(nid[0, :200]) == brute(P, ids, q, 200)
+    assert (nid[0, 200:] == -1).all() and np.isinf(d2[0, 200:]).all()
+
+    # tombstones shrink the stop block below k -> no-scan fallback path
+    big = rng.integers(0, 1000, (600, 2)).astype(np.int64)
+    bids = np.arange(600, dtype=np.int64)
+    t2 = LocalKDTree.build(big, bids)
+    t2 = t2.with_updates(del_pts=big[:595], del_ids=bids[:595])
+    alive = ~np.isin(bids, bids[:595])
+    d2, nid = t2.knn(q, 4)
+    assert list(nid[0]) == brute(big[alive], bids[alive], q, 4)
