@@ -22,7 +22,7 @@ reference's `long` coords in [0, 1e6] (`tests/data_generate.cpp:19,33-42`,
 `Grid.cover` is the one place an extent becomes the cells it meets:
 every cell-expand join, range enumeration and tile assignment goes
 through it (the reference's "visit a subtree only if its box meets the
-query", `query_op/range_count.hpp:9-96`, one grid level at a time).
+query", `query_op/range_count.hpp:9-96`).
 """
 
 from __future__ import annotations
@@ -30,6 +30,11 @@ from __future__ import annotations
 import numpy as np
 
 COORD_LIMIT = 1_000_000  # exclusive upper bound on generated coords
+
+MAX_CELLS = 1 << 16  # cell cap of an index grid, whose every cell is a
+# row of the driver-held routing level (index.SpatialIndex.level): about
+# 5e8 points at for_count's 8k per cell. Past it, salting splits the
+# large cells.
 
 
 class Grid:
@@ -53,16 +58,17 @@ class Grid:
     @staticmethod
     def for_count(n: int, target_per_cell: int = 8192,
                   dims: int = 2) -> "Grid":
-        """Pick a grid size so the average cell holds ~target rows.
-
-        The scale story: at 10^12 rows and target 8k/cell this yields a
-        ~11k×11k grid (1.2e8 cells) — cells stay executor-memory-sized
-        and the stats table stays a few GB (broadcastable in chunks or
-        range-partitioned). At test scale it degrades gracefully to a
-        handful of cells.
+        """Pick a grid size so the average cell holds ~target rows, up
+        to MAX_CELLS cells: past about 5e8 rows at 8k per cell g stops
+        growing and salting (index.HOT_CELL_CAP) splits the large
+        cells, so the routing level stays a driver array. At test scale
+        it degrades gracefully to a handful of cells.
         """
         cells = max(1, n // max(1, target_per_cell))
-        g = max(1, int(np.ceil(cells ** (1.0 / dims))))
+        g = min(max(1, int(np.ceil(cells ** (1.0 / dims)))),
+                int(MAX_CELLS ** (1.0 / dims)) + 1)
+        while g ** dims > MAX_CELLS:
+            g -= 1
         return Grid(g, dims=dims)
 
     # ---- row-major cell-id algebra (shared by Spark SQL and numpy) --
@@ -77,19 +83,18 @@ class Grid:
                         parent_g: int) -> str:
         """SQL: row-major parent id on a parent_g-per-dim grid, each
         parent covering fac x .. x fac children of a child_g-per-dim
-        grid (the pyramid / super-cell coarsening)."""
+        grid (dbscan's coarse cells)."""
         expr = f"({self.coord_sql(cell, 0, child_g)} DIV {fac})"
         for j in range(1, self.dims):
             expr = (f"({expr} * {parent_g} "
                     f"+ ({self.coord_sql(cell, j, child_g)} DIV {fac}))")
         return expr
 
-    def compose_sql(self, coords: list, g: int | None = None) -> str:
+    def compose_sql(self, coords: list) -> str:
         """SQL: row-major cell id from per-dim coordinate exprs."""
-        g = self.g if g is None else g
         expr = coords[0]
         for c in coords[1:]:
-            expr = f"({expr} * {g} + {c})"
+            expr = f"({expr} * {self.g} + {c})"
         return expr
 
     # ---- the cell cover: where coordinates become cell ids ----------
@@ -104,7 +109,7 @@ class Grid:
     # differ only on (-cw, 0), which clamps to 0.
     @property
     def level(self) -> tuple:
-        """(g, cw): this grid as a `cover` level."""
+        """(g, cw): cells per dim and cell width."""
         return self.g, self.cw
 
     def cell_sql(self, cols, f64: bool) -> str:
@@ -122,24 +127,23 @@ class Grid:
         return self.cell_sql([f"GREATEST({a}, {b})"
                               for a, b in zip(a_lo, b_lo)], False)
 
-    def cover(self, df, extents, f64: bool, level: tuple):
-        """df + `_cell`: one row per (row, cell of `level` = (g, cw)
-        that the row's extent meets). extents: per-gridded-dim (lo, hi)
-        SQL over coordinates, inclusive. Rows whose extent is empty
-        (lo > hi on any dim) drop; the rest explode one sequence per
-        dim over clamped cell coordinates and compose the row-major id.
-        Off-grid parts of an extent fold onto the boundary cells, as
-        off-grid points do (cell_sql)."""
+    def cover(self, df, extents, f64: bool):
+        """df + `_cell`: one row per (row, cell the row's extent meets).
+        extents: per-gridded-dim (lo, hi) SQL over coordinates,
+        inclusive. Rows whose extent is empty (lo > hi on any dim) drop;
+        the rest explode one sequence per dim over clamped cell
+        coordinates and compose the row-major id. Off-grid parts of an
+        extent fold onto the boundary cells, as off-grid points do
+        (cell_sql)."""
         assert len(extents) == self.dims, (extents, self.dims)
         df = df.filter(" AND ".join(f"({lo}) <= ({hi})"
                                     for lo, hi in extents))
         tmp = [f"_c{j}" for j in range(self.dims)]
         for t, (lo, hi) in zip(tmp, extents):
             df = df.selectExpr(
-                "*", f"explode(sequence({_axis_sql(lo, f64, level)}, "
-                     f"{_axis_sql(hi, f64, level)})) AS {t}")
-        return (df.selectExpr("*", f"{self.compose_sql(tmp, level[0])} "
-                                   f"AS _cell")
+                "*", f"explode(sequence({_axis_sql(lo, f64, self.level)}, "
+                     f"{_axis_sql(hi, f64, self.level)})) AS {t}")
+        return (df.selectExpr("*", f"{self.compose_sql(tmp)} AS _cell")
                 .drop(*tmp))
 
     def cover_ranges(self, lo, hi) -> list:
@@ -153,12 +157,12 @@ class Grid:
                       min(max(int(b) // cw, 0), g - 1) + 1)
                 for a, b in zip(lo, hi)]
 
-    def cover_cells(self, lo: np.ndarray, hi: np.ndarray, level: tuple):
+    def cover_cells(self, lo: np.ndarray, hi: np.ndarray):
         """Driver-side twin of `cover` for many integer extents at once:
         lo, hi are (rows, dims) inclusive corners -> (row, cell) arrays,
-        one entry per (row, cell of `level` = (g, cw) the row meets).
-        Work is proportional to the output; empty extents meet none."""
-        g, cw = level
+        one entry per (row, cell the row meets). Work is proportional to
+        the output; empty extents meet none."""
+        g, cw = self.level
         c0 = np.clip(lo // cw, 0, g - 1)
         nper = np.where((lo <= hi).all(axis=1)[:, None],
                         np.clip(hi // cw, 0, g - 1) - c0 + 1, 0)
@@ -181,19 +185,16 @@ class Grid:
                     + np.floor(y / float(self.cw)).astype(np.int64))
         return (x // self.cw) * self.g + (y // self.cw)
 
-    def home_cells(self, pts: np.ndarray, S: int = 1) -> np.ndarray:
+    def home_cells(self, pts: np.ndarray) -> np.ndarray:
         """numpy twin of cell_sql over the rows of pts (first `dims`
-        columns; a float dtype floors as f64 does), each home cell's
-        coordinates divided by S and composed on the -(-g // S)-per-dim
-        grid above it (parent_cell_sql)."""
+        columns; a float dtype floors as f64 does)."""
         g, cw = self.level
         cell = np.zeros(len(pts), np.int64)
         for j in range(self.dims):
             p = pts[:, j]
             c = (np.floor(p / float(cw)) if p.dtype.kind == "f"
                  else p // cw)
-            cell = cell * -(-g // S) + np.clip(c, 0, g - 1).astype(
-                np.int64) // S
+            cell = cell * g + np.clip(c, 0, g - 1).astype(np.int64)
         return cell
 
     def cell_coord(self, cell: np.ndarray, j: int) -> np.ndarray:

@@ -6,11 +6,11 @@ shuffle (`build_tree.hpp:49-121`). Bottom level: a serialized numpy
 kd-tree per (cell, salt) built inside `applyInArrow` (localtree.py).
 
 Every read routes against one driver-held level per index version
-(`SpatialIndex.level`, at most SUPER_MAX_CELLS top cells): per top cell
-its live count, full-d data bbox, highest salt and pooled probe sample.
-kNN queries and range / circle shapes are routed against it in driver
-numpy. Below it, only S > 1 grids keep Spark-side stats (cell_stats,
-stats_pyramid). Every read then scans its candidate cells' blobs in ONE
+(`SpatialIndex.level`, one row per non-empty cell of the grid, at most
+grid.MAX_CELLS): per cell its live count, full-d data bbox, highest
+salt and pooled probe sample. kNN queries and range / circle shapes are
+routed against it in driver numpy, and no read joins a Spark-side stats
+table. Every read then scans its candidate cells' blobs in ONE
 broadcast-hash join (scan_blobs): the cached blob table streams in
 place, the build side is one row per candidate cell holding its shapes
 as a list, and one mapInArrow runs the cell's tree kernel once per
@@ -36,9 +36,9 @@ rows later deltas all rewrote leaves the union, as the reference's
 rebuilt subtree replaces the old one (`batch_insert.hpp:60-191`), and a
 full compaction bounds the fragments that stay. Deletes are
 partial-cover tolerant (`batch_delete.hpp:95-107`). The routing level
-travels with a batch whose parent holds it (the top level is the fine
-grid): the new version's level is the parent's, patched with the
-delta's own blob rows, not a rescan of the fragments.
+travels with a batch whose parent holds it: the new version's level is
+the parent's, patched with the delta's own blob rows, not a rescan of
+the fragments.
 
 Persistence is write-audit-publish: parquet + JSON manifest written to a
 temp dir, audited (row counts), then atomically renamed — the checkpoint
@@ -68,7 +68,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
                                _parse_datatype_string)
 
-from .grid import Grid
+from .grid import MAX_CELLS, Grid
 from .localtree import LocalKDTree
 
 INDEX_SCHEMA = ("cell long, salt int, cnt long, nextra long, ntomb long, "
@@ -83,20 +83,11 @@ INDEX_SCHEMA_F64 = INDEX_SCHEMA.replace(
     "array<bigint>", "array<double>", 1).replace(
     "probe array<bigint>", "probe array<double>")
 
-PYRAMID_FACTOR = 4  # per-dim coarsening per stats-pyramid level
-
-SUPER_MAX_CELLS = 4096  # top-level (driver-held) cell cap: small
-# enough to ship with every kNN kernel at ANY scale (1.2e8 fine cells
-# at the 1e12-row projection coarsen to these 4096). The per-dim cap
-# follows from the grid's dims: 64 for 2-D, 16 for 3-D.
-
 LEVEL_PROBES = 1 << 17  # pooled probe points one driver level holds at
-# most: a top-level cell keeps up to its share, LEVEL_PROBES / (top
-# cells of the grid), and strides its pool down past that. update-mix's
-# 81 cells keep every ~1024-point blob sample whole; 4096 cells keep 32
-# each. 2 MB of 2-D int64, held on the driver, where kNN routes.
-
-
+# most: a cell keeps up to its share, LEVEL_PROBES / (cells of the
+# grid), and strides its pool down past that. update-mix's 81 cells
+# keep every ~1024-point blob sample whole; 4096 cells keep 32 each.
+# 2 MB of 2-D int64, held on the driver, where kNN routes.
 
 STATS_COLS = ["cell", "salt", "cnt", "nextra", "ntomb", "depth",
               "xmin", "ymin", "xmax", "ymax"]
@@ -104,8 +95,8 @@ LEVEL_COLS = ["cell", "salt", "cnt", "bbox", "probe"]  # a blob's level input
 
 
 def bbox_cols(d: int) -> tuple[list, list]:
-    """(lo, hi) data-bbox column names of the stats tables (cell_stats,
-    stats_pyramid) for a d-dim index."""
+    """(lo, hi) data-bbox column names of cell_stats for a d-dim
+    index."""
     return (["xmin", "ymin"] + [f"mn{j}" for j in range(2, d)],
             ["xmax", "ymax"] + [f"mx{j}" for j in range(2, d)])
 
@@ -410,26 +401,18 @@ def cell_lists(spark: SparkSession, cell: np.ndarray, cols: dict
             shapes)}))
 
 
-def shape_lists(df: DataFrame, cols: list) -> DataFrame:
-    """cell_lists from Spark rows of one (shape, cell) each."""
-    return df.groupBy("cell").agg(
-        F.collect_list(F.struct(*cols)).alias("shapes"))
-
-
 def scan_blobs(index: "SpatialIndex", cells: DataFrame, fn,
                schema: str) -> DataFrame:
     """fn(cell, shapes, blob) -> output columns, once per blob of every
-    cell in `cells` (cell_lists / shape_lists: one row per candidate
-    cell, its shapes as a list), shapes reaching fn as {field: values}.
+    cell in `cells` (cell_lists: one row per candidate cell, its shapes
+    as a list), shapes reaching fn as {field: values}.
     ONE broadcast-hash join streams the cached blob table in place
     against the cells and one mapInArrow runs fn per joined row: no
     blob is shuffled or sorted, only the candidate cells' blobs cross
     the Arrow hop, and a salted cell's blobs are scanned by whichever
     tasks hold them. Each call sees one blob, so the caller's merge
     composes the partials (counts sum, reports union, kNN top-k lists
-    merge). `cells` must not reach index.df in its lineage except
-    through re-aliased stats frames (index.cell_stats), or the join
-    trips the self-join analyzer."""
+    merge)."""
     def run(c: dict) -> dict:
         outs = [o for o in map(fn, c["cell"].tolist(), c["shapes"],
                                c["blob"]) if o]
@@ -492,16 +475,9 @@ def _union(frames) -> DataFrame:
     return functools.reduce(DataFrame.unionByName, frames)
 
 
-def _fresh_cache(df: DataFrame) -> DataFrame:
-    """df with every column re-aliased, cached: fresh expression ids, so
-    queries can join/cogroup stats-derived frames against index.df
-    without tripping the ambiguous-self-join analyzer check."""
-    return df.select(*[F.col(c).alias(c) for c in df.columns]).cache()
-
-
 class Level(NamedTuple):
-    """An index version's top routing level (SpatialIndex.level): per
-    non-empty top-level cell (ascending `cell`), its live count, highest
+    """An index version's routing level (SpatialIndex.level): per
+    non-empty grid cell (ascending `cell`), its live count, highest
     non-empty salt, full-d data bbox (cells x d) and pooled probe sample
     (an object array of points x d arrays: its blobs' samples in
     (cell, salt) order, strided down to its LEVEL_PROBES share)."""
@@ -541,11 +517,8 @@ class SpatialIndex:
         self.float_coords = isinstance(df.schema["xmin"].dataType,
                                        DoubleType)
         self._stats_pd: pd.DataFrame | None = None
-        self._cell_stats: DataFrame | None = None  # cached, S > 1 only
-        self._pyramid: list | None = None
-        # the driver-held top routing level (level()): a build or an
-        # update hands it over when S == 1, any other version aggregates
-        # it on first read
+        # the driver-held routing level (level()): a build or an update
+        # hands it over, any other version aggregates it on first read
         self._level: Level | None = None
         # delta versioning (update()): df is the union of the fragments'
         # frames. A version made from a plain frame is one fragment that
@@ -567,6 +540,10 @@ class SpatialIndex:
         whole index (blobs, stats, probes) to float mode — the
         reference's double test build (comparator.h:10-79); exact-
         integer mode is the default and matches its `long` coords."""
+        if grid is not None and grid.g ** grid.dims > MAX_CELLS:
+            raise ValueError(f"Grid({grid.g}, dims={grid.dims}) has "
+                             f"{grid.g ** grid.dims} cells, past the "
+                             f"routing level's cap of {MAX_CELLS}")
         t0 = time.time()
         n = n_hint if n_hint is not None else points.count()
         grid = grid or Grid.for_count(n)
@@ -576,12 +553,11 @@ class SpatialIndex:
                            (DoubleType, FloatType))
         cols = list(coord_cols)
         # int32 coords/cell through the shuffle + Arrow hop (coords are
-        # < 1e6, cell < g^dims < 2^31): 1/3 fewer bytes on the hot path
+        # < 1e6, cell < MAX_CELLS): 1/3 fewer bytes on the hot path
         ct = "double" if fmode else "int"
-        cell_t = "int" if grid.g ** grid.dims < 2 ** 31 else "long"
         pts = points.selectExpr(
             "pid", *[f"CAST({c} AS {ct}) AS {c}" for c in coord_cols],
-            f"CAST({grid.cell_sql(cols, fmode)} AS {cell_t}) AS cell")
+            f"CAST({grid.cell_sql(cols, fmode)} AS int) AS cell")
 
         # salting plan from per-cell counts (the sampled-pivot round's
         # analogue: one cheap agg instead of a sample)
@@ -609,14 +585,14 @@ class SpatialIndex:
         # materialize, collecting the hot-cell set in the same job:
         # update() never adds salts, so the set is fixed from here on
         # and query operators plan their fan-out from this literal.
-        # When the fine grid is the top level, the job also collects
-        # every non-empty blob's level input, so no read aggregates it
-        top = idx.super_grid()[0] == 1
-        rows = F.collect_list(F.when(F.col("cnt") > 0,
-                                     F.struct(*LEVEL_COLS))).alias("rows")
+        # The job also collects every non-empty blob's level input, so
+        # no read aggregates it
         row = df.agg(F.count("*").alias("n"),
                      F.collect_set(F.when(_hot_pred(), F.col("cell")))
-                     .alias("hot"), *([rows] if top else [])).collect()[0]
+                     .alias("hot"),
+                     F.collect_list(F.when(F.col("cnt") > 0,
+                                           F.struct(*LEVEL_COLS)))
+                     .alias("rows")).collect()[0]
         idx.manifest = dict(kind="build", n=n, grid_g=grid.g,
                             grid_dims=grid.dims, cells=int(row["n"]),
                             hot_cells=sorted(int(c) for c in row["hot"]),
@@ -624,52 +600,30 @@ class SpatialIndex:
                             coord_cols=list(coord_cols),
                             version=str(uuid.uuid4())[:8])
         idx._frags = [_Frag(df, df, idx.manifest["cells"])]
-        if top:
-            idx._level = idx._blob_level(row["rows"])
+        idx._level = idx._blob_level(row["rows"])
         return idx
 
     # ------------------------------------------------------------------ stats
     def stats(self) -> pd.DataFrame:
         """Per-blob stats (no blobs) as driver pandas — DIAGNOSTIC ONLY
-        (validate()); O(cells) driver memory. Query pruning uses
-        cell_stats() instead, which never leaves the cluster."""
+        (validate()); one Spark job. Query pruning reads level()
+        instead, per cell, already on the driver."""
         if self._stats_pd is None:
             self._stats_pd = self.df.select(*STATS_COLS).toPandas()
         return self._stats_pd
 
     def cell_stats(self) -> DataFrame:
-        """Per-cell union bbox, live count and highest non-empty salt —
-        the fine-level pruning metadata. With S == 1 the fine grid is
-        the top level, so this is a local relation projected from
-        level(). With S > 1 it is a cached aggregation of the blob
-        table that stays Spark-side: at 1.2e8 cells (the Grid.for_count
-        projection for 1e12 rows) it is a few-GB cluster-resident table
-        joined on `cell`, never a driver collect."""
-        d = len(self.coord_cols)
-        if self.super_grid()[0] == 1:
-            lv, t = self.level(), "double" if self.float_coords else "bigint"
-            cols = {"cell": (lv.cell, "bigint"), "ccnt": (lv.ccnt, "bigint"),
-                    "maxsalt": (lv.maxsalt, "int")}
-            for j, (lo, hi) in enumerate(zip(*bbox_cols(d))):
-                cols[lo], cols[hi] = (lv.lo[:, j], t), (lv.hi[:, j], t)
-            return self.spark.createDataFrame(
-                pd.DataFrame({c: v for c, (v, _) in cols.items()}),
-                ", ".join(f"{c} {t}" for c, (_, t) in cols.items()))
-        if self._cell_stats is None:
-            # maxsalt: highest salt among NONEMPTY blobs (knn_candidates
-            # reports it)
-            aggs = [F.min("xmin").alias("xmin"), F.min("ymin").alias("ymin"),
-                    F.max("xmax").alias("xmax"), F.max("ymax").alias("ymax"),
-                    F.sum("cnt").alias("ccnt"),
-                    F.max("salt").alias("maxsalt")]
-            # dims >= 2: elementwise bbox union from the array column,
-            # giving kNN the tight full-d bound
-            for j in range(2, d):
-                aggs.append(F.min(F.col("bbox")[j]).alias(f"mn{j}"))
-                aggs.append(F.max(F.col("bbox")[d + j]).alias(f"mx{j}"))
-            self._cell_stats = _fresh_cache(
-                self.df.filter(F.col("cnt") > 0).groupBy("cell").agg(*aggs))
-        return self._cell_stats
+        """Per non-empty cell its union bbox, live count and highest
+        non-empty salt: level() without the probe pools, as a local
+        relation (for diagnostics; no read joins it)."""
+        lv, t = self.level(), "double" if self.float_coords else "bigint"
+        cols = {"cell": (lv.cell, "bigint"), "ccnt": (lv.ccnt, "bigint"),
+                "maxsalt": (lv.maxsalt, "int")}
+        for j, (lo, hi) in enumerate(zip(*bbox_cols(len(self.coord_cols)))):
+            cols[lo], cols[hi] = (lv.lo[:, j], t), (lv.hi[:, j], t)
+        return self.spark.createDataFrame(
+            pd.DataFrame({c: v for c, (v, _) in cols.items()}),
+            ", ".join(f"{c} {t}" for c, (_, t) in cols.items()))
 
     def hot_cells(self) -> list:
         """Sorted ids of the cells of >= FANOUT_MIN_BLOBS non-empty
@@ -687,26 +641,21 @@ class SpatialIndex:
         return hot
 
     def level(self) -> Level:
-        """The top routing level every read descends, on the driver, as
+        """The routing level every read descends, on the driver, as
         every query of the reference descends the same top of one tree
-        (build_tree.hpp:49-70): the fine grid when S == 1, else the
-        stats pyramid's top (super_grid()), so at most SUPER_MAX_CELLS
-        rows at ANY index size. build() hands it over at S == 1 and
-        update() patches the parent's; any other version (S > 1,
-        load(), a snapshot) aggregates it here once, striding the
+        (build_tree.hpp:49-70): one row per non-empty grid cell, so at
+        most grid.MAX_CELLS rows at any index size. build() hands it
+        over and update() patches the parent's; any other version
+        (load(), a snapshot) aggregates it here once, striding the
         samples inside the aggregation, so the driver never holds more
         than LEVEL_PROBES pooled points."""
         if self._level is None:
-            S, sg = self.super_grid()
             d = len(self.coord_cols)
             cap = self._level_cap()
-            top = (self.grid.parent_cell_sql("cell", self.grid.g, S, sg)
-                   if S > 1 else "cell")
             pool = ("flatten(transform(array_sort(collect_list("
                     "struct(cell, salt, probe))), b -> b.probe))")
             stride = f"GREATEST(1, (size(pool) DIV {d} + {cap - 1}) DIV {cap})"
-            lv = (self.df.filter(F.col("cnt") > 0)
-                  .groupBy(F.expr(top).alias("cell"))
+            lv = (self.df.filter(F.col("cnt") > 0).groupBy("cell")
                   .agg(F.sum("cnt").alias("ccnt"),
                        F.max("salt").alias("maxsalt"),
                        F.array(*[F.min(F.col("bbox")[j])
@@ -724,8 +673,8 @@ class SpatialIndex:
         return self._level
 
     def _level_cap(self) -> int:
-        """Pooled probe points one top-level cell keeps at most."""
-        return max(1, LEVEL_PROBES // self.super_grid()[1] ** self.grid.dims)
+        """Pooled probe points one level cell keeps at most."""
+        return max(1, LEVEL_PROBES // self.grid.g ** self.grid.dims)
 
     def _make_level(self, cell, ccnt, maxsalt, lo, hi, pools) -> Level:
         """A Level from per-cell columns; each pool (flat probe values
@@ -744,8 +693,8 @@ class SpatialIndex:
                      np.asarray(hi, cdt).reshape(-1, d), probe)
 
     def _blob_level(self, rows: list) -> Level:
-        """The level of blob rows (LEVEL_COLS) when the top level is the
-        fine grid: the same aggregation level() runs over a blob table.
+        """The level of blob rows (LEVEL_COLS): the same aggregation
+        level() runs over a blob table.
         A blob's row counts once, even if a re-run task reported it
         again."""
         d = len(self.coord_cols)
@@ -760,52 +709,6 @@ class SpatialIndex:
             [b[:, :d].min(axis=0) for b in box],
             [b[:, d:].max(axis=0) for b in box],
             [[v for r in g for v in r["probe"]] for g in cells])
-
-    def stats_pyramid(self) -> list:
-        """Coarse stats levels above the fine grid, which boundary top
-        cells of range shapes descend (queries/ranges._prune_join):
-        [(g_l, cw_l, stats_df)] from one level above fine upward,
-        factor PYRAMID_FACTOR per dim per level, up to the top level of
-        level() (none when S == 1). Each level aggregates (ccnt, data
-        bbox) from the level below and adds maxsalt=0 (coarse rows
-        never reach a blob scan). Level ids nest by integer
-        division, and a level cell's geometric width is exactly
-        cw * F^l (x DIV (F*cw) == (x DIV cw) DIV F), so geometric
-        enumeration and id arithmetic agree at every level."""
-        if self._pyramid is None:
-            F_ = PYRAMID_FACTOR
-            levels = []
-            cur = self.cell_stats()
-            curg, curw = self.grid.g, self.grid.cw
-            while curg > self.super_grid()[1]:
-                ng = (curg + F_ - 1) // F_
-                parent = F.expr(
-                    self.grid.parent_cell_sql("cell", curg, F_, ng))
-                aggs = [F.sum("ccnt").alias("ccnt"),
-                        F.min("xmin").alias("xmin"),
-                        F.min("ymin").alias("ymin"),
-                        F.max("xmax").alias("xmax"),
-                        F.max("ymax").alias("ymax")]
-                for j in range(2, len(self.coord_cols)):
-                    aggs.append(F.min(f"mn{j}").alias(f"mn{j}"))
-                    aggs.append(F.max(f"mx{j}").alias(f"mx{j}"))
-                nxt = _fresh_cache(cur.groupBy(parent.alias("cell"))
-                                   .agg(*aggs).withColumn("maxsalt", F.lit(0)))
-                curg, curw = ng, curw * F_
-                levels.append((curg, curw, nxt))
-                cur = nxt
-            self._pyramid = levels
-        return self._pyramid
-
-    def super_grid(self) -> tuple:
-        """(S, sg): the top level of level() — fine cells coarsen by S
-        per dim into an sg-per-dim grid with sg^dims <= SUPER_MAX_CELLS.
-        S is a power of PYRAMID_FACTOR: the top level is the stats
-        pyramid's top, so a boundary top cell descends its levels."""
-        S, sg = 1, self.grid.g
-        while sg > max(1, int(SUPER_MAX_CELLS ** (1.0 / self.grid.dims))):
-            S, sg = S * PYRAMID_FACTOR, -(-sg // PYRAMID_FACTOR)
-        return S, sg
 
     # ---------------------------------------------------------------- updates
     def update(self, inserts: DataFrame | None = None,
@@ -837,13 +740,12 @@ class SpatialIndex:
 
         The routing level travels with the delta, the way the reference
         keeps subtree sizes current through a batch, when the parent
-        holds it on the driver and its top level is the fine grid
-        (S == 1): the delta's Observation collects each rewritten blob's
-        (cell, salt, cnt, bbox, probe), and the new version's level() is
-        the parent's rows of the untouched cells plus those, aggregated
-        per cell: no Spark job here, and no fragment scan at the next
-        read. Any other parent leaves the new version to aggregate its
-        own on first read.
+        holds it on the driver: the delta's Observation collects each
+        rewritten blob's (cell, salt, cnt, bbox, probe), and the new
+        version's level() is the parent's rows of the untouched cells
+        plus those, aggregated per cell: no Spark job here, and no
+        fragment scan at the next read. Any other parent leaves the new
+        version to aggregate its own on first read.
 
         Dimension-generic: works for any d = len(coord_cols) >= 2, same
         as the reference's dim-templated batch ops (`batch_insert.hpp:
@@ -926,7 +828,7 @@ class SpatialIndex:
         # one filter per fragment — linear, not exponential. The
         # rewritten blobs' keys, and their level rows when the level is
         # carried, ride on the checkpoint.
-        carry = self._level is not None and self.super_grid()[0] == 1
+        carry = self._level is not None
         obs = Observation()
         with job_description(self.spark, "update:rewrite"):
             cols = ", ".join(LEVEL_COLS if carry else ["cell", "salt"])
@@ -1013,20 +915,14 @@ class SpatialIndex:
 
     def unpersist(self, successor: "SpatialIndex | None" = None) -> None:
         """Release this version's storage (streaming indexers call this
-        on superseded versions to bound executor storage): the cached
-        stats tables always (a successor's carried level is driver
-        arrays that never read them); a fragment's cached frame or
-        localCheckpoint blocks ONLY where `successor` (the version that
-        replaced this one) does not still read them — a delta-update
-        child shares its parent's live fragments, so freeing those would
-        sever the child's truncated lineage. The fragments the child
-        dropped (every row rewritten) are freed, and after a compaction
-        the child inherits nothing, so all of this version's are."""
-        pyramid = [s for _, _, s in (self._pyramid or [])]
-        for st in (self._cell_stats, *pyramid):
-            if st is not None:
-                with contextlib.suppress(Exception):
-                    st.unpersist()
+        on superseded versions to bound executor storage): a fragment's
+        cached frame or localCheckpoint blocks ONLY where `successor`
+        (the version that replaced this one) does not still read them —
+        a delta-update child shares its parent's live fragments, so
+        freeing those would sever the child's truncated lineage. The
+        fragments the child dropped (every row rewritten) are freed, and
+        after a compaction the child inherits nothing, so all of this
+        version's are."""
         kept = [f.store for f in successor._frags] if successor else []
         for f in self._frags:
             if f.store is not None and not any(f.store is k for k in kept):

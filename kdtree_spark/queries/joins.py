@@ -86,8 +86,7 @@ def distance_join(left: DataFrame, right: DataFrame, r: int,
                       F.expr(grid.cell_sql(cc, float_coords)).alias("_cell"))
     # left expansion: every cell the radius-r box meets
     lt = grid.cover(lt, [(f"{c} - {r}", f"{c} + {r}")
-                         for c in lcc[:grid.dims]],
-                    float_coords, grid.level)
+                         for c in lcc[:grid.dims]], float_coords)
     d2 = None
     for c, a in zip(cc, lcc):
         t = F.col(a) - F.col(c)
@@ -128,8 +127,7 @@ def rect_join(left: DataFrame, right: DataFrame,
     rc = [f"_{right_id}_{c}" for c in corners]
     lt, rt = [grid.cover(df.select(idc, *[F.col(b).alias(c)
                                           for b, c in zip(bounds, cs)]),
-                         [(cs[0], cs[2]), (cs[1], cs[3])], False,
-                         grid.level)
+                         [(cs[0], cs[2]), (cs[1], cs[3])], False)
               for df, idc, cs in ((left, left_id, lc), (right, right_id, rc))]
     overlap = F.expr(f"{lc[0]} <= {rc[2]} AND {rc[0]} <= {lc[2]} AND "
                      f"{lc[1]} <= {rc[3]} AND {rc[1]} <= {lc[3]}")

@@ -4,32 +4,28 @@ The reference answers each kNN query by descending one in-memory tree,
 visiting the sibling subtree only when its bounding-box min-distance
 beats the current kth-best (`query_op/nn_search.hpp:83-126`). Across a
 cluster that sibling-pruning becomes *cell* pruning against the index's
-driver-held top level (index.level(): per top cell its live count, data
-bbox, highest non-empty salt and pooled probe sample):
+driver-held routing level (index.level(): per non-empty grid cell its
+live count, data bbox, highest non-empty salt and pooled probe sample):
 
   phase 1+2  the queries are collected and routed on the driver, in
            numpy, against the level (as ranges routes its shapes), so
            the route runs once per call and the level never leaves
            the driver; each query turns into candidate cells:
-           - bound: the kth smallest distance² to the home top cell's
+           - bound: the kth smallest distance² to the home cell's
              pooled probe sample (localtree.probe_sample per blob) is a
              VALID upper bound ub on the kth distance, tight within a
              (cell/sample)^(1/d) radius factor in any d.
            - needy queries (empty home cell, or k above the pool) bound
-             by a prefix sum over the level: top cells ordered by
+             by a prefix sum over the level: cells ordered by
              farthest-corner distance², the first prefix whose live
              count reaches k gives ub (inf only below k live points).
            - near queries enumerate the grid cells in their ub-radius
              cube; far ones (cube over ENUM_CAP cells, or ub = inf)
-             expand only the top cells within ub into fine children.
-           - the route keeps cells whose top cell holds live points
-             with a data-bbox min-dist² <= ub (p2b_min_distance,
-             nn_search.hpp:22-35) and takes maxsalt from the level.
-           With S == 1 (the top level is the fine grid) its rows are
-           final and group per cell on the driver; with S > 1 they join
-           the fine cell-stats table for the same test per fine cell,
-           the one Spark prune join left, and a groupBy(cell) groups
-           them.
+             take the level's cells within ub.
+           - the route keeps cells that hold live points with a
+             data-bbox min-dist² <= ub (p2b_min_distance,
+             nn_search.hpp:22-35), takes maxsalt from the level and
+             groups its rows per cell on the driver.
   phase 3  the per-cell query lists are the build side of one
            broadcast-hash join against the cached blob table
            (index.scan_blobs): no blob is shuffled, only the candidate
@@ -60,29 +56,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..grid import block_cells
-from ..index import (Level, SpatialIndex, bbox_cols, cell_lists, scan_blobs,
-                     shape_lists)
+from ..index import Level, SpatialIndex, cell_lists, scan_blobs
 from ..localtree import LocalKDTree
 
 
 ENUM_CAP = 4096  # max geometrically-enumerated cells per query; beyond
-                 # this (or ub = inf) the query takes the top-level path
+                 # this (or ub = inf) the query scans the level's cells
 
-SUPER_CHUNK = 512  # queries per (queries x top cells) distance block
+BLOCK_ELEMS = 1 << 21  # (queries x level cells) entries per distance
+# block: 16 MiB per float64 array at any level size (512 queries at
+# 4096 cells, 32 at grid.MAX_CELLS)
 
 
-def _mind2_expr(cc: list, lo_cols: list, hi_cols: list):
-    """Spark expression: squared L2 from the point in columns `cc` to
-    the nearest corner of the bbox in (lo_cols, hi_cols). Exact in
-    float64 for int64 coords < 2^20 per dim (diffs < 2^21, squares <
-    2^42, d <= 16 sums < 2^46) — identical to the numpy kernels
-    bit-for-bit, whole-stage-codegen JVM-side."""
-    mind2 = None
-    for c, lo, hi in zip(cc, lo_cols, hi_cols):
-        mn = F.pow(F.greatest(F.col(lo) - F.col(c),
-                              F.col(c) - F.col(hi), F.lit(0)), 2)
-        mind2 = mn if mind2 is None else mind2 + mn
-    return mind2
+def _blocks(nq: int, lvl: Level):
+    """Query slices whose (queries x level cells) distance blocks hold
+    at most BLOCK_ELEMS entries each."""
+    step = max(1, BLOCK_ELEMS // max(1, len(lvl.cell)))
+    return (slice(s, s + step) for s in range(0, nq, step))
 
 
 def _cdt(index: SpatialIndex):
@@ -94,8 +84,8 @@ def _enum_rows(q: list, ub: np.ndarray, grid, fmode: bool):
     each query row i with finite ub[i], every grid cell in the cube of
     half-width floor(sqrt(ub))+1 around the query point. Returns
     (rows_i, cells, far): int indices into the input rows, the cell id
-    per output row, and the rows left for the top-level path (cube
-    over ENUM_CAP cells, or ub = inf)."""
+    per output row, and the rows left for the level scan (cube over
+    ENUM_CAP cells, or ub = inf)."""
     g, cw = grid.g, grid.cw
     n = len(ub)
     finite = np.isfinite(ub)
@@ -130,8 +120,8 @@ def _box_d2(q: np.ndarray, lo: np.ndarray, hi: np.ndarray,
             farthest: bool = False) -> np.ndarray:
     """Squared L2 from points q to the nearest (or farthest) corner of
     data bboxes (lo, hi), broadcast over the leading axes and summed
-    over all d dims in float64 — the same arithmetic, in the same
-    order, as _mind2_expr."""
+    over all d dims in float64: exact for int64 coords < 2^20 per dim
+    (diffs < 2^21, squares < 2^42, d <= 16 sums < 2^46)."""
     out = 0.0
     for j in range(q.shape[-1]):
         a = lo[..., j] - q[..., j]
@@ -143,66 +133,52 @@ def _box_d2(q: np.ndarray, lo: np.ndarray, hi: np.ndarray,
 
 
 def _prefix_ub(q: np.ndarray, lvl: Level, k: int) -> np.ndarray:
-    """Bound for queries the probe samples cannot bound: top cells
+    """Bound for queries the probe samples cannot bound: level cells
     ordered by farthest-corner distance²; the first prefix whose live
     counts reach k holds k points all within that distance² -> valid
-    bound. Enumeration is TOTAL (every top cell), so ub = inf only
+    bound. Enumeration is TOTAL (every level cell), so ub = inf only
     when the index has < k live points."""
     ub = np.full(len(q), np.inf)
     if not len(lvl.ccnt):
         return ub
-    for s in range(0, len(q), SUPER_CHUNK):
-        maxd2 = _box_d2(q[s:s + SUPER_CHUNK, None], lvl.lo, lvl.hi, True)
+    for b in _blocks(len(q), lvl):
+        maxd2 = _box_d2(q[b, None], lvl.lo, lvl.hi, True)
         order = np.argsort(maxd2, axis=1, kind="stable")
         cum = np.cumsum(lvl.ccnt[order], axis=1)
         first = np.argmax(cum >= k, axis=1)
         rows = np.arange(len(maxd2))
         hit = cum[:, -1] >= k
-        ub[s:s + SUPER_CHUNK] = np.where(
-            hit, maxd2[rows, order[rows, first]], np.inf)
+        ub[b] = np.where(hit, maxd2[rows, order[rows, first]], np.inf)
     return ub
 
 
-def _far_cells(q: np.ndarray, ub: np.ndarray, lvl: Level, grid, S: int,
-               sg: int):
-    """Top-level path: top cells whose data bbox is within ub expand
-    into their S^dims fine children -> (rows_i, cells). Work scales
-    with the query's true candidate region, never with total cell
-    count; the fine prune drops the empty children."""
-    g, gd = grid.g, grid.dims
-    rows, tops = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
-    for s in range(0, len(q), SUPER_CHUNK):
-        mind2 = _box_d2(q[s:s + SUPER_CHUNK, None], lvl.lo, lvl.hi)
-        qi, si = np.nonzero(mind2 <= ub[s:s + SUPER_CHUNK, None])
-        rows.append(qi + s)
-        tops.append(lvl.cell[si])
-    qi = np.concatenate(rows)
-    top = np.concatenate(tops)
-    c0, nper = [], []
-    for j in range(gd):
-        p = (top // sg ** (gd - 1 - j)) % sg
-        c0.append(p * S)
-        nper.append(np.minimum(p * S + S - 1, g - 1) - p * S + 1)
-    rep, cells, _ = block_cells(c0, nper, g)
-    return qi[rep], cells
+def _far_cells(q: np.ndarray, ub: np.ndarray, lvl: Level):
+    """Level scan for the queries whose cube is too large to enumerate:
+    the level's cells whose data bbox is within ub -> (rows_i, cells).
+    Only non-empty cells are tested, so work scales with the level,
+    never with the grid's empty cells."""
+    rows, cells = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for b in _blocks(len(q), lvl):
+        qi, ci = np.nonzero(_box_d2(q[b, None], lvl.lo, lvl.hi)
+                            <= ub[b, None])
+        rows.append(qi + b.start)
+        cells.append(lvl.cell[ci])
+    return np.concatenate(rows), np.concatenate(cells)
 
 
 def _route(index: SpatialIndex, queries: DataFrame, k: int) -> dict:
     """Phases 1+2 on the driver: the queries' candidate cells as numpy
     columns qid, <coords>, ub, cell, maxsalt, one entry per (query,
-    candidate cell). With S > 1 the cells are the fine children of the
-    top cells in reach, unpruned, and maxsalt is 0 (knn_candidates
-    prunes them in Spark)."""
+    candidate cell)."""
     cc = list(index.coord_cols)
     cdt = _cdt(index)
     grid = index.grid
-    S, sg = index.super_grid()
     lvl = index.level()
     cols = list(zip(*queries.select("qid", *cc).collect()))
     qid = np.asarray(cols[0] if cols else (), np.int64)
     qd = np.column_stack([np.asarray(cols[j + 1] if cols else (), cdt)
                           for j in range(len(cc))])
-    at = lvl.find(grid.home_cells(qd, S))
+    at = lvl.find(grid.home_cells(qd))
     ub = np.full(len(qd), np.inf)
     for p in np.unique(at[at >= 0]):
         pool = lvl.probe[p]
@@ -218,20 +194,19 @@ def _route(index: SpatialIndex, queries: DataFrame, k: int) -> dict:
     ub[needy] = _prefix_ub(qd[needy], lvl, k)
     rows_i, cells, far = _enum_rows(
         [qd[:, j] for j in range(grid.dims)], ub, grid, index.float_coords)
-    far_i, far_cells = _far_cells(qd[far], ub[far], lvl, grid, S, sg)
+    far_i, far_cells = _far_cells(qd[far], ub[far], lvl)
     rows_i = np.concatenate([rows_i, far[far_i]])
     cells = np.concatenate([cells, far_cells])
-    salt = np.zeros(len(cells), np.int32)
-    if S == 1:  # the prune: the cell holds live points within ub
-        at = lvl.find(cells)
-        keep = at >= 0
-        keep[keep] = _box_d2(qd[rows_i[keep]], lvl.lo[at[keep]],
-                             lvl.hi[at[keep]]) <= ub[rows_i[keep]]
-        rows_i, cells, salt = rows_i[keep], cells[keep], lvl.maxsalt[at[keep]]
+    # the prune: the cell holds live points within ub
+    at = lvl.find(cells)
+    keep = at >= 0
+    keep[keep] = _box_d2(qd[rows_i[keep]], lvl.lo[at[keep]],
+                         lvl.hi[at[keep]]) <= ub[rows_i[keep]]
+    rows_i, cells = rows_i[keep], cells[keep]
     out = {"qid": qid[rows_i]}
     for j, c in enumerate(cc):
         out[c] = qd[rows_i, j]
-    out.update(ub=ub[rows_i], cell=cells, maxsalt=salt)
+    out.update(ub=ub[rows_i], cell=cells, maxsalt=lvl.maxsalt[at[keep]])
     return out
 
 
@@ -244,24 +219,15 @@ def knn_candidates(index: SpatialIndex, queries: DataFrame, k: int
     empty cells drop. Exposed separately so bench can audit pruning
     quality (candidate cells per query — the reference's visited-node
     counters analogue, testFramework.h:505-517)."""
-    cc = list(index.coord_cols)
-    cand = index.spark.createDataFrame(pa.table(_route(index, queries, k)))
-    if index.super_grid()[0] == 1:
-        return cand
-    mind2 = _mind2_expr(cc, *bbox_cols(len(cc)))
-    return (cand.drop("maxsalt").join(index.cell_stats(), "cell")
-            .filter(mind2 <= F.col("ub"))
-            .select("qid", *cc, "ub", "cell", "maxsalt"))
+    return index.spark.createDataFrame(pa.table(_route(index, queries, k)))
 
 
 def _cells(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
     """The candidates as the blob scan's build side: one row per cell,
     its (qid, <coords>, ub) rows as a list."""
-    cols = ["qid", *index.coord_cols, "ub"]
-    if index.super_grid()[0] > 1:
-        return shape_lists(knn_candidates(index, queries, k), cols)
     r = _route(index, queries, k)
-    return cell_lists(index.spark, r["cell"], {c: r[c] for c in cols})
+    return cell_lists(index.spark, r["cell"],
+                      {c: r[c] for c in ["qid", *index.coord_cols, "ub"]})
 
 
 def _blob_knn(index: SpatialIndex, k: int, count: bool = False):

@@ -68,8 +68,7 @@ def point_in_polygon(points: DataFrame, polygons,
         rows, "poly_id long, px0 long, py0 long, px1 long, "
               "py1 long, edges array<struct<ax:long, ay:long, dx:long, "
               "dy:long>>")
-    cells = grid.cover(pdf, [("px0", "px1"), ("py0", "py1")], False,
-                       grid.level)
+    cells = grid.cover(pdf, [("px0", "px1"), ("py0", "py1")], False)
     pts = points.selectExpr("pid", "x", "y",
                             f"{grid.cell_sql(['x', 'y'], False)} AS _cell")
     # exact enumerated (polygon, cell) row count, from the driver-side
@@ -115,8 +114,7 @@ def tile_cell_assign(spark: SparkSession, grid: Grid, tiles) -> DataFrame:
     tdf = spark.createDataFrame(
         [(int(t), int(a), int(b), int(c), int(d)) for t, a, b, c, d in tiles],
         "tile_id long, tx0 long, ty0 long, tx1 long, ty1 long")
-    return (grid.cover(tdf, [("tx0", "tx1"), ("ty0", "ty1")], False,
-                       grid.level)
+    return (grid.cover(tdf, [("tx0", "tx1"), ("ty0", "ty1")], False)
             .select("tile_id", F.col("_cell").alias("cell")))
 
 
@@ -195,7 +193,7 @@ def polygon_join(left: DataFrame, right: DataFrame,
                   df.select(idc, F.col("verts").alias(f"_{idc}_verts"),
                             *[F.expr(e).alias(c)
                               for e, c in zip(bbox_sql, cs)]),
-                  [(cs[0], cs[2]), (cs[1], cs[3])], False, grid.level)
+                  [(cs[0], cs[2]), (cs[1], cs[3])], False)
               for df, idc, cs in ((left, left_id, lc), (right, right_id, rc))]
     bbox = F.expr(f"{lc[0]} <= {rc[2]} AND {rc[0]} <= {lc[2]} AND "
                   f"{lc[1]} <= {rc[3]} AND {rc[1]} <= {lc[3]}")

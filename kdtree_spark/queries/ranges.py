@@ -3,9 +3,10 @@
 Two-level plan mirroring the reference's 3-way recursion
 (`query_op/range_count.hpp:9-96`). The query shapes arrive as driver
 arrays, so they are routed on the driver, in numpy, against the index's
-top level (index.level()): each shape covers the top cells its extent
-spans (Grid.cover_cells: grid arithmetic, work proportional to the
-cover, never a shapes x cells matrix); empty and disjoint cells drop;
+routing level (index.level(), one row per non-empty grid cell): each
+shape covers the cells its extent spans (Grid.cover_cells: grid
+arithmetic, work proportional to the cover, never a shapes x cells
+matrix); empty and disjoint cells drop;
 cells whose data bbox the shape *contains* answer from their stored
 count (the "contained -> node.size" shortcut, range_count.hpp:78-80);
 boundary cells, grouped per cell with their shapes as a list, are the
@@ -15,10 +16,6 @@ place: no blob is shuffled, and a salted cell's blobs are scanned by
 whichever tasks hold them. Every shape emits its contained count, 0
 included, and one groupBy sums those rows with the scan partials: no
 prune join and no final join.
-
-With S > 1 (a grid past the per-dim cap of the top level), boundary
-top cells descend the stats pyramid below it in Spark (_prune_join),
-and a groupBy(cell) groups the fine boundary cells' shapes.
 
 Boxes are inclusive [lo, hi] on int64 coords, matching `within_box`
 (`utility/box_op.hpp:9-20`).
@@ -31,15 +28,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import (SpatialIndex, bbox_cols, cell_lists, scan_blobs,
-                     shape_lists)
+from ..index import SpatialIndex, cell_lists, scan_blobs
 from ..localtree import LocalKDTree
 
 
 def _box_cols(d: int) -> tuple[list, list]:
     """Box lo/hi column names: 2-D keeps the historical bxlo/bylo/bxhi/
-    byhi names; dims >= 2 add blo{j}/bhi{j}, mirroring the stats tables'
-    mn{j}/mx{j} (index.cell_stats)."""
+    byhi names; dims >= 2 add blo{j}/bhi{j}, mirroring cell_stats'
+    mn{j}/mx{j} (index.bbox_cols)."""
     lo = ["bxlo", "bylo"] + [f"blo{j}" for j in range(2, d)]
     hi = ["bxhi", "byhi"] + [f"bhi{j}" for j in range(2, d)]
     return lo, hi
@@ -60,12 +56,12 @@ def _counts(index: SpatialIndex, counts: DataFrame, cells: DataFrame,
 
 
 def _box_tests(d: int):
-    """tests(side, slo, shi, mx) of _route for boxes: (overlap,
+    """tests(side, slo, shi) of _route for boxes: (overlap,
     contained) of each box against a data bbox over all d dims — the
     reference's 3-way box classification (range_count.hpp:9-96)."""
     blo, bhi = _box_cols(d)
 
-    def tests(side, slo, shi, mx):
+    def tests(side, slo, shi):
         overlap = contained = True
         for bl, bh, sl, sh in zip(map(side, blo), map(side, bhi), slo, shi):
             overlap = overlap & (sl <= bh) & (sh >= bl)
@@ -74,68 +70,28 @@ def _box_tests(d: int):
     return tests
 
 
-def _prune_join(index: SpatialIndex, frontier: DataFrame, cond,
-                contained=None) -> DataFrame:
-    """Boundary top cells descend the stats pyramid below the driver
-    level (S > 1 only). `frontier` holds the shape columns and `cell`,
-    a boundary top cell. Each cell covers its PYRAMID_FACTOR^dims
-    children on the level below (`Grid.cover`: a level's cell is
-    exactly PYRAMID_FACTOR times as wide), and an equi-join on `cell`
-    with that level's stats classifies them: disjoint cells drop
-    (`cond`), cells passing `contained` are emitted (their ccnt answers
-    counts metadata-only), and only the rest descend — O(perimeter)
-    cells per level, never O(area) fine cells (range_count.hpp:78-80
-    answers from high nodes).
-    `contained=None` (a report) descends every overlapping cell. -> the
-    emitted rows plus the fine cells passing `cond`, with stats columns."""
-    grid = index.grid
-    S, sg = index.super_grid()
-    cols = [c for c in frontier.columns if c != "cell"]
-    below = list(reversed(index.stats_pyramid()))[1:]  # under the top
-    walk = [(sg, grid.cw * S), *[(lg, lcw) for lg, lcw, _ in below],
-            grid.level]
-    stats = [st for _, _, st in below] + [index.cell_stats()]
-    emitted = []
-    for (lg, lcw), child, st in zip(walk, walk[1:], stats):
-        ext = [(f"{grid.coord_sql('cell', k, lg)} * {lcw}",
-                f"{grid.coord_sql('cell', k, lg)} * {lcw} + {lcw - 1}")
-               for k in range(grid.dims)]
-        out = (grid.cover(frontier, ext, False, child).drop("cell")
-               .withColumnRenamed("_cell", "cell").join(st, "cell")
-               .filter(cond))
-        if contained is not None and st is not stats[-1]:
-            emitted.append(out.filter(contained))
-            out = out.filter(~contained)
-        frontier = out.select(*cols, "cell")
-    for e in emitted:
-        out = out.unionByName(e.select(*out.columns))
-    return out
-
-
 def _route(index: SpatialIndex, arr: np.ndarray, names: list,
            lo: np.ndarray, hi: np.ndarray, tests) -> tuple:
-    """Route query shapes against the driver level -> (counts, pairs).
+    """Route query shapes against the driver level -> (counts, cells).
 
     `arr` has one int64 row per shape, its columns `names` (the id
     first); (lo, hi) are its integer extents on the grid dims.
-    tests(side, slo, shi, mx) -> (overlap, inside) of shapes against
-    data bboxes (per-dim slo, shi), inside None for a report; written
-    once, it runs on numpy arrays here (side: a shape column's values
-    per pair, mx: np.maximum) and as Spark conditions below the top
-    level when S > 1 (side: F.col).
+    tests(side, slo, shi) -> (overlap, inside) of shapes against data
+    bboxes (per-dim slo, shi: level cells' bbox bounds), side(c) the
+    values of shape column c per (shape, cell) pair, inside None for a
+    report.
     counts: (id, cnt) rows holding every shape's count from the cells
     it contains, 0 included (None for a report); cells: the boundary
-    fine cells the blob scan visits, each with its shapes as a list
+    cells the blob scan visits, each with its shapes as a list
     (index.cell_lists)."""
     spark, key = index.spark, names[0]
     shapes = pd.DataFrame(arr, columns=names)
-    S, sg = index.super_grid()
     lvl = index.level()
-    rows, cells = index.grid.cover_cells(lo, hi, (sg, index.grid.cw * S))
+    rows, cells = index.grid.cover_cells(lo, hi)
     at = lvl.find(cells)
     rows, at = rows[at >= 0], at[at >= 0]
     over, inside = tests(lambda c: shapes[c].to_numpy()[rows], lvl.lo[at].T,
-                         lvl.hi[at].T, np.maximum)
+                         lvl.hi[at].T)
     counts = None
     if inside is not None:
         full = np.zeros(len(shapes), np.int64)
@@ -144,25 +100,9 @@ def _route(index: SpatialIndex, arr: np.ndarray, names: list,
             pd.DataFrame({key: shapes[key], "cnt": full}),
             f"{key} long, cnt long")
         over &= ~inside
-    if S == 1:
-        return counts, cell_lists(spark, lvl.cell[at[over]],
-                                  {c: arr[rows[over], j]
-                                   for j, c in enumerate(names)})
-    bnd = shapes.iloc[rows[over]].reset_index(drop=True)
-    bnd["cell"] = lvl.cell[at[over]]
-    shape_t = ", ".join(f"{c} long" for c in shapes.columns)
-    cond, contained = tests(
-        F.col, *[[F.col(c) for c in cols]
-                 for cols in bbox_cols(len(index.coord_cols))],
-        lambda a, b: F.greatest(a, F.lit(b) if isinstance(b, int) else b))
-    desc = _prune_join(index, spark.createDataFrame(
-        bnd, f"{shape_t}, cell long"), cond, contained)
-    if contained is None:
-        return counts, shape_lists(desc, names)
-    desc = desc.withColumn("full", contained)
-    counts = counts.unionByName(desc.filter(F.col("full")).select(
-        key, F.col("ccnt").alias("cnt")))
-    return counts, shape_lists(desc.filter(~F.col("full")), names)
+    return counts, cell_lists(spark, lvl.cell[at[over]],
+                              {c: arr[rows[over], j]
+                               for j, c in enumerate(names)})
 
 
 def range_count(index: SpatialIndex, boxes) -> DataFrame:
@@ -227,8 +167,9 @@ def circle_count(index: SpatialIndex, circles) -> DataFrame:
     arr = np.asarray(circles, dtype=np.int64).reshape(-1, d + 2)
     ctr, r = arr[:, 1:1 + d], arr[:, d + 1]
 
-    def tests(side, slo, shi, mx):
+    def tests(side, slo, shi):
         """ball-vs-bbox min / max distance² against r²"""
+        mx = np.maximum
         mind2 = maxd2 = 0
         for c, sl, sh in zip(map(side, ctr_c), slo, shi):
             near = mx(mx(sl - c, c - sh), 0)

@@ -15,7 +15,7 @@ from kdtree_spark import bruteforce as bf
 from kdtree_spark import fixtures, points
 from kdtree_spark import index as index_mod
 from kdtree_spark.catalog import SnapshotStore
-from kdtree_spark.grid import COORD_LIMIT, Grid
+from kdtree_spark.grid import COORD_LIMIT, MAX_CELLS, Grid
 from kdtree_spark.index import SpatialIndex
 from kdtree_spark.queries.knn import knn_candidates, knn_join
 from kdtree_spark.queries.ranges import circle_count, range_count, range_report
@@ -596,8 +596,8 @@ def test_fused_knn_clustered_queries(spark):
 
 
 def test_fused_knn_needy_path(spark):
-    """Queries the probe samples cannot bound take the super-cell
-    prefix-sum bound inside the candidate kernel: k above the probe
+    """Queries the probe samples cannot bound take the level's
+    prefix-sum bound inside the route: k above the probe
     pool, and a query whose home cell is empty. Results must stay
     exact."""
     from kdtree_spark.queries.knn import knn_join
@@ -1001,14 +1001,15 @@ def test_range_ops_d_generic(spark, sf_dir, d):
 
 
 def test_large_grid_pyramid_paths(spark, sf_dir):
-    """Grid(128): exercises the stats pyramid (hierarchical _prune_join
-    descent), super-cell kNN fallback and contained-coarse-cell
-    shortcuts — code paths inactive at the driver gates' Grid(8)
-    (ADVICE r3). Includes a domain-sized box, k far above
-    points-per-cell, and a k whose bound covers over ENUM_CAP cells."""
+    """Grid(128): a routing level of more than 4,096 cells (the driver
+    gates run Grid(8)), the prefix-sum kNN bound over it, the level
+    scan for a cube past ENUM_CAP and contained-cell counts. Includes a
+    domain-sized box, k far above points-per-cell, and a k whose bound
+    covers over ENUM_CAP cells."""
     pts = points.load_points(spark, sf_dir, "uniform").select("pid", "x", "y")
     idx = SpatialIndex.build(spark, pts, grid=Grid(128))
-    assert idx.stats_pyramid(), "Grid(128) must build pyramid levels"
+    lvl = idx.level()  # the fine grid, every non-empty cell its own row
+    assert len(lvl.cell) > 4096 and (lvl.cell < 128 ** 2).all()
     pdf = pts.toPandas()
     P = pdf[["x", "y"]].to_numpy(np.int64)
     ids = pdf["pid"].to_numpy(np.int64)
@@ -1036,11 +1037,13 @@ def test_large_grid_pyramid_paths(spark, sf_dir):
         assert cgot[i] == int((d2 <= float(r) * r).sum())
 
     # kNN with k >> points-per-cell (n/16384 per cell) forces the
-    # super-cell fallback + multi-cell merges
+    # prefix-sum bound + multi-cell merges; the fine level keeps its
+    # candidates tighter than a coarser routing level's 83 rows a query
     q = spark.createDataFrame(
         [(int(i), int(x), int(y)) for i, (x, y) in enumerate(P[:8])],
         "qid long, x long, y long")
     k = 64
+    assert knn_candidates(idx, q, k).count() / 8 < 83
     out = knn_join(idx, q, k).toPandas()
     for qi in range(8):
         d2 = ((P - P[qi]) ** 2).sum(axis=1)
@@ -1049,7 +1052,7 @@ def test_large_grid_pyramid_paths(spark, sf_dir):
         assert list(mine["nid"]) == list(ids[order])
 
     # k = 2000: the prefix-sum bound's cube spans more than ENUM_CAP
-    # cells, so the kernel expands super cells into fine children
+    # cells, so the route scans the level's cells instead
     from kdtree_spark.queries import knn as K
     k = 2000
     ub = K._prefix_ub(P[:2], idx.level(), k)
@@ -1065,11 +1068,29 @@ def test_large_grid_pyramid_paths(spark, sf_dir):
     idx.unpersist()
 
 
+def test_for_count_stays_within_cell_cap():
+    """Past MAX_CELLS cells g stops growing (salting splits the large
+    cells); below about 5e8 rows the grid is the 8k-per-cell one."""
+    assert Grid.for_count(10 ** 12).g ** 2 <= MAX_CELLS
+    assert Grid.for_count(10 ** 12, dims=3).g ** 3 <= MAX_CELLS
+    assert Grid.for_count(10 ** 12).g == 256
+    assert Grid.for_count(10 ** 8).g == 111
+
+
+def test_build_rejects_grid_past_cell_cap():
+    """An explicit grid past MAX_CELLS is rejected before any Spark
+    job: the session and the points are never touched."""
+    with pytest.raises(ValueError, match="cap"):
+        SpatialIndex.build(None, None, grid=Grid(257))
+    with pytest.raises(ValueError, match="cap"):
+        SpatialIndex.build(None, None, grid=Grid(41, dims=3))
+
+
 @pytest.mark.parametrize("g", [4, 128])
 def test_range_count_off_grid_points(spark, g):
     """Points off the grid live in its boundary cells, so boxes past
-    the grid find them; inverted boxes count nothing. Grid(128) runs
-    the stats-pyramid descent, Grid(4) the single-level cover."""
+    the grid find them; inverted boxes count nothing, on a coarse
+    Grid(4) and on a Grid(128) of mostly empty cells."""
     rng = np.random.default_rng(43)
     P = np.vstack([rng.integers(0, 10**6, (300, 2)),
                    [[1_000_005, 500_000], [1_000_010, 500_003],
