@@ -29,9 +29,11 @@ inside a cell, new rows append to the extra log / tombstone set and
 rebuild only past the INBALANCE_RATIO=30 threshold (`tree_node.hpp:
 127-131` analogue); across the index, each batch produces a
 checkpointed touched-cell DELTA fragment layered over the inherited
-fragments, each filtered by the batch's touched-cell list (one SQL
-execution: a broadcast semi-join selects the touched blobs) — untouched
-cells are never shuffled, deserialized, or rewritten. A fragment whose
+fragments, each filtered by the batch's touched-cell list. The batch's
+cells are computed on the driver, and one SQL execution scans the
+touched blobs in place through the reads' broadcast-hash join
+(scan_blobs), so no blob is shuffled and untouched cells are never
+read, deserialized, or rewritten. A fragment whose
 rows later deltas all rewrote leaves the union, as the reference's
 rebuilt subtree replaces the old one (`batch_insert.hpp:60-191`), and a
 full compaction bounds the fragments that stay. Deletes are
@@ -65,8 +67,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (ArrayType, BinaryType, BooleanType,
-                               _parse_datatype_string)
+from pyspark.sql.types import _parse_datatype_string
 
 from .grid import MAX_CELLS, Grid
 from .localtree import LocalKDTree
@@ -301,87 +302,6 @@ def map_arrow(df: DataFrame, fn, schema: str) -> DataFrame:
     return df.mapInArrow(run, schema)
 
 
-def _literal(dtype) -> str:
-    """SQL of a non-NULL placeholder value of Spark type `dtype`."""
-    if isinstance(dtype, BooleanType):
-        return "false"
-    if isinstance(dtype, BinaryType):
-        return "X''"
-    fill = "array()" if isinstance(dtype, ArrayType) else "0"
-    return f"CAST({fill} AS {dtype.simpleString()})"
-
-
-def cogroup(left: DataFrame, right: DataFrame, keys: list, fn,
-            schema: str) -> DataFrame:
-    """fn(key, left, right) per group of `keys`, like
-    left.groupby(keys).cogroup(right.groupby(keys)), but as ONE map
-    over the union of both sides: one exchange and one Spark job
-    instead of two. update() rewrites its touched cells through it (a
-    new cell needs its group even with no blob on the right). Each side
-    reaches fn as {column: values} of its own columns (_column) and fn
-    returns the output columns (_arrow_fn). Each side is one projection
-    whose rows fill the other side's columns with non-NULL SQL literals
-    (an Arrow NULL would make to_numpy return float64 for an int64
-    column); a flag column tells them apart again.
-
-    The exchange makes one partition per core (AQE leaves an explicit
-    count alone), each sorted by `keys`, and one mapInArrow walks a
-    partition's groups in order: a Python task opens one Arrow stream,
-    not one per group, and the tasks run in one wave. A group's rows
-    may span Arrow batches, never partitions."""
-    flag = "_right"
-    ls, rs = left.schema, right.schema
-    lcols, rcols = ls.names, rs.names
-    types = {f.name: f.dataType for f in [*rs, *ls]}
-    cols = list(dict.fromkeys(lcols + rcols))
-
-    def rows(df, names, is_right):
-        return df.selectExpr(*[f"`{c}`" if c in names
-                               else f"{_literal(types[c])} AS `{c}`"
-                               for c in cols],
-                             f"{str(is_right).lower()} AS {flag}")
-
-    def side(t, names, m):
-        at = np.flatnonzero(m)
-        return {c: _column(t.column(c), at) for c in names}
-
-    def kernel(key, t):
-        r = _column(t.column(flag))
-        return fn(key, side(t, lcols, ~r), side(t, rcols, r))
-
-    out = to_arrow_schema(_parse_datatype_string(schema))
-
-    def run(batches):
-        _rescan_changed_zips_only()
-        held = None  # the rows of the last group seen, maybe incomplete
-        for b in batches:
-            t = pa.Table.from_batches([b])
-            if held is not None:
-                t = pa.concat_tables([held, t])
-            if not t.num_rows:
-                continue
-            new = np.zeros(t.num_rows, bool)
-            new[0] = True
-            for c in keys:
-                k = _column(t.column(c))
-                new[1:] |= k[1:] != k[:-1]
-            at = [*np.flatnonzero(new).tolist(), t.num_rows]
-            for lo, hi in zip(at[:-2], at[1:-1]):
-                g = t.slice(lo, hi - lo)
-                yield from _table(kernel(tuple(g.column(c)[0].as_py()
-                                               for c in keys), g),
-                                  out).to_batches()
-            held = t.slice(at[-2])
-        if held is not None:
-            yield from _table(kernel(tuple(held.column(c)[0].as_py()
-                                           for c in keys), held),
-                              out).to_batches()
-    n = left.sparkSession.sparkContext.defaultParallelism
-    return (rows(left, lcols, False).union(rows(right, rcols, True))
-            .repartition(n, *keys).sortWithinPartitions(*keys)
-            .mapInArrow(run, schema))
-
-
 def cell_lists(spark: SparkSession, cell: np.ndarray, cols: dict
                ) -> DataFrame:
     """Driver arrays of shapes (`cols`: field -> numpy values, one per
@@ -401,25 +321,35 @@ def cell_lists(spark: SparkSession, cell: np.ndarray, cols: dict
             shapes)}))
 
 
-def scan_blobs(index: "SpatialIndex", cells: DataFrame, fn,
-               schema: str) -> DataFrame:
-    """fn(cell, shapes, blob) -> output columns, once per blob of every
-    cell in `cells` (cell_lists: one row per candidate cell, its shapes
-    as a list), shapes reaching fn as {field: values}.
-    ONE broadcast-hash join streams the cached blob table in place
-    against the cells and one mapInArrow runs fn per joined row: no
+def scan_blobs(frames: list, cells: DataFrame, fn, schema: str,
+               fed: list = ()) -> DataFrame:
+    """fn(cell, salt, shapes, blob) -> output columns, once per blob row
+    of `frames` (blob tables: a read's index.df, an update's fragments)
+    whose cell is in `cells` (cell_lists: one row per candidate cell,
+    its shapes as a list), shapes reaching fn as {field: values}.
+    ONE broadcast of the cells, hash-joined to each frame, streams the
+    blob tables in place, and one mapInArrow runs fn per joined row: no
     blob is shuffled or sorted, only the candidate cells' blobs cross
     the Arrow hop, and a salted cell's blobs are scanned by whichever
-    tasks hold them. Each call sees one blob, so the caller's merge
-    composes the partials (counts sum, reports union, kNN top-k lists
-    merge)."""
+    tasks hold them. Each call sees one blob, so the caller composes the
+    partials (counts sum, reports union, kNN top-k lists merge, an
+    update's rewritten blobs form its delta). The i-th Observation of
+    `fed` collects the (cell, salt) keys the i-th frame fed to fn."""
+    cells = F.broadcast(cells)
+    joined = []
+    for f, o in itertools.zip_longest(frames, fed):
+        j = f.select("cell", "salt", "blob").join(cells, "cell")
+        joined.append(j if o is None else j.observe(
+            o, F.expr("collect_set(struct(cell, salt)) AS keys")))
+
     def run(c: dict) -> dict:
-        outs = [o for o in map(fn, c["cell"].tolist(), c["shapes"],
-                               c["blob"]) if o]
-        return ({k: np.concatenate([o[k] for o in outs]) for k in outs[0]}
-                if outs else {})
-    return map_arrow(index.df.select("cell", "blob")
-                     .join(F.broadcast(cells), "cell"), run, schema)
+        outs = [o for o in map(fn, c["cell"].tolist(), c["salt"].tolist(),
+                               c["shapes"], c["blob"]) if o]
+        return {k: np.concatenate(v) if isinstance(v[0], np.ndarray)
+                else [x for p in v for x in p]
+                for k, v in ((k, [o[k] for o in outs]) for k in outs[0])
+                } if outs else {}
+    return map_arrow(_union(joined), run, schema)
 
 
 def observed(obs: Observation) -> dict | None:
@@ -475,6 +405,16 @@ def _union(frames) -> DataFrame:
     return functools.reduce(DataFrame.unionByName, frames)
 
 
+def _salt_lists(cell, salt) -> dict:
+    """Blob-row keys as {cell: ascending salts (a tuple)}."""
+    cell, salt = np.asarray(cell, np.int64), np.asarray(salt, np.int64)
+    order = np.lexsort((salt, cell))
+    cell, salt = cell[order], salt[order]
+    at = np.flatnonzero(np.diff(cell)) + 1
+    return {int(c[0]): tuple(s.tolist())
+            for c, s in zip(np.split(cell, at), np.split(salt, at)) if len(c)}
+
+
 class Level(NamedTuple):
     """An index version's routing level (SpatialIndex.level): per
     non-empty grid cell (ascending `cell`), its live count, highest
@@ -520,6 +460,8 @@ class SpatialIndex:
         # the driver-held routing level (level()): a build or an update
         # hands it over, any other version aggregates it on first read
         self._level: Level | None = None
+        # per cell that has blob rows, their salts (_blob_salts)
+        self._salts: dict | None = None
         # delta versioning (update()): df is the union of the fragments'
         # frames. A version made from a plain frame is one fragment that
         # holds no storage; a build or load manifest gives its blob row
@@ -601,6 +543,9 @@ class SpatialIndex:
                             version=str(uuid.uuid4())[:8])
         idx._frags = [_Frag(df, df, idx.manifest["cells"])]
         idx._level = idx._blob_level(row["rows"])
+        # every built blob holds points, so the level rows name them all
+        idx._salts = _salt_lists([r["cell"] for r in row["rows"]],
+                                 [r["salt"] for r in row["rows"]])
         return idx
 
     # ------------------------------------------------------------------ stats
@@ -639,6 +584,20 @@ class SpatialIndex:
                          .select("cell").distinct().collect())
             self.manifest["hot_cells"] = hot
         return hot
+
+    def _blob_salts(self) -> dict:
+        """{cell: its blob rows' salts, ascending} over every cell that
+        has a blob row, emptied ones included: where update() routes a
+        salted cell's inserts, and which touched cells need a
+        placeholder. Fixed per cell once the cell has a row, since an
+        update never adds a salt; build() hands it over and update()
+        adds the cells its placeholders created. Any other version
+        collects it here once (one job)."""
+        if self._salts is None:
+            t = self.df.select("cell", "salt").toArrow()
+            self._salts = _salt_lists(_column(t.column("cell")),
+                                      _column(t.column("salt")))
+        return self._salts
 
     def level(self) -> Level:
         """The routing level every read descends, on the driver, as
@@ -715,24 +674,37 @@ class SpatialIndex:
                deletes: DataFrame | None = None) -> "SpatialIndex":
         """Batch insert/delete (I1, D1/D2). Both args: (pid, <coord_cols>).
 
-        Physical plan (the reference rebuilds only tagged subtrees,
-        `inner_tree.hpp:78-95`; the distributed analogue is touching only
-        updated cells): one SQL execution. A broadcast semi-join on the
-        batch's cells feeds ONLY touched blobs into the Python cogroup,
-        whose output is checkpointed as the touched-cell DELTA; the
-        batch's distinct cells ride back on an Observation, and the new
-        version is the delta unioned with the inherited fragments, each
-        that fed the cogroup filtered to its untouched cells by one
-        literal `cell IN (...)` — untouched blobs are neither shuffled,
-        deserialized, nor rewritten to storage, so a 0.01% batch pays
-        O(batch), not O(index), in both compute AND materialized bytes.
-        Touched cells go log-structured with threshold rebuild
-        (LocalKDTree.with_updates).
+        Physical plan (the reference rebuilds only tagged subtrees in
+        place, `batch_insert.hpp:60-191`; the distributed analogue is
+        rewriting only the touched cells' blobs where they lie): the
+        batch comes to the driver once, as Arrow, and its cells, salts
+        and touched-cell list are driver numpy. One SQL execution then
+        scans the touched blobs in place, as reads do (scan_blobs): each
+        fragment's frame is hash-joined to one broadcast row per touched
+        cell holding that cell's batch rows, plus one placeholder row
+        (salt 0, empty blob) per touched cell without a blob row, and one
+        mapInArrow rewrites each joined blob (LocalKDTree.with_updates;
+        a placeholder builds a new cell's tree from its inserts). No
+        blob is shuffled. The rewritten blobs are coalesced to at most
+        defaultParallelism partitions and checkpointed as the
+        touched-cell DELTA, and the new version is the delta unioned
+        with the inherited fragments, each that fed the scan filtered to
+        its untouched cells by one literal `cell IN (...)` — untouched
+        blobs are neither read, deserialized, nor rewritten to storage,
+        so a 0.01% batch pays O(batch), not O(index), in both compute
+        AND materialized bytes. Touched cells go log-structured with
+        threshold rebuild.
+
+        Routing inside a cell: an unsalted cell's one blob takes all its
+        rows. A salted cell's insert goes to salts[pid % len(salts)],
+        the cell's blob-row salts held on the driver (fixed at build:
+        an update never adds a salt), and its deletes are routed by
+        membership, each blob dropping the ids it holds.
 
         Superseded fragments leave the union. Each fragment counts the
         blob rows it still serves; the delta rewrites every blob of a
         touched cell, so this update subtracts the (cell, salt) keys an
-        Observation per fragment saw it feed into the cogroup (a set: a
+        Observation per fragment saw it feed into the scan (a set: a
         re-run task cannot subtract twice). A fragment at 0, an empty
         delta included, is left out; one of unknown count never is. An
         update that would leave more than COMPACT_EVERY fragments
@@ -764,94 +736,90 @@ class SpatialIndex:
         cc = list(self.coord_cols)
         cdt = np.float64 if self.float_coords else np.int64
         schema = INDEX_SCHEMA_F64 if self.float_coords else INDEX_SCHEMA
-        cell_sql = self.grid.cell_sql(cc, self.float_coords)
-        parts = [df.selectExpr("pid", *cc, f"CAST({op} AS int) AS op")
+        parts = [df.selectExpr("pid", *cc, f"CAST({op} AS tinyint) AS op")
                  for df, op in ((inserts, 1), (deletes, 0)) if df is not None]
         if not parts:
             return self
-        ups = _union(parts).selectExpr("*", f"{cell_sql} AS cell")
+        with job_description(self.spark, "update:rewrite"):
+            salts = self._blob_salts()
+            # the whole batch, once, as Arrow: O(batch) on the driver
+            t = _union(parts).toArrow()
+        ups = {c: _column(t.column(c)) for c in ["pid", "op"]}
+        ups.update({c: _column(t.column(c)).astype(cdt, copy=False)
+                    for c in cc})
+        cell = grid.home_cells(np.column_stack([ups[c] for c in cc]))
+        # each row's blob: the salt of the blob it goes to, or -1 for a
+        # salted cell's delete (every blob of the cell tests membership)
+        ups["salt"] = np.zeros(len(cell), np.int32)
+        touched = np.unique(cell).tolist()
+        new_cells = []
+        for c in touched:
+            s = salts.get(c)
+            if s is None:  # no blob row: a placeholder builds one
+                new_cells.append(c)
+            elif s != (0,):  # salted cells are rare: O(batch) each
+                m = cell == c
+                s = np.asarray(s, np.int32)
+                ups["salt"][m] = np.where(
+                    ups["op"][m] == 1, s[ups["pid"][m] % len(s)],
+                    s[0] if len(s) == 1 else -1)
 
-        def apply_updates(key, upd: dict, idx: dict) -> dict:
-            cell = key[0]
-            ins = upd["op"] == 1
-            del_ = upd["op"] == 0
-            pts = np.column_stack([upd[c] for c in cc]).astype(cdt)
-            ins_pts, del_pts = pts[ins], pts[del_]
-            ids = upd["pid"].astype(np.int64, copy=False)
-            ins_ids, del_ids = ids[ins], ids[del_]
-            if len(idx["salt"]) == 0:
-                # brand-new cell: build from inserts alone
-                if not len(ins_ids):
-                    return {}
-                return _rows([_tree_row(
-                    cell, 0, LocalKDTree.build(ins_pts, ins_ids))])
-            nsalt = len(idx["salt"])
-            ins_salt = (ins_ids % nsalt) if nsalt > 1 else np.zeros(
-                len(ins_ids), np.int64)
-            out = []
-            for j, (salt, blob) in enumerate(zip(idx["salt"], idx["blob"])):
-                tree = LocalKDTree.from_bytes(blob)
-                m = ins_salt == j
-                # deletes are routed by membership (exact, partial-cover);
-                # an unsalted cell's one blob takes them all
-                own = (np.isin(del_ids, tree.ids)
-                       | np.isin(del_ids, tree.extra_ids)) if nsalt > 1 \
-                    else slice(None)
-                t2 = tree.with_updates(ins_pts[m], ins_ids[m],
-                                       del_pts[own], del_ids[own])
-                out.append(_tree_row(cell, int(salt), t2))
-            return _rows(out)
+        def rewrite(cell: int, salt: int, b: dict, blob) -> dict:
+            pts = np.column_stack([b[c] for c in cc])
+            mine = b["salt"] == salt
+            ins = np.flatnonzero(mine & (b["op"] == 1))
+            if not len(blob):  # a placeholder: a new cell's first tree
+                return _rows([_tree_row(cell, salt, LocalKDTree.build(
+                    pts[ins], b["pid"][ins]))]) if len(ins) else {}
+            tree = LocalKDTree.from_bytes(blob)
+            dels = np.flatnonzero(mine & (b["op"] == 0))
+            owned = np.flatnonzero((b["salt"] < 0) & (b["op"] == 0))
+            dels = np.concatenate([dels, owned[
+                np.isin(b["pid"][owned], tree.ids)
+                | np.isin(b["pid"][owned], tree.extra_ids)]])
+            return _rows([_tree_row(cell, salt, tree.with_updates(
+                pts[ins], b["pid"][ins], pts[dels], b["pid"][dels]))])
 
-        # the blobs of the batch's cells: a broadcast semi-join per
-        # fragment (one broadcast, reused), each fragment observing the
-        # (cell, salt) keys it fed, and the batch observing its cells,
-        # so the update is one SQL execution with no driver round trip
-        # before it. The broadcast holds a cell per batch row: O(batch)
-        cells = F.broadcast(ups.select("cell"))
+        frames = [f.frame for f in self._frags]
+        if new_cells:
+            frames.append(self.spark.createDataFrame(pa.table({
+                "cell": pa.array(new_cells, pa.int64()),
+                "salt": pa.array(np.zeros(len(new_cells), np.int32)),
+                "blob": pa.array([b""] * len(new_cells), pa.binary())})))
         fed = [Observation() for _ in self._frags]  # single-use: one each
-        batch = Observation()
-        new_blobs = cogroup(
-            ups.observe(batch, F.expr("collect_set(cell) AS cells")),
-            _union(f.frame.join(cells, "cell", "semi")
-                   .select("cell", "salt", "blob")
-                   .observe(o, F.expr("collect_set(struct(cell, salt)) "
-                                      "AS keys"))
-                   for f, o in zip(self._frags, fed)),
-            ["cell"], apply_updates, schema)
-        # DELTA versioning: checkpoint ONLY the rebuilt touched-cell
+        # DELTA versioning: checkpoint ONLY the rewritten touched-cell
         # blobs — O(batch) materialization, never O(index). The new
         # version's df is the inherited fragments each filtered by the
-        # touched-cell predicate (untouched blobs are neither shuffled,
-        # deserialized, NOR rewritten to storage), unioned with the
-        # delta. localCheckpoint truncates the delta's lineage (which
-        # references the parent), so chained updates grow the plan by
-        # one filter per fragment — linear, not exponential. The
-        # rewritten blobs' keys, and their level rows when the level is
-        # carried, ride on the checkpoint.
+        # touched-cell predicate, unioned with the delta. localCheckpoint
+        # truncates the delta's lineage (which references the parent),
+        # so chained updates grow the plan by one filter per fragment —
+        # linear, not exponential — and the coalesce keeps a delta at
+        # most defaultParallelism partitions, not the fragment union's
+        # count. The rewritten blobs' keys, and their level rows when
+        # the level is carried, ride on the checkpoint.
         carry = self._level is not None
         obs = Observation()
         with job_description(self.spark, "update:rewrite"):
             cols = ", ".join(LEVEL_COLS if carry else ["cell", "salt"])
-            delta = new_blobs.observe(obs, F.expr(
-                f"to_json(collect_list(struct({cols}))) AS rows")
-            ).localCheckpoint(eager=True)
+            delta = (scan_blobs(frames, cell_lists(self.spark, cell, ups),
+                                rewrite, schema, fed)
+                     .coalesce(self.spark.sparkContext.defaultParallelism)
+                     .observe(obs, F.expr(
+                         f"to_json(collect_list(struct({cols}))) AS rows"))
+                     .localCheckpoint(eager=True))
         # read as a Java string: Observation.get's pickled row crosses
         # py4j as bytes that it decodes one at a time in Python, about
         # 0.2 s per MB of probe samples
         rows = obs._jo.getRow()
         rows = json.loads(rows.getString(0)) if rows.size() else []
-        # the touched-cell set (O(batch), never O(index)): every
-        # fragment filter below, in this version and its descendants
-        # until compaction, is a literal predicate on it — no broadcast
-        # per read, and no lineage back to the caller's input frames (a
-        # streaming caller deletes evicted slice files)
-        got = observed(batch)
-        touched = sorted(int(c) for c in got["cells"]) if got else []
         # the fragment filter names `salt` (never negative) next to
         # `cell`: a predicate on `cell` alone would be inferred through
-        # the join key onto the small side of every semi-join a read
-        # pushes into the fragment union, so one broadcast per read
-        # would become one per fragment
+        # the join key onto the broadcast side of every join a scan
+        # makes per fragment, so one broadcast per scan would become
+        # one per fragment. Every filter below, in this version and its
+        # descendants until compaction, is a literal predicate on the
+        # touched-cell list (O(batch)): no lineage back to the caller's
+        # input frames (a streaming caller deletes evicted slice files)
         untouched = ~in_list("cell", touched) | (F.col("salt") < 0)
         frags = []
         for f, o in zip(self._frags, fed):
@@ -890,6 +858,9 @@ class SpatialIndex:
         new = SpatialIndex(self.spark, grid, _union(f.frame for f in frags),
                            manifest, coord_cols=self.coord_cols)
         new._frags = frags
+        # a placeholder that built a blob gave its cell salt 0
+        new._salts = {**salts, **{r["cell"]: (0,) for r in rows
+                                  if r["cell"] not in salts}}
         if carry:
             # the parent's rows of untouched cells plus the delta's (a
             # touched cell whose blobs all emptied drops out): driver

@@ -239,7 +239,7 @@ def _blob_knn(index: SpatialIndex, k: int, count: bool = False):
     cdt = _cdt(index)
     hot = frozenset(index.hot_cells())
 
-    def scan(cell: int, q: dict, blob) -> dict:
+    def scan(cell: int, _, q: dict, blob) -> dict:
         st: dict | None = {} if count else None
         d, i = LocalKDTree.from_bytes(blob).knn(
             np.column_stack([q[c] for c in cc]).astype(cdt, copy=False), k,
@@ -263,8 +263,8 @@ def knn_join(index: SpatialIndex, queries: DataFrame, k: int) -> DataFrame:
 
     Every candidate cell's blobs scan in ONE broadcast-hash join, and
     one window over qid merges every per-blob top-k."""
-    local = scan_blobs(index, _cells(index, queries, k), _blob_knn(index, k),
-                       "qid long, nid long, dist_sq double")
+    local = scan_blobs([index.df], _cells(index, queries, k),
+                       _blob_knn(index, k), "qid long, nid long, dist_sq double")
     w = Window.partitionBy("qid").orderBy(F.col("dist_sq").asc(),
                                           F.col("nid").asc())
     dist = (F.col("dist_sq") if index.float_coords
@@ -305,7 +305,7 @@ def knn_scan_stats(index: SpatialIndex, queries: DataFrame, k: int
     search with counting on (and knn_join's tighten flags, so the
     block-scan bound's points count too), so it is for audits, not the
     hot path."""
-    per_blob = scan_blobs(index, _cells(index, queries, k),
+    per_blob = scan_blobs([index.df], _cells(index, queries, k),
                           _blob_knn(index, k, count=True),
                           "qid long, scanned long, leaves long")
     return (per_blob.groupBy("qid")

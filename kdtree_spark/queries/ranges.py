@@ -48,10 +48,10 @@ def _counts(index: SpatialIndex, counts: DataFrame, cells: DataFrame,
     per-shape counts), summed by one groupBy."""
     key = counts.columns[0]
 
-    def scan(_, b: dict, blob) -> dict:
+    def scan(_, __, b: dict, blob) -> dict:
         return {key: b[key], "cnt": count(LocalKDTree.from_bytes(blob), b)}
 
-    return (scan_blobs(index, cells, scan, f"{key} long, cnt long")
+    return (scan_blobs([index.df], cells, scan, f"{key} long, cnt long")
             .unionByName(counts).groupBy(key).agg(F.sum("cnt").alias("cnt")))
 
 
@@ -141,7 +141,7 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
     _, cells = _route(index, arr, ["box_id", *blo_c, *bhi_c], lo[:, :gd],
                       hi[:, :gd], lambda *a: (tests(*a)[0], None))
 
-    def scan(_, b: dict, blob) -> dict:
+    def scan(_, __, b: dict, blob) -> dict:
         bi, pp, ii = LocalKDTree.from_bytes(blob).range_report(
             np.column_stack([b[c] for c in blo_c + bhi_c]))
         if not len(ii):
@@ -150,7 +150,7 @@ def range_report(index: SpatialIndex, boxes) -> DataFrame:
                 **{c: pp[:, j] for j, c in enumerate(cc)}}
 
     coord_schema = ", ".join(f"{c} {ct}" for c in cc)
-    return scan_blobs(index, cells, scan,
+    return scan_blobs([index.df], cells, scan,
                       f"box_id long, pid long, {coord_schema}")
 
 

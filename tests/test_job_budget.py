@@ -5,7 +5,9 @@ with the fragments SpatialIndex.update layers over an index: the build
 and every update hand the next version its driver-held routing level,
 so no read runs a job to rebuild it; reads leave nothing in storage; a
 partial update runs a fixed number of jobs, and a chain of whole-index
-updates stays at one fragment; connected_components and dbscan stay
+updates stays at one fragment; an update scans the touched blobs in
+place and leaves a delta of at most defaultParallelism partitions;
+connected_components and dbscan stay
 within a fixed budget. Answers are checked against brute force every
 time, so a plan that saves jobs by dropping work fails here too."""
 
@@ -30,9 +32,9 @@ KNN_JOBS = 3  # Spark jobs per knn_join call, after a build or an
 # update, at any fragment count: the candidate cells' broadcast, the
 # blob scan into the merge window's exchange, and the result
 RANGE_JOBS = 3  # the same for one range_count or circle_count call
-UPDATE_JOBS = 3  # a partial update, one SQL execution: the batch cells'
-# broadcast, the cogroup's exchange and the checkpoint (one job more
-# when it compacts)
+UPDATE_JOBS = 3  # a partial update: the batch's Arrow collect, then one
+# SQL execution of two, the touched cells' broadcast and the in-place
+# blob scan into the checkpoint (one job more when it compacts)
 PATH_CC_JOBS = 60  # connected_components on a 400-node path
 DBSCAN_JOBS = 17  # dbscan on 2,000 uniform points, ~10 neighbours each
 # (16 on local[2] and local[4], 16 or 17 on local[9], 17 on local[1])
@@ -246,13 +248,18 @@ def test_updates_without_reads_stay_bounded(spark):
         live.update({int(i): p for i, p in zip(ipid, ins)})
         return new
 
-    held, frags, ujobs = [], [], []
+    held, frags, ujobs, parts = [], [], [], []
     for g in range(COMPACT_EVERY + 2):
         idx = step(idx, g)
         assert idx._level is not None
         held.append(len(owned & _persisted(spark)))
         frags.append(idx.manifest["frags"])
+        if not idx.manifest["compacted"]:  # the last fragment: the delta
+            parts.append(idx._frags[-1].frame.rdd.getNumPartitions())
     assert frags == [*range(2, COMPACT_EVERY + 1), 1, 2, 3], frags
+    # each delta is coalesced, not the partition count of the fragment
+    # union it was scanned from (which grows with every fragment)
+    assert max(parts) <= spark.sparkContext.defaultParallelism, parts
     assert held == frags, (held, frags)
     # a compaction costs one job more than a partial update; each job
     # carries its phase's label, in phase order
@@ -386,6 +393,60 @@ def test_reads_scan_blobs_in_place(spark):
             below = above[above.index("MapInArrow") + 1:]
             assert not [n for n in below if "Exchange" in n
                         or "Shuffle" in n or n == "Sort"], above
+    idx.unpersist()
+
+
+def test_update_scans_blobs_in_place(spark, monkeypatch):
+    """A partial update's delta (the frame it localCheckpoints) is
+    computed by an executed plan holding exactly one MapInArrow, and
+    the path from it down to each fragment's scan (the build's cached
+    table, an earlier delta's checkpoint) holds no exchange or sort: an
+    update shuffles no blob. The update also builds a new cell (a
+    placeholder row), and the reads after it match brute force."""
+    rng = np.random.default_rng(47)
+    n, half, grid = 2000, COORD_LIMIT // 2, Grid(4)
+    pts = np.column_stack([rng.integers(0, half, n),
+                           rng.integers(0, COORD_LIMIT, n)])
+    live = {i: p for i, p in enumerate(pts)}
+    idx = SpatialIndex.build(
+        spark, _frame(spark, pid=np.arange(n, dtype=np.int64),
+                      x=pts[:, 0], y=pts[:, 1]),
+        grid=grid, n_hint=n)
+    frames = []
+    ckpt = type(idx.df).localCheckpoint
+
+    def recorded(df, *a, **kw):
+        frames.append(df)
+        return ckpt(df, *a, **kw)
+
+    # the second batch adds a cell at cx = 3, where no blob lies
+    extra = [np.zeros((0, 2), np.int64), grid.cw * 3 + rng.integers(
+        0, grid.cw, size=(5, 2))]
+    for g in range(2):
+        ins = np.concatenate([rng.integers(0, half, size=(40, 2)), extra[g]])
+        ipid = np.arange(10**6 + 100 * g, 10**6 + 100 * g + len(ins),
+                         dtype=np.int64)
+        monkeypatch.setattr(type(idx.df), "localCheckpoint", recorded)
+        idx = idx.update(_frame(spark, pid=ipid, x=ins[:, 0], y=ins[:, 1]))
+        monkeypatch.undo()
+        live.update({int(i): p for i, p in zip(ipid, ins)})
+    assert idx.manifest["frags"] == 2 and len(frames) == 2
+    paths = list(_plan_paths(frames[-1]._jdf.queryExecution()
+                             .executedPlan()))
+    assert [n for n, _ in paths].count("MapInArrow") == 1, paths
+    scans = [(n, above) for n, above in paths
+             if n == "InMemoryTableScan" or n.startswith("Scan ExistingRDD")]
+    assert {n.split()[0] for n, _ in scans} == {"InMemoryTableScan",
+                                                "Scan"}, paths
+    for _, above in scans:
+        below = above[above.index("MapInArrow") + 1:]
+        assert not [n for n in below if "Exchange" in n
+                    or "Shuffle" in n or n == "Sort"], above
+    q = rng.integers(0, COORD_LIMIT, size=(16, 2))
+    q[0] = extra[1][0]
+    boxes = [(0, 0, 0, COORD_LIMIT - 1, COORD_LIMIT - 1),
+             (1, 3 * grid.cw, 3 * grid.cw, COORD_LIMIT - 1, COORD_LIMIT - 1)]
+    _within_budget(_read(spark, idx, live, q, boxes, 5))
     idx.unpersist()
 
 

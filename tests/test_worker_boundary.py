@@ -1,6 +1,7 @@
 """The Python boundary of the index operators (index.py): the narrowed
-zip rescan that every index kernel installs in its worker process, and
-the Arrow cogroup's empty-side groups, checked against brute force."""
+zip rescan that every index kernel installs in its worker process, a
+blob scan whose kernel returns no rows, and the update's touched cells
+without a live blob, checked against brute force."""
 
 from __future__ import annotations
 
@@ -20,7 +21,8 @@ import pytest
 
 from kdtree_spark import bruteforce as bf
 from kdtree_spark.grid import COORD_LIMIT, Grid
-from kdtree_spark.index import SpatialIndex, _rescan_changed_zips_only, cogroup
+from kdtree_spark.index import (SpatialIndex, _rescan_changed_zips_only,
+                                cell_lists, map_arrow, scan_blobs)
 from kdtree_spark.queries.knn import knn_join
 from kdtree_spark.queries.ranges import range_count, range_report
 
@@ -54,33 +56,26 @@ def test_rewritten_zip_is_reread(tmp_path, monkeypatch):
     assert importlib.import_module(name).VALUE == 22
 
 
-def _one_row_per_key(spark, n: int):
-    left = spark.createDataFrame(pd.DataFrame(
-        {"k": np.arange(n, dtype=np.int64), "a": np.ones(n, np.int64)}))
-    right = spark.createDataFrame(pd.DataFrame(
-        {"k": np.arange(n, dtype=np.int64), "b": np.ones(n, np.int64)}))
-    return left, right
-
-
 def test_addpyfile_mid_session_imports_in_later_task(spark, tmp_path):
     """A .py file (and a zip) shipped with addPyFile after index kernels
     have run in the workers import in a later task."""
-    left, right = _one_row_per_key(spark, 16)
+    keys = spark.createDataFrame(pd.DataFrame(
+        {"k": np.arange(16, dtype=np.int64)}))
 
-    def run(fn):
-        return cogroup(left, right, ["k"], fn, "k long, v long").toPandas()
+    def run(v):
+        return map_arrow(keys, lambda c: {"k": c["k"], "v": [v()] * len(
+            c["k"])}, "k long, v long").toPandas()
 
-    assert len(run(lambda key, l, r: {"k": [key[0]], "v": [0]})) == 16
+    assert len(run(lambda: 0)) == 16
     name = f"kds_late_{uuid.uuid4().hex[:8]}"
     (tmp_path / f"{name}.py").write_text("VALUE = 7\n")
     _write_zip(tmp_path / f"{name}_z.zip", f"{name}_z", "VALUE = 8\n")
     spark.sparkContext.addPyFile(str(tmp_path / f"{name}.py"))
     spark.sparkContext.addPyFile(str(tmp_path / f"{name}_z.zip"))
 
-    def late(key, l, r):
-        v = (importlib.import_module(name).VALUE * 10
-             + importlib.import_module(f"{name}_z").VALUE)
-        return {"k": [key[0]], "v": [v]}
+    def late():
+        return (importlib.import_module(name).VALUE * 10
+                + importlib.import_module(f"{name}_z").VALUE)
     got = run(late)
     assert len(got) == 16 and (got["v"] == 78).all()
 
@@ -90,7 +85,7 @@ _MARKER_SCRIPT = textwrap.dedent("""
     import numpy as np
     import pandas as pd
     sys.path.insert(0, sys.argv[1])
-    from kdtree_spark.index import cogroup
+    from kdtree_spark.index import map_arrow
     from kdtree_spark.pipeline.common import sorted_group_map
     from kdtree_spark.session import get_spark
 
@@ -111,12 +106,11 @@ _MARKER_SCRIPT = textwrap.dedent("""
 
     keys = pd.DataFrame({"k": np.arange(32, dtype=np.int64)})
     left = spark.createDataFrame(keys.assign(a=1))
-    right = spark.createDataFrame(keys.assign(b=1))
-    # 24 tasks either way: cogroup makes one partition per task
-    # thread, sorted_group_map one per shuffle partition
-    if sys.argv[2] == "cogroup":
-        run = lambda: cogroup(left, right, ["k"],
-                              lambda key, l, r: plant(), SCHEMA)
+    # 24 tasks either way: map_arrow runs one task per partition of
+    # the local frame (one per task thread), sorted_group_map one per
+    # shuffle partition
+    if sys.argv[2] == "map_arrow":
+        run = lambda: map_arrow(left, lambda c: plant(), SCHEMA)
         runs = 12
     else:
         run = lambda: sorted_group_map(
@@ -151,8 +145,9 @@ def _marked_tasks(path: str) -> None:
 
 
 def test_tasks_run_the_narrowed_rescan():
-    """Index kernels really narrow the per-task rescan (index.cogroup)."""
-    _marked_tasks("cogroup")
+    """Index kernels really narrow the per-task rescan (index.map_arrow,
+    the mapInArrow behind every blob scan)."""
+    _marked_tasks("map_arrow")
 
 
 def test_pandas_kernels_run_the_narrowed_rescan():
@@ -172,11 +167,13 @@ def _points(rng, n: int, fmode: bool, xmax: int) -> np.ndarray:
 
 @pytest.mark.parametrize("fmode", [False, True], ids=["int", "f64"])
 def test_empty_side_groups_exact(spark, fmode):
-    """Groups with one empty side at the Arrow boundary, on Grid(4):
-    an insert into a cell without a blob (apply_updates' brand-new-cell
-    branch), a delete of every point of one cell, then kNN queries whose
-    home cell is the emptied cell (the needy path) and range
-    count/report over it — each step checked against brute force."""
+    """Touched cells without a live blob, on Grid(4): an insert into a
+    cell that has no blob row (the update's placeholder row builds its
+    first tree), a delete of every point of one cell, then kNN queries
+    whose home cell is the emptied cell (the needy path) and range
+    count/report over it, then inserts back into the emptied cell,
+    which must not gain a second (cell, salt) row — each step checked
+    against brute force."""
     rng = np.random.default_rng(61 + fmode)
     grid = Grid(4)
     cw = grid.cw
@@ -224,74 +221,88 @@ def test_empty_side_groups_exact(spark, fmode):
     home0 = [(0, 0, 0, cw - 1, cw - 1), (1, cw // 2, cw // 2, cw + 5, cw + 5)]
     q = _points(rng, 6, fmode, cw) % cw  # home cell: the emptied one
     check(idx, q, home0 + [(2, *c[1:]) for c in corner])
+    # the emptied cell keeps its blob row, so its next inserts go to
+    # that row, not to a placeholder beside it
+    back = _points(rng, 30, fmode, cw) % cw
+    back_ids = np.arange(2 * n, 2 * n + len(back))
+    idx = idx.update(inserts=frame(back_ids, back))
+    live.update(zip(back_ids.tolist(), map(tuple, back)))
+    assert idx.df.groupBy("cell", "salt").count().agg(
+        {"count": "max"}).collect()[0][0] == 1
+    check(idx, q, home0)
 
 
-def test_cogroup_empty_kernel_output_schema(spark):
-    """A kernel that returns {} (no rows) through index.cogroup yields
-    an empty frame whose columns and types are exactly the declared
-    schema: _arrow_fn builds the empty table from that schema, not from
-    what the kernel returned."""
+def test_salted_cell_with_an_empty_salt_exact(spark):
+    """A cell salted at build (hot_cell_cap) whose pids leave one salt
+    without points has blob rows for the other salts only; an update's
+    inserts go to salts[pid % len(salts)] over those rows, and its
+    deletes to whichever blob holds the pid. Every insert is found
+    afterwards, and kNN and range count match brute force."""
+    rng = np.random.default_rng(67)
+    grid = Grid(4)
+    cw = grid.cw
+    n, k = 600, 5
+    pts = _points(rng, n, False, cw) % cw  # one cell: cx = cy = 0
+    # pid % 3 is never 2, so salt 2 of the cell's three gets no point
+    ids = 3 * np.arange(n) + rng.integers(0, 2, n)
+    live = dict(zip(ids.tolist(), map(tuple, pts)))
+
+    def frame(i, p, id_col="pid"):
+        return spark.createDataFrame(pd.DataFrame(
+            {id_col: np.asarray(i, np.int64), "x": p[:, 0], "y": p[:, 1]}))
+
+    idx = SpatialIndex.build(spark, frame(ids, pts), grid=grid, n_hint=n,
+                             hot_cell_cap=250)
+    salts = sorted(r["salt"] for r in idx.df.select("salt").collect())
+    assert salts == [0, 1], salts
+    new = _points(rng, 60, False, cw) % cw
+    new_ids = np.arange(10**6, 10**6 + len(new))  # every residue mod 3
+    gone = ids[:50]
+    idx = idx.update(inserts=frame(new_ids, new),
+                     deletes=frame(gone, pts[:50]))
+    for i in gone.tolist():
+        del live[i]
+    live.update(zip(new_ids.tolist(), map(tuple, new)))
+    assert sorted(r["salt"] for r in idx.df.select("salt").collect()) == [0, 1]
+    p = np.array(list(live.values()))
+    lid = np.array(list(live), np.int64)
+    box = [(0, 0, 0, cw - 1, cw - 1), (1, cw // 4, cw // 4, cw // 2, cw)]
+    rr = range_report(idx, box[:1]).toPandas()
+    assert sorted(rr["pid"]) == sorted(lid.tolist())
+    rc = range_count(idx, box).toPandas().sort_values("box_id")["cnt"]
+    np.testing.assert_array_equal(
+        rc.to_numpy(), bf.range_count(p, np.array(box, np.int64)[:, 1:]))
+    q = _points(rng, 8, False, cw) % cw
+    got = (knn_join(idx, frame(range(len(q)), q, "qid"), k)
+           .toPandas().sort_values(["qid", "rank"]))
+    exp_d, exp_i = bf.knn(p, lid, q, k)
+    np.testing.assert_array_equal(
+        got["nid"].to_numpy(np.int64).reshape(len(q), k), exp_i)
+    np.testing.assert_allclose(
+        got["dist_sq"].to_numpy(np.float64).reshape(len(q), k), exp_d)
+
+
+def test_scan_blobs_empty_kernel_output_schema(spark):
+    """A kernel that returns {} (no rows) through index.scan_blobs
+    yields an empty frame whose columns and types are exactly the
+    declared schema: map_arrow builds the empty table from that schema,
+    not from what the kernel returned."""
     from pyspark.sql.types import _parse_datatype_string
 
-    from kdtree_spark.index import cogroup
     schema = ("qid long, x double, ub double, cell long, fin0 boolean, "
               "probe array<bigint>, blob binary")
     calls = spark.sparkContext.accumulator(0)
 
-    def kernel(key, left, right):
+    def kernel(cell, salt, shapes, blob):
         calls.add(1)
         return {}
 
-    left = spark.createDataFrame([(1, 0, 0)], "cell long, qid long, x long")
-    right = spark.createDataFrame([(1, 9), (2, 7)], "cell long, v long")
-    out = cogroup(left, right, ["cell"], kernel, schema)
+    blobs = spark.createDataFrame([(1, 0, b"a"), (2, 0, b"b"), (3, 0, b"c")],
+                                  "cell long, salt int, blob binary")
+    cells = cell_lists(spark, np.array([1, 2, 2]), {"qid": np.arange(3)})
+    out = scan_blobs([blobs], cells, kernel, schema)
     assert out.collect() == []
-    assert calls.value == 2  # the kernel ran, once per cell
+    assert calls.value == 2  # the kernel ran, once per joined blob row
     assert out.schema == _parse_datatype_string(schema)
     got = out.toPandas()
     assert got.empty and list(got.columns) == out.columns
-
-
-def test_cogroup_walks_groups_across_batches(spark):
-    """index.cogroup (one mapInArrow over key-sorted partitions) calls
-    the kernel once per group of two keys with both sides whole, also
-    when a group's rows span Arrow batches, when a key has rows on one
-    side only and when the kernel returns no rows for a group; checked
-    against pandas groupby."""
-    rng = np.random.default_rng(5)
-    schema = "cell long, salt int, nl long, sl long, nr long, v array<bigint>"
-
-    def kernel(key, left, right):
-        cell, salt = key
-        if cell % 5 == 4:
-            return {}  # no output rows for this group
-        return {"cell": [cell], "salt": [salt], "nl": [len(left["x"])],
-                "sl": [int(left["x"].sum())], "nr": [len(right["v"])],
-                "v": [np.sort(right["v"]).astype(np.int64)]}
-
-    lp = pd.DataFrame({"cell": rng.integers(0, 12, 300),
-                       "salt": rng.integers(0, 2, 300),
-                       "x": rng.integers(0, 1000, 300)})
-    rp = pd.DataFrame({"cell": rng.integers(3, 16, 90),
-                       "salt": rng.integers(0, 2, 90),
-                       "v": rng.integers(0, 1000, 90)})
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "7")  # groups span batches
-    try:
-        got = cogroup(spark.createDataFrame(lp), spark.createDataFrame(rp),
-                      ["cell", "salt"], kernel, schema).toPandas()
-    finally:
-        spark.conf.set(conf, old)
-    want = []
-    for cell, salt in set(zip(lp["cell"], lp["salt"])) | set(
-            zip(rp["cell"], rp["salt"])):
-        if cell % 5 == 4:
-            continue
-        lx = lp["x"][(lp["cell"] == cell) & (lp["salt"] == salt)]
-        rv = rp["v"][(rp["cell"] == cell) & (rp["salt"] == salt)]
-        want.append((cell, salt, len(lx), int(lx.sum()), len(rv),
-                     tuple(sorted(rv))))
-    assert len(want) > 20
-    assert sorted((r.cell, r.salt, r.nl, r.sl, r.nr, tuple(r.v))
-                  for r in got.itertuples()) == sorted(want)
